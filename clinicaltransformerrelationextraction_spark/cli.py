@@ -76,7 +76,7 @@ def _add_common(p: argparse.ArgumentParser) -> None:
                    help="REL/NonRel head + (type1,type2)->relation map "
                         "(post_processing.py:108-139)")
     p.add_argument("--eval-batch-size", type=int, default=1024,
-                   help="Arrow batch rows per scorer call")
+                   help="candidate pairs per scorer call")
     p.add_argument("--max-pairs-per-doc", type=int, default=10_000)
     p.add_argument("--n-buckets", type=int, default=8,
                    help="ledger partitions (batch_* dir analog)")

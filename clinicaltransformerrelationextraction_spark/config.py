@@ -144,7 +144,9 @@ class PipelineConfig:
     # hf backend only: model dir/hub id for AutoModelForSequenceClassification
     scorer_model_path: str = "bert-base-uncased"
     max_seq_len: int = 512  # token budget incl. special tokens (U2)
-    batch_size: int = 1024  # Arrow batch rows per scorer call
+    # candidate pairs per scorer call in run_pipeline's doc-row kernel
+    # (scoring.enum_score_filter_number), flushed at doc boundaries
+    batch_size: int = 1024
     # 0 = sep mode [CLS] s1 [SEP] s2 [SEP]; 1 = uni mode [CLS] s1 s2 [SEP]
     # (reference --data_format_mode, src/task.py:41-49) — routes both the
     # tokenizer AND the scorer input encoding

@@ -12,26 +12,38 @@ Implements, Spark-first and shuffle-free, the reference semantics of:
 - [s1]/[e1], [s2]/[e2] marker insertion with cross-sentence concatenation —
   reference: ``format_relen`` (preprocessing.ipynb cell 6)
 
-Design for 100 TB: every step below is a narrow, per-row transformation built
-from Catalyst higher-order functions (``transform``/``filter``/``flatten``) —
-the quadratic pair blow-up happens *inside one row* and is capped by
-``max_pairs_per_doc``, so candidate generation causes **zero shuffle** and no
-doc-level skew can stall a stage. Compare with the naive relational
-formulation (mentions self-join on doc key), which shuffles the full mention
-table twice and is quadratic *across* the shuffle.
+Every step is a narrow, per-row transformation: the quadratic pair
+blow-up happens *inside one document row* and is capped by
+``max_pairs_per_doc``, so candidate generation causes **zero shuffle** and
+no doc-level skew can stall a stage. Two forms compute the same rows:
+
+- ``candidates_indexed``: Catalyst higher-order functions
+  (``transform``/``filter``/``flatten``), the ``emit="text"`` product path
+  and the stream form;
+- ``doc_candidate_rows``: the same enumeration as one plain Python
+  function per document. It runs inside the Arrow-batched doc-row kernels
+  (``candidates_lengths_kernel`` here, and
+  ``scoring.enum_score_filter_number``, the triples path for every scorer
+  backend), so the loop exists exactly once.
+
+The relational alternatives (a mention self-join on the doc key, shuffling
+the mention table twice) lost every measurement in BENCH.md and are gone.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN, PipelineConfig
 from ..functions.util import ensure_parallelism
 
 __all__ = [
     "tokens_col", "mentions_col", "pairs_col", "candidates",
-    "candidate_cap_stats",
+    "candidate_cap_stats", "candidate_columns", "doc_candidate_rows",
 ]
 
 
@@ -87,48 +99,12 @@ def mentions_col(cfg: PipelineConfig, toks: Column) -> Column:
     )
 
 
-def pairs_col_indexed(cfg: PipelineConfig, mentions: Column,
-                      n_sent: Column) -> Column:
-    """Output-linear in-row pair generation: bucket arg2 (Drug) mentions by
-    sentence window FIRST, then enumerate each arg1 mention only against
-    the drugs actually inside its window. Work per doc is
-    O(n_sent·n_drugs + n_pairs) instead of the naive O(M²) cross product —
-    the in-row analog of an index nested-loop join. Same kept-pair order as
-    ``pairs_col`` ((i1 asc, i2 asc)), verified byte-identical in tests."""
-    arg1_types = [t1 for t1, _ in cfg.valid_combs]
-    arg2_types = sorted({t2 for _, t2 in cfg.valid_combs})
-    m1s = F.filter(mentions, lambda m: m["ent_type"].isin(*arg1_types))
-    m2s = F.filter(mentions, lambda m: m["ent_type"].isin(*arg2_types))
-    # drugs_by_win[s+1] = arg2 mentions within cutoff of sentence s
-    drugs_by_win = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_sent - 1, F.lit(0)).cast("int")),
-        lambda s: F.filter(
-            m2s, lambda d: F.abs(d["sent_id"] - s) <= cfg.cutoff
-        ),
-    )
-    crossed = F.flatten(
-        F.transform(
-            m1s,
-            lambda m1: F.transform(
-                F.element_at(drugs_by_win, m1["sent_id"] + 1),
-                lambda m2: F.struct(m1.alias("a"), m2.alias("b")),
-            ),
-        )
-    )
-    cmap = comb_map_col(cfg)
-    return F.filter(
-        crossed,
-        lambda p: (p["a"]["i"] != p["b"]["i"])
-        & F.array_contains(cmap[p["a"]["ent_type"]], p["b"]["ent_type"]),
-    )
-
-
 def pairs_col(cfg: PipelineConfig, mentions: Column) -> Column:
     """Ordered candidate pairs (m1=arg1 non-Drug, m2=arg2 Drug) within the
     sentence-distance cutoff. In-row cross product + predicate pushup; the
     reference's F3 (valid combos), F4 (distance) and J1 (permutations).
-    Superseded by ``pairs_col_indexed`` (output-linear); kept as the naive
-    reference form for the equality tests."""
+    O(M^2) per doc, so only ``candidate_cap_stats`` uses it (counts
+    only); candidates come from the windowed enumeration."""
     cmap = comb_map_col(cfg)
 
     def pair_filter(p: Column) -> Column:
@@ -193,170 +169,6 @@ def candidate_cap_stats(
             "n_docs_capped"
         ),
         F.sum("n_dropped").alias("n_pairs_dropped"),
-    )
-
-
-def candidates_relational(
-    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The NAIVE relational formulation of candidate generation — mentions
-    exploded to rows, self-joined on the doc key, joined back to tokens for
-    marker strings. Produces byte-identical output to ``candidates`` (tested)
-    but shuffles the mention table twice and aggregates per pair; kept as
-    the measured counter-example for BENCH.md (the in-row HOF form is the
-    product path)."""
-    from pyspark.sql import Window
-
-    cfg = cfg or PipelineConfig()
-    toks = tokens_col(F.col(text_col))
-    base = ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
-    )
-    tok_rows = base.select(
-        "doc_id",
-        F.size("toks").alias("ntok"),
-        F.posexplode("toks").alias("pos", "tok"),
-    ).select(
-        "doc_id", "ntok", (F.col("pos") + 1).cast("int").alias("i"), "tok"
-    )
-    vocab = F.create_map(*[F.lit(x) for kv in cfg.ent_vocab.items() for x in kv])
-    men = (
-        tok_rows.withColumn("ent_type", vocab[F.col("tok")])
-        .filter(F.col("ent_type").isNotNull())
-        .withColumn(
-            "sent_id", F.floor((F.col("i") - 1) / cfg.sent_len).cast("int")
-        )
-    )
-    arg1_types = [t1 for t1, _ in cfg.valid_combs]
-    arg2_types = sorted({t2 for _, t2 in cfg.valid_combs})
-    m1 = men.filter(F.col("ent_type").isin(*arg1_types)).select(
-        "doc_id", "ntok", F.col("i").alias("i1"),
-        F.col("ent_type").alias("ent_type_1"),
-        F.col("sent_id").alias("s1"),
-    )
-    m2 = men.filter(F.col("ent_type").isin(*arg2_types)).select(
-        "doc_id", F.col("i").alias("i2"),
-        F.col("ent_type").alias("ent_type_2"),
-        F.col("sent_id").alias("s2"),
-    )
-    pairs = m1.join(m2, "doc_id").filter(
-        (F.col("i1") != F.col("i2"))
-        & (F.abs(F.col("s1") - F.col("s2")) <= cfg.cutoff)
-        & F.array_contains(
-            comb_map_col(cfg)[F.col("ent_type_1")], F.col("ent_type_2")
-        )
-    )
-    lo = F.least("s1", "s2")
-    hi = F.greatest("s1", "s2")
-    pairs = pairs.select(
-        "doc_id", "i1", "i2", "ent_type_1", "ent_type_2",
-        F.abs(F.col("s1") - F.col("s2")).cast("int").alias("sent_diff"),
-        (lo * cfg.sent_len + 1).cast("int").alias("wst"),
-        F.least(F.col("ntok"), ((hi + 1) * cfg.sent_len).cast("int")).alias(
-            "wen"
-        ),
-    )
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
-    win_toks = pairs.join(
-        tok_rows.select("doc_id", "i", "tok"), "doc_id"
-    ).filter(F.col("i").between(F.col("wst"), F.col("wen")))
-    marked = win_toks.groupBy(
-        "doc_id", "i1", "i2", "ent_type_1", "ent_type_2", "sent_diff"
-    ).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("i", "tok"))
-                ),
-                lambda s: F.when(
-                    s["i"] == F.col("i1"),
-                    F.concat(
-                        F.lit(S1_OPEN + " "), s["tok"], F.lit(" " + S1_CLOSE)
-                    ),
-                ).otherwise(s["tok"]),
-            ),
-            " ",
-        ).alias("s1_marked"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("i", "tok"))
-                ),
-                lambda s: F.when(
-                    s["i"] == F.col("i2"),
-                    F.concat(
-                        F.lit(S2_OPEN + " "), s["tok"], F.lit(" " + S2_CLOSE)
-                    ),
-                ).otherwise(s["tok"]),
-            ),
-            " ",
-        ).alias("s2_marked"),
-    )
-    return marked.select(
-        "doc_id",
-        F.concat(F.lit("T"), F.col("i1")).alias("ent_id_1"),
-        F.concat(F.lit("T"), F.col("i2")).alias("ent_id_2"),
-        "ent_type_1", "ent_type_2", "s1_marked", "s2_marked",
-        "sent_diff", "i1", "i2",
-    )
-
-
-def candidates_inrow(
-    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Fully in-row (zero-shuffle) candidate generation: per-row nested
-    HOF cross product -> explode. Byte-identical output to ``candidates``.
-
-    MEASURED trade-off (BENCH.md): zero shuffle, but Catalyst higher-order
-    functions are interpreted (not whole-stage-codegen'd), so the per-row
-    O(M²) cross product dominates when docs carry many mentions — 21×
-    slower than the join form on 600-token mention-heavy docs. Kept for
-    mention-sparse corpora and as the measured counter-example; the hybrid
-    ``candidates`` is the product path.
-    """
-    cfg = cfg or PipelineConfig()
-    toks = tokens_col(F.col(text_col))
-    base = ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
-    )
-    men = mentions_col(cfg, F.col("toks"))
-    pairs = pairs_col(cfg, men)
-    if cfg.max_pairs_per_doc:
-        pairs = F.slice(
-            pairs, 1, F.least(F.size(pairs), F.lit(cfg.max_pairs_per_doc))
-        )
-    rows = base.select("doc_id", "toks", F.explode(pairs).alias("p"))
-
-    a_i = F.col("p")["a"]["i"]
-    b_i = F.col("p")["b"]["i"]
-    a_s = F.col("p")["a"]["sent_id"]
-    b_s = F.col("p")["b"]["sent_id"]
-    lo = F.least(a_s, b_s)
-    hi = F.greatest(a_s, b_s)
-    wst = (lo * cfg.sent_len + 1).cast("int")
-    wen = F.least(F.size("toks"), ((hi + 1) * cfg.sent_len).cast("int"))
-    wlen = wen - wst + 1
-
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
-    return rows.select(
-        "doc_id",
-        F.concat(F.lit("T"), a_i).alias("ent_id_1"),
-        F.concat(F.lit("T"), b_i).alias("ent_id_2"),
-        F.col("p")["a"]["ent_type"].alias("ent_type_1"),
-        F.col("p")["b"]["ent_type"].alias("ent_type_2"),
-        _marked(F.col("toks"), wst, wlen, a_i, S1_OPEN, S1_CLOSE).alias(
-            "s1_marked"
-        ),
-        _marked(F.col("toks"), wst, wlen, b_i, S2_OPEN, S2_CLOSE).alias(
-            "s2_marked"
-        ),
-        F.abs(a_s - b_s).cast("int").alias("sent_diff"),
-        a_i.cast("int").alias("i1"),
-        b_i.cast("int").alias("i2"),
     )
 
 
@@ -466,8 +278,6 @@ def candidates_indexed(
     wen = F.least(F.size("toks"), ((hi + 1) * cfg.sent_len).cast("int"))
     wlen = wen - wst + 1
 
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
     if emit == "lengths":
         # lengths-only scorer input (scoring backends with
         # needs == "lengths"): ONE O(window) aggregate replaces TWO
@@ -508,128 +318,27 @@ def candidates_indexed(
     )
 
 
-def candidates_join(
-    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """documents(doc_id, text, ...) -> candidates DataFrame (join form).
-
-    Output columns mirror the reference's 8-column TSV contract
-    (readme.md:35-43) plus the explicit content key (doc_id, i1, i2) that
-    replaces positional prediction alignment (SURVEY.md §2.3 J3):
-
-      doc_id, ent_id_1, ent_id_2, ent_type_1, ent_type_2,
-      s1_marked, s2_marked, sent_diff, i1, i2
-
-    HYBRID plan (measured in BENCH.md against two alternatives):
-    mention detection is a linear in-row HOF; the pair cross product is a
-    relational self-join on the doc key (Tungsten, codegen) — quadratic
-    work runs in the join, not in interpreted HOF evaluation; marker
-    strings are linear in-row slice/transform over the token array joined
-    back by doc key. The per-doc cap is a row_number window that REUSES the
-    join's hash partitioning (no extra exchange). Skew: AQE skew-join
-    splits oversized docs' join partitions; the cap bounds total output.
-    """
-    from pyspark.sql import Window
-
-    cfg = cfg or PipelineConfig()
-    if df.isStreaming:
-        # streams can't run the row_number cap (non-time window); the
-        # in-row form is fully stream-compatible and micro-batches are
-        # mention-sparse, where it is equally fast
-        return candidates_inrow(df, cfg, doc_col=doc_col, text_col=text_col)
-    toks = tokens_col(F.col(text_col))
-    base = ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
-    )
-    men_rows = base.select(
-        "doc_id", F.explode(mentions_col(cfg, F.col("toks"))).alias("m")
-    ).select(
-        "doc_id",
-        F.col("m")["i"].alias("i"),
-        F.col("m")["ent_type"].alias("ent_type"),
-        F.col("m")["sent_id"].alias("sent_id"),
-    )
-    arg1_types = [t1 for t1, _ in cfg.valid_combs]
-    arg2_types = sorted({t2 for _, t2 in cfg.valid_combs})
-    m1 = men_rows.filter(F.col("ent_type").isin(*arg1_types)).select(
-        "doc_id", F.col("i").alias("i1"),
-        F.col("ent_type").alias("ent_type_1"), F.col("sent_id").alias("s1"),
-    )
-    m2 = men_rows.filter(F.col("ent_type").isin(*arg2_types)).select(
-        "doc_id", F.col("i").alias("i2"),
-        F.col("ent_type").alias("ent_type_2"), F.col("sent_id").alias("s2"),
-    )
-    pairs = m1.join(m2, "doc_id").filter(
-        (F.col("i1") != F.col("i2"))
-        & (F.abs(F.col("s1") - F.col("s2")) <= cfg.cutoff)
-        & F.array_contains(
-            comb_map_col(cfg)[F.col("ent_type_1")], F.col("ent_type_2")
-        )
-    )
-    if cfg.max_pairs_per_doc:
-        # same kept-set as the in-row slice: first N in (i1, i2) order;
-        # window reuses the join's doc_id partitioning (sort only)
-        w = Window.partitionBy("doc_id").orderBy("i1", "i2")
-        pairs = pairs.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= cfg.max_pairs_per_doc
-        ).drop("__rn")
-
-    joined = pairs.join(base, "doc_id")
-    a_s = F.col("s1")
-    b_s = F.col("s2")
-    lo = F.least(a_s, b_s)
-    hi = F.greatest(a_s, b_s)
-    wst = (lo * cfg.sent_len + 1).cast("int")
-    wen = F.least(F.size("toks"), ((hi + 1) * cfg.sent_len).cast("int"))
-    wlen = wen - wst + 1
-
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
-    return joined.select(
-        "doc_id",
-        F.concat(F.lit("T"), F.col("i1")).alias("ent_id_1"),
-        F.concat(F.lit("T"), F.col("i2")).alias("ent_id_2"),
-        "ent_type_1",
-        "ent_type_2",
-        _marked(F.col("toks"), wst, wlen, F.col("i1"), S1_OPEN, S1_CLOSE)
-        .alias("s1_marked"),
-        _marked(F.col("toks"), wst, wlen, F.col("i2"), S2_OPEN, S2_CLOSE)
-        .alias("s2_marked"),
-        F.abs(a_s - b_s).cast("int").alias("sent_diff"),
-        F.col("i1").cast("int").alias("i1"),
-        F.col("i2").cast("int").alias("i2"),
-    )
+def candidate_columns(emit: str = "text") -> list[str]:
+    """Column order of a candidate frame: the reference's 8-column TSV
+    contract (readme.md:35-43) plus the content key (doc_id, i1, i2).
+    ``emit="lengths"`` carries the window lengths s1_len/s2_len where
+    ``"text"`` carries the marked strings s1_marked/s2_marked."""
+    s1, s2 = ("s1_len", "s2_len") if emit == "lengths" else (
+        "s1_marked", "s2_marked")
+    return ["doc_id", "ent_id_1", "ent_id_2", "ent_type_1", "ent_type_2",
+            s1, s2, "sent_diff", "i1", "i2"]
 
 
-def candidates_lengths_kernel(
-    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Arrow-batched kernel twin of
-    ``candidates_indexed(emit="lengths")`` — byte-identical rows (pinned
-    in tests/test_round7_perf.py), built by a plain Python loop per doc
-    instead of the interpreted Catalyst HOF enumeration (r7, guide §4.2;
-    same ~100× per-element gap the dedup kernels measured). Mirrors the
-    indexed enumeration EXACTLY, including the kept-set of the per-doc
-    cap (m1s in token order × the window's drugs in token order,
-    filtered, first ``max_pairs_per_doc``); window lengths come from a
-    per-doc prefix-sum of token character lengths (O(1) per pair). Used
-    only for lengths-only scoring backends (the stub); the text mode
-    keeps the JVM path, whose marked-string columns Catalyst can prune
-    under count()-style consumers."""
-    import pandas as pd
-
-    cfg = cfg or PipelineConfig()
-    # factor=1: one wave of core-count tasks — the per-task Python
-    # boundary overhead argument from the dedup kernels (r7)
-    src = ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"), F.col(text_col)), factor=1
-    )
-    id_type = src.schema["doc_id"].dataType.simpleString()
+def pair_enumerator(cfg: PipelineConfig) -> Callable[[list[str]], list]:
+    """The per-doc enumeration as a pure function of one doc's tokens:
+    gazetteer mention scan, pairs within the sentence window, the cap, and
+    the window bounds. Returns ``[(i1, t1, i2, t2, sent_diff, wst, wen)]``
+    (1-based token indexes, inclusive window) in ``candidates_indexed``'s
+    kept order: arg1 mentions in token order x the window's arg2 mentions
+    in token order, tuple-exact combo filter, first ``max_pairs_per_doc``."""
     vocab = dict(cfg.ent_vocab)
-    arg1_types = set(t1 for t1, _ in cfg.valid_combs)
-    arg2_types = set(t2 for _, t2 in cfg.valid_combs)
+    arg1_types = {t1 for t1, _ in cfg.valid_combs}
+    arg2_types = {t2 for _, t2 in cfg.valid_combs}
     allowed: dict[str, set] = {}
     for t1, t2 in cfg.valid_combs:
         allowed.setdefault(t1, set()).add(t2)
@@ -637,66 +346,106 @@ def candidates_lengths_kernel(
     cutoff = cfg.cutoff
     cap = cfg.max_pairs_per_doc or 0
 
+    def enumerate_pairs(toks: list[str]) -> list:
+        men = [(i + 1, vocab[t], i // sl) for i, t in enumerate(toks)
+               if t in vocab]
+        m1s = [m for m in men if m[1] in arg1_types]
+        m2s = [m for m in men if m[1] in arg2_types]
+        if not m1s or not m2s:
+            return []
+        ntok = len(toks)
+        n_sent = max((ntok + sl - 1) // sl, 1)
+        by_win = [[d for d in m2s if abs(d[2] - s) <= cutoff]
+                  for s in range(n_sent)]
+        pairs = []
+        for i1, t1, s1 in m1s:
+            al = allowed[t1]
+            for i2, t2, s2 in by_win[s1]:
+                if i1 != i2 and t2 in al:
+                    lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
+                    pairs.append((i1, t1, i2, t2, abs(s1 - s2),
+                                  lo * sl + 1, min(ntok, (hi + 1) * sl)))
+                    if len(pairs) == cap:
+                        return pairs
+        return pairs
+
+    return enumerate_pairs
+
+
+def doc_candidate_rows(cfg: PipelineConfig, emit: str = "text") -> Callable:
+    """``rows(doc_id, text) -> [tuple]``: one doc's candidate rows in
+    ``candidate_columns(emit)`` order, equal to ``candidates_indexed``'s.
+    Text rows mark the window slice with ``[s1] tok [e1]`` / ``[s2] tok
+    [e2]`` around the entity token, space-joined (``_marked``); lengths
+    rows get the marked-string length from a prefix sum of token lengths
+    (``_win_len``), without building the strings. NULL text gives no
+    rows."""
+    enumerate_pairs = pair_enumerator(cfg)
+
+    def rows(did, text) -> list[tuple]:
+        if text is None:
+            return []
+        toks = text.split(" ")
+        pairs = enumerate_pairs(toks)
+        if not pairs:
+            return []
+        out = []
+        if emit == "lengths":
+            pre = list(accumulate(map(len, toks), initial=0))
+            for i1, t1, i2, t2, sd, wst, wen in pairs:
+                # chars of the space-joined window + 10 marker chars
+                wl = pre[wen] - pre[wst - 1] + (wen - wst) + 10
+                out.append((did, f"T{i1}", f"T{i2}", t1, t2, wl, wl, sd,
+                            i1, i2))
+            return out
+        for i1, t1, i2, t2, sd, wst, wen in pairs:
+            win = toks[wst - 1:wen]
+            k1, k2 = i1 - wst, i2 - wst
+            e1, e2 = win[k1], win[k2]
+            win[k1] = f"{S1_OPEN} {e1} {S1_CLOSE}"
+            s1 = " ".join(win)
+            win[k1], win[k2] = e1, f"{S2_OPEN} {e2} {S2_CLOSE}"
+            out.append((did, f"T{i1}", f"T{i2}", t1, t2, s1, " ".join(win),
+                        sd, i1, i2))
+        return out
+
+    return rows
+
+
+def doc_rows_input(df: DataFrame, doc_col: str = "doc_id",
+                   text_col: str = "text") -> DataFrame:
+    """(doc_id, text) input of a doc-row kernel. factor=1: one wave of
+    core-count tasks, since each Python task pays a fixed boundary cost
+    (the dedup kernels' measurement)."""
+    return ensure_parallelism(
+        df.select(F.col(doc_col).alias("doc_id"),
+                  F.col(text_col).alias("text")),
+        factor=1,
+    )
+
+
+def candidates_lengths_kernel(
+    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Arrow-batched kernel twin of ``candidates_indexed(emit="lengths")``
+    — equal rows (pinned in tests/test_round7_perf.py), built by
+    ``doc_candidate_rows`` per doc instead of the interpreted Catalyst HOF
+    enumeration (~100x cheaper per element, like the dedup kernels)."""
+    import pandas as pd
+
+    cfg = cfg or PipelineConfig()
+    src = doc_rows_input(df, doc_col, text_col)
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    rows_of = doc_candidate_rows(cfg, "lengths")
+    cols = candidate_columns("lengths")
+
     def kernel(batches):
         for pdf in batches:
-            rows: list = []
-            for did, tx in zip(pdf["doc_id"], pdf[text_col]):
-                if tx is None:
-                    continue
-                toks = tx.split(" ")
-                ntok = len(toks)
-                men = [
-                    (i + 1, vocab[t], (i // sl))
-                    for i, t in enumerate(toks)
-                    if t in vocab
-                ]
-                m1s = [m for m in men if m[1] in arg1_types]
-                if not m1s:
-                    continue
-                m2s = [m for m in men if m[1] in arg2_types]
-                if not m2s:
-                    continue
-                n_sent = max((ntok + sl - 1) // sl, 1)
-                dbw = [
-                    [d for d in m2s if abs(d[2] - s) <= cutoff]
-                    for s in range(n_sent)
-                ]
-                pairs = []
-                done = False
-                for i1, t1, s1 in m1s:
-                    al = allowed.get(t1)
-                    for i2, t2, s2 in dbw[s1]:
-                        if i1 != i2 and al is not None and t2 in al:
-                            pairs.append((i1, t1, s1, i2, t2, s2))
-                            if cap and len(pairs) >= cap:
-                                done = True
-                                break
-                    if done:
-                        break
-                if not pairs:
-                    continue
-                pre = [0] * (ntok + 1)
-                for k, t in enumerate(toks):
-                    pre[k + 1] = pre[k] + len(t)
-                for i1, t1, s1, i2, t2, s2 in pairs:
-                    lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
-                    wst = lo * sl + 1
-                    wen = min(ntok, (hi + 1) * sl)
-                    # chars of the space-joined window + 10 marker chars
-                    wl = pre[wen] - pre[wst - 1] + (wen - wst) + 10
-                    rows.append(
-                        (did, f"T{i1}", f"T{i2}", t1, t2, wl, wl,
-                         abs(s1 - s2), i1, i2)
-                    )
+            rows = [r for did, tx in zip(pdf["doc_id"], pdf["text"])
+                    for r in rows_of(did, tx)]
             if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "ent_id_1", "ent_id_2", "ent_type_1",
-                        "ent_type_2", "s1_len", "s2_len", "sent_diff",
-                        "i1", "i2",
-                    ],
-                )
+                yield pd.DataFrame(rows, columns=cols)
 
     return src.mapInPandas(
         kernel,
@@ -712,20 +461,17 @@ def candidates(
     df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
     text_col: str = "text", emit: str = "text",
 ) -> DataFrame:
-    """Product path. Four formulations were built and measured (BENCH.md):
-    naive in-row cross product, relational self-join + groupBy, hybrid
-    join + in-row markers, and the indexed in-row form — the indexed form
-    wins on every corpus shape AND is the only zero-shuffle one, so it is
-    the default. The others remain importable for regression benchmarks.
+    """documents(doc_id, text, ...) -> candidate frame with
+    ``candidate_columns(emit)``: one row per kept (arg1, arg2) mention pair.
 
-    ``emit="lengths"`` (r7) swaps the two marked-string columns for the
-    single arithmetically-derived window length (s1_len/s2_len) — the
-    input projection for scoring backends that declare
-    ``needs = "lengths"`` (see scoring._resolve_factory). Batch
-    lengths-mode runs the Arrow-batched enumeration kernel
-    (``candidates_lengths_kernel``, pinned byte-identical to the indexed
-    HOF form); streams keep the HOF form (stream-compatible, and
-    micro-batches are small)."""
+    ``emit="text"`` runs the Catalyst form (``candidates_indexed``), whose
+    marked-string columns Catalyst can prune under count()-style
+    consumers. ``emit="lengths"`` swaps the marked strings for their
+    lengths (s1_len/s2_len), the input of scoring backends that declare
+    ``needs = "lengths"``; batch frames run the doc-row kernel
+    ``candidates_lengths_kernel``, streams the Catalyst form. The triples
+    path does not build a candidate frame at all: it enumerates, marks and
+    scores per doc in ``scoring.enum_score_filter_number``."""
     if emit == "lengths" and not df.isStreaming:
         return candidates_lengths_kernel(
             df, cfg, doc_col=doc_col, text_col=text_col

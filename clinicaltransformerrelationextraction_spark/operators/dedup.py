@@ -163,12 +163,21 @@ def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
-    """(doc_id, seed, mh) — the per-doc MinHash signature. Same Python
+    """(doc_id, seed, mh) — the per-doc MinHash signature of the corpus."""
+    return minhash_signatures(_with_shingles(spark, sf))
+
+
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """(doc_id, seed, mh) from a (doc_id, shingles) frame. Same Python
     md5/min kernel discipline as ``bands_from_shingles`` (r7), emitting
-    the signature rows directly."""
+    the signature rows directly. Equal to the HOF form
+    (``digest_frame`` + ``minhash_cols``) incl. its edges: an empty or
+    NULL shingles array gives NULL ``mh`` for every seed (array_min of an
+    empty array is NULL)."""
     from hashlib import md5 as _md5
 
-    sh = _with_shingles(spark, sf)
+    src = shingles.select("doc_id", "shingles")
+    id_type = src.schema["doc_id"].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -176,11 +185,16 @@ def q_minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
             seeds: list = []
             mhs: list = []
             for did, shl in zip(pdf["doc_id"], pdf["shingles"]):
-                digs = [_md5(s.encode("utf-8")).hexdigest() for s in shl]
+                digs = [] if shl is None else [
+                    _md5(s.encode("utf-8")).hexdigest() for s in shl
+                ]
                 for k in range(N_SEEDS):
                     ids.append(did)
                     seeds.append(k)
-                    mhs.append(min(d[4 * k: 4 * k + 4] for d in digs))
+                    mhs.append(
+                        min(d[4 * k: 4 * k + 4] for d in digs)
+                        if digs else None
+                    )
             if ids:
                 yield pd.DataFrame(
                     {
@@ -190,7 +204,9 @@ def q_minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
                     }
                 )
 
-    return sh.mapInPandas(kernel, schema="doc_id long, seed int, mh string")
+    return src.mapInPandas(
+        kernel, schema=f"doc_id {id_type}, seed int, mh string"
+    )
 
 
 def bands_frame(docs: DataFrame) -> DataFrame:
@@ -263,9 +279,9 @@ def bands_from_shingles(shingles: DataFrame) -> DataFrame:
     subtree (hashlib.md5 hexdigest == Spark md5; str slicing ==
     substring(1+4s, 4); Python str min == array_min's UTF8 binary order
     on the hex alphabet). Byte-identical to the HOF twin
-    ``bands_from_shingles_hof`` incl. the empty-shingles edge (array_min
-    of an empty array is NULL, concat_ws skips NULLs, so every band key
-    degenerates to md5("")) — equality pinned in
+    ``bands_from_shingles_hof`` incl. the empty- and NULL-shingles edges
+    (array_min of an empty or NULL array is NULL, concat_ws skips NULLs,
+    so every band key degenerates to md5("")) — equality pinned in
     tests/test_round7_perf.py."""
     from hashlib import md5 as _md5
 
@@ -280,9 +296,7 @@ def bands_from_shingles(shingles: DataFrame) -> DataFrame:
             bands: list = []
             keys: list = []
             for did, sh in zip(pdf["doc_id"], pdf["shingles"]):
-                if sh is None:
-                    continue
-                if len(sh) == 0:
+                if sh is None or len(sh) == 0:
                     # HOF-twin edge: NULL minima -> concat_ws("")-> md5("")
                     for b in range(n_bands):
                         ids.append(did)

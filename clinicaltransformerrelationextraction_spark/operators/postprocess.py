@@ -6,44 +6,17 @@ Reference semantics:
 - per-file R renumbering               post_processing.py:49-63 (W1), made
   deterministic here with the canonical sort key (sent_diff, i1, i2)
   (SURVEY.md §7.4.3)
+  — both run inside the doc-row kernel, scoring.enum_score_filter_number
 - brat line formats                    data_format_conf.py:2; brat_eval.py:101-125
 - entities ⋈ relations per file merge  post_processing.py:66-85 (J5)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
-
-__all__ = ["triples", "link_triples", "brat_render"]
-
-
-def triples(scored: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """scored candidates -> (doc_id, rel_id, pred, subj_id, obj_id, score).
-
-    The single shuffle of the whole pipeline: a window partitioned by doc_id
-    for reference-parity R-numbering. Triples-per-doc is small (post-filter),
-    so the shuffle moves only the output, never the candidate set.
-    """
-    cfg = cfg or PipelineConfig()
-    w = Window.partitionBy("doc_id").orderBy("sent_diff", "i1", "i2")
-    return (
-        scored.filter(F.col("pred_label") != F.lit(cfg.non_rel))
-        .withColumn("rel_id", F.concat(F.lit("R"), F.row_number().over(w)))
-        .select(
-            "doc_id",
-            "rel_id",
-            F.col("pred_label").alias("pred"),
-            F.col("ent_id_1").alias("subj_id"),
-            F.col("ent_id_2").alias("obj_id"),
-            "score",
-            "sent_diff",
-            "i1",
-            "i2",
-        )
-    )
+__all__ = ["link_triples", "brat_render"]
 
 
 def link_triples(trip: DataFrame, mentions: DataFrame) -> DataFrame:

@@ -16,8 +16,12 @@ Two scorer backends behind one interface:
   (schema, batching, executor-local model cache) is identical for both.
 
 At 100 TB: scoring is the dominant cost; it is embarrassingly parallel
-(narrow map), so throughput scales with executor count. Batch size couples to
-``spark.sql.execution.arrow.maxRecordsPerBatch``.
+(narrow map), so throughput scales with executor count. The triples path
+(``enum_score_filter_number``) enumerates, marks and scores per document
+in one pass and calls the scorer every ``PipelineConfig.batch_size``
+pairs; ``score_candidates``/``score_filter_number`` score an already-built
+candidate frame per Arrow batch
+(``spark.sql.execution.arrow.maxRecordsPerBatch``).
 """
 
 from __future__ import annotations
@@ -33,10 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SPEC_TAGS, STUB_W2, STUB_W3, PipelineConfig
+from .candidates import candidate_columns, doc_candidate_rows, doc_rows_input
 
 __all__ = [
-    "score_candidates", "stub_logits", "truncate_pair",
-    "register_scorer", "SCORER_REGISTRY",
+    "score_candidates", "score_filter_number", "enum_score_filter_number",
+    "stub_logits", "truncate_pair", "register_scorer", "SCORER_REGISTRY",
 ]
 
 
@@ -156,11 +161,17 @@ HIDDEN_DIM = 256
 def _make_mlp_scorer(cfg: PipelineConfig, labels: list[str]):
     """Compute-realistic deterministic backend: hashed bag-of-token features
     of both marked sentences (the scheme-2 idea — entity-marker context
-    concatenated, src/models.py:51-52) through a seeded 2-layer MLP, batched
-    numpy matmuls. Weights are built ONCE per executor worker (the
-    executor-local model cache that replaces the reference's per-process
-    model load). Not oracle-checkable (float matmuls) — used for
-    throughput realism; 'stub' is the parity backend."""
+    concatenated, src/models.py:51-52) through a seeded 2-layer MLP. Weights
+    are built ONCE per executor worker (the executor-local model cache that
+    replaces the reference's per-process model load). Not oracle-checkable
+    (float arithmetic) — used for throughput realism; 'stub' is the parity
+    backend.
+
+    A row's score depends on that row alone, bit for bit, so output does
+    not change with batch size or partitioning: the hidden layer sums the
+    gathered weight rows of the row's tokens in token order (instead of a
+    dense ``x @ w1``, whose BLAS reduction order depends on the batch's row
+    count), and the output layer is an ``einsum`` (no BLAS)."""
     import zlib
 
     n = len(labels)
@@ -169,11 +180,12 @@ def _make_mlp_scorer(cfg: PipelineConfig, labels: list[str]):
     w1 = rng.standard_normal((FEAT_DIM, HIDDEN_DIM)) / np.sqrt(FEAT_DIM)
     w2 = rng.standard_normal((HIDDEN_DIM, n)) / np.sqrt(HIDDEN_DIM)
     tok_idx_cache: dict[str, int] = {}
+    half = FEAT_DIM // 2
 
     def feat_index(tok: str) -> int:
         h = tok_idx_cache.get(tok)
         if h is None:
-            h = zlib.crc32(tok.encode()) % (FEAT_DIM // 2)
+            h = zlib.crc32(tok.encode()) % half
             tok_idx_cache[tok] = h
         return h
 
@@ -185,27 +197,24 @@ def _make_mlp_scorer(cfg: PipelineConfig, labels: list[str]):
     max_len = cfg.max_seq_len
 
     def scorer(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        x = np.zeros((len(pdf), FEAT_DIM), dtype=np.float64)
-        half = FEAT_DIM // 2
+        h = np.empty((len(pdf), HIDDEN_DIM), dtype=np.float64)
         for r, (s1, s2) in enumerate(
             zip(pdf["s1_marked"].to_numpy(), pdf["s2_marked"].to_numpy())
         ):
             if uni:
                 # uni mode: ONE bag over the concatenated window (no
                 # half-split; 4-way marker truncation, data_utils.py:420)
-                toks = fit_uni_budget((s1 + " " + s2).split(" "), max_len)
-                for t in toks:
-                    x[r, feat_index(t)] += 1.0
-                continue
-            # entity-centered truncation, the reference's
-            # _process_seq_len semantics (rare: only huge windows)
-            ta, tb = fit_pair_budget(s1.split(" "), s2.split(" "), max_len)
-            for t in ta:
-                x[r, feat_index(t)] += 1.0
-            for t in tb:
-                x[r, half + feat_index(t)] += 1.0
-        h = np.tanh(x @ w1)
-        logits = h @ w2
+                feats = [feat_index(t) for t in
+                         fit_uni_budget((s1 + " " + s2).split(" "), max_len)]
+            else:
+                # entity-centered truncation, the reference's
+                # _process_seq_len semantics (rare: only huge windows)
+                ta, tb = fit_pair_budget(s1.split(" "), s2.split(" "),
+                                         max_len)
+                feats = [feat_index(t) for t in ta]
+                feats += [half + feat_index(t) for t in tb]
+            h[r] = w1[feats].sum(axis=0)
+        logits = np.einsum("ij,jk->ik", np.tanh(h), w2)
         idx = logits.argmax(axis=1)
         ex = np.exp(logits - logits.max(axis=1, keepdims=True))
         probs = ex / ex.sum(axis=1, keepdims=True)
@@ -333,7 +342,9 @@ def register_scorer(name: str, factory: Callable) -> None:
     ``factory(cfg, labels)`` must return ``scorer(pdf) -> (idx, score)``
     where idx is an int array of label indices and score a float array,
     both aligned with ``pdf`` rows (pdf carries s1_marked, s2_marked,
-    i1, i2 plus all candidate columns).
+    i1, i2 plus all candidate columns — those of
+    ``candidates(emit="text")``). The triples path hands it at most
+    ``cfg.batch_size + cfg.max_pairs_per_doc - 1`` rows per call.
 
     Optional: a ``factory.validate`` attribute — ``validate(cfg) ->
     None`` — runs DRIVER-SIDE at plan time so config errors fail fast
@@ -365,20 +376,33 @@ def _resolve_factory(cfg: PipelineConfig) -> Callable:
 SCORER_INPUT_COLS = ("s1_marked", "s2_marked", "s1_len", "s2_len")
 
 
+def _needs_lengths(factory: Callable) -> bool:
+    return getattr(factory, "needs", "text") == "lengths"
+
+
 def scoring_emit(cfg: PipelineConfig) -> str:
     """The candidate-frame ``emit`` mode the configured backend wants:
     "lengths" for backends declaring ``needs = "lengths"`` (the stub),
     "text" otherwise — callers building candidates expressly for scoring
-    (q_predictions, the fused pipeline) use this so the marked strings are
+    (q_predictions) use this so the marked strings are
     never even constructed for a lengths-only backend."""
-    return (
-        "lengths"
-        if getattr(_resolve_factory(cfg), "needs", "text") == "lengths"
-        else "text"
-    )
+    return "lengths" if _needs_lengths(_resolve_factory(cfg)) else "text"
 
 
-def _scorer_input(cand: DataFrame, factory: Callable) -> DataFrame:
+def _require_text(cand: DataFrame, why: str) -> None:
+    """Fail at plan time, naming the cause, when a frame built with
+    ``candidates(emit="lengths")`` meets a consumer of the marked strings
+    (otherwise: a KeyError inside an executor)."""
+    if not {"s1_marked", "s2_marked"} <= set(cand.columns):
+        raise ValueError(
+            f"{why} needs the marked strings s1_marked/s2_marked, but the "
+            'candidate frame has none (built with candidates(emit="lengths")'
+            '?); build it with candidates(emit="text")'
+        )
+
+
+def _scorer_input(cand: DataFrame, cfg: PipelineConfig,
+                  factory: Callable) -> DataFrame:
     """Project the candidate frame down to the backend's declared input
     (guide §4.1: pass only the columns the function needs across the
     Python boundary). Text backends get the frame unchanged; lengths-only
@@ -386,7 +410,8 @@ def _scorer_input(cand: DataFrame, factory: Callable) -> DataFrame:
     built with candidates(emit="lengths"), else derived via F.length so
     only two ints per row cross the Arrow boundary instead of two marked
     strings."""
-    if getattr(factory, "needs", "text") != "lengths":
+    if not _needs_lengths(factory):
+        _require_text(cand, f"scorer {cfg.scorer!r}")
         return cand
     if "s1_len" in cand.columns:
         return cand
@@ -408,7 +433,8 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
 
     The marked sentence strings are the scorer's INPUT only; by default they
     are dropped from the output (they dominate the Arrow return traffic and
-    nothing downstream reads them — pass ``keep_text=True`` to retain).
+    nothing downstream reads them — pass ``keep_text=True`` to retain,
+    which needs a frame built with ``candidates(emit="text")``).
     Backends declaring ``needs = "lengths"`` receive precomputed window
     lengths instead of the strings (see _scorer_input) unless
     ``keep_text`` forces the text through."""
@@ -416,8 +442,10 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
     labels = list(cfg.labels)
     label_arr = np.asarray(labels, dtype=object)
     factory = _resolve_factory(cfg)
-    if not keep_text:
-        cand = _scorer_input(cand, factory)
+    if keep_text:
+        _require_text(cand, "score_candidates(keep_text=True)")
+    else:
+        cand = _scorer_input(cand, cfg, factory)
     drop_cols = (
         []
         if keep_text
@@ -447,215 +475,131 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
     return cand.mapInPandas(run, schema=out_schema)
 
 
-def enum_score_filter_number(
-    docs: DataFrame, cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """The FULLY-FUSED flagship path for lengths-only scoring backends
-    (r7): candidate enumeration + scoring + NonRel filter + per-doc
-    R-numbering in ONE Arrow-batched mapInPandas pass over the documents
-    — no intermediate candidate frame crosses the Python boundary at
-    all. Valid only when the resolved backend declares
-    ``needs = "lengths"`` (asserted); text backends keep the two-stage
-    pipeline (candidates -> score_filter_number) unchanged.
-
-    The enumeration is candidates_lengths_kernel's loop verbatim (same
-    kept-set and cap semantics); docs are whole within each input row,
-    so numbering needs no cross-batch carry: rows are filtered, sorted
-    by (sent_diff, i1, i2) per doc, and numbered exactly like
-    score_filter_number's _emit. Output is byte-identical to
-    score_filter_number(candidates(docs, emit="lengths")) — pinned in
-    tests/test_round7_perf.py and by the q_triples oracle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.util import ensure_parallelism
-
-    cfg = cfg or PipelineConfig()
-    factory = _resolve_factory(cfg)
-    if getattr(factory, "needs", "text") != "lengths":
-        raise ValueError(
-            "enum_score_filter_number requires a lengths-only scoring "
-            f"backend; {cfg.scorer!r} consumes text — use "
-            "score_filter_number(candidates(docs), cfg)"
-        )
-    labels = list(cfg.labels)
-    label_arr = np.asarray(labels, dtype=object)
-    non_rel = cfg.non_rel
-    src = ensure_parallelism(
-        docs.select(F.col(doc_col).alias("doc_id"), F.col(text_col)),
-        factor=1,
+def _triples_schema(id_type: str) -> str:
+    return (
+        f"doc_id {id_type}, rel_n int, pred string, subj_id string, "
+        "obj_id string, score double, sent_diff int, i1 int, i2 int"
     )
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    vocab = dict(cfg.ent_vocab)
-    arg1_types = set(t1 for t1, _ in cfg.valid_combs)
-    arg2_types = set(t2 for _, t2 in cfg.valid_combs)
-    allowed: dict[str, set] = {}
-    for t1, t2 in cfg.valid_combs:
-        allowed.setdefault(t1, set()).add(t2)
-    sl = cfg.sent_len
-    cutoff = cfg.cutoff
-    cap = cfg.max_pairs_per_doc or 0
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory(cfg, labels)
-        for pdf_in in batches:
-            rows: list = []
-            for did, tx in zip(pdf_in["doc_id"], pdf_in[text_col]):
-                if tx is None:
-                    continue
-                toks = tx.split(" ")
-                ntok = len(toks)
-                men = [
-                    (i + 1, vocab[t], (i // sl))
-                    for i, t in enumerate(toks)
-                    if t in vocab
-                ]
-                m1s = [m for m in men if m[1] in arg1_types]
-                if not m1s:
-                    continue
-                m2s = [m for m in men if m[1] in arg2_types]
-                if not m2s:
-                    continue
-                n_sent = max((ntok + sl - 1) // sl, 1)
-                dbw = [
-                    [d for d in m2s if abs(d[2] - s) <= cutoff]
-                    for s in range(n_sent)
-                ]
-                pairs = []
-                done = False
-                for i1, t1, s1 in m1s:
-                    al = allowed.get(t1)
-                    for i2, t2, s2 in dbw[s1]:
-                        if i1 != i2 and al is not None and t2 in al:
-                            pairs.append((i1, t1, s1, i2, t2, s2))
-                            if cap and len(pairs) >= cap:
-                                done = True
-                                break
-                    if done:
-                        break
-                if not pairs:
-                    continue
-                pre = [0] * (ntok + 1)
-                for k, t in enumerate(toks):
-                    pre[k + 1] = pre[k] + len(t)
-                for i1, t1, s1, i2, t2, s2 in pairs:
-                    lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
-                    wst = lo * sl + 1
-                    wen = min(ntok, (hi + 1) * sl)
-                    wl = pre[wen] - pre[wst - 1] + (wen - wst) + 10
-                    rows.append(
-                        (did, f"T{i1}", f"T{i2}", t1, t2, wl, wl,
-                         abs(s1 - s2), i1, i2)
-                    )
-            if not rows:
-                continue
-            # the scorer sees the SAME columns a lengths-mode candidate
-            # frame carries (register_scorer contract fidelity)
-            pdf = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ent_id_1", "ent_id_2", "ent_type_1",
-                    "ent_type_2", "s1_len", "s2_len", "sent_diff",
-                    "i1", "i2",
-                ],
-            )
-            idx, score = scorer(pdf)
-            pdf["pred_label"] = label_arr[idx]
-            pdf["score"] = score
-            pdf = pdf[pdf["pred_label"] != non_rel]
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(
-                ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
-            ).reset_index(drop=True)
-            rn = pdf.groupby("doc_id", sort=False).cumcount() + 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "rel_n": rn.astype("int32"),
-                    "pred": pdf["pred_label"],
-                    "subj_id": pdf["ent_id_1"],
-                    "obj_id": pdf["ent_id_2"],
-                    "score": pdf["score"],
-                    "sent_diff": pdf["sent_diff"].astype("int32"),
-                    "i1": pdf["i1"].astype("int32"),
-                    "i2": pdf["i2"].astype("int32"),
-                }
-            )
 
-    out = src.mapInPandas(
-        run,
-        schema=(
-            f"doc_id {id_type}, rel_n int, pred string, subj_id string, "
-            "obj_id string, score double, sent_diff int, i1 int, i2 int"
-        ),
+def _filter_number(scored: pd.DataFrame, non_rel: str) -> pd.DataFrame | None:
+    """NonRel filter + per-doc R-numbering of a scored frame (candidate
+    columns + pred_label + score) of COMPLETE docs: sort by (doc_id,
+    sent_diff, i1, i2), number via groupby cumcount — one Arrow batch out
+    per scorer call, never per doc. None when every row is NonRel."""
+    kept = scored[scored["pred_label"] != non_rel]
+    if len(kept) == 0:
+        return None
+    kept = kept.sort_values(
+        ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
+    ).reset_index(drop=True)
+    rn = kept.groupby("doc_id", sort=False).cumcount() + 1
+    return pd.DataFrame(
+        {
+            "doc_id": kept["doc_id"],
+            "rel_n": rn.astype("int32"),
+            "pred": kept["pred_label"],
+            "subj_id": kept["ent_id_1"],
+            "obj_id": kept["ent_id_2"],
+            "score": kept["score"],
+            "sent_diff": kept["sent_diff"].astype("int32"),
+            "i1": kept["i1"].astype("int32"),
+            "i2": kept["i2"].astype("int32"),
+        }
     )
-    return out.select(
+
+
+def _with_rel_id(numbered: DataFrame) -> DataFrame:
+    # build the R-id string JVM-side: millions of Python string objects
+    # otherwise dominate the UDF at low core counts
+    return numbered.select(
         "doc_id",
         F.concat(F.lit("R"), F.col("rel_n")).alias("rel_id"),
         "pred", "subj_id", "obj_id", "score", "sent_diff", "i1", "i2",
     )
 
 
+def enum_score_filter_number(
+    docs: DataFrame, cfg: PipelineConfig | None = None,
+    doc_col: str = "doc_id", text_col: str = "text",
+) -> DataFrame:
+    """documents -> triples in ONE Arrow-batched mapInPandas pass over the
+    document rows: candidate enumeration + marking + scoring + NonRel
+    filter + per-doc R-numbering. No candidate frame crosses the Python
+    boundary. This is ``run_pipeline``'s only path, for every backend and
+    for streams.
+
+    Per doc, ``candidates.doc_candidate_rows`` builds the rows a candidate
+    frame would carry: the marked strings for text backends, the window
+    lengths for backends declaring ``needs = "lengths"``. The scorer thus
+    sees the columns of ``candidates(emit=scoring_emit(cfg))`` and the
+    ``register_scorer`` contract holds. Rows are buffered and scored once
+    ``cfg.batch_size`` pairs are pending, flushing only at a doc boundary,
+    so a scorer call holds at most ``batch_size + max_pairs_per_doc - 1``
+    rows. Each doc is whole within its input row, so numbering needs no
+    cross-batch carry. Output equals
+    ``score_filter_number(candidates(docs, emit=...), cfg)``, scores
+    included, for any Arrow batch size, partitioning or ``batch_size``
+    (pinned in tests/test_kernel_path.py; the stub by the q_triples
+    oracle)."""
+    cfg = cfg or PipelineConfig()
+    factory = _resolve_factory(cfg)
+    emit = "lengths" if _needs_lengths(factory) else "text"
+    labels = list(cfg.labels)
+    label_arr = np.asarray(labels, dtype=object)
+    non_rel = cfg.non_rel
+    batch_size = max(cfg.batch_size, 1)
+    src = doc_rows_input(docs, doc_col, text_col)
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    rows_of = doc_candidate_rows(cfg, emit)
+    cols = candidate_columns(emit)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        scorer = factory(cfg, labels)
+
+        def score(rows: list) -> pd.DataFrame | None:
+            pdf = pd.DataFrame(rows, columns=cols)
+            idx, sc = scorer(pdf)
+            pdf["pred_label"] = label_arr[idx]
+            pdf["score"] = sc
+            return _filter_number(pdf, non_rel)
+
+        pending: list = []
+        for pdf_in in batches:
+            for did, tx in zip(pdf_in["doc_id"], pdf_in["text"]):
+                pending += rows_of(did, tx)
+                if len(pending) >= batch_size:
+                    out = score(pending)
+                    pending = []
+                    if out is not None:
+                        yield out
+        if pending:
+            out = score(pending)
+            if out is not None:
+                yield out
+
+    return _with_rel_id(src.mapInPandas(run, schema=_triples_schema(id_type)))
+
+
 def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """FUSED scoring + NonRel filter + per-doc R-numbering in ONE
-    ``mapInPandas`` pass with ZERO shuffle.
+    """Scoring + NonRel filter + per-doc R-numbering of an already-built
+    candidate frame in ONE ``mapInPandas`` pass with ZERO shuffle.
 
     Correctness requires each document's candidate rows to be contiguous
-    within one partition — guaranteed by the narrow candidate-generation
-    path (each doc's pairs come from exploding a single input row, and
-    mapInPandas preserves within-partition order). Numbering uses the
-    canonical sort (sent_diff, i1, i2) per doc, identical to the windowed
-    ``triples``; docs may span Arrow batch boundaries, so rows are buffered
-    per doc across batches.
-    """
+    within one partition — guaranteed by the narrow candidate generation
+    (each doc's pairs come from one input row, and mapInPandas preserves
+    within-partition order). Docs may span Arrow batch boundaries, so the
+    rows of the batch's last doc are carried into the next batch. Numbering
+    is ``enum_score_filter_number``'s (canonical sort (sent_diff, i1, i2)
+    per doc)."""
     cfg = cfg or PipelineConfig()
     labels = list(cfg.labels)
     label_arr = np.asarray(labels, dtype=object)
     non_rel = cfg.non_rel
     factory = _resolve_factory(cfg)
-    cand = _scorer_input(cand, factory)
+    cand = _scorer_input(cand, cfg, factory)
     drop_cols = [c for c in SCORER_INPUT_COLS if c in cand.columns]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", cand.schema["doc_id"].dataType),
-            T.StructField("rel_n", T.IntegerType()),
-            T.StructField("pred", T.StringType()),
-            T.StructField("subj_id", T.StringType()),
-            T.StructField("obj_id", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("sent_diff", T.IntegerType()),
-            T.StructField("i1", T.IntegerType()),
-            T.StructField("i2", T.IntegerType()),
-        ]
-    )
-
-    def _emit(doc: pd.DataFrame) -> pd.DataFrame | None:
-        """Vectorized filter + per-doc numbering for a frame of COMPLETE
-        docs: sort by (doc, sent_diff, i1, i2), rel index via groupby
-        cumcount — one Arrow batch out per batch in, never per doc."""
-        doc = doc[doc["pred_label"] != non_rel]
-        if len(doc) == 0:
-            return None
-        doc = doc.sort_values(
-            ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
-        ).reset_index(drop=True)
-        rn = doc.groupby("doc_id", sort=False).cumcount() + 1
-        return pd.DataFrame(
-            {
-                "doc_id": doc["doc_id"],
-                "rel_n": rn.astype("int32"),
-                "pred": doc["pred_label"],
-                "subj_id": doc["ent_id_1"],
-                "obj_id": doc["ent_id_2"],
-                "score": doc["score"],
-                "sent_diff": doc["sent_diff"].astype("int32"),
-                "i1": doc["i1"].astype("int32"),
-                "i2": doc["i2"].astype("int32"),
-            }
-        )
+    id_type = cand.schema["doc_id"].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         scorer = factory(cfg, labels)
@@ -669,26 +613,15 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
             pdf["score"] = score
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
             # hold back the last doc: it may continue in the next batch
-            last_doc = pdf["doc_id"].iloc[-1]
-            boundary = pdf["doc_id"] == last_doc
+            boundary = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
             carry = pdf[boundary]
-            done = pdf[~boundary]
-            if len(done):
-                out = _emit(done)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _emit(carry)
+            out = _filter_number(pdf[~boundary], non_rel)
+            if out is not None:
+                yield out
+        if carry is not None:
+            out = _filter_number(carry, non_rel)
             if out is not None:
                 yield out
 
-    out = cand.mapInPandas(run, schema=out_schema)
-    # build the R-id string JVM-side: millions of Python string objects
-    # otherwise dominate the UDF at low core counts
-    return out.select(
-        "doc_id",
-        F.concat(F.lit("R"), F.col("rel_n")).alias("rel_id"),
-        "pred", "subj_id", "obj_id", "score", "sent_diff", "i1", "i2",
-    )
+    return _with_rel_id(cand.mapInPandas(run, schema=_triples_schema(id_type)))

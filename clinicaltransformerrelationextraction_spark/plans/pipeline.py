@@ -5,12 +5,12 @@ pages →(U1 segment)→ mentions →(J1+F3+F4 candidate gen)→ marked pairs
 →(U2+U3 mapInPandas scoring)→ predictions →(F6 NonRel filter, W1 numbering)→
 triples.
 
-Physical shape at scale (the plan we WANT, verified in tests/explain):
-- candidate generation is a narrow per-row stage (zero shuffle);
-- scoring is a narrow Arrow-batched map;
-- the only shuffle is the final per-doc window over already-filtered triples;
-- optional salted repartition before scoring equalizes per-task load when
-  host domains skew document sizes (north rule).
+Physical shape at scale (pinned in tests/test_plan_shapes.py): one narrow
+Arrow-batched doc-row kernel (``scoring.enum_score_filter_number``) does
+enumerate → mark → score → NonRel filter → number per document, for every
+scorer backend and for streams — zero shuffle, no Window. The optional
+salted repartition of the DOCS equalizes per-task load when host domains
+skew document sizes (north rule); docs stay whole, so numbering holds.
 """
 
 from __future__ import annotations
@@ -21,16 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.candidates import candidates
-from ..operators.postprocess import brat_render, link_triples, triples
-from ..operators.scoring import score_candidates
+from ..operators.postprocess import brat_render, link_triples
+from ..operators.scoring import enum_score_filter_number
 from ..operators.segmentation import mentions
 
 
 @dataclass
 class PipelineResult:
-    candidates: DataFrame
-    scored: DataFrame
     triples: DataFrame
 
 
@@ -66,47 +63,23 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     doc_col: str = "doc_id",
     salt: bool = False,
-    fused: bool = True,
 ) -> PipelineResult:
-    """fused=True (default): scoring + NonRel filter + per-doc numbering in
-    one mapInPandas pass — the whole pipeline is then ZERO-shuffle (docs
-    stay partition-contiguous through the narrow candidate stage). Salting
-    repartitions by doc hash (keeps docs whole, so fused numbering stays
-    correct) and forces the non-fused path OFF only if you repartition by a
-    non-doc key yourself."""
-    from ..operators.scoring import score_filter_number, scoring_emit
+    """documents -> triples (doc_id, rel_id, pred, subj_id, obj_id, score,
+    sent_diff, i1, i2) through the doc-row kernel, batch or stream.
 
+    ``salt=True`` first repartitions the documents by a salted doc hash
+    into ``cfg.salt_buckets`` buckets, spreading a hot host domain's docs
+    over tasks. Each doc stays one row, so the output is unchanged."""
     cfg = cfg or PipelineConfig()
-    cand = candidates(docs, cfg, doc_col=doc_col)
     if salt:
-        # Salted repartition before the expensive scoring stage: spreads a
-        # hot host-domain's candidates across cfg.salt_buckets tasks.
-        # Keyed by doc hash -> documents stay whole within a partition.
-        cand = cand.repartition(
+        docs = docs.repartition(
             F.pmod(
-                F.hash(F.col("doc_id"), F.lit("salt")), F.lit(cfg.salt_buckets)
+                F.hash(F.col(doc_col), F.lit("salt")), F.lit(cfg.salt_buckets)
             )
         )
-    scored = score_candidates(cand, cfg)
-    if fused and not salt:
-        # lengths-only backends (the stub): the FULLY-fused single-kernel
-        # path — enumeration + scoring + filter + numbering in one
-        # mapInPandas over the documents, nothing crossing the Python
-        # boundary in between (r7; res.candidates keeps the full text
-        # contract, lazily). Text backends keep the two-stage pipeline.
-        if scoring_emit(cfg) == "lengths" and not docs.isStreaming:
-            from ..operators.scoring import enum_score_filter_number
-
-            trip = enum_score_filter_number(
-                docs, cfg, doc_col=doc_col
-            )
-        else:
-            trip = score_filter_number(cand, cfg)
-    else:
-        # salted input interleaves docs within a partition (hash order), so
-        # use the windowed form, which is order-independent
-        trip = triples(scored, cfg)
-    return PipelineResult(candidates=cand, scored=scored, triples=trip)
+    return PipelineResult(
+        triples=enum_score_filter_number(docs, cfg, doc_col=doc_col)
+    )
 
 
 def run_linked(docs: DataFrame, cfg: PipelineConfig | None = None,

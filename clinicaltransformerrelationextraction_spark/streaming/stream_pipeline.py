@@ -6,11 +6,11 @@ serial batch_* directory loop. This module is the alternative resume story
 to plans/ledger.py: Spark's own checkpoint tracks which input files are
 done, so re-running the job processes only new files.
 
-The whole batch pipeline (candidate gen HOFs + mapInPandas scoring + NonRel
-filter) is stream-compatible — only the per-doc window (R-numbering) is not
-allowed on streams, so triples are emitted un-numbered here and can be
-numbered at read time if needed (rel ordering key (sent_diff, i1, i2) is
-carried).
+Triples come from the batch path itself, ``run_pipeline``: its doc-row
+kernel is one ``mapInPandas`` over the document rows, which runs on
+streaming frames unchanged. The output drops ``rel_id`` and keeps the
+ordering key (sent_diff, i1, i2), the schema sinks and checkpoints have
+always seen.
 """
 
 from __future__ import annotations
@@ -19,8 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.candidates import candidates
-from ..operators.scoring import score_candidates
+from ..plans.pipeline import run_pipeline
 
 
 def stream_triples(
@@ -42,15 +41,7 @@ def stream_triples(
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-    cand = candidates(stream, cfg)
-    scored = score_candidates(cand, cfg)
-    trip = scored.filter(F.col("pred_label") != cfg.non_rel).select(
-        "doc_id",
-        F.col("pred_label").alias("pred"),
-        F.col("ent_id_1").alias("subj_id"),
-        F.col("ent_id_2").alias("obj_id"),
-        "score", "sent_diff", "i1", "i2",
-    )
+    trip = run_pipeline(stream, cfg).triples.drop("rel_id")
     q = (
         trip.writeStream.format("parquet")
         .option("path", output_dir)

@@ -1,10 +1,11 @@
-"""All four candidate-generation formulations must be byte-identical —
-they are the measured design space recorded in BENCH.md; `candidates` (the
-product path) dispatches to the indexed form."""
+"""Candidate enumeration forms must agree: the Catalyst form
+(``candidates_indexed``), the doc-row lengths kernel, and the doc-row
+triples kernel behind ``run_pipeline``. The relational formulations
+measured in BENCH.md are gone from the package."""
 
 from __future__ import annotations
 
-import pytest
+import dataclasses
 
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
 from clinicaltransformerrelationextraction_spark.operators import (
@@ -12,46 +13,21 @@ from clinicaltransformerrelationextraction_spark.operators import (
 )
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
+    run_pipeline,
 )
 from tests.conftest import SF_SMOKE
 
-COLS = [
-    "doc_id", "ent_id_1", "ent_id_2", "ent_type_1", "ent_type_2",
-    "s1_marked", "s2_marked", "sent_diff", "i1", "i2",
-]
+
+def _triples_keys(docs, cfg):
+    # no label is the NonRel label, so every candidate becomes a triple
+    return run_pipeline(docs, dataclasses.replace(cfg, non_rel="")).triples
+
 
 VARIANTS = [
     C.candidates_indexed,
-    C.candidates_inrow,
-    C.candidates_join,
-    C.candidates_relational,
+    C.candidates_lengths_kernel,
+    _triples_keys,
 ]
-
-
-@pytest.mark.parametrize("variant", VARIANTS[1:], ids=lambda f: f.__name__)
-def test_variant_equals_product_path(spark, variant):
-    docs = load_documents(spark, SF_SMOKE).limit(150)
-    cfg = PipelineConfig()
-    a = C.candidates(docs, cfg).select(*COLS)
-    b = variant(docs, cfg).select(*COLS)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0
-
-
-@pytest.mark.parametrize(
-    "variant", [C.candidates_inrow, C.candidates_join],
-    ids=lambda f: f.__name__,
-)
-def test_variant_equal_under_cap(spark, variant):
-    """The cap keeps the same deterministic pair set in every formulation
-    (first N in (i1, i2) order)."""
-    rows = [(1, " ".join(["join", "spark"] * 120))]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    cfg = PipelineConfig(max_pairs_per_doc=37)
-    a = C.candidates(docs, cfg).select(*COLS)
-    b = variant(docs, cfg).select(*COLS)
-    assert a.count() == b.count() == 37
-    assert a.exceptAll(b).count() == 0
 
 
 def test_non_cross_product_comb_config(spark):

@@ -32,9 +32,8 @@ def _docs(spark, rows):
 
 def test_empty_corpus(spark):
     docs = _docs(spark, [])
-    res = run_pipeline(docs, CFG)
-    assert res.candidates.count() == 0
-    assert res.triples.count() == 0
+    assert candidates(docs, CFG).count() == 0
+    assert run_pipeline(docs, CFG).triples.count() == 0
     assert run_linked(docs, CFG).count() == 0
     assert run_brat(docs, CFG).count() == 0
 

@@ -44,15 +44,15 @@ def test_candidate_generation_is_shuffle_free(spark):
 
 def test_fused_triples_pipeline_is_shuffle_free(spark):
     """Fused score+filter+number: zero shuffle end to end beyond the input
-    split; no Window node (numbering happens inside the Arrow UDF)."""
-    trip = run_pipeline(
-        load_documents(spark, SF_SMOKE), PipelineConfig()
-    ).triples
-    plan = _plan(trip)
-    nodes = _nodes(plan)
-    assert nodes.count("Exchange") <= 1
-    assert "hashpartitioning" not in plan
-    assert "Window" not in nodes
+    split; no Window node (numbering happens inside the Arrow UDF) — for
+    a lengths backend (stub) and a text backend (mlp) alike."""
+    for cfg in (PipelineConfig(), PipelineConfig(scorer="mlp")):
+        trip = run_pipeline(load_documents(spark, SF_SMOKE), cfg).triples
+        plan = _plan(trip)
+        nodes = _nodes(plan)
+        assert nodes.count("Exchange") <= 1, cfg.scorer
+        assert "hashpartitioning" not in plan, cfg.scorer
+        assert "Window" not in nodes, cfg.scorer
 
 
 def test_no_single_partition_exchange_in_headline_queries(spark):

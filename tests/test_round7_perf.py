@@ -78,13 +78,47 @@ def test_bands_kernels_match_hof(spark, edge_docs):
 def test_bands_empty_shingles_edge(spark):
     # array_min of an empty array is NULL; concat_ws skips NULLs; so the
     # HOF twin emits md5("") band keys — the kernel must reproduce that
-    esh = spark.createDataFrame([(9, [])], "doc_id long, shingles array<string>")
+    # — for an empty array and for NULL shingles alike
+    esh = spark.createDataFrame(
+        [(9, []), (10, None)], "doc_id long, shingles array<string>"
+    )
     _same(
         dedup.bands_from_shingles(esh),
         dedup.bands_from_shingles_hof(esh),
         "empty-shingles bands",
     )
-    assert dedup.bands_from_shingles(esh).count() == dedup.N_SEEDS // dedup.BAND_ROWS
+    assert dedup.bands_from_shingles(esh).count() == (
+        2 * dedup.N_SEEDS // dedup.BAND_ROWS
+    )
+
+
+def _minhash_hof(sh):
+    """The Catalyst-HOF signature rows: digest_frame + minhash_cols."""
+    mhs = dedup.minhash_cols(F.col("digs"))
+    return dedup.digest_frame(sh).select(
+        "doc_id", F.posexplode(F.array(*mhs)).alias("seed", "mh")
+    ).select("doc_id", F.col("seed").cast("int").alias("seed"), "mh")
+
+
+def test_minhash_signatures_empty_shingles_edge(spark):
+    # array_min of an empty array is NULL: one NULL mh per seed, no
+    # failed task
+    esh = spark.createDataFrame(
+        [(9, []), (10, ["a b", "b c"])], "doc_id long, shingles array<string>"
+    )
+    got = dedup.minhash_signatures(esh)
+    _same(got, _minhash_hof(esh), "empty-shingles signatures")
+    assert got.filter("doc_id = 9 AND mh IS NULL").count() == dedup.N_SEEDS
+
+
+def test_minhash_signatures_non_long_doc_id(spark, edge_docs):
+    docs = edge_docs.select(
+        F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text"
+    )
+    sh = dedup.shingle_frame(docs)
+    got = dedup.minhash_signatures(sh)
+    assert dict(got.dtypes)["doc_id"] == "string"
+    _same(got, _minhash_hof(sh), "string doc_id signatures")
 
 
 def test_simhash_kernel_matches_hof(spark, edge_docs):
