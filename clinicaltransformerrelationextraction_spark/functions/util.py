@@ -12,16 +12,10 @@ def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     spark.sql.files.maxPartitionBytes and this is a no-op.
 
     The partition-count probe (``df.rdd.getNumPartitions()``) forces a plan
-    conversion, so production sessions whose inputs are known to be well
-    split can turn the whole helper off with
-    ``spark.conf.set("ctre.ensureParallelism", "false")`` — one conf read
-    per call, no probe."""
+    conversion, once per call."""
     if df.isStreaming:
         return df  # micro-batch sizing is the stream trigger's job
-    spark = df.sparkSession
-    if spark.conf.get("ctre.ensureParallelism", "true") != "true":
-        return df
-    target = spark.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism * factor
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -50,41 +50,6 @@ def link_triples(trip: DataFrame, mentions: DataFrame) -> DataFrame:
     )
 
 
-def brat_render_cogroup(mentions: DataFrame, trip: DataFrame) -> DataFrame:
-    """Alternative J5 implementation via cogroup().applyInPandas — the
-    grouped-map form of the entities⋈relations per-file merge
-    (post_processing.py:72-85). Output byte-identical to ``brat_render``
-    (asserted in tests); exists to cover the cogroup API surface the same
-    way a production renderer with non-relational formatting would need."""
-    import pandas as pd  # noqa: PLC0415
-
-    def merge(m: "pd.DataFrame", r: "pd.DataFrame") -> "pd.DataFrame":
-        if len(m) == 0 and len(r) == 0:
-            return pd.DataFrame({"doc_id": [], "ann_text": []})
-        doc_id = (m["doc_id"].iloc[0] if len(m) else r["doc_id"].iloc[0])
-        t_lines = [
-            f"T{row.tok_idx}\t{row.ent_type} {row.start} {row.end}\t"
-            f"{row.surface}"
-            for row in m.sort_values("tok_idx").itertuples()
-        ]
-        r_lines = [
-            f"{row.rel_id}\t{row.pred} Arg1:{row.subj_id} Arg2:{row.obj_id}"
-            for row in r.sort_values(
-                ["sent_diff", "i1", "i2"]
-            ).itertuples()
-        ]
-        return pd.DataFrame(
-            {"doc_id": [doc_id], "ann_text": ["\n".join(t_lines + r_lines)]}
-        )
-
-    return (
-        mentions.groupBy("doc_id")
-        .cogroup(trip.groupBy("doc_id"))
-        .applyInPandas(merge, schema="doc_id long, ann_text string")
-        .filter(F.col("doc_id").isNotNull())
-    )
-
-
 def brat_render(mentions: DataFrame, trip: DataFrame) -> DataFrame:
     """Per-doc brat ``.ann`` text: T lines (entities) then R lines
     (relations), exactly the reference's output contract (S7).

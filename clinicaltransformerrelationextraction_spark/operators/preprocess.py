@@ -15,7 +15,7 @@ Reference semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -28,6 +28,23 @@ __all__ = [
 MIMIC_PATTERN = r"\[\*\*|\*\*\]"
 SAMPLE_SEED = 13  # reference run.sh seed
 SAMPLE_N = 100
+
+
+def comb_map_col(cfg: PipelineConfig) -> Column:
+    """t1 -> array of allowed t2: EXACT tuple membership in
+    ``cfg.valid_combs`` (the reference's ``(en1t, en2t) not in valid_comb``
+    set check, preprocessing.ipynb cell 6) — not the cross product of the
+    projected type sets, which silently diverges for any config whose combo
+    set is not a full cross product. Lookup of an absent t1 yields NULL and
+    ``array_contains(NULL, x)`` is NULL, so such pairs are filtered."""
+    by_t1: dict[str, list[str]] = {}
+    for t1, t2 in cfg.valid_combs:
+        by_t1.setdefault(t1, []).append(t2)
+    entries: list[Column] = []
+    for t1 in sorted(by_t1):
+        entries.append(F.lit(t1))
+        entries.append(F.array(*[F.lit(x) for x in sorted(by_t1[t1])]))
+    return F.create_map(*entries)
 
 
 def deidentify(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -71,7 +88,6 @@ def q_validate_rels(spark: SparkSession, sf: str) -> DataFrame:
     AGGREGATED count table — bounded by sentences×types, never the
     quadratic mention-level self-join (a mention-heavy page contributes
     counts, not pair rows)."""
-    from .candidates import comb_map_col
     from .segmentation import mentions
 
     cfg = PipelineConfig()

@@ -537,11 +537,10 @@ def enum_score_filter_number(
     ``cfg.batch_size`` pairs are pending, flushing only at a doc boundary,
     so a scorer call holds at most ``batch_size + max_pairs_per_doc - 1``
     rows. Each doc is whole within its input row, so numbering needs no
-    cross-batch carry. Output equals
-    ``score_filter_number(candidates(docs, emit=...), cfg)``, scores
-    included, for any Arrow batch size, partitioning or ``batch_size``
-    (pinned in tests/test_kernel_path.py; the stub by the q_triples
-    oracle)."""
+    cross-batch carry. Output equals ``score_filter_number`` over the same
+    candidates, scores included, for any Arrow batch size, partitioning or
+    ``batch_size`` (pinned against the pure-Python candidate reference in
+    tests/test_kernel_path.py; the stub by the q_triples oracle)."""
     cfg = cfg or PipelineConfig()
     factory = _resolve_factory(cfg)
     emit = "lengths" if _needs_lengths(factory) else "text"

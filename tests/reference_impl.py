@@ -4,7 +4,8 @@ itertools.permutations — see preprocessing.ipynb cells 5-6), used as the
 oracle for the north-rule P/R >= 0.95 triple comparison.
 
 Deliberately shares NO code with the Spark implementation: dict/loop based,
-so a bug in the Spark HOF expressions cannot hide in a shared helper.
+so a bug in the package's enumeration kernels cannot hide in a shared
+helper.
 """
 
 from __future__ import annotations
@@ -80,4 +81,49 @@ def reference_corpus_triples(rows) -> list[tuple]:
     out = []
     for doc_id, text in rows:
         out.extend(reference_triples(doc_id, text))
+    return out
+
+
+def reference_candidates(rows, cfg) -> list[tuple]:
+    """rows: iterable of (doc_id, text) -> the kept candidate rows
+    (doc_id, ent_id_1, ent_id_2, ent_type_1, ent_type_2, s1_marked,
+    s2_marked, sent_diff, i1, i2) under ``cfg``'s vocabulary, combos,
+    sentence length, cutoff and per-doc cap: the first
+    ``max_pairs_per_doc`` valid pairs in (arg1 token order, arg2 token
+    order), every pair when the cap is 0. NULL text has no candidates."""
+    valid = set(cfg.valid_combs)
+    sl = cfg.sent_len
+    out = []
+    for doc_id, text in rows:
+        if text is None:
+            continue
+        toks = text.split(" ")
+        mentions = [
+            (idx + 1, cfg.ent_vocab[tok], idx // sl)
+            for idx, tok in enumerate(toks)
+            if tok in cfg.ent_vocab
+        ]
+        kept = []
+        for (i1, t1, s1), (i2, t2, s2) in itertools.permutations(
+                mentions, 2):
+            if (t1, t2) not in valid or abs(s1 - s2) > cfg.cutoff:
+                continue
+            lo, hi = min(s1, s2), max(s1, s2)
+            window = toks[lo * sl:(hi + 1) * sl]
+            wst = lo * sl + 1  # 1-based original index of window[0]
+
+            def marked(ent_i, open_t, close_t):
+                return " ".join(
+                    f"{open_t} {tok} {close_t}" if wst + k == ent_i else tok
+                    for k, tok in enumerate(window)
+                )
+
+            kept.append((
+                doc_id, f"T{i1}", f"T{i2}", t1, t2,
+                marked(i1, "[s1]", "[e1]"), marked(i2, "[s2]", "[e2]"),
+                abs(s1 - s2), i1, i2,
+            ))
+        if cfg.max_pairs_per_doc:
+            kept = kept[:cfg.max_pairs_per_doc]
+        out.extend(kept)
     return out

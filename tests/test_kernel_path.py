@@ -1,6 +1,7 @@
 """The doc-row kernel (``scoring.enum_score_filter_number``) is
-``run_pipeline``'s only path. It must equal the two-stage form (Catalyst
-text candidates, then ``score_filter_number``) exactly, scores included,
+``run_pipeline``'s only path. It must equal the two-stage form (the
+pure-Python reference candidates of ``tests/reference_impl.py``, then
+``score_filter_number``) exactly, scores included,
 for every backend and under any salting, Arrow batch size and scorer batch
 size; it must honour the ``register_scorer`` contract; and frames built
 without marked strings must fail with an error naming the cause."""
@@ -20,7 +21,6 @@ from pyspark.sql import functions as F
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
     candidates,
-    candidates_indexed,
 )
 from clinicaltransformerrelationextraction_spark.operators.scoring import (
     SCORER_REGISTRY,
@@ -33,12 +33,25 @@ from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     run_pipeline,
 )
 from tests.conftest import SF_SMOKE
+from tests.reference_impl import reference_candidates
 
 ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()))
+
+
+def _reference_frame(spark, docs, cfg) -> DataFrame:
+    """The reference's text candidates as a frame; ``score_filter_number``
+    needs each doc's rows contiguous within one partition."""
+    rows = reference_candidates(docs.select("doc_id", "text").collect(), cfg)
+    return spark.createDataFrame(
+        rows,
+        "doc_id long, ent_id_1 string, ent_id_2 string, ent_type_1 string, "
+        "ent_type_2 string, s1_marked string, s2_marked string, "
+        "sent_diff int, i1 int, i2 int",
+    ).repartition("doc_id").sortWithinPartitions("doc_id")
 
 
 def _set_arrow_batch(spark, n):
@@ -65,7 +78,7 @@ def test_kernel_triples_equal_two_stage(spark, scorer):
     for kw in ({}, {"max_pairs_per_doc": 7}, {"data_format_mode": 1}):
         cfg = PipelineConfig(scorer=scorer, **kw)
         want = _rows(score_filter_number(
-            candidates_indexed(docs, cfg, emit="text"), cfg))
+            _reference_frame(spark, docs, cfg), cfg))
         assert want, "no triples: the comparison is vacuous"
         # every (salt, batch_size) combination in one job
         runs = functools.reduce(DataFrame.unionByName, [

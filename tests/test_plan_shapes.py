@@ -35,11 +35,17 @@ def _nodes(plan: str) -> list[str]:
 def test_candidate_generation_is_shuffle_free(spark):
     """The candidate stage may contain ONLY the input-split repartition
     (round-robin from ensure_parallelism) — never a hash-partition
-    exchange: the pair blow-up is in-row by design."""
-    plan = _plan(candidates(load_documents(spark, SF_SMOKE), PipelineConfig()))
-    assert _nodes(plan).count("Exchange") <= 1
-    assert "hashpartitioning" not in plan
-    assert "SinglePartition" not in plan
+    exchange: the pair blow-up is in-row by design. Both emits are one
+    doc-row kernel: one MapInPandas and no Generate (explode)."""
+    docs = load_documents(spark, SF_SMOKE)
+    for emit in ("text", "lengths"):
+        plan = _plan(candidates(docs, PipelineConfig(), emit=emit))
+        nodes = _nodes(plan)
+        assert nodes.count("Exchange") <= 1, emit
+        assert "hashpartitioning" not in plan, emit
+        assert "SinglePartition" not in plan, emit
+        assert nodes.count("MapInPandas") == 1, emit
+        assert "Generate" not in nodes, emit
 
 
 def test_fused_triples_pipeline_is_shuffle_free(spark):

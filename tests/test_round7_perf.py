@@ -4,8 +4,8 @@ byte-identical to the formulation it replaced.
 - dedup shingle/band Python kernels == the Catalyst-HOF twins (incl. the
   short-doc, unicode, consecutive-space, NULL-text and empty-shingles
   edges);
-- candidates emit="lengths" window lengths == F.length of the marked
-  strings the text mode builds;
+- candidates emit="lengths" window lengths == the lengths of the
+  reference's marked strings;
 - cosine_with_norms == cosine (bit-identical doubles);
 - the stub scorer's lengths input path == its text input path;
 - q_ann_ivf_topk's aggregate-based corpus cell assignment == the
@@ -152,33 +152,24 @@ def test_simhash_kernel_matches_hof(spark, edge_docs):
 
 
 def test_candidate_lengths_match_marked_strings(spark):
-    from clinicaltransformerrelationextraction_spark.operators.candidates import (
-        candidates_indexed, candidates_lengths_kernel,
-    )
+    """emit="lengths" rows (all columns, including the capped kept set)
+    equal the reference's rows with each marked string replaced by its
+    length."""
     from clinicaltransformerrelationextraction_spark.plans.pipeline import (
         load_documents,
     )
+    from tests.reference_impl import reference_candidates
 
-    cfg = PipelineConfig()
     docs = load_documents(spark, SF_SMOKE)
-    text = candidates(docs, cfg).select(
-        "doc_id", "i1", "i2",
-        F.length("s1_marked").alias("s1_len"),
-        F.length("s2_marked").alias("s2_len"),
-    )
-    lens = candidates(docs, cfg, emit="lengths").select(
-        "doc_id", "i1", "i2", "s1_len", "s2_len"
-    )
-    _same(lens, text, "window lengths")
-    # the kernel must reproduce the FULL indexed lengths frame (all
-    # columns), including the capped kept-set and its enumeration order
+    rows = docs.select("doc_id", "text").collect()
     for cap in (10_000, 7):
         c = PipelineConfig(max_pairs_per_doc=cap)
-        _same(
-            candidates_lengths_kernel(docs, c),
-            candidates_indexed(docs, c, emit="lengths"),
-            f"lengths kernel vs indexed (cap={cap})",
+        want = sorted(
+            r[:5] + (len(r[5]), len(r[6])) + r[7:]
+            for r in reference_candidates(rows, c)
         )
+        got = sorted(map(tuple, candidates(docs, c, emit="lengths").collect()))
+        assert got == want != [], f"window lengths (cap={cap})"
 
 
 def test_cosine_with_norms_bit_identical(spark):
@@ -286,9 +277,6 @@ def test_fused_enum_score_matches_two_stage(spark):
     """enum_score_filter_number (the r7 single-kernel flagship path) must
     equal score_filter_number over the lengths candidate frame, incl.
     the R-numbering, on default and capped configs."""
-    from clinicaltransformerrelationextraction_spark.operators.candidates import (
-        candidates_lengths_kernel,
-    )
     from clinicaltransformerrelationextraction_spark.operators.scoring import (
         enum_score_filter_number, score_filter_number,
     )
@@ -301,7 +289,7 @@ def test_fused_enum_score_matches_two_stage(spark):
         cfg = PipelineConfig(**kw)
         _same(
             enum_score_filter_number(docs, cfg),
-            score_filter_number(candidates_lengths_kernel(docs, cfg), cfg),
+            score_filter_number(candidates(docs, cfg, emit="lengths"), cfg),
             f"fused enum+score {kw}",
         )
 

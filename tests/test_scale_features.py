@@ -3,6 +3,8 @@ MinHashLSH canonicalization, alias linking."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
@@ -19,6 +21,7 @@ from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     run_pipeline,
 )
 from tests.conftest import SF_SMOKE
+from tests.reference_impl import reference_candidates
 
 KEY = ["doc_id", "rel_id", "subj_id", "obj_id", "pred"]
 
@@ -35,19 +38,25 @@ def test_salted_pipeline_equivalence(spark):
 
 
 def test_candidate_cap_accounting(spark):
+    """The cap accounting equals the reference's per-doc counts; with no
+    cap (0) or a cap above every doc's pairs nothing is dropped."""
     docs = load_documents(spark, SF_SMOKE)
-    # uncapped accounting: nothing dropped, totals match actual candidates
-    cfg = PipelineConfig(max_pairs_per_doc=10_000)
-    stats = candidate_cap_stats(docs, cfg).collect()[0]
-    assert stats.n_pairs_dropped == 0 and stats.n_docs_capped == 0
-    assert stats.n_pairs_total == candidates(docs, cfg).count()
-
-    # tight cap: dropped count exactly accounts for the reduction
-    tight = PipelineConfig(max_pairs_per_doc=5)
-    tstats = candidate_cap_stats(docs, tight).collect()[0]
-    kept = candidates(docs, tight).count()
-    assert tstats.n_pairs_total - tstats.n_pairs_dropped == kept
-    assert tstats.n_docs_capped > 0
+    rows = docs.select("doc_id", "text").collect()
+    per_doc = Counter(r[0] for r in reference_candidates(
+        rows, PipelineConfig(max_pairs_per_doc=0)))
+    for cap in (10_000, 0, 5):
+        cfg = PipelineConfig(max_pairs_per_doc=cap)
+        stats = candidate_cap_stats(docs, cfg).collect()[0]
+        dropped = [max(n - cap, 0) if cap else 0 for n in per_doc.values()]
+        assert tuple(stats) == (
+            len(rows), sum(per_doc.values()), sum(d > 0 for d in dropped),
+            sum(dropped)), cap
+        kept = candidates(docs, cfg).count()
+        assert stats.n_pairs_total - stats.n_pairs_dropped == kept, cap
+        if cap != 5:  # no cap, and a cap no doc reaches
+            assert (stats.n_docs_capped, stats.n_pairs_dropped) == (0, 0)
+    # the tight cap actually bites
+    assert stats.n_docs_capped > 0
 
 
 def test_mlp_scorer_backend(spark):

@@ -1,5 +1,4 @@
-"""applyInPandasWithState sessionization vs its batch-window twin, and the
-cogroup brat merge vs the aggregation-based renderer."""
+"""applyInPandasWithState sessionization vs its batch-window twin."""
 
 from __future__ import annotations
 
@@ -7,18 +6,6 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from clinicaltransformerrelationextraction_spark.config import PipelineConfig
-from clinicaltransformerrelationextraction_spark.operators.postprocess import (
-    brat_render,
-    brat_render_cogroup,
-)
-from clinicaltransformerrelationextraction_spark.operators.segmentation import (
-    mentions,
-)
-from clinicaltransformerrelationextraction_spark.plans.pipeline import (
-    load_documents,
-    run_pipeline,
-)
 from clinicaltransformerrelationextraction_spark.streaming.sessionize import (
     sessionize_batch,
     sessionize_stream,
@@ -46,17 +33,6 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     # sanity: sessions split on >30min gaps
     multi = batch.filter(F.col("session_id") > 1).count()
     assert multi > 0  # the synthetic events do contain gaps
-
-
-def test_brat_cogroup_matches_agg_renderer(spark):
-    docs = load_documents(spark, SF_SMOKE).limit(100)
-    cfg = PipelineConfig()
-    men = mentions(docs, cfg)
-    trip = run_pipeline(docs, cfg).triples
-    a = brat_render(men, trip)
-    b = brat_render_cogroup(men, trip)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0
 
 
 def test_sessionize_two_drain_incremental(spark, tmp_path):
