@@ -103,6 +103,7 @@ def _cfg_from(args: argparse.Namespace) -> PipelineConfig:
 
 
 def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
+    from .functions.util import observe_count
     from .operators.binarymode import binary_triples
     from .operators.candidates import candidates
     from .operators.segmentation import mentions
@@ -116,10 +117,9 @@ def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
     cfg = _cfg_from(args)
 
     if args.binary_mode:
-        trip = binary_triples(candidates(docs, cfg), cfg)
+        trip, obs = observe_count(binary_triples(candidates(docs, cfg), cfg))
         trip.write.mode("overwrite").parquet(f"{args.output}/triples")
-        n = spark.read.parquet(f"{args.output}/triples").count()
-        return {"mode": "binary", "n_triples": n}
+        return {"mode": "binary", "n_triples": obs.get["n"]}
 
     if args.n_buckets > 1:
         run = LedgerRun(out_dir=args.output, n_buckets=args.n_buckets,
@@ -128,10 +128,12 @@ def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
         n = sum(v["n_triples"] for v in ledger.values())
         trip_df = run.triples(spark)  # manifest-resolved current state
     else:
-        trip = run_pipeline(docs, cfg, salt=args.salt).triples
+        trip, obs = observe_count(
+            run_pipeline(docs, cfg, salt=args.salt).triples
+        )
         trip.write.mode("overwrite").parquet(f"{args.output}/triples")
+        n = obs.get["n"]
         trip_df = spark.read.parquet(f"{args.output}/triples")
-        n = trip_df.count()
     ann = brat_render(mentions(docs, cfg), trip_df)
     ann.write.mode("overwrite").parquet(f"{args.output}/brat")
     return {"mode": "ledger" if args.n_buckets > 1 else "single",

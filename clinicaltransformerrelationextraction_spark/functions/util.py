@@ -2,7 +2,16 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+
+def observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count that the next action on it collects, with
+    no Spark job of its own; read it as ``obs.get["n"]`` after that
+    action. An Observation serves one action: call this once per action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:

@@ -16,7 +16,11 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   swap), and an empty replacement simply drops the bucket from the
   manifest;
 - a ``_ledger`` table records (partition_id, status, n_triples, n_docs,
-  wall_sec, path, version) — the per-partition lineage + metrics;
+  wall_sec, path, version, n_buckets) — the per-partition lineage +
+  metrics. ``n_docs`` and ``n_triples`` are Observations on the bucket's
+  one write, so a bucket commit runs only the Spark jobs of that write.
+  ``n_buckets`` pins the bucketing: a run with another count raises
+  instead of re-bucketing over done rows;
 - ``_snapshots.json`` appends one snapshot per completed run with the full
   bucket->file manifest and parent chaining; ``triples(snapshot_id=...)``
   TIME-TRAVELS to any retained snapshot; ``expire_snapshots`` GCs data
@@ -39,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..functions.util import observe_count
 from .pipeline import run_pipeline
 
 # the triples-table schema (for empty-manifest reads, where no parquet
@@ -228,6 +233,22 @@ class LedgerRun:
             self.ledger_path, json.dumps(ledger, indent=1, sort_keys=True)
         )
 
+    def _check_bucket_count(self, ledger: dict[str, dict]) -> None:
+        """A row bucketed under another count covers other docs, so
+        skipping or re-running it by key would lose or duplicate triples.
+        Rows that predate the ``n_buckets`` field are checked by key."""
+        for key, row in ledger.items():
+            theirs = row.get("n_buckets")
+            if theirs is None and int(key) >= self.n_buckets:
+                theirs = f"at least {int(key) + 1}"
+            if theirs not in (None, self.n_buckets):
+                raise ValueError(
+                    f"{self.ledger_path} was written with n_buckets="
+                    f"{theirs} (bucket {key}), but this run has n_buckets="
+                    f"{self.n_buckets}; resume with the ledger's bucket "
+                    "count or use a new out_dir"
+                )
+
     def run(
         self,
         docs: DataFrame,
@@ -238,21 +259,24 @@ class LedgerRun:
         ``fail_after`` aborts after N buckets (for resume tests) —
         simulating a mid-run crash."""
         cfg = cfg or PipelineConfig()
-        spark = docs.sparkSession
         bucketed = docs.withColumn(
             "bucket", F.pmod(F.hash("doc_id"), F.lit(self.n_buckets))
         )
         ledger = self._read_ledger()
+        self._check_bucket_count(ledger)
         done = 0
         for b in range(self.n_buckets):
             key = str(b)
             if ledger.get(key, {}).get("status") == "done":
                 continue
             t0 = time.time()
-            part = bucketed.filter(F.col("bucket") == b).drop("bucket")
-            n_docs = part.count()
-            trip = run_pipeline(part, cfg, salt=self.salt).triples.withColumn(
-                "bucket", F.lit(b)
+            part, o_docs = observe_count(
+                bucketed.filter(F.col("bucket") == b).drop("bucket")
+            )
+            trip, o_trip = observe_count(
+                run_pipeline(part, cfg, salt=self.salt).triples.withColumn(
+                    "bucket", F.lit(b)
+                )
             )
             # Iceberg-style commit: write an IMMUTABLE new data directory
             # per bucket version — never touching the live files — then
@@ -264,18 +288,14 @@ class LedgerRun:
             version = ledger.get(key, {}).get("version", -1) + 1
             path = f"{self.triples_dir}/data/b{b}_v{version}"
             trip.write.mode("overwrite").parquet(path)
-            # explicit schema: an empty bucket writes no part files, and
-            # schema-less parquet inference would fail on it
-            n_triples = (
-                spark.read.schema(trip.schema).parquet(path).count()
-            )
             ledger[key] = {
                 "status": "done",
-                "n_docs": n_docs,
-                "n_triples": n_triples,
+                "n_docs": o_docs.get["n"],
+                "n_triples": o_trip.get["n"],
                 "wall_sec": round(time.time() - t0, 3),
                 "path": path,
                 "version": version,
+                "n_buckets": self.n_buckets,
             }
             self._write_ledger(ledger)
             done += 1

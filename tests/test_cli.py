@@ -53,6 +53,7 @@ def test_cli_predict_binary_and_config_json(spark, tmp_path):
     )
     assert res["mode"] == "binary"
     trip = spark.read.parquet(out + "/triples")
+    assert res["n_triples"] == trip.count()
     labels = {r.pred for r in trip.select("pred").distinct().collect()}
     assert labels and "NonRel" not in labels
 

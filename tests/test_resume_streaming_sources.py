@@ -11,12 +11,30 @@ import pytest
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
-from clinicaltransformerrelationextraction_spark.plans.ledger import LedgerRun
+from clinicaltransformerrelationextraction_spark.plans.ledger import (
+    TRIPLES_DDL,
+    LedgerRun,
+)
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
     run_pipeline,
 )
 from tests.conftest import SF_SMOKE
+
+
+def _assert_ledger_counts(spark, docs, ledger, n):
+    """Every row's n_docs and n_triples equal counts taken independently
+    of the ledger: the bucket's docs, and the rows of its data dir."""
+    assert sorted(map(int, ledger)) == list(range(n))
+    for key, row in ledger.items():
+        want_docs = docs.filter(
+            F.pmod(F.hash("doc_id"), F.lit(n)) == int(key)
+        ).count()
+        want_trip = (
+            spark.read.schema(TRIPLES_DDL).parquet(row["path"]).count()
+        )
+        assert (row["n_docs"], row["n_triples"]) == (want_docs, want_trip), key
+        assert row["n_buckets"] == n
 
 
 def test_ledger_resume_after_crash(spark, tmp_path):
@@ -42,15 +60,99 @@ def test_ledger_resume_after_crash(spark, tmp_path):
     assert (
         resumed.select(*key).exceptAll(expected.select(*key)).count() == 0
     )
-    # per-partition lineage metrics present
-    assert all(
-        v["n_triples"] >= 0 and v["wall_sec"] >= 0 for v in ledger.values()
-    )
+    # per-partition lineage metrics, exact across the crash and the resume
+    _assert_ledger_counts(spark, docs, ledger, 4)
+    assert all(v["wall_sec"] >= 0 for v in ledger.values())
 
     # idempotence: re-running a completed ledger is a no-op
     before = os.path.getmtime(run.ledger_path)
     run.resume(docs)
     assert os.path.getmtime(run.ledger_path) == before
+
+
+@pytest.mark.parametrize(
+    "n, salt, n_docs, scheme",
+    [(4, False, None, ""), (4, True, None, ""), (16, False, 5, ""),
+     (4, False, None, "file://")],
+    ids=["plain", "salt", "empty_buckets", "file_scheme"],
+)
+def test_ledger_counts_equal_independent_counts(
+    spark, tmp_path, n, salt, n_docs, scheme
+):
+    """The ledger's n_docs / n_triples are Observations on the bucket's
+    write; they must be exact (triples() drops n_triples == 0 buckets),
+    including below the salted exchange and for empty buckets."""
+    docs = load_documents(spark, SF_SMOKE)
+    if n_docs is not None:
+        first = docs.orderBy("doc_id").limit(n_docs).collect()
+        docs = docs.filter(F.col("doc_id").isin([r.doc_id for r in first]))
+    run = LedgerRun(out_dir=scheme + str(tmp_path / "c"), n_buckets=n,
+                    salt=salt)
+    ledger = run.run(docs)
+    _assert_ledger_counts(spark, docs, ledger, n)
+    if n_docs is not None:
+        assert sum(v["n_docs"] for v in ledger.values()) == n_docs
+        assert any(
+            (v["n_docs"], v["n_triples"]) == (0, 0) for v in ledger.values()
+        )
+    assert run.triples(spark).count() == sum(
+        v["n_triples"] for v in ledger.values()
+    )
+
+
+def test_ledger_adds_no_spark_job(spark, tmp_path):
+    """A bucket commit is exactly the Spark jobs of writing the bucket's
+    triples: the counts ride on that write, with no job of their own.
+    Uncached parquet input (a cached input adds a table-cache job)."""
+    docs = load_documents(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    n = 4
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    part = docs.filter(F.pmod(F.hash("doc_id"), F.lit(n)) == 0)
+    one = jobs(
+        "ledger-one-write",
+        lambda: run_pipeline(part, PipelineConfig()).triples.write.mode(
+            "overwrite"
+        ).parquet(str(tmp_path / "one")),
+    )
+    assert one >= 1
+    run = LedgerRun(out_dir=str(tmp_path / "jobs"), n_buckets=n)
+    assert jobs("ledger-run", lambda: run.run(docs)) == n * one
+
+
+def test_ledger_rejects_another_bucket_count(spark, tmp_path):
+    """Re-bucketing under another n_buckets would skip or redo rows by key
+    alone and duplicate triples: a 4-bucket crash resumed with the CLI's
+    default 8 must raise and leave the ledger untouched."""
+    from clinicaltransformerrelationextraction_spark.cli import main
+
+    docs = load_documents(spark, SF_SMOKE)
+    out = str(tmp_path / "nb")
+    run = LedgerRun(out_dir=out, n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run.run(docs, fail_after=2)
+    with open(run.ledger_path) as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="n_buckets=4 .*n_buckets=8"):
+        main(["resume", "--input", f"{SF_SMOKE}/documents.parquet",
+              "--output", out], spark=spark)
+    with open(run.ledger_path) as f:
+        assert f.read() == before
+
+    # rows that predate the field: any key >= n_buckets is rejected
+    legacy = {k: {f: v for f, v in row.items() if f != "n_buckets"}
+              for k, row in json.loads(before).items()}
+    run._write_ledger(legacy)
+    with pytest.raises(ValueError, match="n_buckets=at least 2"):
+        LedgerRun(out_dir=out, n_buckets=1).run(docs)
 
 
 def test_streaming_availablenow_incremental(spark, tmp_path):
