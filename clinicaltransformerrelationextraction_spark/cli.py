@@ -232,6 +232,7 @@ def cmd_analyze(args: argparse.Namespace, spark=None) -> dict:
     dedup/quality/packing queries a 100 TB ingest runs before training."""
     import importlib
 
+    from .functions.util import observe_count
     from .session import get_spark
 
     # validate BEFORE paying JVM/session startup; `is None` (not falsy)
@@ -251,10 +252,9 @@ def cmd_analyze(args: argparse.Namespace, spark=None) -> dict:
         mod = importlib.import_module(
             f".operators.{mod_name}", __package__
         )
-        df = getattr(mod, fn_name)(spark, args.input)
-        dest = f"{args.output}/{n}"
-        df.write.mode("overwrite").parquet(dest)
-        out[n] = spark.read.parquet(dest).count()
+        df, obs = observe_count(getattr(mod, fn_name)(spark, args.input))
+        df.write.mode("overwrite").parquet(f"{args.output}/{n}")
+        out[n] = obs.get["n"]
     return out
 
 

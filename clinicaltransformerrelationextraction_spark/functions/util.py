@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -28,3 +30,23 @@ def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def row_kernel(src: DataFrame, schema: str, rows_of: Callable) -> DataFrame:
+    """``rows_of(*row) -> [tuple]`` over every row of ``src``, called with
+    the row's values of ``src``'s columns in order, as one Arrow-batched
+    ``mapInPandas`` pass that yields one pandas frame per batch. Output
+    tuples follow ``schema``'s column order. Arrow hands ``array`` cells
+    over as numpy arrays: test them with ``len(x) == 0``, never ``not x``."""
+    import pandas as pd
+
+    cols = [f.split()[0] for f in schema.split(", ")]
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = [r for row in pdf.itertuples(index=False, name=None)
+                    for r in rows_of(*row)]
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
+
+    return src.mapInPandas(kernel, schema=schema)

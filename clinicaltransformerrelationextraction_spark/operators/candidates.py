@@ -19,9 +19,9 @@ no doc-level skew can stall a stage.
 
 The per-doc loop exists once: ``pair_enumerator`` (mention scan, windowed
 pairs, cap, window bounds) and ``doc_candidate_rows`` (marked strings or
-their lengths). It runs inside Arrow-batched ``mapInPandas`` doc-row
-kernels, batch and stream alike: ``candidates`` and
-``candidate_cap_stats`` here, and ``scoring.enum_score_filter_number``,
+their lengths). It runs inside Arrow-batched doc-row kernels, batch and
+stream alike: ``candidates`` and ``candidate_cap_stats`` here (through
+``functions.util.row_kernel``), and ``scoring.enum_score_filter_number``,
 the triples path for every scorer backend. The Catalyst higher-order
 function form and the relational alternatives (a mention self-join on the
 doc key) lost every paired measurement in BENCH.md and are gone.
@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN, PipelineConfig
-from ..functions.util import ensure_parallelism
+from ..functions.util import ensure_parallelism, row_kernel
 
 __all__ = [
     "tokens_col", "candidates", "candidate_cap_stats", "candidate_columns",
@@ -157,24 +157,6 @@ def doc_rows_input(df: DataFrame, doc_col: str = "doc_id",
     )
 
 
-def _doc_kernel(src: DataFrame, schema: str, rows_of: Callable) -> DataFrame:
-    """``rows_of(doc_id, text) -> [tuple]`` over every doc row of ``src``
-    as one Arrow-batched ``mapInPandas`` pass, one pandas frame per
-    batch."""
-    import pandas as pd
-
-    cols = [f.split()[0] for f in schema.split(", ")]
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = [r for did, tx in zip(pdf["doc_id"], pdf["text"])
-                    for r in rows_of(did, tx)]
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(kernel, schema=schema)
-
-
 def candidates(
     df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
     text_col: str = "text", emit: str = "text",
@@ -193,7 +175,7 @@ def candidates(
     id_type = src.schema["doc_id"].dataType.simpleString()
     s1, s2 = candidate_columns(emit)[5:7]
     s_type = "int" if emit == "lengths" else "string"
-    return _doc_kernel(
+    return row_kernel(
         src,
         f"doc_id {id_type}, ent_id_1 string, ent_id_2 string, "
         f"ent_type_1 string, ent_type_2 string, {s1} {s_type}, "
@@ -221,8 +203,8 @@ def candidate_cap_stats(
         n = 0 if text is None else len(enumerate_all(text.split(" ")))
         return [(n, max(n - cap, 0) if cap else 0)]
 
-    per_doc = _doc_kernel(doc_rows_input(df, doc_col, text_col),
-                          "n_pairs long, n_dropped long", counts)
+    per_doc = row_kernel(doc_rows_input(df, doc_col, text_col),
+                         "n_pairs long, n_dropped long", counts)
     return per_doc.agg(
         F.count("*").alias("n_docs"),
         F.sum("n_pairs").alias("n_pairs_total"),

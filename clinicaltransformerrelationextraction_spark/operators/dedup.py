@@ -4,9 +4,11 @@ MinHash+LSH, SimHash, n-gram Jaccard).
 
 Scale design:
 - shingling + minhash signatures are computed NARROWLY, zero shuffle —
-  since r7 as Arrow-batched mapInPandas kernels (the measured ~100×
-  cheaper-per-element replacement for the interpreted Catalyst
-  higher-order functions, which remain as `*_hof` equality twins);
+  per-doc Python functions (``bigram_shingles``, ``minhash_minima``) run
+  by ``functions.util.row_kernel``, one Arrow-batched pass, the measured
+  ~100× cheaper-per-element replacement for the interpreted Catalyst
+  higher-order functions (those now live in tests/catalyst_twins.py as
+  the equality oracles);
 - the only shuffles are the LSH band-bucket self-join (equi-join on
   (band, band_key) — exactly what LSH exists for: it replaces the quadratic
   all-pairs join with a bucket join) and the final distinct;
@@ -18,18 +20,18 @@ DuckDB oracle; engine-native hash() differs between engines.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from hashlib import md5
+from typing import Callable
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.util import row_kernel
 
 N_SEEDS = 8  # minhash signature length
 BAND_ROWS = 2  # rows per LSH band -> N_SEEDS/BAND_ROWS bands
 JACCARD_MIN = 0.5  # near-dup threshold on bigram jaccard
 SIMHASH_BITS = 16
-HEX = "0123456789abcdef"
 
 
 def _docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -45,109 +47,62 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def shingles_col(toks: Column, n: int = 2) -> Column:
-    """Distinct n-token shingles, built in-row. Guarded for short docs:
-    Spark's sequence(1, 0) DESCENDS, so the empty case must be explicit."""
-    joined = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + k) for k in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(joined)
+def bigram_shingles(text: str | None) -> list[str]:
+    """Distinct space-joined token bigrams of one doc in first-occurrence
+    order; ``[]`` for NULL text or fewer than 2 tokens. Splits on single
+    spaces and keeps empty tokens, like Spark's ``split(text, ' ')``."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    return list(dict.fromkeys(a + " " + b for a, b in zip(toks, toks[1:])))
 
 
-def minhash_cols(digests: Column, n_seeds: int = N_SEEDS) -> list[Column]:
-    """One min-hash per seed: min over shingles of the seed's 4-hex-char
-    slice of the shingle's single md5 digest — ONE strong hash per shingle,
-    k projections (the standard way to avoid k independent hash passes).
-    16-bit slices are plenty: the hash range (65,536) is >> per-doc shingle
-    counts (hundreds), which is what minhash quality needs. Measured note:
-    wall time is flat vs md5-per-seed at sf0.1 — interpreted HOF
-    element iteration, not hashing, dominates this stage; the win is CPU
-    per element at scale, not the local benchmark."""
+def minhash_minima(shingles) -> list[str | None]:
+    """One doc's MinHash signature: seed k's minimum is the least 4-hex-char
+    slice ``[4k, 4k+4)`` of the shingles' md5 hexdigests — ONE strong hash
+    per shingle, ``N_SEEDS`` projections. 16-bit slices are plenty: the
+    hash range (65,536) is far above per-doc shingle counts (hundreds).
+    An empty or NULL array gives ``N_SEEDS`` Nones, as ``array_min`` of an
+    empty array is NULL."""
+    if shingles is None or len(shingles) == 0:
+        return [None] * N_SEEDS
+    digs = [md5(s.encode("utf-8")).hexdigest() for s in shingles]
+    return [min(d[4 * k: 4 * k + 4] for d in digs) for k in range(N_SEEDS)]
+
+
+def _band_rows(did, shingles) -> list[tuple]:
+    """(doc_id, band, bkey) rows of one doc: each band's key is the md5 of
+    its ``BAND_ROWS`` minima, '|'-joined with NULLs skipped (concat_ws), so
+    an empty or NULL shingle array keys every band ``md5("")``."""
+    mins = minhash_minima(shingles)
     return [
-        F.array_min(
-            F.transform(digests, lambda d: F.substring(d, 1 + 4 * s, 4))
-        ).alias(f"mh{s}")
-        for s in range(n_seeds)
+        (did, b, md5("|".join(
+            m for m in mins[b * BAND_ROWS:(b + 1) * BAND_ROWS]
+            if m is not None
+        ).encode("utf-8")).hexdigest())
+        for b in range(N_SEEDS // BAND_ROWS)
     ]
+
+
+def _per_doc(src: DataFrame, cols: str, rows_of: Callable) -> DataFrame:
+    """``row_kernel`` over a (doc_id, x) frame whose output starts with
+    ``doc_id`` of the input's type (long or not) followed by ``cols``."""
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    return row_kernel(src, f"doc_id {id_type}, {cols}", rows_of)
 
 
 def shingle_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles) from any documents-shaped frame — the df-based
     core shared by the corpus-wide queries here and the incremental
-    (delta-vs-index) operators in incremental.py.
-
-    Arrow-batched mapInPandas kernel (r7, guide §4.2): tokenize + bigram +
-    first-occurrence dedup run as a plain Python loop per batch instead of
-    interpreted Catalyst higher-order functions — measured ~100× cheaper
-    per element (the HOF subtree alone cost ~2.9 s at sf0.1 on 32 cores;
-    one Python core does the same work in 0.84 s). Output is byte-identical
-    to the HOF twin ``shingle_frame_hof`` (split keeps empty tokens like
-    Java split limit -1; dict.fromkeys preserves first-occurrence order
-    like array_distinct; docs with <2 tokens are dropped like the
-    size-guard) — equality pinned in tests/test_round7_perf.py."""
-    src = docs.select("doc_id", "text")
-    id_type = src.schema["doc_id"].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            outs: list = []
-            for did, tx in zip(pdf["doc_id"], pdf["text"]):
-                if tx is None:
-                    continue
-                toks = tx.split(" ")
-                if len(toks) < 2:
-                    continue
-                ids.append(did)
-                outs.append(list(dict.fromkeys(
-                    a + " " + b for a, b in zip(toks, toks[1:])
-                )))
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "shingles": outs})
-
-    return src.mapInPandas(
-        kernel, schema=f"doc_id {id_type}, shingles array<string>"
+    (delta-vs-index) operators in incremental.py. Docs with no bigram
+    (NULL text, fewer than 2 tokens) are dropped. ``bigram_shingles`` per
+    doc; byte-identical to the Catalyst-HOF twin (split + transform +
+    array_distinct, tests/catalyst_twins.py), pinned in
+    tests/test_round7_perf.py."""
+    return _per_doc(
+        docs.select("doc_id", "text"), "shingles array<string>",
+        lambda did, text: [(did, sh)] if (sh := bigram_shingles(text)) else [],
     )
-
-
-def shingle_frame_hof(docs: DataFrame) -> DataFrame:
-    """The pre-r7 Catalyst-HOF formulation of ``shingle_frame`` — kept as
-    the measured counter-example and the equality twin for the kernel's
-    parity test (interpreted HOF evaluation is ~100× slower per element;
-    see shingle_frame)."""
-    toks = F.split("text", " ")
-    return docs.select(
-        "doc_id", shingles_col(toks).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
-def digest_frame(sh: DataFrame) -> DataFrame:
-    """(doc_id, shingles, digs): one md5 digest per shingle, materialized
-    ONCE via an explode(array(...)) Generate barrier so the 8 per-seed
-    array_min projections reference an attribute instead of re-evaluating
-    the md5 transform (Catalyst does not CSE across separate HOF lambdas).
-    """
-    return sh.select(
-        "doc_id",
-        "shingles",
-        F.explode(
-            F.array(F.transform(F.col("shingles"), lambda x: F.md5(x)))
-        ).alias("digs"),
-    )
-
-
-def _with_shingles(spark: SparkSession, sf: str) -> DataFrame:
-    return shingle_frame(_docs(spark, sf))
-
-
-def _with_digests(spark: SparkSession, sf: str) -> DataFrame:
-    return digest_frame(_with_shingles(spark, sf))
 
 
 def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
@@ -164,48 +119,17 @@ def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, seed, mh) — the per-doc MinHash signature of the corpus."""
-    return minhash_signatures(_with_shingles(spark, sf))
+    return minhash_signatures(shingle_frame(_docs(spark, sf)))
 
 
 def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """(doc_id, seed, mh) from a (doc_id, shingles) frame. Same Python
-    md5/min kernel discipline as ``bands_from_shingles`` (r7), emitting
-    the signature rows directly. Equal to the HOF form
-    (``digest_frame`` + ``minhash_cols``) incl. its edges: an empty or
-    NULL shingles array gives NULL ``mh`` for every seed (array_min of an
-    empty array is NULL)."""
-    from hashlib import md5 as _md5
-
-    src = shingles.select("doc_id", "shingles")
-    id_type = src.schema["doc_id"].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            seeds: list = []
-            mhs: list = []
-            for did, shl in zip(pdf["doc_id"], pdf["shingles"]):
-                digs = [] if shl is None else [
-                    _md5(s.encode("utf-8")).hexdigest() for s in shl
-                ]
-                for k in range(N_SEEDS):
-                    ids.append(did)
-                    seeds.append(k)
-                    mhs.append(
-                        min(d[4 * k: 4 * k + 4] for d in digs)
-                        if digs else None
-                    )
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "seed": pd.array(seeds, dtype="int32"),
-                        "mh": mhs,
-                    }
-                )
-
-    return src.mapInPandas(
-        kernel, schema=f"doc_id {id_type}, seed int, mh string"
+    """(doc_id, seed, mh) from a (doc_id, shingles) frame:
+    ``minhash_minima`` per doc, one row per seed. An empty or NULL
+    shingles array gives NULL ``mh`` for every seed."""
+    return _per_doc(
+        shingles.select("doc_id", "shingles"), "seed int, mh string",
+        lambda did, sh: [(did, k, m)
+                         for k, m in enumerate(minhash_minima(sh))],
     )
 
 
@@ -215,143 +139,31 @@ def bands_frame(docs: DataFrame) -> DataFrame:
     deduped by joining ITS bands against this table (incremental.py)
     instead of re-banding the historical corpus.
 
-    FUSED text->bands kernel (r7): one mapInPandas pass does tokenize +
-    shingle + md5 minhash + band keys, so the shingle arrays never cross
-    the Arrow boundary twice (the chained shingle_frame |>
-    bands_from_shingles form pays a second Python stage, measured +0.55 s
-    at sf0.1). Byte-identical to the chained form (pytest-pinned); use
-    the chained form when the shingles are ALSO needed (the incremental
-    delta path persists them)."""
-    from hashlib import md5 as _md5
-
-    src = docs.select("doc_id", "text")
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    n_bands = N_SEEDS // BAND_ROWS
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            bands: list = []
-            keys: list = []
-            for did, tx in zip(pdf["doc_id"], pdf["text"]):
-                if tx is None:
-                    continue
-                toks = tx.split(" ")
-                if len(toks) < 2:
-                    continue
-                seen = dict.fromkeys(
-                    a + " " + b for a, b in zip(toks, toks[1:])
-                )
-                digs = [_md5(s.encode("utf-8")).hexdigest() for s in seen]
-                mins = [
-                    min(d[4 * k: 4 * k + 4] for d in digs)
-                    for k in range(N_SEEDS)
-                ]
-                for b in range(n_bands):
-                    parts = "|".join(
-                        mins[b * BAND_ROWS + r] for r in range(BAND_ROWS)
-                    )
-                    ids.append(did)
-                    bands.append(b)
-                    keys.append(_md5(parts.encode("utf-8")).hexdigest())
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "band": pd.array(bands, dtype="int32"),
-                        "bkey": keys,
-                    }
-                )
-
-    return src.mapInPandas(
-        kernel, schema=f"doc_id {id_type}, band int, bkey string"
+    FUSED text->bands kernel: one pass runs ``bigram_shingles`` and then
+    ``_band_rows`` per doc, so the shingle arrays never cross the Arrow
+    boundary twice (the chained shingle_frame |> bands_from_shingles form
+    pays a second Python stage, measured +0.55 s at sf0.1). Byte-identical
+    to the chained form (pytest-pinned); use the chained form when the
+    shingles are ALSO needed (the incremental delta path persists them)."""
+    return _per_doc(
+        docs.select("doc_id", "text"), "band int, bkey string",
+        lambda did, text: _band_rows(did, sh)
+        if (sh := bigram_shingles(text)) else [],
     )
 
 
 def bands_from_shingles(shingles: DataFrame) -> DataFrame:
     """``bands_frame`` from an already-computed (doc_id, shingles) frame
     — lets the incremental path shingle its delta ONCE and share the
-    result between banding and the Jaccard verify.
-
-    Arrow-batched mapInPandas kernel (r7, guide §4.2): md5-per-shingle +
-    the 8 per-seed 4-hex-slice minima + per-band key md5 run as a Python
-    batch loop instead of the interpreted digest_frame/minhash_cols HOF
-    subtree (hashlib.md5 hexdigest == Spark md5; str slicing ==
-    substring(1+4s, 4); Python str min == array_min's UTF8 binary order
-    on the hex alphabet). Byte-identical to the HOF twin
-    ``bands_from_shingles_hof`` incl. the empty- and NULL-shingles edges
-    (array_min of an empty or NULL array is NULL, concat_ws skips NULLs,
-    so every band key degenerates to md5("")) — equality pinned in
-    tests/test_round7_perf.py."""
-    from hashlib import md5 as _md5
-
-    src = shingles.select("doc_id", "shingles")
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    n_bands = N_SEEDS // BAND_ROWS
-    empty_key = _md5(b"").hexdigest()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            bands: list = []
-            keys: list = []
-            for did, sh in zip(pdf["doc_id"], pdf["shingles"]):
-                if sh is None or len(sh) == 0:
-                    # HOF-twin edge: NULL minima -> concat_ws("")-> md5("")
-                    for b in range(n_bands):
-                        ids.append(did)
-                        bands.append(b)
-                        keys.append(empty_key)
-                    continue
-                digs = [_md5(s.encode("utf-8")).hexdigest() for s in sh]
-                mins = [
-                    min(d[4 * k: 4 * k + 4] for d in digs)
-                    for k in range(N_SEEDS)
-                ]
-                for b in range(n_bands):
-                    parts = "|".join(
-                        mins[b * BAND_ROWS + r] for r in range(BAND_ROWS)
-                    )
-                    ids.append(did)
-                    bands.append(b)
-                    keys.append(_md5(parts.encode("utf-8")).hexdigest())
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "band": pd.array(bands, dtype="int32"),
-                        "bkey": keys,
-                    }
-                )
-
-    return src.mapInPandas(
-        kernel, schema=f"doc_id {id_type}, band int, bkey string"
+    result between banding and the Jaccard verify. ``_band_rows`` per
+    doc; byte-identical to the Catalyst-HOF twin (md5 + per-seed
+    array_min + concat_ws band keys, tests/catalyst_twins.py) incl. the
+    empty- and NULL-shingles edges, where every band key is md5("") —
+    pinned in tests/test_round7_perf.py."""
+    return _per_doc(
+        shingles.select("doc_id", "shingles"), "band int, bkey string",
+        _band_rows,
     )
-
-
-def bands_from_shingles_hof(shingles: DataFrame) -> DataFrame:
-    """The pre-r7 Catalyst-HOF formulation of ``bands_from_shingles`` —
-    kept as the equality twin for the kernel's parity test (see
-    bands_from_shingles)."""
-    sh = digest_frame(shingles)
-    mhs = minhash_cols(F.col("digs"))
-    n_bands = N_SEEDS // BAND_ROWS
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|", *[mhs[b * BAND_ROWS + r] for r in range(BAND_ROWS)]
-                )
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sh.select("doc_id", F.posexplode(band_keys).alias("band", "bkey")) \
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bkey")
-
-
-def _bands(spark: SparkSession, sf: str) -> DataFrame:
-    return bands_frame(_docs(spark, sf))
 
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -435,7 +247,7 @@ def _pair_shingle_sizes(spark: SparkSession, sf: str) -> DataFrame:
     twice (both pair sides), so the kernel runs once (r7)."""
     return pair_shingle_stats(
         q_dedup_minhash_pairs(spark, sf).select("doc_a", "doc_b"),
-        _with_shingles(spark, sf).localCheckpoint(eager=False),
+        shingle_frame(_docs(spark, sf)).localCheckpoint(eager=False),
     )
 
 
@@ -587,49 +399,20 @@ def propagate_min_labels(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return labels, edge_nodes
 
 
-def simhash_col(toks: Column) -> Column:
-    """16-bit SimHash over distinct tokens: bit j is the majority of bit j
-    of md5(token) across tokens (ties -> 1)."""
-    dt = F.array_distinct(toks)
-    n = F.size(dt)
-    terms = []
-    for j in range(SIMHASH_BITS):
-        hex_pos = 1 + j // 4
-        shift = 3 - (j % 4)
-        ones = F.size(
-            F.filter(
-                dt,
-                lambda t: (
-                    F.shiftright(
-                        F.conv(F.substring(F.md5(t), hex_pos, 1), 16, 10)
-                        .cast("int"),
-                        shift,
-                    ).bitwiseAND(F.lit(1))
-                    == 1
-                ),
-            )
-        )
-        terms.append(
-            F.when(2 * ones >= n, F.lit(1 << j)).otherwise(F.lit(0))
-        )
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out.cast("long")
-
-
 def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-doc 16-bit SimHash. r7 plan change, same output: the original
-    ``simhash_col`` evaluates md5(token) SIXTEEN times per distinct token
-    (one filter lambda per bit — Catalyst does not CSE across HOF
-    lambdas). Here each token's digest prefix is materialized ONCE as a
-    16-bit int through an explode(array(...)) Generate barrier (the
-    digest_frame trick), and the 16 bit-majority terms run as cheap
-    integer filters over that attribute — 1 md5 per token instead of 16,
-    the CPU shape that matters at corpus scale. Bit j of the simhash is
-    bit (15-j) of v = int(md5[:4], 16). Byte-identical to the HOF twin
-    incl. the NULL-text edge (when(NULL) collapses every bit term to 0,
-    so NULL text hashes to 0) — pinned in tests/test_round7_perf.py.
+    """Per-doc 16-bit SimHash: bit j is the majority of bit j of
+    md5(token) across the doc's distinct tokens (ties -> 1). r7 plan
+    change, same output: the original form (the Catalyst twin in
+    tests/catalyst_twins.py) evaluates md5(token) SIXTEEN times per
+    distinct token (one filter lambda per bit — Catalyst does not CSE
+    across HOF lambdas). Here each token's digest prefix is materialized
+    ONCE as a 16-bit int through an explode(array(...)) Generate barrier,
+    and the 16 bit-majority terms run as cheap integer filters over that
+    attribute — 1 md5 per token instead of 16, the CPU shape that matters
+    at corpus scale. Bit j of the simhash is bit (15-j) of
+    v = int(md5[:4], 16). Byte-identical to the HOF twin incl. the
+    NULL-text edge (when(NULL) collapses every bit term to 0, so NULL text
+    hashes to 0) — pinned in tests/test_round7_perf.py.
     (An Arrow-batched Python kernel was measured EQUAL on true compute
     at sf0.1 — boundary overhead cancels the hashing win — so the
     JVM-side form stays.)"""
@@ -661,14 +444,6 @@ def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
     for t in terms[1:]:
         out = out + t
     return withv.select("doc_id", out.cast("long").alias("simhash"))
-
-
-def simhash_frame_hof(docs: DataFrame) -> DataFrame:
-    """The pre-r7 Catalyst-HOF formulation of ``q_simhash``'s projection —
-    the equality twin for the kernel's parity test."""
-    return docs.select(
-        "doc_id", simhash_col(F.split("text", " ")).alias("simhash")
-    )
 
 
 SIM_BANDS = 4

@@ -22,8 +22,8 @@ __all__ = [
     "q_graph_user_components", "q_graph_components_star",
     "q_graph_user_pagerank",
     "q_graph_neighbor_jaccard",
-    "min_label_components", "star_components", "integer_pagerank",
-    "integer_pagerank_adj", "chunked_adjacency", "undirected_edges",
+    "min_label_components", "star_components", "integer_pagerank_adj",
+    "chunked_adjacency", "undirected_edges",
 ]
 
 PR_ITERS = 3  # fixed iteration count (cross-engine: both run exactly K)
@@ -39,7 +39,7 @@ PR_UNIT = 1_000_000  # micro-unit fixed point; all arithmetic is integer
 # ceil(outdeg/hub_split)) + groupBy(src, chunk) — an extra join+shuffle,
 # deliberately not paid on graphs without such hubs). Purely physical:
 # output is bit-identical for ANY value ≥ 1 (pytest-pinned at
-# hub_split=2 against the edge-join form).
+# hub_split=2 against the edge-join twin in tests/catalyst_twins.py).
 PR_HUB_SPLIT = 100_000
 
 
@@ -91,8 +91,8 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _edge_nodes(edges: DataFrame) -> DataFrame:
-    """Distinct node set of a directed edge list, checkpointed — both
-    PageRank forms reference it every round."""
+    """Distinct node set of a directed edge list, checkpointed — PageRank
+    references it every round."""
     return (
         edges.select(F.col("src").alias("entity"))
         .unionByName(edges.select(F.col("dst").alias("entity")))
@@ -104,8 +104,9 @@ def _edge_nodes(edges: DataFrame) -> DataFrame:
 def _rank_step(nodes: DataFrame, contrib: DataFrame) -> DataFrame:
     """One teleport+damp rank update from per-node summed contributions
     ``(entity, s)`` — the SINGLE definition of the update formula on the
-    bit-identity contract between :func:`integer_pagerank`,
-    :func:`integer_pagerank_adj`, and the oracle's recursive CTE."""
+    bit-identity contract between :func:`integer_pagerank_adj`, its
+    edge-join twin (tests/catalyst_twins.py) and the oracle's unrolled
+    CTEs."""
     return (
         nodes.join(contrib, "entity", "left")
         .select(
@@ -117,34 +118,6 @@ def _rank_step(nodes: DataFrame, contrib: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-
-
-def integer_pagerank(edges: DataFrame) -> DataFrame:
-    """Exact-integer PageRank power iteration over a distinct directed
-    edge list ``(src, dst)`` — see :func:`q_graph_pagerank` for the
-    formula and cross-engine discipline. Shared by the entity-graph and
-    user-co-action-graph queries."""
-    edges = edges.localCheckpoint(eager=False)
-    nodes = _edge_nodes(edges)
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.withColumn("rank", F.lit(PR_UNIT).cast("long"))
-    for _ in range(PR_ITERS):
-        contrib = (
-            edges.join(
-                ranks.select(F.col("entity").alias("src"), "rank"), "src"
-            )
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("entity"),
-                # integral `div`, NOT floor(double /): floor-of-double
-                # diverges from integer // once operands near 2^53
-                F.expr("rank div outdeg").cast("long").alias("c"),
-            )
-            .groupBy("entity")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = _rank_step(nodes, contrib)
-    return ranks
 
 
 def chunked_adjacency(edges: DataFrame, hub_split: int) -> DataFrame:
@@ -179,12 +152,18 @@ def integer_pagerank_adj(
     edges: DataFrame, hub_split: int = PR_HUB_SPLIT,
     symmetric: bool = False,
 ) -> DataFrame:
-    """Adjacency-list form of :func:`integer_pagerank` — bit-identical
-    output (pytest-pinned), different physical plan: the distinct edge
-    list is collapsed ONCE to a ~nodes-sized ``(src, outdeg, dsts array)``
-    frame, so each of the PR_ITERS rounds joins two nodes-sized frames and
-    explodes, instead of re-shuffling the full edge table every round.
-    Measured 1.4× faster than the edge-join form on the 1.72M-edge user
+    """Exact-integer PageRank power iteration over a distinct directed
+    edge list ``(src, dst)`` — see :func:`q_graph_pagerank` for the
+    formula and cross-engine discipline. Shared by the entity-graph and
+    user-co-action-graph queries.
+
+    Adjacency-list plan, bit-identical to the edge-join power iteration
+    (the twin in tests/catalyst_twins.py, pytest-pinned): the
+    distinct edge list is collapsed ONCE to a ~nodes-sized
+    ``(src, outdeg, dsts array)`` frame, so each of the PR_ITERS rounds
+    joins two nodes-sized frames and explodes, instead of re-shuffling the
+    full edge table every round. Measured 1.4× faster than the edge-join
+    form on the 1.72M-edge user
     co-action graph at sf0.1 (BENCH.md); the DEFAULT for both PageRank
     queries since r6.
 
@@ -197,7 +176,7 @@ def integer_pagerank_adj(
     ``rank div outdeg`` is unchanged. Splitting is purely physical —
     contributions are summed per dst downstream, so the output is
     bit-identical for any hub_split ≥ 1 (pinned at hub_split=2 vs the
-    edge-join form in tests/test_nonvacuous.py).
+    edge-join twin in tests/test_nonvacuous.py).
 
     ``symmetric=True`` (r7) declares the edge list symmetric (every
     (u, v) has its (v, u) — the _symmetrize contract): then every node

@@ -13,12 +13,13 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PipelineConfig
-from .candidates import tokens_col
+from ..functions.util import row_kernel
+from .candidates import doc_rows_input, tokens_col
 
 __all__ = ["sentences", "mentions", "segment_pages_udf"]
 
@@ -54,97 +55,37 @@ def mentions(df: DataFrame, cfg: PipelineConfig | None = None,
     """documents -> (doc_id, mention_id, ent_type, tok_idx, sent_id, surface,
     start, end) with character offsets into the original text.
 
-    Brat ``T``-line shape (src/brat_eval.py:101-116). r7: an Arrow-batched
-    mapInPandas kernel — char offsets are a per-doc prefix sum, so the
-    former posexplode + per-doc cumulative-sum WINDOW (a full token-level
-    Exchange, the one wide step on the mentions path) is gone; the
-    mentions derivation is now zero-shuffle like the candidate pipeline.
-    Byte-identical to the window form (kept as ``mentions_hof``; pinned
-    in tests/test_round7_perf.py) and oracle-checked via q_mentions."""
-    from ..functions.util import ensure_parallelism
-
+    Brat ``T``-line shape (src/brat_eval.py:101-116). A doc-row kernel:
+    char offsets are a per-doc prefix sum, so the mentions derivation is
+    zero-shuffle like the candidate pipeline (the former posexplode +
+    per-doc cumulative-sum WINDOW shuffled every token row). Byte-identical
+    to that window form (the Catalyst twin in tests/catalyst_twins.py;
+    pinned in tests/test_round7_perf.py) and oracle-checked via
+    q_mentions."""
     cfg = cfg or PipelineConfig()
-    src = ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"), F.col(text_col)), factor=1
-    )
+    src = doc_rows_input(df, doc_col, text_col)
     id_type = src.schema["doc_id"].dataType.simpleString()
     vocab = dict(cfg.ent_vocab)
     sl = cfg.sent_len
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list = []
-            for did, tx in zip(pdf["doc_id"], pdf[text_col]):
-                if tx is None:
-                    continue
-                start = 0
-                for i0, tok in enumerate(tx.split(" ")):
-                    et = vocab.get(tok)
-                    if et is not None:
-                        i = i0 + 1
-                        rows.append(
-                            (did, f"T{i}", et, i, i0 // sl, tok,
-                             start, start + len(tok))
-                        )
-                    start += len(tok) + 1
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "mention_id", "ent_type", "tok_idx",
-                        "sent_id", "surface", "start", "end",
-                    ],
-                )
+    def rows(did, text) -> list[tuple]:
+        if text is None:
+            return []
+        out = []
+        start = 0
+        for i0, tok in enumerate(text.split(" ")):
+            et = vocab.get(tok)
+            if et is not None:
+                out.append((did, f"T{i0 + 1}", et, i0 + 1, i0 // sl, tok,
+                            start, start + len(tok)))
+            start += len(tok) + 1
+        return out
 
-    return src.mapInPandas(
-        kernel,
-        schema=(
-            f"doc_id {id_type}, mention_id string, ent_type string, "
-            "tok_idx int, sent_id int, surface string, start long, "
-            "end long"
-        ),
-    )
-
-
-def mentions_hof(df: DataFrame, cfg: PipelineConfig | None = None,
-                 doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """The pre-r7 window-based formulation of ``mentions`` — kept as the
-    equality twin for the kernel's parity test (its per-doc
-    cumulative-sum window shuffles every token row; the kernel's prefix
-    sum is in-row)."""
-    cfg = cfg or PipelineConfig()
-    toks = tokens_col(F.col(text_col))
-    base = df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
-    tok_rows = base.select(
-        "doc_id", F.posexplode("toks").alias("pos", "tok")
-    ).select(
-        "doc_id", (F.col("pos") + 1).cast("int").alias("i"), "tok"
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = tok_rows.withColumn(
-        "start",
-        F.coalesce(F.sum(F.length("tok") + 1).over(w), F.lit(0)).cast("long"),
-    )
-    vocab = F.create_map(*[F.lit(x) for kv in cfg.ent_vocab.items() for x in kv])
-    return (
-        offs.withColumn("ent_type", vocab[F.col("tok")])
-        .filter(F.col("ent_type").isNotNull())
-        .select(
-            "doc_id",
-            F.concat(F.lit("T"), F.col("i")).alias("mention_id"),
-            "ent_type",
-            F.col("i").alias("tok_idx"),
-            F.floor((F.col("i") - 1) / cfg.sent_len).cast("int").alias(
-                "sent_id"
-            ),
-            F.col("tok").alias("surface"),
-            "start",
-            (F.col("start") + F.length("tok")).cast("long").alias("end"),
-        )
+    return row_kernel(
+        src,
+        f"doc_id {id_type}, mention_id string, ent_type string, "
+        "tok_idx int, sent_id int, surface string, start long, end long",
+        rows,
     )
 
 

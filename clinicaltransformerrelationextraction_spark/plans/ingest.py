@@ -329,6 +329,8 @@ class IngestState:
         the manifest does not reference, keeping the newest ``keep_last``
         compacted versions. The append LOG is never expired — it is the
         state. Returns the deleted paths."""
+        if keep_last < 0:
+            raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         m = self.manifest()
         if m is None:
             return []

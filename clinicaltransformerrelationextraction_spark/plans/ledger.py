@@ -212,6 +212,10 @@ class LedgerRun:
     n_buckets: int = 8
     salt: bool = False  # salted repartition before scoring (hot domains)
 
+    def __post_init__(self) -> None:
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
+
     @property
     def triples_dir(self) -> str:
         return os.path.join(self.out_dir, "triples")
@@ -359,6 +363,8 @@ class LedgerRun:
         a retained snapshot nor the CURRENT ledger references (this also
         collects orphan directories from crashed writes). Returns the
         deleted paths."""
+        if keep_last < 0:
+            raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         snaps = self.snapshots()
         kept, dropped = snaps[-keep_last:] if keep_last else [], \
             snaps[:-keep_last] if keep_last else snaps

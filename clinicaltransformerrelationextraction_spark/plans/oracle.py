@@ -249,7 +249,7 @@ FROM linked GROUP BY 1
 def _pr_unrolled() -> tuple[str, str]:
     """(unrolled step CTEs, final CTE name) of the integer PageRank
     power iteration over CTEs ``e``/``nodes``/``od``/``pr0`` — the
-    single SQL twin of operators.graph.integer_pagerank, shared by the
+    single SQL twin of operators.graph.integer_pagerank_adj, shared by the
     entity-graph and user-graph oracles. SQL forbids aggregates in a
     recursive term, and a FIXED iteration count is the cross-engine
     contract anyway, so the PR_ITERS rounds unroll as CTE levels.

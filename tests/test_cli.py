@@ -158,6 +158,8 @@ def test_cli_analyze(spark, tmp_path):
     )
     assert set(res) == {"contamination", "pack_bins"}
     assert res["contamination"] == len(CONTAM_PROBES)
+    back = spark.read.parquet(out + "/contamination")
+    assert back.count() == res["contamination"]
     back = spark.read.parquet(out + "/pack_bins")
     want = q_pack_bins(spark, SF_SMOKE)
     assert back.count() == res["pack_bins"] == want.count()

@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark import cli
@@ -219,3 +220,11 @@ def test_compact_appends_preserves_state_and_gc(spark, tmp_path):
     # compacting a single-dir log is a no-op (returns {}, no commit)
     assert s.compact(spark) == {}
     assert s.manifest()["version"] == 5
+
+
+def test_expire_rejects_negative_keep_last(spark, tmp_path):
+    """``cli ingest --expire-keep -1`` would slice ``[1:]`` and silently
+    keep every compacted version but the oldest: expire must fail naming
+    the argument before it reads any state."""
+    with pytest.raises(ValueError, match="keep_last must be >= 0, got -1"):
+        IngestState(str(tmp_path / "state")).expire(spark, keep_last=-1)

@@ -199,9 +199,9 @@ def test_hll_sketch_matches_independent_python_reference(spark, tmp_path):
 
 def _adj_equals_edgejoin(spark, edges):
     from clinicaltransformerrelationextraction_spark.operators.graph import (
-        integer_pagerank,
         integer_pagerank_adj,
     )
+    from tests.catalyst_twins import integer_pagerank
 
     a = sorted((r.entity, r.rank) for r in integer_pagerank(edges).collect())
     b = sorted(
@@ -222,7 +222,7 @@ def _adj_equals_edgejoin(spark, edges):
 
 def test_adjacency_pagerank_matches_edgejoin_synthetic(spark):
     """integer_pagerank_adj (adjacency-list per-round plan, the r6
-    default candidate) must be bit-identical to the shipped edge-join
+    default candidate) must be bit-identical to the edge-join twin
     power iteration — same integral-div contributions, same dangling
     handling — on adversarial shapes: a hub (collect_list skew shape), a
     cycle, a DAG chain, nodes with no out-edges (dangling), and a seeded

@@ -155,6 +155,30 @@ def test_ledger_rejects_another_bucket_count(spark, tmp_path):
         LedgerRun(out_dir=out, n_buckets=1).run(docs)
 
 
+def test_ledger_rejects_nonpositive_bucket_count(spark, tmp_path):
+    """``resume --n-buckets 0`` on a fresh out_dir must fail naming the
+    argument, not run ``range(0)`` buckets and report zero triples."""
+    from clinicaltransformerrelationextraction_spark.cli import main
+
+    out = str(tmp_path / "nb0")
+    with pytest.raises(ValueError, match="n_buckets must be >= 1, got 0"):
+        main(["resume", "--input", f"{SF_SMOKE}/documents.parquet",
+              "--output", out, "--n-buckets", "0"], spark=spark)
+    assert not os.path.exists(out)
+
+
+def test_ledger_expire_rejects_negative_keep_last(spark, tmp_path):
+    """``keep_last=-1`` would slice ``[1:]`` and silently keep every
+    snapshot but the oldest: it must fail and delete nothing."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 40)
+    run = LedgerRun(out_dir=str(tmp_path / "exp"), n_buckets=2)
+    run.run(docs)
+    before = run.snapshots()
+    with pytest.raises(ValueError, match="keep_last must be >= 0, got -1"):
+        run.expire_snapshots(spark, keep_last=-1)
+    assert run.snapshots() == before
+
+
 def test_streaming_availablenow_incremental(spark, tmp_path):
     from clinicaltransformerrelationextraction_spark.streaming import (
         stream_pipeline,

@@ -1,9 +1,11 @@
 """Round-7 optimization pins: every r7 physical-plan/kernel change must be
 byte-identical to the formulation it replaced.
 
-- dedup shingle/band Python kernels == the Catalyst-HOF twins (incl. the
-  short-doc, unicode, consecutive-space, NULL-text and empty-shingles
-  edges);
+- dedup shingle/band/signature Python kernels and the mentions kernel ==
+  their Catalyst twins in tests/catalyst_twins.py (incl. the short-doc,
+  unicode, consecutive-space, NULL-text, empty-shingles and string
+  doc_id edges), under every Arrow batch size and input partitioning in
+  ``LAYOUTS``;
 - candidates emit="lengths" window lengths == the lengths of the
   reference's marked strings;
 - cosine_with_norms == cosine (bit-identical doubles);
@@ -23,6 +25,7 @@ from clinicaltransformerrelationextraction_spark.operators import dedup
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
     candidates,
 )
+from tests import catalyst_twins as twins
 from tests.conftest import SF_SMOKE
 
 
@@ -48,84 +51,118 @@ def edge_docs(spark):
     return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
 
 
-def test_shingle_kernel_matches_hof(spark, edge_docs):
-    docs = dedup._docs(spark, SF_SMOKE)
-    _same(
-        dedup.shingle_frame(docs), dedup.shingle_frame_hof(docs),
-        "corpus shingles",
-    )
-    _same(
-        dedup.shingle_frame(edge_docs), dedup.shingle_frame_hof(edge_docs),
-        "edge shingles",
-    )
+def _string_ids(df):
+    """``df`` with its long doc_id turned into a string ("d<id>")."""
+    return df.withColumn("doc_id", F.concat(F.lit("d"), F.col("doc_id")))
 
 
-def test_bands_kernels_match_hof(spark, edge_docs):
-    docs = dedup._docs(spark, SF_SMOKE)
-    hof = dedup.bands_from_shingles_hof(dedup.shingle_frame_hof(docs))
-    _same(dedup.bands_frame(docs), hof, "fused bands")
-    _same(
-        dedup.bands_from_shingles(dedup.shingle_frame(docs)), hof,
-        "chained bands",
-    )
-    _same(
-        dedup.bands_frame(edge_docs),
-        dedup.bands_from_shingles_hof(dedup.shingle_frame_hof(edge_docs)),
-        "edge bands",
-    )
+# (Arrow records per batch, input partitions): a kernel's output must not
+# change with either — batch size 1 puts every doc in its own batch
+LAYOUTS = [(1, 1), (1, 7), (1024, 1), (1024, 7)]
+ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def test_bands_empty_shingles_edge(spark):
+@pytest.fixture
+def layouts(spark):
+    """``layouts(*frames)`` yields ``(tag, frames)`` once per ``LAYOUTS``
+    entry, with the Arrow batch size set and each frame repartitioned;
+    run the checks inside the loop. Restores the batch size after the
+    test."""
+    old = spark.conf.get(ARROW_BATCH)
+
+    def run(*frames):
+        for batch, parts in LAYOUTS:
+            spark.conf.set(ARROW_BATCH, str(batch))
+            yield (f"batch={batch} parts={parts}",
+                   [f.repartition(parts) for f in frames])
+
+    yield run
+    spark.conf.set(ARROW_BATCH, old)
+
+
+def test_shingle_kernel_matches_hof(spark, edge_docs, layouts):
+    for tag, (docs, edge) in layouts(dedup._docs(spark, SF_SMOKE), edge_docs):
+        _same(
+            dedup.shingle_frame(docs), twins.shingle_frame_hof(docs),
+            f"corpus shingles {tag}",
+        )
+        _same(
+            dedup.shingle_frame(edge), twins.shingle_frame_hof(edge),
+            f"edge shingles {tag}",
+        )
+
+
+def test_bands_kernels_match_hof(spark, edge_docs, layouts):
+    for tag, (docs, edge, sedge) in layouts(
+        dedup._docs(spark, SF_SMOKE), edge_docs, _string_ids(edge_docs)
+    ):
+        hof = twins.bands_from_shingles_hof(twins.shingle_frame_hof(docs))
+        _same(dedup.bands_frame(docs), hof, f"fused bands {tag}")
+        _same(
+            dedup.bands_from_shingles(dedup.shingle_frame(docs)), hof,
+            f"chained bands {tag}",
+        )
+        _same(
+            dedup.bands_frame(edge),
+            twins.bands_from_shingles_hof(twins.shingle_frame_hof(edge)),
+            f"edge bands {tag}",
+        )
+        got = dedup.bands_from_shingles(dedup.shingle_frame(sedge))
+        assert dict(got.dtypes)["doc_id"] == "string"
+        _same(
+            got,
+            twins.bands_from_shingles_hof(twins.shingle_frame_hof(sedge)),
+            f"string doc_id bands {tag}",
+        )
+
+
+def test_bands_empty_shingles_edge(spark, layouts):
     # array_min of an empty array is NULL; concat_ws skips NULLs; so the
     # HOF twin emits md5("") band keys — the kernel must reproduce that
     # — for an empty array and for NULL shingles alike
-    esh = spark.createDataFrame(
+    for tag, (esh,) in layouts(spark.createDataFrame(
         [(9, []), (10, None)], "doc_id long, shingles array<string>"
-    )
-    _same(
-        dedup.bands_from_shingles(esh),
-        dedup.bands_from_shingles_hof(esh),
-        "empty-shingles bands",
-    )
-    assert dedup.bands_from_shingles(esh).count() == (
-        2 * dedup.N_SEEDS // dedup.BAND_ROWS
-    )
+    )):
+        _same(
+            dedup.bands_from_shingles(esh),
+            twins.bands_from_shingles_hof(esh),
+            f"empty-shingles bands {tag}",
+        )
+        assert dedup.bands_from_shingles(esh).count() == (
+            2 * dedup.N_SEEDS // dedup.BAND_ROWS
+        )
 
 
-def _minhash_hof(sh):
-    """The Catalyst-HOF signature rows: digest_frame + minhash_cols."""
-    mhs = dedup.minhash_cols(F.col("digs"))
-    return dedup.digest_frame(sh).select(
-        "doc_id", F.posexplode(F.array(*mhs)).alias("seed", "mh")
-    ).select("doc_id", F.col("seed").cast("int").alias("seed"), "mh")
-
-
-def test_minhash_signatures_empty_shingles_edge(spark):
+def test_minhash_signatures_empty_shingles_edge(spark, layouts):
     # array_min of an empty array is NULL: one NULL mh per seed, no
     # failed task
-    esh = spark.createDataFrame(
+    for tag, (esh,) in layouts(spark.createDataFrame(
         [(9, []), (10, ["a b", "b c"])], "doc_id long, shingles array<string>"
-    )
-    got = dedup.minhash_signatures(esh)
-    _same(got, _minhash_hof(esh), "empty-shingles signatures")
-    assert got.filter("doc_id = 9 AND mh IS NULL").count() == dedup.N_SEEDS
+    )):
+        got = dedup.minhash_signatures(esh)
+        _same(got, twins.minhash_signatures_hof(esh),
+              f"empty-shingles signatures {tag}")
+        assert got.filter("doc_id = 9 AND mh IS NULL").count() == (
+            dedup.N_SEEDS
+        )
 
 
-def test_minhash_signatures_non_long_doc_id(spark, edge_docs):
-    docs = edge_docs.select(
-        F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text"
-    )
-    sh = dedup.shingle_frame(docs)
-    got = dedup.minhash_signatures(sh)
-    assert dict(got.dtypes)["doc_id"] == "string"
-    _same(got, _minhash_hof(sh), "string doc_id signatures")
+def test_minhash_signatures_non_long_doc_id(spark, edge_docs, layouts):
+    for tag, (docs,) in layouts(_string_ids(edge_docs).select(
+        "doc_id", "text"
+    )):
+        sh = dedup.shingle_frame(docs)
+        got = dedup.minhash_signatures(sh)
+        assert dict(got.dtypes)["doc_id"] == "string"
+        _same(got, twins.minhash_signatures_hof(sh),
+              f"string doc_id signatures {tag}")
 
 
 def test_simhash_kernel_matches_hof(spark, edge_docs):
     docs = dedup._docs(spark, SF_SMOKE).select("doc_id", "text")
     _same(
         dedup.q_simhash(spark, SF_SMOKE),
-        dedup.simhash_frame_hof(docs),
+        twins.simhash_frame_hof(docs),
         "corpus simhash",
     )
     # the kernel path over arbitrary docs incl. NULL text (the HOF's
@@ -139,7 +176,7 @@ def test_simhash_kernel_matches_hof(spark, edge_docs):
     # reuse the kernel via a monkey-free route: compare HOF twin on the
     # edge frame against the same kernel body applied through q_simhash's
     # mapInPandas (exercised by swapping _docs)
-    hof = dedup.simhash_frame_hof(edge_docs).collect()
+    hof = twins.simhash_frame_hof(edge_docs).collect()
     import clinicaltransformerrelationextraction_spark.operators.dedup as dd
 
     orig = dd._docs
@@ -232,21 +269,29 @@ def test_stub_lengths_path_matches_text_path():
     assert _make_stub_scorer.needs == "lengths"
 
 
-def test_mentions_kernel_matches_window_form(spark, edge_docs):
+def test_mentions_kernel_matches_window_form(spark, edge_docs, layouts):
     from clinicaltransformerrelationextraction_spark.operators.segmentation import (
-        mentions, mentions_hof,
+        mentions,
     )
     from clinicaltransformerrelationextraction_spark.plans.pipeline import (
         load_documents,
     )
 
     cfg = PipelineConfig()
-    docs = load_documents(spark, SF_SMOKE)
-    _same(mentions(docs, cfg), mentions_hof(docs, cfg), "corpus mentions")
-    _same(
-        mentions(edge_docs, cfg), mentions_hof(edge_docs, cfg),
-        "edge mentions",
-    )
+    for tag, (docs, edge, sdocs) in layouts(
+        load_documents(spark, SF_SMOKE), edge_docs,
+        _string_ids(load_documents(spark, SF_SMOKE)),
+    ):
+        _same(mentions(docs, cfg), twins.mentions_hof(docs, cfg),
+              f"corpus mentions {tag}")
+        _same(
+            mentions(edge, cfg), twins.mentions_hof(edge, cfg),
+            f"edge mentions {tag}",
+        )
+        got = mentions(sdocs, cfg)
+        assert dict(got.dtypes)["doc_id"] == "string"
+        _same(got, twins.mentions_hof(sdocs, cfg),
+              f"string doc_id mentions {tag}")
 
 
 def test_ngram_rows_kernel_matches_explode_hof(spark, edge_docs):
