@@ -7,29 +7,32 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
 
 - the corpus is bucketed by ``pmod(hash(doc_id), n_buckets)`` — the sandbox
   stand-in for Iceberg's ``bucket(N, url)`` partition spec;
-- each bucket commit writes an IMMUTABLE versioned data directory
-  (``data/b<bucket>_v<version>``) — never overwriting live files — and the
-  manifest (ledger + snapshot log) is what moves, exactly Iceberg's
-  replacePartitions commit protocol: readers resolving through an older
-  snapshot keep a consistent view while writers commit, re-running a
-  bucket is atomic (the new version becomes visible only via the metadata
-  swap), and an empty replacement simply drops the bucket from the
-  manifest;
+- a run scores every pending bucket in ONE pass and one write,
+  ``partitionBy`` bucket, into an IMMUTABLE per-run data directory
+  (``data/v<version>/b=<bucket>``) — never overwriting live files — and
+  then commits one ledger row per bucket. The manifest (ledger + snapshot
+  log) is what moves, exactly Iceberg's replacePartitions commit protocol:
+  readers resolving through an older snapshot keep a consistent view while
+  writers commit, re-running a bucket is atomic (the new version becomes
+  visible only via the metadata swap), and an empty replacement simply
+  drops the bucket from the manifest;
 - a ``_ledger`` table records (partition_id, status, n_triples, n_docs,
   wall_sec, path, version, n_buckets) — the per-partition lineage +
-  metrics. ``n_docs`` and ``n_triples`` are Observations on the bucket's
-  one write, so a bucket commit runs only the Spark jobs of that write.
-  ``n_buckets`` pins the bucketing: a run with another count raises
-  instead of re-bucketing over done rows;
+  metrics. ``n_docs`` and ``n_triples`` are per-bucket counts in one
+  Observation per side of the write, so a run costs only the Spark jobs
+  of that write; every row of one write records that write's
+  ``wall_sec``. ``n_buckets`` pins the bucketing: a run with another count
+  raises instead of re-bucketing over done rows;
 - ``_snapshots.json`` appends one snapshot per completed run with the full
   bucket->file manifest and parent chaining; ``triples(snapshot_id=...)``
-  TIME-TRAVELS to any retained snapshot; ``expire_snapshots`` GCs data
+  TIME-TRAVELS to any retained snapshot; ``expire_snapshots`` GCs bucket
   directories no retained snapshot references;
 - ``resume()`` skips partitions whose ledger row says done, exactly the
   reference's skip-if-exists, but transactional per partition.
 
-At 10^12 docs the bucket count is the unit of retry/backfill; a failed
-executor re-runs only its bucket.
+At 10^12 docs the bucket count is the unit of backfill and commit. Spark's
+task retry covers a lost executor; a driver crash loses the whole
+uncommitted write, and ``resume()`` writes the uncommitted buckets again.
 """
 
 from __future__ import annotations
@@ -39,11 +42,10 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..functions.util import observe_count
 from .pipeline import run_pipeline
 
 # the triples-table schema (for empty-manifest reads, where no parquet
@@ -69,12 +71,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
 def _fs_exists(spark: SparkSession, path: str) -> bool:
     fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    fs, hpath = _hadoop_fs(spark, path)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
 
 
 def _has_scheme(path: str) -> bool:
@@ -201,7 +197,7 @@ class LedgerRun:
     batch_* directory scheme makes, and what Iceberg solves with an
     external catalog's atomic swap). Concurrent writers can lose ledger
     rows or duplicate snapshot versions. READERS are safe at any time:
-    data dirs are immutable once written (data/b{b}_v{v}), metadata
+    data dirs are immutable once written (data/v{v}/b={b}), metadata
     files are replaced via rename (atomic on posix/HDFS; on eventually-
     consistent object stores pair this with a catalog that provides the
     swap), and a reader holding yesterday's snapshot keeps resolving the
@@ -259,56 +255,63 @@ class LedgerRun:
         cfg: PipelineConfig | None = None,
         fail_after: int | None = None,
     ) -> dict[str, dict]:
-        """Process every not-yet-done bucket; idempotent per bucket.
-        ``fail_after`` aborts after N buckets (for resume tests) —
-        simulating a mid-run crash."""
+        """Score every not-yet-done bucket in one write; idempotent per
+        bucket. ``fail_after`` aborts after N row commits (for resume
+        tests) — simulating a driver crash mid-commit."""
         cfg = cfg or PipelineConfig()
-        bucketed = docs.withColumn(
-            "bucket", F.pmod(F.hash("doc_id"), F.lit(self.n_buckets))
-        )
         ledger = self._read_ledger()
         self._check_bucket_count(ledger)
-        done = 0
-        for b in range(self.n_buckets):
-            key = str(b)
-            if ledger.get(key, {}).get("status") == "done":
-                continue
-            t0 = time.time()
-            part, o_docs = observe_count(
-                bucketed.filter(F.col("bucket") == b).drop("bucket")
-            )
-            trip, o_trip = observe_count(
-                run_pipeline(part, cfg, salt=self.salt).triples.withColumn(
-                    "bucket", F.lit(b)
-                )
-            )
-            # Iceberg-style commit: write an IMMUTABLE new data directory
-            # per bucket version — never touching the live files — then
-            # swap the metadata. A crashed write leaves an orphan dir the
-            # next expire_snapshots GCs; concurrent readers resolving the
-            # previous manifest never see a half-replaced partition; an
-            # empty replacement just records n_triples = 0 (the bucket
-            # drops out of the manifest-resolved read).
-            version = ledger.get(key, {}).get("version", -1) + 1
-            path = f"{self.triples_dir}/data/b{b}_v{version}"
-            trip.write.mode("overwrite").parquet(path)
-            ledger[key] = {
+        pending = [b for b in range(self.n_buckets)
+                   if ledger.get(str(b), {}).get("status") != "done"]
+        if not pending:
+            return ledger
+        t0 = time.time()
+        bucket = F.pmod(F.hash("doc_id"), F.lit(self.n_buckets))
+
+        def per_bucket_counts(df: DataFrame):
+            obs = Observation()
+            return df.observe(obs, *[F.count(F.when(bucket == b, 1))
+                                     .alias(str(b)) for b in pending]), obs
+
+        part, o_docs = per_bucket_counts(docs.filter(bucket.isin(pending)))
+        # the kernel keeps the input doc_id type, so each triple's bucket
+        # is the hash of its doc_id
+        trip, o_trip = per_bucket_counts(
+            run_pipeline(part, cfg, salt=self.salt).triples
+            .withColumn("bucket", bucket)
+        )
+        # Iceberg-style commit: one IMMUTABLE run directory, its version
+        # above every version a row or a retained snapshot pins, so the
+        # overwrite can only replace an uncommitted orphan. Partition on a
+        # copy so ``bucket`` stays inside the files: a manifest read of a
+        # leaf directory infers no partition column.
+        pinned = [*ledger.values(), *(m for s in self.snapshots()
+                                      for m in s.get("manifest", {}).values())]
+        version = 1 + max((m.get("version", -1) for m in pinned), default=-1)
+        run_dir = f"{self.triples_dir}/data/v{version}"
+        trip.withColumn("b", F.col("bucket")).write.partitionBy("b").mode(
+            "overwrite").parquet(run_dir)
+        wall = round(time.time() - t0, 3)
+        for done, b in enumerate(pending, 1):
+            path, n_triples = f"{run_dir}/b={b}", o_trip.get[str(b)]
+            if not n_triples:  # partitionBy writes no directory for it
+                fs, hpath = _hadoop_fs(docs.sparkSession, path)
+                fs.mkdirs(hpath)
+            ledger[str(b)] = {
                 "status": "done",
-                "n_docs": o_docs.get["n"],
-                "n_triples": o_trip.get["n"],
-                "wall_sec": round(time.time() - t0, 3),
+                "n_docs": o_docs.get[str(b)],
+                "n_triples": n_triples,
+                "wall_sec": wall,
                 "path": path,
                 "version": version,
                 "n_buckets": self.n_buckets,
             }
             self._write_ledger(ledger)
-            done += 1
             if fail_after is not None and done >= fail_after:
                 raise RuntimeError(
                     f"simulated failure after {done} buckets"
                 )
-        if done:
-            self._append_snapshot(ledger, buckets_written=done)
+        self._append_snapshot(ledger, buckets_written=len(pending))
         return ledger
 
     # --- snapshot log (Iceberg-metadata analog) ----------------------------
@@ -347,7 +350,8 @@ class LedgerRun:
             "total_docs": sum(v.get("n_docs", 0) for v in ledger.values()),
             # the manifest: which immutable data file set IS this snapshot
             "manifest": {
-                k: {"path": v["path"], "n_triples": v["n_triples"]}
+                k: {"path": v["path"], "n_triples": v["n_triples"],
+                    "version": v["version"]}
                 for k, v in ledger.items()
                 if v.get("status") == "done" and "path" in v
             },
@@ -359,33 +363,44 @@ class LedgerRun:
     def expire_snapshots(self, spark: SparkSession,
                          keep_last: int = 2) -> list[str]:
         """GC: retain the last ``keep_last`` snapshots, drop the older
-        entries from the log, and delete every data directory that neither
-        a retained snapshot nor the CURRENT ledger references (this also
-        collects orphan directories from crashed writes). Returns the
-        deleted paths."""
+        entries from the log, and delete every bucket directory that
+        neither a retained snapshot nor the CURRENT ledger references (this
+        also collects the uncommitted buckets of crashed writes), and every
+        run directory with no live bucket left. Returns the deleted
+        paths."""
         if keep_last < 0:
             raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         snaps = self.snapshots()
         kept, dropped = snaps[-keep_last:] if keep_last else [], \
             snaps[:-keep_last] if keep_last else snaps
-        # data-dir basenames (b<bucket>_v<version>) are unique per table,
-        # which sidesteps scheme differences (file:/x vs /x)
+        # keyed by path under triples/data/, which sidesteps scheme
+        # differences (file:/x vs /x); pre-run-directory ledgers left
+        # bucket directories b<bucket>_v<version> directly under data/
+        def rel(path: str) -> str:
+            return path.rpartition("/triples/data/")[2]
+
         live = {
-            os.path.basename(m["path"])
+            rel(m["path"])
             for s in kept
             for m in s.get("manifest", {}).values()
-        } | {
-            os.path.basename(v["path"])
-            for v in self._read_ledger().values() if "path" in v
-        }
-        data_root = f"{self.triples_dir}/data"
+        } | {rel(v["path"]) for v in self._read_ledger().values()
+             if "path" in v}
+        fs, hroot = _hadoop_fs(spark, f"{self.triples_dir}/data")
         deleted: list[str] = []
-        if _fs_exists(spark, data_root):
-            fs, hroot = _hadoop_fs(spark, data_root)
-            for st in fs.listStatus(hroot):
-                if st.getPath().getName() not in live:
-                    fs.delete(st.getPath(), True)
-                    deleted.append(st.getPath().toString())
+        for st in fs.listStatus(hroot) if fs.exists(hroot) else []:
+            name = st.getPath().getName()
+            if name in live:
+                continue
+            kids = {r.partition("/")[2] for r in live
+                    if r.startswith(name + "/")}
+            # a run directory goes whole only when none of its buckets is
+            # live; otherwise only its dead bucket directories go
+            doomed = [c for c in fs.listStatus(st.getPath())
+                      if c.isDirectory()
+                      and c.getPath().getName() not in kids] if kids else [st]
+            for d in doomed:
+                fs.delete(d.getPath(), True)
+                deleted.append(d.getPath().toString())
         if dropped:
             _write_text(self.snapshots_path, json.dumps(kept, indent=1))
         return deleted

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 
@@ -100,10 +101,119 @@ def test_ledger_counts_equal_independent_counts(
     )
 
 
+@pytest.mark.parametrize("salt", [False, True], ids=["plain", "salt"])
+@pytest.mark.parametrize(
+    "n, n_docs", [(1, None), (4, None), (16, None), (16, 5)],
+    ids=["n1", "n4", "n16", "n16_empty_buckets"],
+)
+def test_ledger_triples_invariant_to_bucket_count(
+    spark, tmp_path, n, n_docs, salt
+):
+    """One partitioned write of every pending bucket must hold exactly the
+    triples of one run_pipeline pass, on every column, whatever the bucket
+    count, with each triple in its doc's bucket."""
+    docs = load_documents(spark, SF_SMOKE)
+    if n_docs is not None:
+        first = docs.orderBy("doc_id").limit(n_docs).collect()
+        docs = docs.filter(F.col("doc_id").isin([r.doc_id for r in first]))
+    run = LedgerRun(out_dir=str(tmp_path / "inv"), n_buckets=n, salt=salt)
+    ledger = run.run(docs)
+    _assert_ledger_counts(spark, docs, ledger, n)
+    got = run.triples(spark)
+    assert got.filter(
+        F.col("bucket") != F.pmod(F.hash("doc_id"), F.lit(n))
+    ).count() == 0
+    want = run_pipeline(docs, PipelineConfig()).triples
+    assert Counter(map(tuple, got.select(*want.columns).collect())) == \
+        Counter(map(tuple, want.collect()))
+
+
+def _under_data(paths):
+    return sorted(p.rpartition("/triples/data/")[2] for p in paths)
+
+
+def test_ledger_expire_collects_by_bucket_directory(spark, tmp_path):
+    """expire_snapshots deletes a run directory's bucket directories that
+    nothing live references, and the whole run directory only when none
+    of its buckets is live."""
+    docs = load_documents(spark, SF_SMOKE)
+    run = LedgerRun(out_dir=str(tmp_path / "gc"), n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run.run(docs, fail_after=2)
+    ledger = run.resume(docs)
+    assert all(v["n_triples"] > 0 for v in ledger.values())
+    total = run.triples(spark).count()
+    # the crash's uncommitted buckets 2 and 3 are orphans inside v0
+    assert _under_data(run.expire_snapshots(spark)) == ["v0/b=2", "v0/b=3"]
+    assert run.triples(spark).count() == total
+    for key in ("2", "3"):
+        ledger[key]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs)
+    assert _under_data(run.expire_snapshots(spark, keep_last=1)) == ["v1"]
+    assert run.triples(spark).count() == total
+
+
+def test_ledger_run_version_above_snapshot_pins(spark, tmp_path):
+    """A run's directory version must clear every version a retained
+    snapshot pins, not only the ledger's: the overwrite of the run
+    directory must never replace data that time travel still reads."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 80)
+    run = LedgerRun(out_dir=str(tmp_path / "pin"), n_buckets=2)
+    run.run(docs)
+    ledger = run._read_ledger()
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs.limit(30))                 # snapshot 2 pins v1/b=0
+    pinned = run.triples(spark, snapshot_id=2).count()
+    ledger = run._read_ledger()
+    ledger.pop("0")                            # the ledger forgets v1
+    run._write_ledger(ledger)
+    assert run.resume(docs)["0"]["version"] == 2
+    assert run.triples(spark, snapshot_id=2).count() == pinned
+
+
+def test_ledger_expire_collects_old_layout_dirs(spark, tmp_path):
+    """Out_dirs written before run directories hold one b<bucket>_v<version>
+    directory per bucket commit directly under triples/data/: expire must
+    still collect the replaced ones and keep the live ones."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 40)
+    run = LedgerRun(out_dir=str(tmp_path / "old"), n_buckets=2)
+    ledger = {}
+    for b in range(2):  # what a per-bucket commit left behind
+        path = f"{run.triples_dir}/data/b{b}_v0"
+        part = docs.filter(F.pmod(F.hash("doc_id"), F.lit(2)) == b)
+        trip = run_pipeline(part, PipelineConfig()).triples.withColumn(
+            "bucket", F.lit(b))
+        trip.write.parquet(path)
+        ledger[str(b)] = {
+            "status": "done", "n_docs": part.count(),
+            "n_triples": trip.count(), "wall_sec": 0.0, "path": path,
+            "version": 0, "n_buckets": 2,
+        }
+    run._write_ledger(ledger)
+    manifest = {k: {"path": v["path"], "n_triples": v["n_triples"]}
+                for k, v in ledger.items()}
+    with open(run.snapshots_path, "w") as f:
+        json.dump([{"snapshot_id": 1, "parent_id": None,
+                    "manifest": manifest}], f)
+    before = Counter(map(tuple, run.triples(spark).collect()))
+    assert before
+
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    ledger = run.resume(docs)
+    assert _under_data([ledger["0"]["path"]]) == ["v1/b=0"]
+    assert _under_data(run.expire_snapshots(spark, keep_last=1)) == ["b0_v0"]
+    assert Counter(map(tuple, run.triples(spark).collect())) == before
+
+
 def test_ledger_adds_no_spark_job(spark, tmp_path):
-    """A bucket commit is exactly the Spark jobs of writing the bucket's
-    triples: the counts ride on that write, with no job of their own.
-    Uncached parquet input (a cached input adds a table-cache job)."""
+    """A ledger run is exactly the Spark jobs of ONE write of the triples:
+    every pending bucket goes into that write and the per-bucket counts
+    ride on it, with no job of their own. A resume of a crashed run writes
+    once more. Uncached parquet input (a cached input adds a table-cache
+    job)."""
     docs = load_documents(spark, SF_SMOKE)
     sc = spark.sparkContext
     n = 4
@@ -116,16 +226,19 @@ def test_ledger_adds_no_spark_job(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    part = docs.filter(F.pmod(F.hash("doc_id"), F.lit(n)) == 0)
     one = jobs(
         "ledger-one-write",
-        lambda: run_pipeline(part, PipelineConfig()).triples.write.mode(
+        lambda: run_pipeline(docs, PipelineConfig()).triples.write.mode(
             "overwrite"
         ).parquet(str(tmp_path / "one")),
     )
     assert one >= 1
     run = LedgerRun(out_dir=str(tmp_path / "jobs"), n_buckets=n)
-    assert jobs("ledger-run", lambda: run.run(docs)) == n * one
+    assert jobs("ledger-run", lambda: run.run(docs)) == one
+    crashed = LedgerRun(out_dir=str(tmp_path / "crash"), n_buckets=n)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        crashed.run(docs, fail_after=2)
+    assert jobs("ledger-resume", lambda: crashed.resume(docs)) == one
 
 
 def test_ledger_rejects_another_bucket_count(spark, tmp_path):

@@ -313,8 +313,8 @@ def test_ledger_time_travel_and_expire(spark, tmp_path):
     # expire: keep only the latest snapshot; snapshot 1's exclusive data
     # dir is GC'd, time travel to it now errors, current state unaffected
     deleted = run.expire_snapshots(spark, keep_last=1)
-    assert any("b0_v0" in p for p in deleted)
-    assert all("b1_" not in p for p in deleted)  # shared file survives
+    assert any(snaps[0]["manifest"]["0"]["path"] in p for p in deleted)
+    assert all(snaps[0]["manifest"]["1"]["path"] not in p for p in deleted)  # shared file survives
     assert run.triples(spark).count() == v2
     with _pytest.raises(ValueError, match="expired"):
         run.triples(spark, snapshot_id=1)
