@@ -19,11 +19,15 @@ works directly):
         --scorer stub --max-seq-length 512 --data-format-mode 0
 
 Subcommands:
-    predict    documents parquet -> triples + brat .ann parquet (the
-               flagship pipeline; --binary-mode switches to the REL/NonRel
-               head + broadcast type-pair map)
-    resume     continue a checkpointed ledger run (skip done buckets)
-    eval       gold vs system triple tables -> P/R/F1
+    predict    documents parquet -> ledger triples + brat .ann parquet
+               (the flagship pipeline; --scorer binary selects the
+               REL/NonRel head + type-pair relation map); re-running it on
+               a crashed out_dir finishes the pending buckets and writes
+               brat
+    resume     continue a checkpointed ledger run (skip done buckets;
+               writes triples only, no brat)
+    eval       gold vs system triple tables -> P/R/F1 (a predict output
+               dir is read through its ledger)
     featurize  documents parquet -> train.tsv/dev.tsv in the reference's
                8-column contract + labels.json (the training handoff the
                reference's preprocessing notebook produces; the torch
@@ -59,7 +63,8 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     # README "Custom scorer backends"); an unknown name fails later with
     # _resolve_factory's descriptive error listing what IS registered
     p.add_argument("--scorer", default="stub",
-                   help="scoring backend: stub | mlp | npt | hf, or any "
+                   help="scoring backend: stub | mlp | npt | hf | binary "
+                        "(REL/NonRel head + type-pair relation map), or any "
                         "register_scorer() name (hf requires transformers)")
     p.add_argument("--max-seq-length", type=int, default=512,
                    help="token budget incl. special tokens")
@@ -72,9 +77,6 @@ def _add_common(p: argparse.ArgumentParser) -> None:
                         "(reference --classification_scheme; npt backend "
                         "only — a trained hf checkpoint's head is baked "
                         "into its weights)")
-    p.add_argument("--binary-mode", action="store_true",
-                   help="REL/NonRel head + (type1,type2)->relation map "
-                        "(post_processing.py:108-139)")
     p.add_argument("--eval-batch-size", type=int, default=1024,
                    help="candidate pairs per scorer call")
     p.add_argument("--max-pairs-per-doc", type=int, default=10_000)
@@ -103,41 +105,22 @@ def _cfg_from(args: argparse.Namespace) -> PipelineConfig:
 
 
 def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
-    from .functions.util import observe_count
-    from .operators.binarymode import binary_triples
-    from .operators.candidates import candidates
+    """One ledger run (pending buckets only, so it also finishes a crashed
+    out_dir), then brat over the manifest-resolved triples."""
     from .operators.segmentation import mentions
     from .operators.postprocess import brat_render
     from .plans.ledger import LedgerRun
-    from .plans.pipeline import run_pipeline
     from .session import get_spark
 
     spark = spark or get_spark(app_name="ctre-predict")
     docs = spark.read.parquet(args.input)
     cfg = _cfg_from(args)
-
-    if args.binary_mode:
-        trip, obs = observe_count(binary_triples(candidates(docs, cfg), cfg))
-        trip.write.mode("overwrite").parquet(f"{args.output}/triples")
-        return {"mode": "binary", "n_triples": obs.get["n"]}
-
-    if args.n_buckets > 1:
-        run = LedgerRun(out_dir=args.output, n_buckets=args.n_buckets,
-                        salt=args.salt)
-        ledger = run.run(docs, cfg)
-        n = sum(v["n_triples"] for v in ledger.values())
-        trip_df = run.triples(spark)  # manifest-resolved current state
-    else:
-        trip, obs = observe_count(
-            run_pipeline(docs, cfg, salt=args.salt).triples
-        )
-        trip.write.mode("overwrite").parquet(f"{args.output}/triples")
-        n = obs.get["n"]
-        trip_df = spark.read.parquet(f"{args.output}/triples")
-    ann = brat_render(mentions(docs, cfg), trip_df)
+    run = LedgerRun(out_dir=args.output, n_buckets=args.n_buckets,
+                    salt=args.salt)
+    ledger = run.run(docs, cfg)
+    ann = brat_render(mentions(docs, cfg), run.triples(spark))
     ann.write.mode("overwrite").parquet(f"{args.output}/brat")
-    return {"mode": "ledger" if args.n_buckets > 1 else "single",
-            "n_triples": n}
+    return {"n_triples": sum(v["n_triples"] for v in ledger.values())}
 
 
 def cmd_resume(args: argparse.Namespace, spark=None) -> dict:
@@ -332,12 +315,22 @@ def cmd_stream(args: argparse.Namespace, spark=None) -> dict:
 
 
 def cmd_eval(args: argparse.Namespace, spark=None) -> dict:
+    """A side that holds a ``_ledger.json`` (a predict/resume out_dir) is
+    read through its manifest, which skips uncommitted buckets and older
+    run directories; any other side is a plain triples parquet."""
     from .operators.evaluation import relation_match_prf
+    from .plans.ledger import LedgerRun, _fs_exists
     from .session import get_spark
 
     spark = spark or get_spark(app_name="ctre-eval")
-    sys_t = spark.read.parquet(args.system)
-    gold_t = spark.read.parquet(args.gold)
+
+    def read(path: str):
+        run = LedgerRun(out_dir=path)
+        if _fs_exists(spark, run.ledger_path):
+            return run.triples(spark)
+        return spark.read.parquet(path)
+
+    sys_t, gold_t = read(args.system), read(args.gold)
     row = relation_match_prf(sys_t, gold_t).first()
     return {k: row[k] for k in
             ("tp", "fp", "fn", "precision", "recall", "f1")}

@@ -82,10 +82,11 @@ GOLD_SHIFT = 1
 
 # --- binary classification mode ----------------------------------------------
 # The reference's second prediction mode (post_processing.py:108-139): the
-# model answers only REL vs NonRel; the concrete relation label comes from a
-# broadcast (entity_type_1, entity_type_2) -> relation map built at training
-# time (preprocessing.ipynb cell 16). One-hot binary label contract:
-# {0: [1, 0], 1: [0, 1]} (src/data_utils.py:112-114).
+# model answers only REL vs NonRel; the concrete relation label comes from an
+# (entity_type_1, entity_type_2) -> relation map built at training time
+# (preprocessing.ipynb cell 16). One-hot binary label contract:
+# {0: [1, 0], 1: [0, 1]} (src/data_utils.py:112-114). Scorer backend
+# "binary" (operators/binarymode.py).
 ENTP2REL: dict[tuple[str, str], str] = {
     ("ADE", "Drug"): "adverse",
     ("Reason", "Drug"): "reason",
@@ -140,7 +141,7 @@ class PipelineConfig:
     max_pairs_per_doc: int = 10_000  # cap on J1 quadratic blowup; dropped
     # pairs are counted, never silently truncated (SURVEY.md §7.4.4)
     salt_buckets: int = 32  # salting modulus for host-domain skew
-    scorer: str = "stub"  # "stub" | "mlp" | "hf" | any register_scorer name
+    scorer: str = "stub"  # stub|mlp|npt|hf|binary or a register_scorer name
     # hf backend only: model dir/hub id for AutoModelForSequenceClassification
     scorer_model_path: str = "bert-base-uncased"
     max_seq_len: int = 512  # token budget incl. special tokens (U2)

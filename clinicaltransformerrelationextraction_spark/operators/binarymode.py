@@ -1,4 +1,6 @@
-"""Binary classification mode — the reference's second prediction path.
+"""Binary classification mode — the reference's second prediction path,
+as the ``"binary"`` scorer backend (``PipelineConfig(scorer="binary")``,
+``--scorer binary``).
 
 Reference semantics (mirrored exactly, Spark-first):
 
@@ -6,118 +8,82 @@ Reference semantics (mirrored exactly, Spark-first):
   ``{0: [1, 0], 1: [0, 1]}`` (src/data_utils.py:112-114, C11);
 - the prediction-alignment map carries the LAST FIVE candidate columns
   ``(ent_type_1, ent_type_2, arg1, arg2, fid)`` (``load_mappings_bin``,
-  post_processing.py:108-117) — here the explicit content key makes the
-  positional zip a join;
-- the concrete relation label is NOT produced by the scorer: positive pairs
-  look it up in the broadcast ``(type1, type2) -> relation`` map built at
-  training time (``combine_maps_predictions_bin``, post_processing.py:120-139;
+  post_processing.py:108-117) — here the scorer sees each candidate row
+  whole, so the types travel with the pair;
+- the concrete relation label is NOT produced by the head: positive pairs
+  look it up in the ``(type1, type2) -> relation`` map built at training
+  time (``combine_maps_predictions_bin``, post_processing.py:120-139;
   map construction preprocessing.ipynb cell 16).
 
-The entp2rel map is the one table in the pipeline that is genuinely
-broadcast-sized (tens of rows — one per valid type combination), so the
-broadcast hint here is correct at any corpus scale, unlike the corpus-sized
-mentions table.
+The map is tens of rows (one per valid type combination), so it is a plain
+dict in the scorer's closure, not a broadcast table. The scorer runs inside
+``scoring.enum_score_filter_number`` like every other backend, so the
+NonRel filter and the per-doc R-numbering are the multiclass path's.
+A positive pair whose types are outside the map becomes NonRel, i.e. it
+yields no triple.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import ENTP2REL, STUB_W2, STUB_W3, PipelineConfig
 
-__all__ = ["score_binary", "binary_triples", "q_binary_triples"]
+__all__ = ["q_binary_triples"]
 
 
-def score_binary(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """candidates -> + (bin_idx int, bin_score double): the Arrow-batched
-    binary head. Deterministic stub: bin_idx = stub_sum % 2 with one-hot
-    logits [[1,0],[0,1]][bin_idx] (the C11 contract); bin_score is the
-    softmax probability of the predicted class for a one-hot logit pair,
-    constant e/(1+e) — emitted as (bin_idx+1)/2 to stay oracle-exact like
-    the multiclass stub."""
-    cfg = cfg or PipelineConfig()
-    out_fields = list(cand.schema.fields) + [
-        T.StructField("bin_idx", T.IntegerType()),
-        T.StructField("bin_score", T.DoubleType()),
-    ]
-    # like the multiclass stub (scoring._scorer_input, r7): the binary
-    # head consumes only the window LENGTHS, so a lengths-emitting
-    # candidate frame ships two ints per row instead of two strings
-    drop = [
-        c for c in ("s1_marked", "s2_marked", "s1_len", "s2_len")
-        if c in cand.columns
-    ]
-    out_schema = T.StructType([f for f in out_fields if f.name not in drop])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if "s1_len" in pdf.columns:
-                l1 = pdf["s1_len"].to_numpy(np.int64)
-                l2 = pdf["s2_len"].to_numpy(np.int64)
-            else:
-                l1 = pdf["s1_marked"].str.len().to_numpy(np.int64)
-                l2 = pdf["s2_marked"].str.len().to_numpy(np.int64)
-            raw = (
-                l1
-                + STUB_W2 * l2
-                + STUB_W3
-                * (pdf["i1"].to_numpy(np.int64) + pdf["i2"].to_numpy(np.int64))
+def _validate_binary(cfg: PipelineConfig) -> None:
+    """Driver-side: every label the binary mode can emit must be in
+    ``cfg.labels``, else the scorer would fail inside an executor."""
+    for label in (cfg.non_rel, *sorted(set(ENTP2REL.values()))):
+        if label not in cfg.labels:
+            raise ValueError(
+                f"scorer 'binary' emits label {label!r}, which is not in "
+                f"PipelineConfig.labels {list(cfg.labels)}"
             )
-            # one-hot binary logits (data_utils.py:112-114) -> argmax
-            onehot = np.eye(2, dtype=np.float64)[raw % 2]
-            idx = onehot.argmax(axis=1)
-            out = pdf.drop(columns=drop)
-            out["bin_idx"] = idx.astype("int32")
-            out["bin_score"] = (idx + 1) / 2.0
-            yield out
-
-    return cand.mapInPandas(run, schema=out_schema)
 
 
-def entp2rel_df(spark: SparkSession) -> DataFrame:
-    """The broadcast-sized (type1, type2) -> relation dimension."""
-    return spark.createDataFrame(
-        [(t1, t2, rel) for (t1, t2), rel in sorted(ENTP2REL.items())],
-        ["ent_type_1", "ent_type_2", "rel"],
-    )
+def _make_binary_scorer(cfg: PipelineConfig, labels: list[str]):
+    """Deterministic stub of the binary head: REL iff
+    ``(s1_len + W2*s2_len + W3*(i1+i2)) % 2 == 1``. A REL pair gets its
+    map relation with score 1.0 (the softmax-free one-hot probability,
+    ``(bin_idx+1)/2``, oracle-exact); every other pair gets NonRel with
+    score 0.5."""
+    non_rel = labels.index(cfg.non_rel)
+    rel_idx = {k: labels.index(v) for k, v in ENTP2REL.items()}
 
-
-def binary_triples(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Positive binary predictions -> triples with the relation label from
-    the broadcast type-pair map + per-doc R numbering (W1)."""
-    cfg = cfg or PipelineConfig()
-    scored = score_binary(cand, cfg)
-    dim = entp2rel_df(cand.sparkSession)
-    w = Window.partitionBy("doc_id").orderBy("sent_diff", "i1", "i2")
-    return (
-        scored.filter(F.col("bin_idx") == 1)
-        .join(F.broadcast(dim), ["ent_type_1", "ent_type_2"])
-        .withColumn("rel_id", F.concat(F.lit("R"), F.row_number().over(w)))
-        .select(
-            "doc_id",
-            "rel_id",
-            F.col("rel").alias("pred"),
-            F.col("ent_id_1").alias("subj_id"),
-            F.col("ent_id_2").alias("obj_id"),
-            "bin_score",
+    def scorer(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        raw = (
+            pdf["s1_len"].to_numpy(np.int64)
+            + STUB_W2 * pdf["s2_len"].to_numpy(np.int64)
+            + STUB_W3
+            * (pdf["i1"].to_numpy(np.int64) + pdf["i2"].to_numpy(np.int64))
         )
-    )
+        mapped = np.fromiter(
+            (rel_idx.get(k, non_rel)
+             for k in zip(pdf["ent_type_1"], pdf["ent_type_2"])),
+            dtype=np.int64, count=len(pdf),
+        )
+        idx = np.where(raw % 2 == 1, mapped, non_rel)
+        return idx, np.where(idx == non_rel, 0.5, 1.0)
+
+    return scorer
+
+
+_make_binary_scorer.needs = "lengths"
+_make_binary_scorer.validate = _validate_binary
 
 
 def q_binary_triples(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.candidates import candidates
-    from ..plans.pipeline import load_documents
+    from ..plans.pipeline import load_documents, run_pipeline
 
-    cfg = PipelineConfig()
-    return binary_triples(
-        candidates(load_documents(spark, sf), cfg, emit="lengths"), cfg
+    return run_pipeline(
+        load_documents(spark, sf), PipelineConfig(scorer="binary")
+    ).triples.select(
+        "doc_id", "rel_id", "pred", "subj_id", "obj_id",
+        F.col("score").alias("bin_score"),
     )

@@ -4,7 +4,6 @@ DataFrame queries.
 Reference semantics re-expressed relationally:
 - per-class TP/FP/FN counts         src/utils.py:83-117 measure_prf (A3)
 - micro P/R/F1 excluding NonRel     src/utils.py:120-127 acc_and_f1 (A4)
-- strict / lenient span matching    src/brat_eval.py:29-44 (J7)
 - relation equality (both args + type) src/brat_eval.py:63-70 (J8)
 - micro/macro corpus rollup         src/brat_eval.py:310-357 (A5)
 """
@@ -18,7 +17,6 @@ from ..config import NON_REL
 
 __all__ = [
     "prf_counts", "micro_prf", "relation_match_prf",
-    "span_match_strict", "span_match_lenient",
     "stub_label_idx_expr", "gold_label_expr",
 ]
 
@@ -141,30 +139,4 @@ def relation_match_prf(sys_triples: DataFrame, gold_triples: DataFrame,
             "tp", "fp", "fn",
             p.alias("precision"), r.alias("recall"), f1.alias("f1"),
         )
-    )
-
-
-def span_match_strict(gold: DataFrame, system: DataFrame) -> DataFrame:
-    """Strict span match: same (doc, start, end, ent_type) —
-    src/brat_eval.py:41-44 equi-join form."""
-    keys = ["doc_id", "start", "end", "ent_type"]
-    return gold.select(*keys).join(system.select(*keys), keys, "inner")
-
-
-def span_match_lenient(gold: DataFrame, system: DataFrame) -> DataFrame:
-    """Lenient span match: interval overlap + same type —
-    src/brat_eval.py:29-39 (a.end > b.start AND a.start < b.end)."""
-    g = gold.select(
-        "doc_id", F.col("start").alias("g_start"),
-        F.col("end").alias("g_end"), "ent_type",
-    )
-    s = system.select(
-        "doc_id", F.col("start").alias("s_start"),
-        F.col("end").alias("s_end"), "ent_type",
-    )
-    return g.join(
-        s,
-        ["doc_id", "ent_type"],
-    ).filter(
-        (F.col("g_end") > F.col("s_start")) & (F.col("g_start") < F.col("s_end"))
     )

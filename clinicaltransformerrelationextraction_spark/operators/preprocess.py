@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 
 __all__ = [
-    "deidentify", "q_deid", "q_validate_rels", "q_seeded_sample",
+    "q_deid", "q_validate_rels", "q_seeded_sample",
     "q_stratified_sample",
 ]
 
@@ -45,13 +45,6 @@ def comb_map_col(cfg: PipelineConfig) -> Column:
         entries.append(F.lit(t1))
         entries.append(F.array(*[F.lit(x) for x in sorted(by_t1[t1])]))
     return F.create_map(*entries)
-
-
-def deidentify(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Strip MIMIC PHI delimiters — one regexp_replace, zero shuffle."""
-    return df.withColumn(
-        text_col, F.regexp_replace(F.col(text_col), MIMIC_PATTERN, "")
-    )
 
 
 def q_deid(spark: SparkSession, sf: str) -> DataFrame:

@@ -3,7 +3,7 @@
 rewritten as Arrow-batched ``mapInPandas`` forward passes: no per-row Python
 at the Spark level, model/scorer loaded once per executor task.
 
-Two scorer backends behind one interface:
+Every scorer backend sits behind one interface (``SCORER_REGISTRY``):
 
 - ``stub``: deterministic, model-free (FIXTURES.md §9) — logits are a pure
   function of the marked sentence pair, so pipeline parity is exactly
@@ -14,6 +14,9 @@ Two scorer backends behind one interface:
   src/task.py:192-196) and its scheme-2 head. Gated behind an import-try —
   transformers/torch are not in this container; the Spark-side plumbing
   (schema, batching, executor-local model cache) is identical for both.
+- ``mlp``/``npt``: deterministic text backends of realistic cost; and
+  ``binary`` (operators/binarymode.py): the reference's REL/NonRel head
+  whose label comes from the (type1, type2) -> relation map.
 
 At 100 TB: scoring is the dominant cost; it is embarrassingly parallel
 (narrow map), so throughput scales with executor count. The triples path
@@ -37,27 +40,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SPEC_TAGS, STUB_W2, STUB_W3, PipelineConfig
+from .binarymode import _make_binary_scorer
 from .candidates import candidate_columns, doc_candidate_rows, doc_rows_input
 
 __all__ = [
     "score_candidates", "score_filter_number", "enum_score_filter_number",
-    "stub_logits", "truncate_pair", "register_scorer", "SCORER_REGISTRY",
+    "truncate_pair", "register_scorer", "SCORER_REGISTRY",
 ]
-
-
-def stub_logits(s1: pd.Series, s2: pd.Series, i1: pd.Series, i2: pd.Series,
-                n_labels: int) -> np.ndarray:
-    """Vectorized deterministic 'forward pass': argmax index =
-    (len(s1) + W2*len(s2) + W3*(i1+i2)) % n_labels. Returns a one-hot-ish
-    logit matrix whose softmax-argmax equals that index."""
-    idx = (
-        s1.str.len().to_numpy(np.int64)
-        + STUB_W2 * s2.str.len().to_numpy(np.int64)
-        + STUB_W3 * (i1.to_numpy(np.int64) + i2.to_numpy(np.int64))
-    ) % n_labels
-    logits = np.zeros((len(idx), n_labels), dtype=np.float64)
-    logits[np.arange(len(idx)), idx] = 1.0
-    return logits
 
 
 def truncate_pair(toks_a: list[str], toks_b: list[str], budget: int,
@@ -136,9 +125,8 @@ def _make_stub_scorer(cfg: PipelineConfig, labels: list[str]) -> Callable[[pd.Da
             # idx over the concatenated length (the +1 is the join space)
             idx = (l1 + l2 + 1 + w) % n
         else:
-            # == stub_logits(...).argmax(axis=1): the logit matrix is
-            # one-hot at this index (kept for the oracle note: the
-            # deterministic score is (idx+1)/n)
+            # the one-hot logits' argmax; the deterministic score is
+            # (idx+1)/n
             idx = (l1 + STUB_W2 * l2 + w) % n
         score = (idx + 1) / float(n)
         return idx, score
@@ -333,6 +321,9 @@ SCORER_REGISTRY: dict[str, Callable] = {
     # deterministic numpy transformer executing the reference's
     # scheme-gather head (operators/minibert.py)
     "npt": _make_npt_scorer,
+    # REL/NonRel head + (type1, type2) -> relation map
+    # (operators/binarymode.py)
+    "binary": _make_binary_scorer,
 }
 
 

@@ -10,7 +10,7 @@ projections, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,22 +42,6 @@ def parse_ann_lines(lines: DataFrame, doc_col: str = "doc_id",
         F.regexp_extract(body[2], "Arg2:(\\S+)", 1).alias("arg2"),
     )
     return mentions, relations
-
-
-def read_ann_dir(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    """S3 — read a directory of .ann files; doc_id = file basename sans
-    extension (the reference pairs gold/system dirs by basename,
-    brat_eval.py:441-462)."""
-    lines = (
-        spark.read.text(f"{path}/*.ann")
-        .withColumn(
-            "doc_id",
-            F.regexp_extract(
-                F.input_file_name(), r"([^/]+)\.ann$", 1
-            ),
-        )
-    )
-    return parse_ann_lines(lines)
 
 
 def render_t_line(mention_id, ent_type, start, end, surface):

@@ -4,11 +4,18 @@ argument shape) drives the whole engine end to end."""
 from __future__ import annotations
 
 import json
+import os
+
+import pytest
 
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.cli import main
-from clinicaltransformerrelationextraction_spark.config import PipelineConfig
+from clinicaltransformerrelationextraction_spark.config import (
+    ENTP2REL,
+    PipelineConfig,
+)
+from clinicaltransformerrelationextraction_spark.plans.ledger import LedgerRun
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
     run_pipeline,
@@ -47,15 +54,16 @@ def test_cli_predict_binary_and_config_json(spark, tmp_path):
     cfg_file = tmp_path / "cfg.json"
     cfg_file.write_text(json.dumps({"max_pairs_per_doc": 500}))
     res = main(
-        ["predict", "--input", inp, "--output", out, "--binary-mode",
+        ["predict", "--input", inp, "--output", out, "--scorer", "binary",
          "--config-json", str(cfg_file)],
         spark=spark,
     )
-    assert res["mode"] == "binary"
-    trip = spark.read.parquet(out + "/triples")
+    trip = LedgerRun(out_dir=out).triples(spark)
     assert res["n_triples"] == trip.count()
     labels = {r.pred for r in trip.select("pred").distinct().collect()}
     assert labels and "NonRel" not in labels
+    assert labels <= set(ENTP2REL.values())
+    assert os.path.isdir(out + "/brat")
 
 
 def test_cli_eval(spark, tmp_path):
@@ -72,6 +80,24 @@ def test_cli_eval(spark, tmp_path):
     res = main(["eval", "--system", s, "--gold", g], spark=spark)
     assert res["precision"] == 1.0 and res["recall"] < 1.0
     assert res["fn"] > 0 and res["fp"] == 0
+
+
+def test_cli_eval_reads_resumed_predict_output(spark, tmp_path):
+    """A crashed run finished by ``resume`` holds two run directories
+    under triples/data/; ``eval --system <out_dir>`` reads the ledger's
+    manifest, so it sees each committed bucket once."""
+    inp, docs = _input(spark, tmp_path)
+    out = str(tmp_path / "resumed")
+    run = LedgerRun(out_dir=out, n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run.run(docs, PipelineConfig(), fail_after=2)
+    main(["resume", "--input", inp, "--output", out, "--n-buckets", "4"],
+         spark=spark)
+    g = str(tmp_path / "gold")
+    run_pipeline(docs, PipelineConfig()).triples.write.parquet(g)
+    res = main(["eval", "--system", out, "--gold", g], spark=spark)
+    assert res["tp"] > 0 and res["fp"] == res["fn"] == 0
+    assert res["precision"] == res["recall"] == 1.0
 
 
 def test_cli_featurize_training_handoff(spark, tmp_path):

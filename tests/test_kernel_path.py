@@ -18,7 +18,13 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clinicaltransformerrelationextraction_spark.config import PipelineConfig
+from clinicaltransformerrelationextraction_spark.config import (
+    ENTP2REL,
+    STUB_W2,
+    STUB_W3,
+    VALID_COMBS,
+    PipelineConfig,
+)
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
     candidates,
 )
@@ -67,7 +73,7 @@ def _restore_arrow_batch(spark, prev):
         spark.conf.set(ARROW_BATCH, prev)
 
 
-@pytest.mark.parametrize("scorer", ["stub", "mlp", "npt"])
+@pytest.mark.parametrize("scorer", ["stub", "mlp", "npt", "binary"])
 def test_kernel_triples_equal_two_stage(spark, scorer):
     # npt runs a per-row transformer forward: a corpus slice keeps the
     # grid affordable
@@ -98,6 +104,62 @@ def test_kernel_triples_equal_two_stage(spark, scorer):
                 _restore_arrow_batch(spark, prev)
             for (salt, bs), rows in zip(combos, got):
                 assert sorted(rows) == want, (kw, arrow_batch, salt, bs)
+
+
+def _binary_reference(rows, cfg) -> list[tuple]:
+    """Binary mode by hand over the reference candidates: REL iff the
+    stub sum is odd, the label from ENTP2REL (a REL pair outside it has
+    none and is dropped), R-numbered per doc in (sent_diff, i1, i2)
+    order."""
+    kept: dict = {}
+    for did, e1, e2, t1, t2, s1, s2, sd, i1, i2 in reference_candidates(
+            rows, cfg):
+        raw = len(s1) + STUB_W2 * len(s2) + STUB_W3 * (i1 + i2)
+        if raw % 2 == 1 and (t1, t2) in ENTP2REL:
+            kept.setdefault(did, []).append(
+                (sd, i1, i2, ENTP2REL[t1, t2], e1, e2))
+    return sorted(
+        (did, f"R{n}", rel, e1, e2, 1.0, sd, i1, i2)
+        for did, pairs in kept.items()
+        for n, (sd, i1, i2, rel, e1, e2) in enumerate(sorted(pairs), 1)
+    )
+
+
+def test_binary_unmapped_type_pair_yields_no_triple(spark):
+    """A valid combination the relation map lacks still makes candidates,
+    some of them REL, but never a triple; numbering skips them."""
+    extra = ("Drug", "ADE")
+    assert extra not in ENTP2REL
+    cfg = PipelineConfig(scorer="binary", valid_combs=[*VALID_COMBS, extra])
+    docs = load_documents(spark, SF_SMOKE)
+    rows = docs.select("doc_id", "text").collect()
+    assert any(
+        (t1, t2) == extra
+        and (len(s1) + STUB_W2 * len(s2) + STUB_W3 * (i1 + i2)) % 2 == 1
+        for _, _, _, t1, t2, s1, s2, _, i1, i2 in reference_candidates(
+            rows, cfg)
+    ), "no REL pair of the unmapped combination: the check is vacuous"
+    got = _rows(run_pipeline(docs, cfg).triples)
+    assert got and got == _binary_reference(rows, cfg)
+
+
+def test_binary_labels_missing_a_relation_fail_at_plan_time(spark):
+    """Labels that lack NonRel or a mapped relation raise a ValueError
+    naming the label before any Spark job runs."""
+    docs = load_documents(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    group = "binary-labels"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="emits label 'fr'"):
+            run_pipeline(docs, PipelineConfig(
+                scorer="binary", labels=["NonRel", "adverse", "reason", "do"]))
+        with pytest.raises(ValueError, match="emits label 'NonRel'"):
+            run_pipeline(docs, PipelineConfig(
+                scorer="binary", labels=["adverse", "reason", "do", "fr"]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_scorer_contract_through_run_pipeline(spark, tmp_path):

@@ -51,8 +51,9 @@ def test_candidate_generation_is_shuffle_free(spark):
 def test_fused_triples_pipeline_is_shuffle_free(spark):
     """Fused score+filter+number: zero shuffle end to end beyond the input
     split; no Window node (numbering happens inside the Arrow UDF) — for
-    a lengths backend (stub) and a text backend (mlp) alike."""
-    for cfg in (PipelineConfig(), PipelineConfig(scorer="mlp")):
+    a lengths backend (stub, binary) and a text backend (mlp) alike."""
+    for cfg in (PipelineConfig(), PipelineConfig(scorer="mlp"),
+                PipelineConfig(scorer="binary")):
         trip = run_pipeline(load_documents(spark, SF_SMOKE), cfg).triples
         plan = _plan(trip)
         nodes = _nodes(plan)

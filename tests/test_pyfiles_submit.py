@@ -202,6 +202,9 @@ def test_spark_submit_cli_launcher(tmp_path, spark):
     from clinicaltransformerrelationextraction_spark.config import (
         PipelineConfig,
     )
+    from clinicaltransformerrelationextraction_spark.plans.ledger import (
+        LedgerRun,
+    )
     from clinicaltransformerrelationextraction_spark.plans.pipeline import (
         load_documents, run_pipeline,
     )
@@ -237,7 +240,7 @@ def test_spark_submit_cli_launcher(tmp_path, spark):
     exp_n = run_pipeline(
         load_documents(spark, SF_SMOKE), PipelineConfig()
     ).triples.count()
-    assert result == {"mode": "single", "n_triples": exp_n}
+    assert result == {"n_triples": exp_n}
     # the documented artifacts landed where the CLI says they do
-    assert spark.read.parquet(str(out_dir / "triples")).count() == exp_n
+    assert LedgerRun(out_dir=str(out_dir)).triples(spark).count() == exp_n
     assert spark.read.parquet(str(out_dir / "brat")).count() > 0

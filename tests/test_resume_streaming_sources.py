@@ -269,15 +269,17 @@ def test_ledger_rejects_another_bucket_count(spark, tmp_path):
 
 
 def test_ledger_rejects_nonpositive_bucket_count(spark, tmp_path):
-    """``resume --n-buckets 0`` on a fresh out_dir must fail naming the
-    argument, not run ``range(0)`` buckets and report zero triples."""
+    """``resume``/``predict --n-buckets 0`` on a fresh out_dir must fail
+    naming the argument, not run ``range(0)`` buckets and report zero
+    triples, nor silently write unbucketed triples."""
     from clinicaltransformerrelationextraction_spark.cli import main
 
     out = str(tmp_path / "nb0")
-    with pytest.raises(ValueError, match="n_buckets must be >= 1, got 0"):
-        main(["resume", "--input", f"{SF_SMOKE}/documents.parquet",
-              "--output", out, "--n-buckets", "0"], spark=spark)
-    assert not os.path.exists(out)
+    for cmd in ("resume", "predict"):
+        with pytest.raises(ValueError, match="n_buckets must be >= 1, got 0"):
+            main([cmd, "--input", f"{SF_SMOKE}/documents.parquet",
+                  "--output", out, "--n-buckets", "0"], spark=spark)
+        assert not os.path.exists(out), cmd
 
 
 def test_ledger_expire_rejects_negative_keep_last(spark, tmp_path):
