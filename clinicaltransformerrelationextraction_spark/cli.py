@@ -106,10 +106,12 @@ def _cfg_from(args: argparse.Namespace) -> PipelineConfig:
 
 def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
     """One ledger run (pending buckets only, so it also finishes a crashed
-    out_dir), then brat over the manifest-resolved triples."""
-    from .operators.segmentation import mentions
-    from .operators.postprocess import brat_render
+    out_dir), then brat in one doc-row pass over the docs
+    (``run_brat``), scored under this run's config: it equals brat over
+    the ledger's triples whenever every committed bucket was scored under
+    the same config."""
     from .plans.ledger import LedgerRun
+    from .plans.pipeline import run_brat
     from .session import get_spark
 
     spark = spark or get_spark(app_name="ctre-predict")
@@ -118,8 +120,8 @@ def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
     run = LedgerRun(out_dir=args.output, n_buckets=args.n_buckets,
                     salt=args.salt)
     ledger = run.run(docs, cfg)
-    ann = brat_render(mentions(docs, cfg), run.triples(spark))
-    ann.write.mode("overwrite").parquet(f"{args.output}/brat")
+    run_brat(docs, cfg, salt=args.salt).write.mode("overwrite").parquet(
+        f"{args.output}/brat")
     return {"n_triples": sum(v["n_triples"] for v in ledger.values())}
 
 

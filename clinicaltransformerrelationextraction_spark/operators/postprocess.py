@@ -9,6 +9,14 @@ Reference semantics:
   — both run inside the doc-row kernel, scoring.enum_score_filter_number
 - brat line formats                    data_format_conf.py:2; brat_eval.py:101-125
 - entities ⋈ relations per file merge  post_processing.py:66-85 (J5)
+
+``brat_render`` is the Catalyst form of brat rendering (groupBy +
+collect_list + array_sort per side, then a join). The product path,
+``plans/pipeline.run_brat``, renders each doc's ``.ann`` text inside the
+doc-row scoring pass (``scoring.enum_score_brat``) with no shuffle;
+``brat_render`` stays as its twin, the form that pass is pinned against
+(tests/test_kernel_path.py, tests/test_cli.py) and that
+perfbench/layers.py times.
 """
 
 from __future__ import annotations

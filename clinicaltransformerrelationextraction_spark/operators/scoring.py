@@ -42,9 +42,11 @@ from pyspark.sql import types as T
 from ..config import SPEC_TAGS, STUB_W2, STUB_W3, PipelineConfig
 from .binarymode import _make_binary_scorer
 from .candidates import candidate_columns, doc_candidate_rows, doc_rows_input
+from .segmentation import doc_mention_rows
 
 __all__ = [
     "score_candidates", "score_filter_number", "enum_score_filter_number",
+    "enum_score_brat",
     "truncate_pair", "register_scorer", "SCORER_REGISTRY",
 ]
 
@@ -510,6 +512,58 @@ def _with_rel_id(numbered: DataFrame) -> DataFrame:
     )
 
 
+def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
+              text_col: str) -> tuple[DataFrame, Callable]:
+    """The doc-row input of a per-doc scoring pass, and ``flushes``, the
+    per-task generator both doc-row kernels consume. ``flushes(batches)``
+    enumerates and marks each doc's candidate rows, buffers them and
+    scores them once ``cfg.batch_size`` pairs are pending, flushing only at
+    a doc boundary, so a scorer call holds at most ``batch_size +
+    max_pairs_per_doc - 1`` rows. It yields ``(docs, numbered)``: the
+    ``(doc_id, text)`` of every doc since the last flush, those without
+    candidates included, and ``_filter_number`` of their scored rows (None
+    when nothing survives). Docs not yet scored are yielded with None at
+    the end of an input batch when no rows are pending, so a run of docs
+    without candidates is not held across Arrow batches."""
+    factory = _resolve_factory(cfg)
+    emit = "lengths" if _needs_lengths(factory) else "text"
+    labels = list(cfg.labels)
+    label_arr = np.asarray(labels, dtype=object)
+    non_rel = cfg.non_rel
+    batch_size = max(cfg.batch_size, 1)
+    rows_of = doc_candidate_rows(cfg, emit)
+    cols = candidate_columns(emit)
+
+    def flushes(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+        scorer = factory(cfg, labels)
+
+        def score(rows: list) -> pd.DataFrame | None:
+            if not rows:
+                return None
+            pdf = pd.DataFrame(rows, columns=cols)
+            idx, sc = scorer(pdf)
+            pdf["pred_label"] = label_arr[idx]
+            pdf["score"] = sc
+            return _filter_number(pdf, non_rel)
+
+        pending: list = []
+        seen: list = []
+        for pdf_in in batches:
+            for did, tx in zip(pdf_in["doc_id"], pdf_in["text"]):
+                seen.append((did, tx))
+                pending += rows_of(did, tx)
+                if len(pending) >= batch_size:
+                    yield seen, score(pending)
+                    pending, seen = [], []
+            if seen and not pending:
+                yield seen, None
+                seen = []
+        if seen:
+            yield seen, score(pending)
+
+    return doc_rows_input(docs, doc_col, text_col), flushes
+
+
 def enum_score_filter_number(
     docs: DataFrame, cfg: PipelineConfig | None = None,
     doc_col: str = "doc_id", text_col: str = "text",
@@ -524,51 +578,74 @@ def enum_score_filter_number(
     frame would carry: the marked strings for text backends, the window
     lengths for backends declaring ``needs = "lengths"``. The scorer thus
     sees the columns of ``candidates(emit=scoring_emit(cfg))`` and the
-    ``register_scorer`` contract holds. Rows are buffered and scored once
-    ``cfg.batch_size`` pairs are pending, flushing only at a doc boundary,
-    so a scorer call holds at most ``batch_size + max_pairs_per_doc - 1``
-    rows. Each doc is whole within its input row, so numbering needs no
-    cross-batch carry. Output equals ``score_filter_number`` over the same
-    candidates, scores included, for any Arrow batch size, partitioning or
-    ``batch_size`` (pinned against the pure-Python candidate reference in
+    ``register_scorer`` contract holds. Rows are buffered and scored every
+    ``cfg.batch_size`` pairs at a doc boundary (``_doc_pass``). Each doc is
+    whole within its input row, so numbering needs no cross-batch carry.
+    Output equals ``score_filter_number`` over the same candidates, scores
+    included, for any Arrow batch size, partitioning or ``batch_size``
+    (pinned against the pure-Python candidate reference in
     tests/test_kernel_path.py; the stub by the q_triples oracle)."""
     cfg = cfg or PipelineConfig()
-    factory = _resolve_factory(cfg)
-    emit = "lengths" if _needs_lengths(factory) else "text"
-    labels = list(cfg.labels)
-    label_arr = np.asarray(labels, dtype=object)
-    non_rel = cfg.non_rel
-    batch_size = max(cfg.batch_size, 1)
-    src = doc_rows_input(docs, doc_col, text_col)
+    src, flushes = _doc_pass(docs, cfg, doc_col, text_col)
     id_type = src.schema["doc_id"].dataType.simpleString()
-    rows_of = doc_candidate_rows(cfg, emit)
-    cols = candidate_columns(emit)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory(cfg, labels)
-
-        def score(rows: list) -> pd.DataFrame | None:
-            pdf = pd.DataFrame(rows, columns=cols)
-            idx, sc = scorer(pdf)
-            pdf["pred_label"] = label_arr[idx]
-            pdf["score"] = sc
-            return _filter_number(pdf, non_rel)
-
-        pending: list = []
-        for pdf_in in batches:
-            for did, tx in zip(pdf_in["doc_id"], pdf_in["text"]):
-                pending += rows_of(did, tx)
-                if len(pending) >= batch_size:
-                    out = score(pending)
-                    pending = []
-                    if out is not None:
-                        yield out
-        if pending:
-            out = score(pending)
-            if out is not None:
-                yield out
+        for _, numbered in flushes(batches):
+            if numbered is not None:
+                yield numbered
 
     return _with_rel_id(src.mapInPandas(run, schema=_triples_schema(id_type)))
+
+
+def _r_lines(numbered: pd.DataFrame | None) -> dict:
+    """doc_id -> the doc's brat R lines in ``rel_n`` order, joined by
+    newlines: ``R<n>\t<pred> Arg1:<subj> Arg2:<obj>``."""
+    if numbered is None:
+        return {}
+    lines: dict = {}
+    for did, n, pred, subj, obj in zip(
+            numbered["doc_id"], numbered["rel_n"], numbered["pred"],
+            numbered["subj_id"], numbered["obj_id"]):
+        lines.setdefault(did, []).append(
+            f"R{n}\t{pred} Arg1:{subj} Arg2:{obj}")
+    return {did: "\n".join(ls) for did, ls in lines.items()}
+
+
+def enum_score_brat(
+    docs: DataFrame, cfg: PipelineConfig | None = None,
+    doc_col: str = "doc_id", text_col: str = "text",
+) -> DataFrame:
+    """documents -> (doc_id, ann_text) brat ``.ann`` text in ONE
+    Arrow-batched mapInPandas pass over the document rows, no shuffle: the
+    triples pass of ``enum_score_filter_number`` (``_doc_pass``), rendering
+    each doc as its T lines (``segmentation.doc_mention_rows``, in
+    ``tok_idx`` order: ``T<i>\t<type> <start> <end>\t<surface>``) then
+    its R lines (in ``rel_n`` order). One row per doc with at least one
+    gazetteer mention. Rows, schema and text equal
+    ``postprocess.brat_render(mentions(docs), enum_score_filter_number(
+    docs))``, the Catalyst form this pass replaces (pinned in
+    tests/test_kernel_path.py; the stub by the q_brat_render oracle)."""
+    cfg = cfg or PipelineConfig()
+    src, flushes = _doc_pass(docs, cfg, doc_col, text_col)
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    mention_rows = doc_mention_rows(cfg)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for seen, numbered in flushes(batches):
+            r_lines = _r_lines(numbered)
+            out = []
+            for did, tx in seen:
+                men = mention_rows(did, tx)
+                if not men:
+                    continue
+                ann = "\n".join(f"{mid}\t{et} {st} {en}\t{surf}"
+                                for _, mid, et, _, _, surf, st, en in men)
+                r = r_lines.get(did)
+                out.append((did, ann if r is None else f"{ann}\n{r}"))
+            if out:
+                yield pd.DataFrame(out, columns=["doc_id", "ann_text"])
+
+    return src.mapInPandas(run, schema=f"doc_id {id_type}, ann_text string")
 
 
 def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:

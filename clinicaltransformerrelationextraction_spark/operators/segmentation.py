@@ -10,6 +10,7 @@ contract for production segmenters (spaCy/syntok/etc. — not in container).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import Callable
 
 import pandas as pd
 
@@ -21,7 +22,7 @@ from ..config import PipelineConfig
 from ..functions.util import row_kernel
 from .candidates import doc_rows_input, tokens_col
 
-__all__ = ["sentences", "mentions", "segment_pages_udf"]
+__all__ = ["sentences", "mentions", "doc_mention_rows", "segment_pages_udf"]
 
 
 def sentences(df: DataFrame, cfg: PipelineConfig | None = None,
@@ -50,21 +51,13 @@ def sentences(df: DataFrame, cfg: PipelineConfig | None = None,
     )
 
 
-def mentions(df: DataFrame, cfg: PipelineConfig | None = None,
-             doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """documents -> (doc_id, mention_id, ent_type, tok_idx, sent_id, surface,
-    start, end) with character offsets into the original text.
-
-    Brat ``T``-line shape (src/brat_eval.py:101-116). A doc-row kernel:
-    char offsets are a per-doc prefix sum, so the mentions derivation is
-    zero-shuffle like the candidate pipeline (the former posexplode +
-    per-doc cumulative-sum WINDOW shuffled every token row). Byte-identical
-    to that window form (the Catalyst twin in tests/catalyst_twins.py;
-    pinned in tests/test_round7_perf.py) and oracle-checked via
-    q_mentions."""
-    cfg = cfg or PipelineConfig()
-    src = doc_rows_input(df, doc_col, text_col)
-    id_type = src.schema["doc_id"].dataType.simpleString()
+def doc_mention_rows(cfg: PipelineConfig) -> Callable:
+    """``rows(doc_id, text) -> [tuple]``: one doc's gazetteer mentions in
+    token order, ``(doc_id, mention_id, ent_type, tok_idx, sent_id,
+    surface, start, end)``. Character offsets are a running sum of token
+    lengths plus the single-space separators, so ``text[start:end]`` is
+    the surface. NULL text gives no rows. The one mention scan behind
+    ``mentions`` and the brat T lines of ``scoring.enum_score_brat``."""
     vocab = dict(cfg.ent_vocab)
     sl = cfg.sent_len
 
@@ -81,11 +74,29 @@ def mentions(df: DataFrame, cfg: PipelineConfig | None = None,
             start += len(tok) + 1
         return out
 
+    return rows
+
+
+def mentions(df: DataFrame, cfg: PipelineConfig | None = None,
+             doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """documents -> (doc_id, mention_id, ent_type, tok_idx, sent_id, surface,
+    start, end) with character offsets into the original text.
+
+    Brat ``T``-line shape (src/brat_eval.py:101-116). A doc-row kernel
+    over ``doc_mention_rows``: char offsets are a per-doc prefix sum, so
+    the mentions derivation is zero-shuffle like the candidate pipeline
+    (the former posexplode + per-doc cumulative-sum WINDOW shuffled every
+    token row). Byte-identical to that window form (the Catalyst twin in
+    tests/catalyst_twins.py; pinned in tests/test_round7_perf.py) and
+    oracle-checked via q_mentions."""
+    cfg = cfg or PipelineConfig()
+    src = doc_rows_input(df, doc_col, text_col)
+    id_type = src.schema["doc_id"].dataType.simpleString()
     return row_kernel(
         src,
         f"doc_id {id_type}, mention_id string, ent_type string, "
         "tok_idx int, sent_id int, surface string, start long, end long",
-        rows,
+        doc_mention_rows(cfg),
     )
 
 

@@ -4,7 +4,6 @@ argument shape) drives the whole engine end to end."""
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 
@@ -15,9 +14,16 @@ from clinicaltransformerrelationextraction_spark.config import (
     ENTP2REL,
     PipelineConfig,
 )
+from clinicaltransformerrelationextraction_spark.operators.postprocess import (
+    brat_render,
+)
+from clinicaltransformerrelationextraction_spark.operators.segmentation import (
+    mentions,
+)
 from clinicaltransformerrelationextraction_spark.plans.ledger import LedgerRun
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
+    run_brat,
     run_pipeline,
 )
 from tests.conftest import SF_SMOKE
@@ -30,6 +36,23 @@ def _input(spark, tmp_path, n=120):
     return p, docs
 
 
+def _n_docs_with_mentions(spark, inp, cfg=None) -> int:
+    return mentions(spark.read.parquet(inp), cfg).select(
+        "doc_id").distinct().count()
+
+
+def _assert_brat_of_ledger(spark, inp, out):
+    """``<out>/brat`` == the Catalyst twin over the ledger's triples:
+    ``brat_render(mentions(docs), LedgerRun(out).triples(spark))``."""
+    got = spark.read.parquet(out + "/brat")
+    want = brat_render(mentions(spark.read.parquet(inp)),
+                       LedgerRun(out_dir=out).triples(spark))
+    assert got.dtypes == want.dtypes
+    assert got.count() == want.count() == _n_docs_with_mentions(spark, inp)
+    assert (got.exceptAll(want).count(), want.exceptAll(got).count()) == (
+        0, 0)
+
+
 def test_cli_predict_ledger(spark, tmp_path):
     inp, docs = _input(spark, tmp_path)
     out = str(tmp_path / "run")
@@ -39,7 +62,7 @@ def test_cli_predict_ledger(spark, tmp_path):
     )
     want = run_pipeline(docs, PipelineConfig()).triples.count()
     assert res["n_triples"] == want
-    assert spark.read.parquet(out + "/brat").count() > 0
+    _assert_brat_of_ledger(spark, inp, out)
     # resume over a finished run is a no-op with the same totals
     res2 = main(
         ["resume", "--input", inp, "--output", out, "--n-buckets", "4"],
@@ -63,7 +86,56 @@ def test_cli_predict_binary_and_config_json(spark, tmp_path):
     labels = {r.pred for r in trip.select("pred").distinct().collect()}
     assert labels and "NonRel" not in labels
     assert labels <= set(ENTP2REL.values())
-    assert os.path.isdir(out + "/brat")
+    assert spark.read.parquet(out + "/brat").count() == _n_docs_with_mentions(
+        spark, inp, PipelineConfig(scorer="binary"))
+
+
+def test_cli_predict_finishes_crashed_run_with_whole_brat(spark, tmp_path):
+    """``predict`` re-run on a crashed out_dir commits the pending buckets
+    and renders brat for every doc, the committed buckets' docs included:
+    one row per doc with mentions, equal to the twin over the ledger."""
+    inp, _ = _input(spark, tmp_path)
+    out = str(tmp_path / "crashed")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        LedgerRun(out_dir=out, n_buckets=4).run(
+            spark.read.parquet(inp), PipelineConfig(), fail_after=2)
+    main(["predict", "--input", inp, "--output", out, "--n-buckets", "4"],
+         spark=spark)
+    _assert_brat_of_ledger(spark, inp, out)
+
+
+def test_cli_predict_jobs_are_one_ledger_write_plus_one_brat_write(
+        spark, tmp_path):
+    """``predict`` launches exactly the Spark jobs of one ledger write
+    plus one ``run_brat`` write, and the brat write, one doc-row pass with
+    no shuffle, launches the jobs of a plain triples write (no triples
+    read-back, no groupBy, no join). Job counts per job group, as in
+    ``test_ledger_adds_no_spark_job``; the input is read outside the
+    groups, so the schema read is not counted."""
+    inp, _ = _input(spark, tmp_path)
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    docs = spark.read.parquet(inp)
+    triples = jobs("predict-triples", lambda: run_pipeline(
+        docs).triples.write.parquet(str(tmp_path / "trip")))
+    ledger = jobs("predict-ledger", lambda: LedgerRun(
+        out_dir=str(tmp_path / "ledger"), n_buckets=4).run(docs))
+    brat = jobs("predict-brat", lambda: run_brat(docs).write.parquet(
+        str(tmp_path / "brat")))
+    assert brat == triples >= 1
+    read = jobs("predict-read", lambda: spark.read.parquet(inp))
+    predict = jobs("predict-cli", lambda: main(
+        ["predict", "--input", inp, "--output", str(tmp_path / "out"),
+         "--n-buckets", "4"], spark=spark))
+    assert predict == read + ledger + brat
 
 
 def test_cli_eval(spark, tmp_path):

@@ -4,13 +4,18 @@ pure-Python reference candidates of ``tests/reference_impl.py``, then
 ``score_filter_number``) exactly, scores included,
 for every backend and under any salting, Arrow batch size and scorer batch
 size; it must honour the ``register_scorer`` contract; and frames built
-without marked strings must fail with an error naming the cause."""
+without marked strings must fail with an error naming the cause.
+
+``run_brat`` is the same pass rendering brat ``.ann`` text; it must equal
+its Catalyst twin ``brat_render(mentions(docs), run_pipeline(docs)
+.triples)`` on the smoke corpus plus edge docs under the same layouts."""
 
 from __future__ import annotations
 
 import functools
 import itertools
 import json
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -28,14 +33,21 @@ from clinicaltransformerrelationextraction_spark.config import (
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
     candidates,
 )
+from clinicaltransformerrelationextraction_spark.operators.postprocess import (
+    brat_render,
+)
 from clinicaltransformerrelationextraction_spark.operators.scoring import (
     SCORER_REGISTRY,
     register_scorer,
     score_candidates,
     score_filter_number,
 )
+from clinicaltransformerrelationextraction_spark.operators.segmentation import (
+    mentions,
+)
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
+    run_brat,
     run_pipeline,
 )
 from tests.conftest import SF_SMOKE
@@ -285,3 +297,87 @@ def test_mlp_scores_are_row_invariant():
     assert np.array_equal(logits.argmax(axis=1), idx)
     np.testing.assert_allclose(probs[np.arange(len(idx)), idx], score,
                                rtol=1e-12)
+
+
+# brat edge docs: each must render exactly as the Catalyst twin does
+BRAT_EDGES = [
+    None,                            # NULL text -> no row
+    "",                              # empty text -> no row
+    "the fast order batch",          # no mentions -> no row
+    "spark the table",               # Drug mentions only: no valid pair
+    "héllo key wörld spark ü",       # unicode tokens shift the offsets
+    "spark",                         # single token, one mention
+    "key  spark",                    # consecutive spaces: an empty token
+]
+
+
+# per scorer, a doc whose one candidate pair (ADE "key" -> Drug "spark")
+# is scored NonRel: its brat row has T lines and no R line
+ALL_NONREL = {"stub": "key xxx spark", "mlp": "key fast fast spark",
+              "binary": "key x spark"}
+
+
+@pytest.mark.parametrize("scorer", ["stub", "mlp", "binary"])
+def test_brat_pass_equals_catalyst_twin(spark, scorer):
+    """``run_brat`` == ``brat_render(mentions, run_pipeline triples)`` as
+    a multiset of (doc_id, ann_text), with the same schema, under Arrow
+    batch {1, 1024} x batch_size {1, 1024} x salt {off, on}: the smoke
+    corpus plus the edge docs with long doc_ids, and (for the stub: the id
+    type does not reach the scorer) a slice of it with string doc_ids.
+    exceptAll both ways plus per-layout row counts."""
+    cfg = PipelineConfig(scorer=scorer)
+    nonrel = ALL_NONREL[scorer]
+    assert reference_candidates([(0, nonrel)], cfg), "no pair: vacuous"
+    edges = [*BRAT_EDGES, nonrel]
+    long_ids = load_documents(spark, SF_SMOKE).select(
+        "doc_id", "text").unionByName(spark.createDataFrame(
+            [(10_000 + i, t) for i, t in enumerate(edges)],
+            "doc_id long, text string"))
+    str_ids = long_ids.filter(
+        (F.col("doc_id") < 40) | (F.col("doc_id") >= 10_000)
+    ).withColumn("doc_id", F.concat(F.lit("d"), F.col("doc_id")))
+    combos = list(itertools.product((False, True), (1, 1024)))
+
+    def tagged(df, tag, combo):
+        return df.select(F.lit(tag).alias("corpus"),
+                         F.lit(combo).alias("combo"),
+                         F.col("doc_id").cast("string"), "ann_text")
+
+    twins, runs = [], []
+    corpora = (long_ids, str_ids) if scorer == "stub" else (long_ids,)
+    for tag, docs in enumerate(corpora):
+        twin = brat_render(mentions(docs, cfg),
+                           run_pipeline(docs, cfg).triples)
+        twins.append(tagged(twin, tag, -1))
+        for i, (salt, bs) in enumerate(combos):
+            got = run_brat(docs, PipelineConfig(scorer=scorer, batch_size=bs),
+                           salt=salt)
+            assert got.dtypes == twin.dtypes, (tag, got.dtypes)
+            runs.append(tagged(got, tag, i))
+    twin_rows = functools.reduce(DataFrame.unionByName, twins).collect()
+    ann = {(c, d): a for c, _, d, a in twin_rows}
+    for tag in range(len(corpora)):
+        ids = [f"{'d' * tag}{10_000 + i}" for i in range(len(edges))]
+        # rows exactly for the edge docs with mentions
+        assert [(tag, d) in ann for d in ids] == [
+            False, False, False, True, True, True, True, True]
+        assert "\nR" not in ann[tag, ids[-1]]
+    assert any("\nR" in a for a in ann.values()), "no R lines: vacuous"
+    want_rows = [(c, i, d, a) for c, _, d, a in twin_rows
+                 for i in range(len(combos))]
+    runs = functools.reduce(DataFrame.unionByName, runs)
+    schema = "corpus int, combo int, doc_id string, ann_text string"
+    got_rows = []
+    for arrow_batch in (1, 1024):
+        prev = _set_arrow_batch(spark, arrow_batch)
+        try:
+            rows = runs.collect()
+        finally:
+            _restore_arrow_batch(spark, prev)
+        assert Counter(r[:2] for r in rows) == Counter(
+            r[:2] for r in want_rows), arrow_batch
+        got_rows += rows
+    got = spark.createDataFrame(got_rows, schema)
+    want = spark.createDataFrame(want_rows * 2, schema)
+    assert (got.exceptAll(want).count(), want.exceptAll(got).count()) == (
+        0, 0)

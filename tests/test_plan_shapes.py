@@ -10,6 +10,7 @@ from clinicaltransformerrelationextraction_spark.operators.candidates import (
 )
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
+    run_brat,
     run_pipeline,
 )
 from tests.conftest import SF_SMOKE
@@ -58,6 +59,19 @@ def test_fused_triples_pipeline_is_shuffle_free(spark):
         plan = _plan(trip)
         nodes = _nodes(plan)
         assert nodes.count("Exchange") <= 1, cfg.scorer
+        assert "hashpartitioning" not in plan, cfg.scorer
+        assert "Window" not in nodes, cfg.scorer
+
+
+def test_brat_pass_is_shuffle_free(spark):
+    """Brat rendering is the triples pass itself: one MapInPandas over the
+    docs, no hash-partition exchange (no groupBy or join against the
+    triples) and no Window, for a lengths backend and a text backend."""
+    for cfg in (PipelineConfig(), PipelineConfig(scorer="mlp"),
+                PipelineConfig(scorer="binary")):
+        plan = _plan(run_brat(load_documents(spark, SF_SMOKE), cfg))
+        nodes = _nodes(plan)
+        assert nodes.count("MapInPandas") == 1, cfg.scorer
         assert "hashpartitioning" not in plan, cfg.scorer
         assert "Window" not in nodes, cfg.scorer
 

@@ -106,6 +106,9 @@ def test_uni_mode_changes_predictions(spark):
 
 def test_cli_data_format_mode_is_wired(spark, tmp_path):
     from clinicaltransformerrelationextraction_spark.cli import main
+    from clinicaltransformerrelationextraction_spark.plans.ledger import (
+        LedgerRun,
+    )
 
     docs = load_documents(spark, SF_SMOKE).limit(100)
     inp = str(tmp_path / "docs_in")
@@ -117,9 +120,9 @@ def test_cli_data_format_mode_is_wired(spark, tmp_path):
     main(["predict", "--input", inp, "--output", out1, "--n-buckets", "1",
           "--data-format-mode", "1"], spark=spark)
     t0 = {(r.doc_id, r.subj_id, r.obj_id, r.pred)
-          for r in spark.read.parquet(out0 + "/triples").collect()}
+          for r in LedgerRun(out_dir=out0).triples(spark).collect()}
     t1 = {(r.doc_id, r.subj_id, r.obj_id, r.pred)
-          for r in spark.read.parquet(out1 + "/triples").collect()}
+          for r in LedgerRun(out_dir=out1).triples(spark).collect()}
     assert t0 != t1  # the flag is no longer a silent no-op
 
 
