@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
@@ -32,6 +35,48 @@ def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     return df
 
 
+# process-wide, as the importers are: archive -> (stat key, directory)
+# of its last read, and zipimporter's own eager re-read
+_zip_reads: dict = {}
+_zip_reread = zipimport.zipimporter.invalidate_caches
+
+
+def _reread_if_changed(self) -> None:
+    try:  # stat before the read: a change during it shows next time
+        st = os.stat(self.archive)
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:
+        key = None
+    last_key, files = _zip_reads.get(self.archive, (None, None))
+    if key is not None and key == last_key:
+        self._files = zipimport._zip_directory_cache[self.archive] = files
+        return
+    _zip_reread(self)
+    if self.archive in zipimport._zip_directory_cache:
+        _zip_reads[self.archive] = (key, self._files)
+    else:  # unreadable: the original emptied it, so re-read it next time
+        _zip_reads.pop(self.archive, None)
+
+
+def keep_unchanged_zip_directories() -> None:
+    """Once per Python worker process (idempotent): stop re-reading zip
+    archives on ``sys.path`` whose ``(st_ino, st_size, st_mtime_ns)`` has
+    not changed since their directory was last read. Spark calls
+    ``importlib.invalidate_caches()`` at the start of every task, and on
+    CPython < 3.12 that makes each ``zipimporter`` (one per package of
+    ``pyspark.zip``, plus the py4j zip: 16 on a stock worker) re-read its
+    archive's whole directory, about 240 ms of worker CPU per task before
+    any row is touched. The importers of an unchanged archive now share
+    the directory of its last read. An archive replaced, rewritten or
+    deleted on disk, for example a re-shipped ``--py-files`` zip, still
+    goes through the original ``zipimporter.invalidate_caches``. Spark
+    reuses workers, so the patch holds for every later task on the
+    worker. CPython >= 3.12 re-reads lazily and is left alone."""
+    cls = zipimport.zipimporter
+    if sys.version_info < (3, 12) and cls.invalidate_caches is _zip_reread:
+        cls.invalidate_caches = _reread_if_changed
+
+
 def row_kernel(src: DataFrame, schema: str, rows_of: Callable) -> DataFrame:
     """``rows_of(*row) -> [tuple]`` over every row of ``src``, called with
     the row's values of ``src``'s columns in order, as one Arrow-batched
@@ -43,6 +88,7 @@ def row_kernel(src: DataFrame, schema: str, rows_of: Callable) -> DataFrame:
     cols = [f.split()[0] for f in schema.split(", ")]
 
     def kernel(batches):
+        keep_unchanged_zip_directories()
         for pdf in batches:
             rows = [r for row in pdf.itertuples(index=False, name=None)
                     for r in rows_of(*row)]

@@ -148,8 +148,11 @@ def doc_candidate_rows(cfg: PipelineConfig, emit: str = "text") -> Callable:
 def doc_rows_input(df: DataFrame, doc_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """(doc_id, text) input of a doc-row kernel. factor=1: one wave of
-    core-count tasks, since each Python task pays a fixed boundary cost
-    (the dedup kernels' measurement)."""
+    core-count tasks, since each Python task pays a fixed cost before any
+    row: ~35 ms of worker CPU on a worker that has run a product runner
+    (``functions.util.keep_unchanged_zip_directories``), ~240 ms on one
+    that has not, when Spark's per-task ``importlib.invalidate_caches()``
+    re-reads ``pyspark.zip`` (measured in ``dedup._docs``)."""
     return ensure_parallelism(
         df.select(F.col(doc_col).alias("doc_id"),
                   F.col(text_col).alias("text")),

@@ -38,9 +38,13 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions.util import ensure_parallelism
 
     # factor=1 (not the default 2): the dedup stack's per-doc work runs in
-    # Arrow-batched Python kernels whose per-TASK boundary overhead is
-    # ~10 ms (measured r7: identity mapInPandas over this corpus costs
-    # 0.86 s at 64 partitions vs 0.56 s at 32, pure task overhead) — one
+    # Arrow-batched Python kernels, and every Python task has a fixed cost
+    # before any row is touched. An identity mapInPandas over 4 rows, on
+    # 4 cores, costs 0.16 / 0.56 / 2.1 s of Python-worker CPU (/proc) at
+    # 4 / 16 / 64 partitions, ~35 ms a task, once the worker has run a
+    # product runner (functions/util.keep_unchanged_zip_directories);
+    # before that, Spark's per-task importlib.invalidate_caches() re-read
+    # pyspark.zip and the cost was 1.0 / 4.0 / 15 s, ~240 ms a task. One
     # wave of core-count tasks balances fine for per-doc-uniform kernels
     return ensure_parallelism(
         spark.read.parquet(f"{sf}/documents.parquet"), factor=1

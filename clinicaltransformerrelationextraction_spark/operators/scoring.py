@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SPEC_TAGS, STUB_W2, STUB_W3, PipelineConfig
+from ..functions.util import keep_unchanged_zip_directories
 from .binarymode import _make_binary_scorer
 from .candidates import candidate_columns, doc_candidate_rows, doc_rows_input
 from .segmentation import doc_mention_rows
@@ -454,6 +455,7 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
     out_schema = T.StructType(out_fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_unchanged_zip_directories()
         scorer = factory(cfg, labels)
         for pdf in batches:
             if len(pdf) == 0:
@@ -524,7 +526,8 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
     candidates included, and ``_filter_number`` of their scored rows (None
     when nothing survives). Docs not yet scored are yielded with None at
     the end of an input batch when no rows are pending, so a run of docs
-    without candidates is not held across Arrow batches."""
+    without candidates is not held across Arrow batches. A NULL doc_id
+    raises a ``ValueError`` naming it: numbering and rendering key on it."""
     factory = _resolve_factory(cfg)
     emit = "lengths" if _needs_lengths(factory) else "text"
     labels = list(cfg.labels)
@@ -535,6 +538,7 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
     cols = candidate_columns(emit)
 
     def flushes(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+        keep_unchanged_zip_directories()
         scorer = factory(cfg, labels)
 
         def score(rows: list) -> pd.DataFrame | None:
@@ -549,6 +553,11 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
         pending: list = []
         seen: list = []
         for pdf_in in batches:
+            n_null = int(pdf_in["doc_id"].isna().sum())
+            if n_null:
+                raise ValueError(
+                    f"{n_null} document row(s) with a NULL doc_id: the "
+                    "triples and brat passes need an id for every document")
             for did, tx in zip(pdf_in["doc_id"], pdf_in["text"]):
                 seen.append((did, tx))
                 pending += rows_of(did, tx)
@@ -669,6 +678,7 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
     id_type = cand.schema["doc_id"].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_unchanged_zip_directories()
         scorer = factory(cfg, labels)
         carry: pd.DataFrame | None = None  # rows of the batch-boundary doc
         for pdf in batches:

@@ -42,9 +42,9 @@ def bigrams_expr(toks):
 def _docs(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions.util import ensure_parallelism
 
-    # factor=1: the n-gram consumers below run Arrow-batched kernels
-    # whose per-task boundary overhead dominates at 2x-core task counts
-    # (same rationale as dedup._docs, measured r7)
+    # factor=1: the n-gram consumers below run Arrow-batched kernels, and
+    # each Python task has a fixed cost (~35 ms of worker CPU on a worker
+    # set up by keep_unchanged_zip_directories; measured in dedup._docs)
     return ensure_parallelism(
         spark.read.parquet(f"{sf}/documents.parquet"), factor=1
     )

@@ -4,6 +4,7 @@ the inputs a 10^12-page crawl WILL contain."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
@@ -78,3 +79,23 @@ def test_doc_exceeding_pair_cap(spark):
     stats = candidate_cap_stats(docs, cfg).first()
     assert stats.n_docs_capped == 1
     assert stats.n_pairs_dropped == stats.n_pairs_total - 10
+
+
+def test_null_doc_id_fails_with_named_cause(spark):
+    """A NULL doc_id (a NaN once a ``long`` column reaches pandas) stops
+    the triples and brat passes with an error that names it, not a
+    pandas ``IntCastingNaNError`` from the worker; ``mentions`` keeps the
+    NULL-id rows as before."""
+    frames = [
+        spark.createDataFrame([(None, "join spark"), (1, "join spark")],
+                              "doc_id long, text string"),
+        spark.createDataFrame([(None, "join spark"), ("a", "join spark")],
+                              "doc_id string, text string"),
+    ]
+    for docs in frames:
+        for run in (lambda d: run_pipeline(d, CFG).triples,
+                    lambda d: run_brat(d, CFG)):
+            with pytest.raises(Exception,
+                               match=r"1 document row\(s\) with a NULL doc_id"):
+                run(docs).collect()
+        assert mentions(docs, CFG).filter(F.col("doc_id").isNull()).count() == 2

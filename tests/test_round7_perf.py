@@ -58,7 +58,7 @@ def _string_ids(df):
 
 # (Arrow records per batch, input partitions): a kernel's output must not
 # change with either — batch size 1 puts every doc in its own batch
-LAYOUTS = [(1, 1), (1, 7), (1024, 1), (1024, 7)]
+LAYOUTS = [(1, 1), (1, 7), (2, 7), (1024, 1), (1024, 7)]
 ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
