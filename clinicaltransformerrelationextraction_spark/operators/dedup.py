@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.util import row_kernel
+from .graph import min_label_components
 
 N_SEEDS = 8  # minhash signature length
 BAND_ROWS = 2  # rows per LSH band -> N_SEEDS/BAND_ROWS bands
@@ -111,13 +112,19 @@ def shingle_frame(docs: DataFrame) -> DataFrame:
 
 def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact dedup: group by content hash, keep min doc_id."""
-    return (
-        _docs(spark, sf)
-        .groupBy(F.md5("text").alias("text_hash"))
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count("*").alias("n_docs"),
-        )
+    return exact_partial(_docs(spark, sf))
+
+
+def exact_partial(docs: DataFrame) -> DataFrame:
+    """A corpus slice's contribution to the exact-dedup content-hash
+    index — the mergeable-partial shape (``q_dedup_exact`` output:
+    ``(text_hash, keeper_doc_id, n_docs)``). The SINGLE definition of
+    this aggregate: ``q_dedup_exact`` is it over the whole corpus,
+    ``incremental.incremental_exact`` folds these, and the ingest state
+    dir (plans/ingest.py) bootstraps/verifies with it."""
+    return docs.groupBy(F.md5("text").alias("text_hash")).agg(
+        F.min("doc_id").alias("keeper_doc_id"),
+        F.count("*").alias("n_docs"),
     )
 
 
@@ -283,7 +290,9 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 
     Iterative min-label propagation (Pregel-lite): comp(v) <-
     min(comp(v), min over neighbors comp(u)) until a fixpoint, lineage cut
-    per iteration with localCheckpoint. The loop runs over the
+    per iteration with localCheckpoint — ``graph.min_label_components``,
+    the same loop that labels the entity/user graph components and runs
+    both incremental merges. The loop runs over the
     EDGE-INDUCED subgraph only — a doc with no near-dup pair can never
     change label, so the corpus-sized table enters exactly once (the final
     singleton union), not once per round; on a mostly-unique corpus the
@@ -314,93 +323,37 @@ def clusters_frame(docs: DataFrame) -> DataFrame:
     """The df-based full-recompute cluster core of ``q_dedup_clusters``
     (see its docstring for design + profiling notes) — also the
     from-scratch baseline the incremental merge (incremental.py) is
-    pytest-pinned equal to."""
-    # materialize the verified pair table ONCE before it is referenced
-    # twice by the symmetric union below — without this the whole
-    # LSH+jaccard subtree executes per union branch (measured ~2x). At
-    # 100 TB this checkpoint is the pairs table you'd persist anyway.
-    pairs = (
-        jaccard_verify(
-            pair_shingle_stats(
-                candidate_pairs_frame(docs).select("doc_a", "doc_b"),
-                # lazily checkpointed: the verify references the shingle
-                # table TWICE (doc_a and doc_b sides) — one kernel pass,
-                # cached reuse (r7; the bands side is the fused kernel
-                # and does not need this frame at all)
-                shingle_frame(docs).localCheckpoint(eager=False),
-            )
+    pytest-pinned equal to. The fixpoint is
+    ``graph.min_label_components`` over the verified pairs, the one
+    min-label loop of the package; it checkpoints the pair table once
+    before its symmetric union references it twice (without that cut the
+    whole LSH+jaccard subtree executes per union branch, measured ~2x;
+    at 100 TB it is the pairs table you'd persist anyway)."""
+    pairs = jaccard_verify(
+        pair_shingle_stats(
+            candidate_pairs_frame(docs).select("doc_a", "doc_b"),
+            # lazily checkpointed: the verify references the shingle
+            # table TWICE (doc_a and doc_b sides) — one kernel pass,
+            # cached reuse (r7; the bands side is the fused kernel
+            # and does not need this frame at all)
+            shingle_frame(docs).localCheckpoint(eager=False),
         )
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
     )
-    labels, edge_nodes = propagate_min_labels(pairs)
+    labels = min_label_components(pairs.select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    )).select(
+        F.col("entity").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
     # docs untouched by any near-dup edge are their own keepers — the
     # single corpus-sized pass (anti join), outside the iteration
     singletons = (
         docs.select("doc_id")
-        .join(edge_nodes, "doc_id", "left_anti")
+        .join(labels, "doc_id", "left_anti")
         .withColumn("cluster_id", F.col("doc_id"))
     )
     return labels.unionByName(singletons).withColumn(
         "is_keeper", (F.col("doc_id") == F.col("cluster_id")).cast("int")
     )
-
-
-def propagate_min_labels(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Min-label propagation over an undirected (doc_a, doc_b) pair frame.
-    Returns (labels, edge_nodes): labels = (doc_id, cluster_id) for every
-    node that appears in some pair (cluster_id = component-min doc_id);
-    edge_nodes = the distinct (doc_id) of those nodes, checkpointed —
-    callers use it for the singleton anti join. The df-based loop shared
-    by the corpus-wide clusters query and the incremental cluster merge
-    (incremental.py), which runs it on a CONTRACTED graph."""
-    edges = (
-        pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .withColumnRenamed("doc_a", "src")
-        .withColumnRenamed("doc_b", "dst")
-        .localCheckpoint(eager=False)
-    )
-    edge_nodes = (
-        edges.select(F.col("src").alias("doc_id")).distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = edge_nodes.withColumn("cluster_id", F.col("doc_id"))
-    while True:
-        prop = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("src"),
-                    F.col("cluster_id").alias("src_comp"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("src_comp").alias("neigh_min"))
-        )
-        # ONE join per round: the changed flag is derived in the same pass
-        # (NULL neigh_min compares false), not via a second labels join
-        step = (
-            labels.join(prop, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce("neigh_min", F.col("cluster_id")),
-                ).alias("cluster_id"),
-                (F.col("neigh_min") < F.col("cluster_id"))
-                .cast("int").alias("changed"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = step.filter(F.col("changed") == 1).count()
-        labels = step.select("doc_id", "cluster_id")
-        if changed == 0:
-            break
-    return labels, edge_nodes
 
 
 def q_simhash(spark: SparkSession, sf: str) -> DataFrame:

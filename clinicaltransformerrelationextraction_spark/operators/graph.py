@@ -308,7 +308,13 @@ def min_label_components(und: DataFrame) -> DataFrame:
     keeper-assignment shape as near-dup dedup clusters.
 
     Iterative min-label propagation with a per-round lineage cut
-    (localCheckpoint); rounds = component diameter. At 10^9+ nodes the
+    (localCheckpoint); rounds = component diameter. This is the package's
+    one min-label fixpoint: the entity and user graph components, the
+    near-dup clusters (``dedup.clusters_frame``, renamed to ``doc_id``/
+    ``cluster_id``) and both incremental contraction merges
+    (``incremental.merge_clusters``/``merge_components``) run it. The
+    input is checkpointed once (in ``_symmetrize``), so callers pass it
+    uncut. At 10^9+ nodes the
     same join primitive runs as large-star/small-star contraction
     (O(log n) rounds). The DuckDB oracle computes the identical fixpoint
     as a recursive transitive closure + min."""

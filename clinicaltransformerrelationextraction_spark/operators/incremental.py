@@ -20,20 +20,29 @@ in three delta-bounded steps:
    where the same semi-join was measured to lose because ~96% of docs
    participate, here restricting IS the point).
 3. ``merge_clusters``: fold the verified delta edges into the existing
-   labels by CONTRACTION — each old cluster enters the fixpoint as ONE
-   node (its keeper id), so min-label propagation runs on a graph bounded
-   by the delta size, never the corpus. Two old clusters bridged by a new
-   doc merge exactly as they would in a full recompute, because an old
-   cluster's label is already the min doc_id of its members.
+   labels by CONTRACTION (``_contract``, the one core ``merge_components``
+   also runs for the entity graph) — each old cluster enters the
+   fixpoint as ONE node (its keeper id), so ``graph.min_label_components``
+   — the same loop the full recompute ``clusters_frame`` runs — iterates
+   over a graph bounded by the delta size, never the corpus. Two old
+   clusters bridged by a new doc merge exactly as they would in a full
+   recompute, because an old cluster's label is already the min doc_id
+   of its members.
 
-Equivalence contract (pytest-pinned in tests/test_incremental.py): for
-any split of a corpus into old ∪ delta,
+Equivalence contract (pytest-pinned in tests/test_incremental.py and
+tests/test_incremental_graph.py): for any split of a corpus (or an edge
+set) into old ∪ delta,
 
     full-corpus pairs   == old-only pairs  ∪  incremental pairs
     full-corpus clusters == merge_clusters(old clusters, verified delta
                             edges, delta)
+    full components     == merge_components(old components, delta edges)
 
-both exactly (same hash discipline, same JACCARD_MIN threshold).
+all exactly (same hash discipline, same JACCARD_MIN threshold, and one
+fixpoint loop on both sides). The exact-dedup index and the sketches
+merge the states that the full-corpus queries' own builders
+(``dedup.exact_partial``, ``textstats.kmv_sketch``/``hll_registers``)
+produce.
 
 Reference anchor: the reference has no incremental path (it re-reads the
 full corpus per run, src/relation_extraction.py); this is the beyond-
@@ -48,31 +57,20 @@ from pyspark.sql import functions as F
 from .dedup import (
     bands_frame,
     bands_from_shingles,
+    exact_partial,
     jaccard_verify,
     latest_partial,
     pair_shingle_stats,
-    propagate_min_labels,
     shingle_frame,
 )
 from .graph import min_label_components
+from .textstats import K_MV
 
 # Driver-query old/delta split: the delta is every doc with
 # doc_id % INCR_DELTA_MOD == 0 (a deterministic ~10% "new crawl").
 # Semantic constant — the oracle SQL (plans/oracle_training.py
 # q_dedup_incremental) imports it so both engines split identically.
 INCR_DELTA_MOD = 10
-
-
-def exact_partial(docs: DataFrame) -> DataFrame:
-    """A corpus slice's contribution to the exact-dedup content-hash
-    index — the mergeable-partial shape (``q_dedup_exact`` output:
-    ``(text_hash, keeper_doc_id, n_docs)``). The SINGLE definition of
-    this aggregate: ``incremental_exact`` folds these, and the ingest
-    state dir (plans/ingest.py) bootstraps/verifies with it."""
-    return docs.groupBy(F.md5("text").alias("text_hash")).agg(
-        F.min("doc_id").alias("keeper_doc_id"),
-        F.count("*").alias("n_docs"),
-    )
 
 
 def incremental_exact(old_hash_index: DataFrame, new_docs: DataFrame) -> DataFrame:
@@ -219,60 +217,16 @@ def incremental_verified_pairs(
 # The cardinality sketches (KMV k-min set, HLL registers) are the other
 # persisted-state tables an incremental pipeline maintains: both merge by
 # a one-pass aggregate over (old state ∪ delta state), so corpus-level
-# stats stay current without ever rescanning history. The hash/register
-# derivations mirror textstats.q_kmv_distinct / q_hll_distinct expression
-# by expression (constants imported from there — single source of truth);
-# the tie-back tests pin the reimplementation against those
-# driver-verified queries' own output columns.
-
-
-def lang_shingle_hashes(docs: DataFrame) -> DataFrame:
-    """(lang, h) — the 48-bit md5-prefix shingle hashes both sketches are
-    built from (textstats.py q_kmv_distinct/q_hll_distinct derivation;
-    since r7 both sides use the ngram_rows kernel)."""
-    from .textstats import ngram_rows
-
-    bg = ngram_rows(docs, 2, ["lang"]).withColumnRenamed(
-        "gram", "shingle"
-    ).distinct()
-    return bg.select(
-        "lang",
-        F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10)
-        .cast("long").alias("h"),
-    )
-
-
-def kmv_sketch(
-    docs: DataFrame | None, hashes: DataFrame | None = None
-) -> DataFrame:
-    """Per-language KMV state: the K smallest DISTINCT hash values,
-    ``(lang, h)`` — set semantics, so sketch-of-union == merge of
-    sketches is an identity, not an approximation. Pass ``hashes``
-    (a ``lang_shingle_hashes`` frame) to share one hash pass with
-    ``hll_registers`` — plans/ingest.py does."""
-    from pyspark.sql import Window
-
-    from .textstats import K_MV
-
-    if hashes is None:
-        if docs is None:
-            raise ValueError("kmv_sketch needs docs or hashes (got neither)")
-        hashes = lang_shingle_hashes(docs)
-    h = hashes.distinct()
-    w = Window.partitionBy("lang").orderBy("h")
-    return (
-        h.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= K_MV)
-        .select("lang", "h")
-    )
+# stats stay current without ever rescanning history. The states are
+# built by textstats.kmv_sketch / hll_registers, the same builders
+# q_kmv_distinct / q_hll_distinct estimate from; the tie-back tests pin
+# the merged states against those queries' own output columns.
 
 
 def kmv_merge(old_sketch: DataFrame, delta_sketch: DataFrame) -> DataFrame:
     """K-min of the union of two K-min sets — exactly the K-min of the
     union of the underlying sets (pytest-pinned)."""
     from pyspark.sql import Window
-
-    from .textstats import K_MV
 
     u = old_sketch.unionByName(delta_sketch).distinct()
     w = Window.partitionBy("lang").orderBy("h")
@@ -281,29 +235,6 @@ def kmv_merge(old_sketch: DataFrame, delta_sketch: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= K_MV)
         .select("lang", "h")
     )
-
-
-def hll_registers(
-    docs: DataFrame | None, hashes: DataFrame | None = None
-) -> DataFrame:
-    """Per-(lang, bucket) HLL register state ``(lang, bucket, mj)`` —
-    constant 64 registers per language, exact integer arithmetic
-    (textstats.q_hll_distinct's register derivation). ``hashes`` as in
-    :func:`kmv_sketch` (duplicate h rows are harmless under max)."""
-    from .textstats import HLL_MAXR, HLL_WBITS
-
-    if hashes is None and docs is None:
-        raise ValueError("hll_registers needs docs or hashes (got neither)")
-    h = hashes if hashes is not None else lang_shingle_hashes(docs)
-    w = F.col("h") % F.lit(1 << HLL_WBITS)
-    reg = h.select(
-        "lang",
-        F.expr(f"h div {1 << HLL_WBITS}").alias("bucket"),
-        F.when(w == 0, F.lit(HLL_MAXR)).otherwise(
-            F.lit(HLL_MAXR) - F.length(F.bin(w))
-        ).alias("rho"),
-    )
-    return reg.groupBy("lang", "bucket").agg(F.max("rho").alias("mj"))
 
 
 def hll_merge(old_regs: DataFrame, delta_regs: DataFrame) -> DataFrame:
@@ -318,70 +249,67 @@ def hll_merge(old_regs: DataFrame, delta_regs: DataFrame) -> DataFrame:
     )
 
 
+def _contract(
+    old: DataFrame, edges: DataFrame, new_nodes: DataFrame
+) -> DataFrame:
+    """The contraction merge both label tables share, over ``(node,
+    label)`` old labels, ``(a, b)`` delta edges and the ``(node)`` set of
+    new nodes; returns ``(node, label)`` for every old and new node.
+
+    1. each endpoint maps to its representative — an old node to its
+       label (already the min node of its component), a new node to
+       itself;
+    2. the contracted edges are put back in ``a < b`` order, and
+       self-loops (intra-component delta edges) and duplicates (many
+       delta edges onto one big old component) go, so the fixpoint sees
+       a graph bounded by the unique contracted edges, never the corpus;
+    3. ``graph.min_label_components`` labels those representatives;
+    4. every old node takes its representative's merged label, and every
+       new node its own.
+
+    The corpus-sized ``old`` table is touched only by the two
+    representative lookups and the final relabel."""
+    rep = old.select("node", F.col("label").alias("rep"))
+    contracted = (
+        edges.join(rep.toDF("a", "rep_a"), "a", "left")
+        .join(rep.toDF("b", "rep_b"), "b", "left")
+        .select(
+            F.coalesce("rep_a", F.col("a")).alias("x"),
+            F.coalesce("rep_b", F.col("b")).alias("y"),
+        )
+        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    merged = min_label_components(contracted).select(
+        "entity", "component"
+    ).toDF("rep", "merged")
+    out_old = old.join(
+        merged.withColumnRenamed("rep", "label"), "label", "left"
+    ).select("node", F.coalesce("merged", F.col("label")).alias("label"))
+    out_new = new_nodes.join(
+        merged.withColumnRenamed("rep", "node"), "node", "left"
+    ).select("node", F.coalesce("merged", F.col("node")).alias("label"))
+    return out_old.unionByName(out_new)
+
+
 def merge_clusters(
     old_labels: DataFrame, verified_pairs: DataFrame, new_docs: DataFrame
 ) -> DataFrame:
     """Fold verified delta edges into existing cluster labels, returning
     the same shape as ``q_dedup_clusters``: ``(doc_id, cluster_id,
-    is_keeper)`` covering every old AND new doc.
-
-    Contraction: each endpoint is mapped to its representative — an old
-    doc to its existing cluster_id (already the min doc_id of that
-    cluster), a new doc to itself — and min-label propagation runs over
-    the contracted edges only. The corpus-sized ``old_labels`` table is
-    touched by exactly two single-pass joins (representative lookup, and
-    the final label rewrite); the iterative loop never sees it."""
-    e = verified_pairs.select("doc_a", "doc_b")
-    rep = old_labels.select("doc_id", F.col("cluster_id").alias("rep"))
-    # endpoint -> representative; a doc absent from old_labels is a delta
-    # doc and represents itself
-    ea = e.join(
-        rep.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-            "rep", "rep_a"
-        ),
-        "doc_a",
-        "left",
-    ).join(
-        rep.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-            "rep", "rep_b"
-        ),
-        "doc_b",
-        "left",
-    ).select(
-        F.coalesce("rep_a", F.col("doc_a")).alias("doc_a"),
-        F.coalesce("rep_b", F.col("doc_b")).alias("doc_b"),
-    ).filter(F.col("doc_a") != F.col("doc_b"))
-    # many verified pairs contract onto the same representative edge
-    # (several delta docs hitting one big old cluster); dedupe BEFORE the
-    # fixpoint so the iterated graph is bounded by unique contracted
-    # edges, not raw pair count
-    ea = ea.distinct()
-    merged, _ = propagate_min_labels(ea)
-    relabel = merged.withColumnRenamed("doc_id", "rep").withColumnRenamed(
-        "cluster_id", "merged_cid"
+    is_keeper)`` covering every old AND new doc — :func:`_contract` over
+    the ``(doc_id, cluster_id)`` labels, with ``new_docs`` as the new
+    nodes."""
+    merged = _contract(
+        old_labels.select("doc_id", "cluster_id").toDF("node", "label"),
+        verified_pairs.select("doc_a", "doc_b").toDF("a", "b"),
+        new_docs.select(F.col("doc_id").alias("node")),
     )
-    out_old = (
-        old_labels.select("doc_id", "cluster_id")
-        .join(
-            relabel.withColumnRenamed("rep", "cluster_id"),
-            "cluster_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce("merged_cid", F.col("cluster_id")).alias("cluster_id"),
-        )
-    )
-    out_new = (
-        new_docs.select("doc_id")
-        .join(relabel.withColumnRenamed("rep", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("merged_cid", F.col("doc_id")).alias("cluster_id"),
-        )
-    )
-    return out_old.unionByName(out_new).withColumn(
-        "is_keeper", (F.col("doc_id") == F.col("cluster_id")).cast("int")
+    return merged.select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+        (F.col("node") == F.col("label")).cast("int").alias("is_keeper"),
     )
 
 
@@ -478,70 +406,29 @@ def merge_components(old_labels: DataFrame, delta_und: DataFrame) -> DataFrame:
     (``graph.undirected_edges`` output); delta edges may duplicate old
     edges, bridge two old components, or introduce brand-new entities.
 
-    Each endpoint maps to its representative (an old entity to its
-    component label, a new entity to itself); min-label propagation runs
-    on the DISTINCT contracted edges only — a graph bounded by the delta,
-    never the corpus. The corpus-sized label table is touched by exactly
-    three delta-driven joins (two representative lookups, one final
-    relabel) plus one anti-join for the new-entity set; at scale the
-    delta side of each is broadcastable.
+    :func:`_contract` over the ``(entity, component)`` labels; the new
+    nodes are the delta endpoints that have no old label (one anti-join
+    with the label table). At scale the delta side of every join on the
+    label table is broadcastable.
 
     Pytest-pinned (tests/test_incremental_graph.py): for ANY split of an
     edge set into old ∪ delta,
     ``merge_components(min_label_components(old), delta)`` ==
     ``min_label_components(old ∪ delta)`` exactly."""
-    delta_und = delta_und.localCheckpoint(eager=False)  # drives four joins below
-    rep = old_labels.select("entity", F.col("component").alias("rep"))
-    contracted = (
-        delta_und.join(
-            rep.withColumnRenamed("entity", "a").withColumnRenamed(
-                "rep", "rep_a"
-            ),
-            "a",
-            "left",
-        )
-        .join(
-            rep.withColumnRenamed("entity", "b").withColumnRenamed(
-                "rep", "rep_b"
-            ),
-            "b",
-            "left",
-        )
-        .select(
-            F.coalesce("rep_a", F.col("a")).alias("x"),
-            F.coalesce("rep_b", F.col("b")).alias("y"),
-        )
-        # contraction can flip the a < b canonical order; restore it so
-        # the fixpoint iterates distinct edges, and drop the self-loops
-        # that intra-component delta edges contract to
-        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    merged = min_label_components(contracted).select(
-        F.col("entity").alias("rep"), F.col("component").alias("merged")
-    )
-    out_old = (
-        old_labels.select("entity", "component")
-        .join(merged.withColumnRenamed("rep", "component"), "component", "left")
-        .select(
-            "entity",
-            F.coalesce("merged", F.col("component")).alias("component"),
-        )
-    )
+    # read three times: both endpoint sides below and the contraction
+    delta_und = delta_und.localCheckpoint(eager=False)
+    old = old_labels.select("entity", "component").toDF("node", "label")
     new_nodes = (
-        delta_und.select(F.col("a").alias("entity"))
-        .unionByName(delta_und.select(F.col("b").alias("entity")))
+        delta_und.select(F.col("a").alias("node"))
+        .unionByName(delta_und.select(F.col("b").alias("node")))
         .distinct()
-        .join(old_labels.select("entity"), "entity", "left_anti")
+        .join(old.select("node"), "node", "left_anti")
     )
-    out_new = new_nodes.join(
-        merged.withColumnRenamed("rep", "entity"), "entity", "left"
-    ).select(
-        "entity", F.coalesce("merged", F.col("entity")).alias("component")
-    )
-    return out_old.unionByName(out_new).withColumn(
-        "is_root", (F.col("entity") == F.col("component")).cast("int")
+    merged = _contract(old, delta_und.select("a", "b"), new_nodes)
+    return merged.select(
+        F.col("node").alias("entity"),
+        F.col("label").alias("component"),
+        (F.col("node") == F.col("label")).cast("int").alias("is_root"),
     )
 
 

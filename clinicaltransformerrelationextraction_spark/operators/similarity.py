@@ -350,31 +350,6 @@ def q_ann_ivf_topk(
     )
 
 
-def _ivf_assign(
-    q: DataFrame, cents: DataFrame, dist: Column, descending: bool = False
-) -> DataFrame:
-    """Coarse-quantizer cell assignment shared by the two IVF variants:
-    broadcast the tiny codebook, score every (vector, cell) pair with
-    ``dist``, and rank cells per vector with a deterministic label
-    tiebreak — ``(vec_id, qe, label, cdist, crank)``. The metric is the
-    caller's (cosine DESC for q_ann_ivf_topk, squared-L2 ASC for
-    ann_ivf_pq_topk — deliberately different, each matching the metric
-    its fine stage uses); the assignment SHAPE is this one definition."""
-    from pyspark.sql import Window
-
-    order = F.desc("cdist") if descending else F.asc("cdist")
-    return (
-        q.crossJoin(F.broadcast(cents))
-        .select("vec_id", "qe", "label", dist.alias("cdist"))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(order, F.asc("label"))
-            ),
-        )
-    )
-
-
 def int_mean_centroid(dims: DataFrame, key) -> DataFrame:
     """Per-``key`` integer centroid from exploded (key, dim, v) rows:
     per-dim floor(sum/count), re-assembled in dim order. floor, not

@@ -166,6 +166,53 @@ K_MV = 64  # sketch size
 HEX12 = 1 << 48  # md5 12-hex-char prefix domain
 
 
+def lang_shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(lang, h) — one row per distinct (lang, bigram shingle), ``h`` its
+    48-bit md5-prefix hash: what both cardinality sketches are built
+    from, and whose per-lang row count is the exact distinct count.
+    Shared by the full-corpus queries and the ingest state dir
+    (plans/ingest.py)."""
+    bg = ngram_rows(docs, 2, ["lang"]).select(
+        "lang", F.col("gram").alias("shingle")
+    ).distinct()
+    return bg.select(
+        "lang",
+        F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10)
+        .cast("long").alias("h"),
+    )
+
+
+def _hashes(docs: DataFrame | None, hashes: DataFrame | None,
+            sketch: str) -> DataFrame:
+    if hashes is not None:
+        return hashes
+    if docs is None:
+        raise ValueError(f"{sketch} needs docs or hashes (got neither)")
+    return lang_shingle_hashes(docs)
+
+
+def kmv_sketch(
+    docs: DataFrame | None, hashes: DataFrame | None = None
+) -> DataFrame:
+    """Per-language KMV state: the K smallest DISTINCT hash values,
+    ``(lang, h)`` — set semantics, so sketch-of-union == merge of
+    sketches (``incremental.kmv_merge``) is an identity, not an
+    approximation. Distinct H VALUES, not distinct shingles: two
+    shingles colliding in the 48-bit prefix contribute ONE entry, else
+    the sketch is not mergeable. Pass ``hashes`` (a
+    ``lang_shingle_hashes`` frame) to share one hash pass with
+    ``hll_registers`` — q_kmv_distinct and plans/ingest.py do."""
+    from pyspark.sql import Window
+
+    h = _hashes(docs, hashes, "kmv_sketch").distinct()
+    w = Window.partitionBy("lang").orderBy("h")
+    return (
+        h.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= K_MV)
+        .select("lang", "h")
+    )
+
+
 def q_kmv_distinct(spark: SparkSession, sf: str) -> DataFrame:
     """KMV (K-minimum-values) distinct-count sketch per language over
     bigram shingles — the cardinality sketch a 100 TB pipeline uses
@@ -179,31 +226,11 @@ def q_kmv_distinct(spark: SparkSession, sf: str) -> DataFrame:
     Spark-side the rank<=K filter keeps its partial (map-side)
     WindowGroupLimit — each task prunes to a local top-K before the
     shuffle, exactly the sketch-merge dataflow."""
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf)
-    # ngram_rows kernel (r7) replaces the interpreted explode-HOF
-    bg = ngram_rows(d, 2, ["lang"]).withColumnRenamed(
-        "gram", "shingle"
-    ).distinct()
-    # distinct H VALUES, not distinct shingles: two shingles colliding in
-    # the 48-bit prefix must contribute ONE sketch entry, else the sketch
-    # is not mergeable (k-min of a union must equal k-min of merged k-min
-    # sets — incremental.kmv_sketch/kmv_merge share this derivation and
-    # are pytest-pinned to these columns)
-    h = bg.select(
-        "lang",
-        F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10)
-        .cast("long").alias("h"),
-    ).distinct()
-    w = Window.partitionBy("lang").orderBy("h")
-    sk = (
-        h.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= K_MV)
-        .groupBy("lang")
-        .agg(F.max("h").alias("kth"), F.count("*").alias("k_actual"))
+    hs = lang_shingle_hashes(_docs(spark, sf))
+    sk = kmv_sketch(None, hashes=hs).groupBy("lang").agg(
+        F.max("h").alias("kth"), F.count("*").alias("k_actual")
     )
-    exact = bg.groupBy("lang").agg(F.count("*").alias("n_exact"))
+    exact = hs.groupBy("lang").agg(F.count("*").alias("n_exact"))
     est = F.when(
         F.col("k_actual") < K_MV, F.col("k_actual").cast("double")
     ).otherwise(F.lit((K_MV - 1) * HEX12) / F.col("kth"))
@@ -232,30 +259,17 @@ def _hll_alpha_m2_u() -> int:
 HLL_EST_NUM = float(_hll_alpha_m2_u() * (1 << HLL_MAXR))
 
 
-def q_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
-    """HyperLogLog distinct-count sketch per language over bigram
-    shingles — the fixed-memory (m registers) alternative to KMV: unlike
-    KMV's K-min set, HLL registers are a constant 64 bytes per group and
-    merge by element-wise max, which is why it's the sketch of choice for
-    10^12-scale cardinality. Register derivation is exact integer
-    arithmetic both engines share: h = 48-bit md5 prefix, bucket = top 6
-    bits, rho = leading zeros of the 42 value bits + 1 (via binary-string
-    length — no float log2), M_j = max rho per bucket (a map-side
-    combinable max-aggregate). The estimate alpha*m^2/sum(2^-M_j) is
-    restated exactly: S_int = sum(2^(43-M_j)) + 2^43 per empty bucket
-    (all bigint), then ONE fixed-shape double expression. No small/large
-    range corrections (documented simplification — the raw estimator);
-    the exact count rides along to pin accuracy, KMV-style."""
-    d = _docs(spark, sf)
-    # ngram_rows kernel (r7) replaces the interpreted explode-HOF
-    bg = ngram_rows(d, 2, ["lang"]).withColumnRenamed(
-        "gram", "shingle"
-    ).distinct()
-    h = bg.select(
-        "lang",
-        F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10)
-        .cast("long").alias("h"),
-    )
+def hll_registers(
+    docs: DataFrame | None, hashes: DataFrame | None = None
+) -> DataFrame:
+    """Per-(lang, bucket) HLL register state ``(lang, bucket, mj)`` —
+    at most 64 registers per language, exact integer arithmetic:
+    bucket = top HLL_P bits of h, rho = leading zeros of the HLL_WBITS
+    value bits + 1 (via binary-string length — no float log2), M_j = max
+    rho per bucket (a map-side combinable max-aggregate;
+    ``incremental.hll_merge`` re-maxes). ``hashes`` as in
+    :func:`kmv_sketch` (duplicate h rows are harmless under max)."""
+    h = _hashes(docs, hashes, "hll_registers")
     w = F.col("h") % F.lit(1 << HLL_WBITS)
     reg = h.select(
         "lang",
@@ -264,7 +278,23 @@ def q_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(HLL_MAXR) - F.length(F.bin(w))
         ).alias("rho"),
     )
-    m = reg.groupBy("lang", "bucket").agg(F.max("rho").alias("mj"))
+    return reg.groupBy("lang", "bucket").agg(F.max("rho").alias("mj"))
+
+
+def q_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
+    """HyperLogLog distinct-count sketch per language over bigram
+    shingles — the fixed-memory (m registers) alternative to KMV: unlike
+    KMV's K-min set, HLL registers are a constant 64 bytes per group and
+    merge by element-wise max, which is why it's the sketch of choice for
+    10^12-scale cardinality. The registers (:func:`hll_registers`) are
+    exact integer arithmetic both engines share. The estimate
+    alpha*m^2/sum(2^-M_j) is restated exactly: S_int = sum(2^(43-M_j)) +
+    2^43 per empty bucket (all bigint), then ONE fixed-shape double
+    expression. No small/large
+    range corrections (documented simplification — the raw estimator);
+    the exact count rides along to pin accuracy, KMV-style."""
+    hs = lang_shingle_hashes(_docs(spark, sf))
+    m = hll_registers(None, hashes=hs)
     sk = m.groupBy("lang").agg(
         F.count("*").alias("n_buckets_hit"),
         F.sum(F.expr(f"shiftleft(1L, {HLL_MAXR} - mj)")).alias("s_hit"),
@@ -276,7 +306,7 @@ def q_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
             * F.lit(1 << HLL_MAXR)
         ).alias("s_int"),
     )
-    exact = bg.groupBy("lang").agg(F.count("*").alias("n_exact"))
+    exact = hs.groupBy("lang").agg(F.count("*").alias("n_exact"))
     est = F.lit(HLL_EST_NUM) / (
         F.lit(1_000_000.0) * F.col("s_int").cast("double")
     )

@@ -53,22 +53,24 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     bands_frame,
+    exact_partial,
     latest_partial,
     pages_with_crawl_ts,
     shingle_frame,
 )
 from ..operators.graph import min_label_components, undirected_edges
 from ..operators.incremental import (
-    exact_partial,
     hll_merge,
-    hll_registers,
     incremental_dedup,
     incremental_exact,
     kmv_merge,
-    kmv_sketch,
-    lang_shingle_hashes,
     merge_components,
     merge_latest,
+)
+from ..operators.textstats import (
+    hll_registers,
+    kmv_sketch,
+    lang_shingle_hashes,
 )
 from .ledger import _fs_exists, _hadoop_fs, _read_text, _write_text
 from .pipeline import run_linked

@@ -17,12 +17,14 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   visible only via the metadata swap), and an empty replacement simply
   drops the bucket from the manifest;
 - a ``_ledger`` table records (partition_id, status, n_triples, n_docs,
-  wall_sec, path, version, n_buckets) — the per-partition lineage +
+  wall_sec, path, version, n_buckets, config) — the per-partition lineage +
   metrics. ``n_docs`` and ``n_triples`` are per-bucket counts in one
   Observation per side of the write, so a run costs only the Spark jobs
   of that write; every row of one write records that write's
   ``wall_sec``. ``n_buckets`` pins the bucketing: a run with another count
-  raises instead of re-bucketing over done rows;
+  raises instead of re-bucketing over done rows. ``config`` pins the
+  scoring config the same way (``config_digest``), so a resume under
+  another scorer raises instead of mixing two scorers' buckets;
 - ``_snapshots.json`` appends one snapshot per completed run with the full
   bucket->file manifest and parent chaining; ``triples(snapshot_id=...)``
   TIME-TRAVELS to any retained snapshot; ``expire_snapshots`` GCs bucket
@@ -37,10 +39,11 @@ uncommitted write, and ``resume()`` writes the uncommitted buckets again.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +58,20 @@ TRIPLES_DDL = (
     "obj_id string, score double, sent_diff int, i1 int, i2 int, "
     "bucket int"
 )
+
+
+# PipelineConfig fields that change no triple: the pairs per scorer call,
+# the salting modulus and the IVF probe count
+UNPINNED_FIELDS = ("batch_size", "salt_buckets", "ann_nprobe")
+
+
+def config_digest(cfg: PipelineConfig) -> str:
+    """Short digest of every ``PipelineConfig`` field that can change the
+    triples (all but ``UNPINNED_FIELDS``): the ledger's config pin."""
+    pinned = {k: v for k, v in asdict(cfg).items()
+              if k not in UNPINNED_FIELDS}
+    blob = json.dumps(pinned, sort_keys=True, default=str).encode("utf-8")
+    return hashlib.sha256(blob).hexdigest()[:12]
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -233,10 +250,12 @@ class LedgerRun:
             self.ledger_path, json.dumps(ledger, indent=1, sort_keys=True)
         )
 
-    def _check_bucket_count(self, ledger: dict[str, dict]) -> None:
+    def _check_pins(self, ledger: dict[str, dict], config: str) -> None:
         """A row bucketed under another count covers other docs, so
         skipping or re-running it by key would lose or duplicate triples.
-        Rows that predate the ``n_buckets`` field are checked by key."""
+        Rows that predate the ``n_buckets`` field are checked by key. A
+        row scored under another config would leave the table mixing two
+        configs' triples; rows that predate the ``config`` field pass."""
         for key, row in ledger.items():
             theirs = row.get("n_buckets")
             if theirs is None and int(key) >= self.n_buckets:
@@ -247,6 +266,13 @@ class LedgerRun:
                     f"{theirs} (bucket {key}), but this run has n_buckets="
                     f"{self.n_buckets}; resume with the ledger's bucket "
                     "count or use a new out_dir"
+                )
+            if row.get("config", config) != config:
+                raise ValueError(
+                    f"{self.ledger_path} bucket {key} was scored under "
+                    f"config digest {row['config']}, but this run's config "
+                    f"digest is {config}; resume with the ledger's scorer "
+                    "and options or use a new out_dir"
                 )
 
     def run(
@@ -259,8 +285,9 @@ class LedgerRun:
         bucket. ``fail_after`` aborts after N row commits (for resume
         tests) — simulating a driver crash mid-commit."""
         cfg = cfg or PipelineConfig()
+        config = config_digest(cfg)
         ledger = self._read_ledger()
-        self._check_bucket_count(ledger)
+        self._check_pins(ledger, config)
         pending = [b for b in range(self.n_buckets)
                    if ledger.get(str(b), {}).get("status") != "done"]
         if not pending:
@@ -305,13 +332,14 @@ class LedgerRun:
                 "path": path,
                 "version": version,
                 "n_buckets": self.n_buckets,
+                "config": config,
             }
             self._write_ledger(ledger)
             if fail_after is not None and done >= fail_after:
                 raise RuntimeError(
                     f"simulated failure after {done} buckets"
                 )
-        self._append_snapshot(ledger, buckets_written=len(pending))
+        self._append_snapshot(ledger, len(pending), config)
         return ledger
 
     # --- snapshot log (Iceberg-metadata analog) ----------------------------
@@ -327,7 +355,7 @@ class LedgerRun:
         return json.loads(text) if text is not None else []
 
     def _append_snapshot(self, ledger: dict[str, dict],
-                         buckets_written: int) -> dict:
+                         buckets_written: int, config: str) -> dict:
         prior = self.snapshots()
         snap = {
             # max+1, NOT len+1: expire_snapshots truncates the log, and a
@@ -344,6 +372,7 @@ class LedgerRun:
                 1 for v in ledger.values() if v.get("status") == "done"
             ),
             "n_buckets": self.n_buckets,
+            "config": config,
             "total_triples": sum(
                 v.get("n_triples", 0) for v in ledger.values()
             ),

@@ -12,6 +12,8 @@ replaced with identical output:
 - ``simhash_frame_hof``       == ``dedup.q_simhash``
 - ``mentions_hof``            == ``segmentation.mentions``
 - ``integer_pagerank``        == ``graph.integer_pagerank_adj``
+- ``ivf_assign``              == the corpus cell pick of
+  ``similarity.q_ann_ivf_topk`` (its ``crank == 1`` rows)
 
 The equality tests are tests/test_round7_perf.py and
 tests/test_nonvacuous.py.
@@ -218,3 +220,23 @@ def integer_pagerank(edges: DataFrame) -> DataFrame:
         )
         ranks = _rank_step(nodes, contrib)
     return ranks
+
+
+def ivf_assign(
+    q: DataFrame, cents: DataFrame, dist: Column, descending: bool = False
+) -> DataFrame:
+    """Window form of the IVF coarse-quantizer cell assignment: broadcast
+    the codebook, score every (vector, cell) pair with ``dist`` and rank
+    cells per vector with a deterministic label tiebreak —
+    ``(vec_id, qe, label, cdist, crank)``."""
+    order = F.desc("cdist") if descending else F.asc("cdist")
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .select("vec_id", "qe", "label", dist.alias("cdist"))
+        .withColumn(
+            "crank",
+            F.row_number().over(
+                Window.partitionBy("vec_id").orderBy(order, F.asc("label"))
+            ),
+        )
+    )

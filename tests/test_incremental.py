@@ -174,34 +174,52 @@ def test_contraction_merge_is_domain_general(spark):
     """merge_clusters is not dedup-specific: folding a batch of NEW
     edges of the canonical KG entity graph into the components of the
     OLD edge set (by contraction) equals recomputing components over
-    all edges — including merges of two old components bridged only by
-    a new edge, which a hash-based edge split produces plenty of."""
-    from clinicaltransformerrelationextraction_spark.operators.dedup import (
-        propagate_min_labels,
-    )
+    all edges. The old half of the smoke entity graph is one component,
+    so two synthetic old clusters that only a new node bridges, and a
+    new node with no edge at all, are added."""
     from clinicaltransformerrelationextraction_spark.operators.graph import (
         _undirected,
+        min_label_components,
     )
 
-    und = (
-        _undirected(spark, SF_SMOKE)
-        .toDF("doc_a", "doc_b")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .localCheckpoint()
-    )
-    old_e = und.filter(F.xxhash64("doc_a", "doc_b") % 2 == 0)
-    new_e = und.filter(F.xxhash64("doc_a", "doc_b") % 2 != 0)
+    def labels(edges):
+        return min_label_components(edges.toDF("a", "b")).select(
+            F.col("entity").alias("doc_id"),
+            F.col("component").alias("cluster_id"),
+        )
+
+    und = _undirected(spark, SF_SMOKE).localCheckpoint()
+    old_e = und.filter(F.xxhash64("a", "b") % 2 == 0)
+    new_e = und.filter(F.xxhash64("a", "b") % 2 != 0)
     assert old_e.count() > 0 and new_e.count() > 0
-    old_labels, old_nodes = propagate_min_labels(old_e)
-    new_nodes = (
-        new_e.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(new_e.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-        .join(old_nodes, "doc_id", "left_anti")
+    # two more old clusters, {~a1, ~a2} and {~b1, ~b2}, that only the new
+    # node ~m bridges, and a new node ~z with no edge ("~" sorts after
+    # every entity name)
+    pair = "a string, b string"
+    old_e = old_e.unionByName(
+        spark.createDataFrame([("~a1", "~a2"), ("~b1", "~b2")], pair)
     )
-    merged = merge_clusters(old_labels, new_e, new_nodes)
-    full, _ = propagate_min_labels(und)
-    _same(merged.select("doc_id", "cluster_id"), full)
+    delta = new_e.unionByName(
+        spark.createDataFrame([("~a2", "~m"), ("~b2", "~m")], pair)
+    )
+    old_labels = labels(old_e).localCheckpoint()
+    new_nodes = (
+        delta.select(F.col("a").alias("doc_id"))
+        .unionByName(delta.select(F.col("b").alias("doc_id")))
+        .unionByName(spark.createDataFrame([("~z",)], "doc_id string"))
+        .distinct()
+        .join(old_labels, "doc_id", "left_anti")
+    )
+    merged = merge_clusters(old_labels, delta.toDF("doc_a", "doc_b"),
+                            new_nodes).select("doc_id", "cluster_id")
+    full = labels(old_e.unionByName(delta)).unionByName(
+        spark.createDataFrame([("~z", "~z")],
+                              "doc_id string, cluster_id string")
+    )
+    _same(merged, full)
+    got = dict(merged.filter(F.col("doc_id").startswith("~")).collect())
+    assert got == {"~a1": "~a1", "~a2": "~a1", "~b1": "~a1", "~b2": "~a1",
+                   "~m": "~a1", "~z": "~z"}
 
 
 def test_kmv_sketch_merge_identity_and_query_tieback(spark):
@@ -211,9 +229,9 @@ def test_kmv_sketch_merge_identity_and_query_tieback(spark):
     columns on the full corpus."""
     from clinicaltransformerrelationextraction_spark.operators.incremental import (
         kmv_merge,
-        kmv_sketch,
     )
     from clinicaltransformerrelationextraction_spark.operators.textstats import (
+        kmv_sketch,
         q_kmv_distinct,
     )
 
@@ -236,11 +254,11 @@ def test_hll_register_merge_identity_and_query_tieback(spark):
     (all-integer restatement)."""
     from clinicaltransformerrelationextraction_spark.operators.incremental import (
         hll_merge,
-        hll_registers,
     )
     from clinicaltransformerrelationextraction_spark.operators.textstats import (
         HLL_M,
         HLL_MAXR,
+        hll_registers,
         q_hll_distinct,
     )
 

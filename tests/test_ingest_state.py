@@ -22,6 +22,7 @@ from clinicaltransformerrelationextraction_spark.functions.util import (
 )
 from clinicaltransformerrelationextraction_spark.operators.dedup import (
     clusters_frame,
+    exact_partial,
     latest_partial,
     pages_with_crawl_ts,
 )
@@ -29,8 +30,7 @@ from clinicaltransformerrelationextraction_spark.operators.graph import (
     min_label_components,
     undirected_edges,
 )
-from clinicaltransformerrelationextraction_spark.operators.incremental import (
-    exact_partial,
+from clinicaltransformerrelationextraction_spark.operators.textstats import (
     hll_registers,
     kmv_sketch,
 )

@@ -268,6 +268,54 @@ def test_ledger_rejects_another_bucket_count(spark, tmp_path):
         LedgerRun(out_dir=out, n_buckets=1).run(docs)
 
 
+def test_ledger_pins_the_scoring_config(spark, tmp_path):
+    """A stub crash resumed under ``--scorer mlp`` would commit mlp
+    buckets next to stub ones: it must raise naming both config digests,
+    before any Spark job, and leave the ledger byte-identical. Options
+    that change no triple (the scorer batch size, ``--salt``) resume
+    fine, and rows that predate the config field pass."""
+    from clinicaltransformerrelationextraction_spark.cli import main
+    from clinicaltransformerrelationextraction_spark.plans.ledger import (
+        config_digest,
+    )
+
+    docs = load_documents(spark, SF_SMOKE)
+    out = str(tmp_path / "cfg")
+    run = LedgerRun(out_dir=out, n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run.run(docs, PipelineConfig(), fail_after=2)
+    with open(run.ledger_path) as f:
+        before = f.read()
+    stub = config_digest(PipelineConfig())
+    mlp = config_digest(PipelineConfig(scorer="mlp"))
+    assert stub != mlp
+    assert {row["config"] for row in json.loads(before).values()} == {stub}
+    argv = ["resume", "--input", f"{SF_SMOKE}/documents.parquet",
+            "--output", out, "--n-buckets", "4"]
+    with pytest.raises(ValueError, match=f"{stub}.*{mlp}"):
+        main(argv + ["--scorer", "mlp"], spark=spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("ledger-config-pin", "ledger-config-pin")
+    try:
+        with pytest.raises(ValueError, match=f"{stub}.*{mlp}"):
+            run.resume(docs, PipelineConfig(scorer="mlp"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("ledger-config-pin")
+    with open(run.ledger_path) as f:
+        assert f.read() == before
+
+    ledger = main(argv + ["--eval-batch-size", "7", "--salt"], spark=spark)
+    assert ledger["buckets_done"] == 4
+    assert {row["config"] for row in run._read_ledger().values()} == {stub}
+    assert run.snapshots()[-1]["config"] == stub
+
+    legacy = {k: {f: v for f, v in row.items() if f != "config"}
+              for k, row in run._read_ledger().items()}
+    run._write_ledger(legacy)
+    assert run.run(docs, PipelineConfig(scorer="mlp")) == legacy
+
+
 def test_ledger_rejects_nonpositive_bucket_count(spark, tmp_path):
     """``resume``/``predict --n-buckets 0`` on a fresh out_dir must fail
     naming the argument, not run ``range(0)`` buckets and report zero

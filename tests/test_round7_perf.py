@@ -372,7 +372,7 @@ def test_ivf_corpus_cells_match_window_form(spark):
 
     q = sim._q(spark, SF_SMOKE)
     cents = sim._centroids(spark, SF_SMOKE)
-    assigned = sim._ivf_assign(
+    assigned = twins.ivf_assign(
         q, cents,
         sim.cosine(F.col("qe"), F.col("centroid")), descending=True,
     )
