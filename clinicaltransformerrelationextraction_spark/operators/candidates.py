@@ -30,6 +30,7 @@ doc key) lost every paired measurement in BENCH.md and are gone.
 from __future__ import annotations
 
 import dataclasses
+from bisect import bisect_left, bisect_right
 from itertools import accumulate
 from typing import Callable
 
@@ -87,13 +88,14 @@ def pair_enumerator(cfg: PipelineConfig) -> Callable[[list[str]], list]:
         if not m1s or not m2s:
             return []
         ntok = len(toks)
-        n_sent = max((ntok + sl - 1) // sl, 1)
-        by_win = [[d for d in m2s if abs(d[2] - s) <= cutoff]
-                  for s in range(n_sent)]
+        # m2s is in token order, so in sentence order: each arg1's window
+        # is one slice of it
+        s2_ids = [m[2] for m in m2s]
         pairs = []
         for i1, t1, s1 in m1s:
             al = allowed[t1]
-            for i2, t2, s2 in by_win[s1]:
+            for i2, t2, s2 in m2s[bisect_left(s2_ids, s1 - cutoff):
+                                  bisect_right(s2_ids, s1 + cutoff)]:
                 if i1 != i2 and t2 in al:
                     lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
                     pairs.append((i1, t1, i2, t2, abs(s1 - s2),

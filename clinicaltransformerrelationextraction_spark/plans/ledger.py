@@ -283,24 +283,34 @@ class LedgerRun:
     ) -> dict[str, dict]:
         """Score every not-yet-done bucket in one write; idempotent per
         bucket. ``fail_after`` aborts after N row commits (for resume
-        tests) — simulating a driver crash mid-commit."""
+        tests) — simulating a driver crash mid-commit; 0 aborts after the
+        write, before any commit."""
+        if fail_after is not None and fail_after < 0:
+            raise ValueError(f"fail_after must be >= 0, got {fail_after}")
         cfg = cfg or PipelineConfig()
         config = config_digest(cfg)
         ledger = self._read_ledger()
         self._check_pins(ledger, config)
-        pending = [b for b in range(self.n_buckets)
-                   if ledger.get(str(b), {}).get("status") != "done"]
+        is_pending = [ledger.get(str(b), {}).get("status") != "done"
+                      for b in range(self.n_buckets)]
+        pending = [b for b, p in enumerate(is_pending) if p]
         if not pending:
             return ledger
         t0 = time.time()
         bucket = F.pmod(F.hash("doc_id"), F.lit(self.n_buckets))
 
+        # The generated code depends on n_buckets alone, so a resume
+        # reuses the classes a full run compiled: the pending set is an
+        # array literal (a reference object, not inlined constants), and
+        # every bucket gets a count column (non-pending ones count 0 docs).
         def per_bucket_counts(df: DataFrame):
             obs = Observation()
             return df.observe(obs, *[F.count(F.when(bucket == b, 1))
-                                     .alias(str(b)) for b in pending]), obs
+                                     .alias(str(b))
+                                     for b in range(self.n_buckets)]), obs
 
-        part, o_docs = per_bucket_counts(docs.filter(bucket.isin(pending)))
+        part, o_docs = per_bucket_counts(
+            docs.filter(F.element_at(F.lit(is_pending), bucket + 1)))
         # the kernel keeps the input doc_id type, so each triple's bucket
         # is the hash of its doc_id
         trip, o_trip = per_bucket_counts(
@@ -319,6 +329,8 @@ class LedgerRun:
         trip.withColumn("b", F.col("bucket")).write.partitionBy("b").mode(
             "overwrite").parquet(run_dir)
         wall = round(time.time() - t0, 3)
+        if fail_after == 0:
+            raise RuntimeError("simulated failure after 0 buckets")
         for done, b in enumerate(pending, 1):
             path, n_triples = f"{run_dir}/b={b}", o_trip.get[str(b)]
             if not n_triples:  # partitionBy writes no directory for it

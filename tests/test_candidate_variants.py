@@ -45,8 +45,15 @@ NON_CROSS_PRODUCT = [("ADE", "Drug"), ("Reason", "Form")]
 ], ids=["default", "cap7", "cap0", "non_cross_product"])
 def test_candidates_equal_reference(spark, cfg):
     """Every column of both emits, including the capped kept set and its
-    enumeration order, equals the itertools reference."""
-    docs = load_documents(spark, SF_SMOKE)
+    enumeration order, equals the itertools reference. Beside the smoke
+    corpus runs one long page: a Drug every 5 tokens and an arg1 mention
+    every few hundred, so each arg1's window is a short slice of many
+    arg2 mentions and the cap stops the doc partway."""
+    long_doc = " ".join(
+        "join" if i % 297 == 13 else "merge" if i % 411 == 200
+        else "spark" if i % 5 == 0 else "w" for i in range(2500))
+    docs = load_documents(spark, SF_SMOKE).select("doc_id", "text").union(
+        spark.createDataFrame([(10**9, long_doc)], "doc_id long, text string"))
     want = sorted(reference_candidates(
         docs.select("doc_id", "text").collect(), cfg))
     assert want, "no candidates: the comparison is vacuous"

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from collections import Counter
 
 import pytest
@@ -239,6 +240,72 @@ def test_ledger_adds_no_spark_job(spark, tmp_path):
     with pytest.raises(RuntimeError, match="simulated failure"):
         crashed.run(docs, fail_after=2)
     assert jobs("ledger-resume", lambda: crashed.resume(docs)) == one
+
+
+def test_ledger_code_is_independent_of_pending_set(
+        spark, tmp_path, monkeypatch, capsys):
+    """A resume runs the code a full run compiled: the generated Java of
+    the ledger's write for pending buckets {0, 1, 2, 3} and {2, 3} is the
+    same, and the resume of a crashed run compiles no class."""
+    from pyspark.sql import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    docs = load_documents(spark, SF_SMOKE)
+    run = LedgerRun(out_dir=str(tmp_path / "cg"), n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run.run(docs, fail_after=2)
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    before = compiles.getCount()
+    assert sorted(run.resume(docs)) == ["0", "1", "2", "3"]
+    assert compiles.getCount() == before
+
+    def code(df):
+        """The generated Java without the plan description lines, which
+        name the literal pending mask. explain shows no codegen subtree
+        of a not yet executed adaptive plan."""
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            capsys.readouterr()
+            df.explain("codegen")
+            out = capsys.readouterr().out
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        return [line for line in out.splitlines() if not re.match(
+            r"\s*(\*\(\d+\) |\+- |: |== Subtree )", line)]
+
+    full, resumed = map(code, written)
+    assert sum("/* 001 */" in line for line in full) >= 1, \
+        "no generated code: the comparison is vacuous"
+    assert full == resumed
+
+
+def test_ledger_fail_after_zero_commits_no_bucket(spark, tmp_path):
+    """``fail_after=0`` stops after the write and before any row commit;
+    the resume then equals a one-shot run. A negative count is refused
+    and writes nothing."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
+    run = LedgerRun(out_dir=str(tmp_path / "f0"), n_buckets=4)
+    with pytest.raises(ValueError, match="fail_after must be >= 0, got -1"):
+        run.run(docs, fail_after=-1)
+    assert not os.path.exists(run.ledger_path)
+    with pytest.raises(RuntimeError, match="simulated failure after 0"):
+        run.run(docs, fail_after=0)
+    assert not os.path.exists(run.ledger_path)
+    assert not run.snapshots()
+    ledger = run.resume(docs)
+    _assert_ledger_counts(spark, docs, ledger, 4)
+    one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=4)
+    one.run(docs)
+    assert Counter(map(tuple, run.triples(spark).collect())) == \
+        Counter(map(tuple, one.triples(spark).collect()))
 
 
 def test_ledger_rejects_another_bucket_count(spark, tmp_path):
