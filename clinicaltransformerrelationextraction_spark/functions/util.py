@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -58,23 +59,39 @@ def _reread_if_changed(self) -> None:
         _zip_reads.pop(self.archive, None)
 
 
-def keep_unchanged_zip_directories() -> None:
-    """Once per Python worker process (idempotent): stop re-reading zip
-    archives on ``sys.path`` whose ``(st_ino, st_size, st_mtime_ns)`` has
-    not changed since their directory was last read. Spark calls
-    ``importlib.invalidate_caches()`` at the start of every task, and on
-    CPython < 3.12 that makes each ``zipimporter`` (one per package of
-    ``pyspark.zip``, plus the py4j zip: 16 on a stock worker) re-read its
-    archive's whole directory, about 240 ms of worker CPU per task before
-    any row is touched. The importers of an unchanged archive now share
-    the directory of its last read. An archive replaced, rewritten or
-    deleted on disk, for example a re-shipped ``--py-files`` zip, still
-    goes through the original ``zipimporter.invalidate_caches``. Spark
-    reuses workers, so the patch holds for every later task on the
-    worker. CPython >= 3.12 re-reads lazily and is left alone."""
+def set_up_python_worker() -> None:
+    """Once per Python worker process (idempotent), at the start of each
+    product runner's task; Spark reuses workers, so both steps hold for
+    every later task on the worker.
+
+    - Stop re-reading zip archives on ``sys.path`` whose ``(st_ino,
+      st_size, st_mtime_ns)`` has not changed since their directory was
+      last read. Spark calls ``importlib.invalidate_caches()`` at the start
+      of every task, and on CPython < 3.12 that makes each ``zipimporter``
+      (one per package of ``pyspark.zip``, plus the py4j zip: 16 on a stock
+      worker) re-read its archive's whole directory, about 240 ms of worker
+      CPU per task before any row is touched. The importers of an unchanged
+      archive now share the directory of its last read. An archive
+      replaced, rewritten or deleted on disk, for example a re-shipped
+      ``--py-files`` zip, still goes through the original
+      ``zipimporter.invalidate_caches``. CPython >= 3.12 re-reads lazily
+      and is left alone.
+    - Freeze the worker's heap once (``gc.freeze()``). With worker reuse,
+      pyspark's daemon runs a full ``gc.collect()`` after every task, and a
+      warm worker tracks ~73,500 objects (mostly pandas, pyarrow and
+      numpy), so each collect cost 27-34 ms, as much as the stub scorer's
+      own work in a task. Frozen objects sit in the permanent generation,
+      which no collection scans. Only inside a Spark task
+      (``TaskContext.get()``): a driver or a test that calls this freezes
+      nothing."""
     cls = zipimport.zipimporter
     if sys.version_info < (3, 12) and cls.invalidate_caches is _zip_reread:
         cls.invalidate_caches = _reread_if_changed
+    if not gc.get_freeze_count():
+        from pyspark import TaskContext
+
+        if TaskContext.get() is not None:
+            gc.freeze()
 
 
 def row_kernel(src: DataFrame, schema: str, rows_of: Callable) -> DataFrame:
@@ -88,7 +105,7 @@ def row_kernel(src: DataFrame, schema: str, rows_of: Callable) -> DataFrame:
     cols = [f.split()[0] for f in schema.split(", ")]
 
     def kernel(batches):
-        keep_unchanged_zip_directories()
+        set_up_python_worker()
         for pdf in batches:
             rows = [r for row in pdf.itertuples(index=False, name=None)
                     for r in rows_of(*row)]

@@ -152,7 +152,7 @@ def doc_rows_input(df: DataFrame, doc_col: str = "doc_id",
     """(doc_id, text) input of a doc-row kernel. factor=1: one wave of
     core-count tasks, since each Python task pays a fixed cost before any
     row: ~35 ms of worker CPU on a worker that has run a product runner
-    (``functions.util.keep_unchanged_zip_directories``), ~240 ms on one
+    (``functions.util.set_up_python_worker``), ~240 ms on one
     that has not, when Spark's per-task ``importlib.invalidate_caches()``
     re-reads ``pyspark.zip`` (measured in ``dedup._docs``)."""
     return ensure_parallelism(

@@ -43,7 +43,7 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
     # before any row is touched. An identity mapInPandas over 4 rows, on
     # 4 cores, costs 0.16 / 0.56 / 2.1 s of Python-worker CPU (/proc) at
     # 4 / 16 / 64 partitions, ~35 ms a task, once the worker has run a
-    # product runner (functions/util.keep_unchanged_zip_directories);
+    # product runner (functions/util.set_up_python_worker);
     # before that, Spark's per-task importlib.invalidate_caches() re-read
     # pyspark.zip and the cost was 1.0 / 4.0 / 15 s, ~240 ms a task. One
     # wave of core-count tasks balances fine for per-doc-uniform kernels

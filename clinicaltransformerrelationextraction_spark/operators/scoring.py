@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SPEC_TAGS, STUB_W2, STUB_W3, PipelineConfig
-from ..functions.util import keep_unchanged_zip_directories
+from ..functions.util import set_up_python_worker
 from .binarymode import _make_binary_scorer
 from .candidates import candidate_columns, doc_candidate_rows, doc_rows_input
 from .segmentation import doc_mention_rows
@@ -455,7 +455,7 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
     out_schema = T.StructType(out_fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_unchanged_zip_directories()
+        set_up_python_worker()
         scorer = factory(cfg, labels)
         for pdf in batches:
             if len(pdf) == 0:
@@ -538,7 +538,7 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
     cols = candidate_columns(emit)
 
     def flushes(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
-        keep_unchanged_zip_directories()
+        set_up_python_worker()
         scorer = factory(cfg, labels)
 
         def score(rows: list) -> pd.DataFrame | None:
@@ -678,7 +678,7 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
     id_type = cand.schema["doc_id"].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_unchanged_zip_directories()
+        set_up_python_worker()
         scorer = factory(cfg, labels)
         carry: pd.DataFrame | None = None  # rows of the batch-boundary doc
         for pdf in batches:

@@ -44,7 +44,7 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
 
     # factor=1: the n-gram consumers below run Arrow-batched kernels, and
     # each Python task has a fixed cost (~35 ms of worker CPU on a worker
-    # set up by keep_unchanged_zip_directories; measured in dedup._docs)
+    # set up by set_up_python_worker; measured in dedup._docs)
     return ensure_parallelism(
         spark.read.parquet(f"{sf}/documents.parquet"), factor=1
     )

@@ -26,9 +26,11 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   scoring config the same way (``config_digest``), so a resume under
   another scorer raises instead of mixing two scorers' buckets;
 - ``_snapshots.json`` appends one snapshot per completed run with the full
-  bucket->file manifest and parent chaining; ``triples(snapshot_id=...)``
-  TIME-TRAVELS to any retained snapshot; ``expire_snapshots`` GCs bucket
-  directories no retained snapshot references;
+  bucket->file manifest and parent chaining, and keeps the highest
+  snapshot id and data version it ever held, so expiry never lets an id
+  be reused; ``triples(snapshot_id=...)`` TIME-TRAVELS to any retained
+  snapshot; ``expire_snapshots`` GCs bucket directories no retained
+  snapshot references;
 - ``resume()`` skips partitions whose ledger row says done, exactly the
   reference's skip-if-exists, but transactional per partition.
 
@@ -203,6 +205,30 @@ def _write_text(path: str, text: str) -> None:
             ) from ex
 
 
+def _manifest(ledger: dict[str, dict]) -> dict[str, dict]:
+    """bucket -> the immutable data files of its done row: what a snapshot
+    pins."""
+    return {
+        k: {"path": v["path"], "n_triples": v["n_triples"],
+            "version": v["version"]}
+        for k, v in ledger.items()
+        if v.get("status") == "done" and "path" in v
+    }
+
+
+def _high_water(snaps: list[dict], high: dict) -> dict:
+    """The highest snapshot id and data version any snapshot of the log
+    ever recorded: the retained ``snaps`` and the mark ``high`` that the
+    expired ones left behind."""
+    return {
+        "snapshot_id": max([high.get("snapshot_id", 0),
+                            *(s["snapshot_id"] for s in snaps)]),
+        "version": max([high.get("version", -1),
+                        *(m.get("version", -1) for s in snaps
+                          for m in s.get("manifest", {}).values())]),
+    }
+
+
 @dataclass
 class LedgerRun:
     """Checkpointed, resumable pipeline run over hash buckets.
@@ -284,7 +310,9 @@ class LedgerRun:
         """Score every not-yet-done bucket in one write; idempotent per
         bucket. ``fail_after`` aborts after N row commits (for resume
         tests) — simulating a driver crash mid-commit; 0 aborts after the
-        write, before any commit."""
+        write, before any commit. With nothing pending it starts no Spark
+        job; it only appends the snapshot of a run that crashed after its
+        last row commit, if the log lacks it."""
         if fail_after is not None and fail_after < 0:
             raise ValueError(f"fail_after must be >= 0, got {fail_after}")
         cfg = cfg or PipelineConfig()
@@ -295,6 +323,14 @@ class LedgerRun:
                       for b in range(self.n_buckets)]
         pending = [b for b, p in enumerate(is_pending) if p]
         if not pending:
+            # a run that crashed after its last row commit left done rows
+            # newer than any snapshot ever recorded: snapshot them now,
+            # with no Spark job
+            seen = _high_water(*self._read_log())["version"]
+            written = sum(m["version"] > seen
+                          for m in _manifest(ledger).values())
+            if written:
+                self._append_snapshot(ledger, written, config)
             return ledger
         t0 = time.time()
         bucket = F.pmod(F.hash("doc_id"), F.lit(self.n_buckets))
@@ -318,13 +354,12 @@ class LedgerRun:
             .withColumn("bucket", bucket)
         )
         # Iceberg-style commit: one IMMUTABLE run directory, its version
-        # above every version a row or a retained snapshot pins, so the
+        # above every version a row or any snapshot ever pinned, so the
         # overwrite can only replace an uncommitted orphan. Partition on a
         # copy so ``bucket`` stays inside the files: a manifest read of a
         # leaf directory infers no partition column.
-        pinned = [*ledger.values(), *(m for s in self.snapshots()
-                                      for m in s.get("manifest", {}).values())]
-        version = 1 + max((m.get("version", -1) for m in pinned), default=-1)
+        version = 1 + max([_high_water(*self._read_log())["version"],
+                           *(v.get("version", -1) for v in ledger.values())])
         run_dir = f"{self.triples_dir}/data/v{version}"
         trip.withColumn("b", F.col("bucket")).write.partitionBy("b").mode(
             "overwrite").parquet(run_dir)
@@ -362,21 +397,34 @@ class LedgerRun:
     # this whole class is replaced by Iceberg replacePartitions commits;
     # the snapshot log is what makes the ledger auditable in the meantime.
 
-    def snapshots(self) -> list[dict]:
+    def _read_log(self) -> tuple[list[dict], dict]:
+        """The retained snapshots and the log's high-water mark (see
+        ``_high_water``). A bare list is a log written before the mark
+        was kept."""
         text = _read_text(self.snapshots_path)
-        return json.loads(text) if text is not None else []
+        log = json.loads(text) if text is not None else []
+        if isinstance(log, list):
+            return log, {}
+        return log["snapshots"], log["high_water"]
+
+    def _write_log(self, snaps: list[dict], high: dict) -> None:
+        _write_text(self.snapshots_path, json.dumps(
+            {"high_water": _high_water(snaps, high), "snapshots": snaps},
+            indent=1))
+
+    def snapshots(self) -> list[dict]:
+        return self._read_log()[0]
 
     def _append_snapshot(self, ledger: dict[str, dict],
                          buckets_written: int, config: str) -> dict:
-        prior = self.snapshots()
+        prior, high = self._read_log()
+        # above every id the log ever held, NOT len+1 or max+1 over the
+        # retained ones: expire_snapshots truncates the log, and a reused
+        # id would shadow a retained snapshot or answer for an expired one
+        last = _high_water(prior, high)["snapshot_id"]
         snap = {
-            # max+1, NOT len+1: expire_snapshots truncates the log, and a
-            # length-derived id would collide with a retained snapshot
-            # (shadowing it in time travel and self-parenting the chain)
-            "snapshot_id": max(
-                (s["snapshot_id"] for s in prior), default=0
-            ) + 1,
-            "parent_id": prior[-1]["snapshot_id"] if prior else None,
+            "snapshot_id": last + 1,
+            "parent_id": last or None,
             "ts": time.time(),
             "operation": "replace-partitions",
             "buckets_written": buckets_written,
@@ -390,15 +438,9 @@ class LedgerRun:
             ),
             "total_docs": sum(v.get("n_docs", 0) for v in ledger.values()),
             # the manifest: which immutable data file set IS this snapshot
-            "manifest": {
-                k: {"path": v["path"], "n_triples": v["n_triples"],
-                    "version": v["version"]}
-                for k, v in ledger.items()
-                if v.get("status") == "done" and "path" in v
-            },
+            "manifest": _manifest(ledger),
         }
-        prior.append(snap)
-        _write_text(self.snapshots_path, json.dumps(prior, indent=1))
+        self._write_log([*prior, snap], high)
         return snap
 
     def expire_snapshots(self, spark: SparkSession,
@@ -411,7 +453,7 @@ class LedgerRun:
         paths."""
         if keep_last < 0:
             raise ValueError(f"keep_last must be >= 0, got {keep_last}")
-        snaps = self.snapshots()
+        snaps, high = self._read_log()
         kept, dropped = snaps[-keep_last:] if keep_last else [], \
             snaps[:-keep_last] if keep_last else snaps
         # keyed by path under triples/data/, which sidesteps scheme
@@ -443,7 +485,7 @@ class LedgerRun:
                 fs.delete(d.getPath(), True)
                 deleted.append(d.getPath().toString())
         if dropped:
-            _write_text(self.snapshots_path, json.dumps(kept, indent=1))
+            self._write_log(kept, _high_water(snaps, high))
         return deleted
 
     def resume(self, docs: DataFrame,

@@ -28,7 +28,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build a session with AQE, Arrow, and skew-join handling enabled.
+    """Build a session with AQE, Arrow, skew-join handling and zstd
+    Parquet sinks enabled.
 
     On a real cluster the same config ships via spark-submit --py-files;
     locally ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]``.
@@ -57,6 +58,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
+        # Iceberg's default Parquet codec since 1.4: ~30% fewer bytes than
+        # snappy for the same rows; readers take the codec per column chunk
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("CTRE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

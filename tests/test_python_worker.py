@@ -1,20 +1,26 @@
-"""Python workers set themselves up once: ``keep_unchanged_zip_directories``.
+"""Python workers set themselves up once: ``set_up_python_worker``.
 
 Spark calls ``importlib.invalidate_caches()`` at the start of every Python
 task; on CPython < 3.12 that re-reads the directory of every zip archive
 on the worker's path (``pyspark.zip`` once per package importer). The
 hook, called by the product's Python runners, keeps the directory of an
-archive that has not changed on disk and re-reads one that has.
+archive that has not changed on disk and re-reads one that has. It also
+freezes the worker's heap once, so the full ``gc.collect()`` that
+pyspark's daemon runs after every task no longer scans it.
 
 - pure Python, on a zip put on ``sys.path``: an unchanged archive is not
   re-read, a rewritten one is (and its new module imports), a deleted or
   corrupt one behaves as without the hook, and CPython >= 3.12 is left alone;
 - Spark: inside a ``row_kernel`` task and a ``run_pipeline`` task, a
-  second ``importlib.invalidate_caches()`` re-reads no archive.
+  second ``importlib.invalidate_caches()`` re-reads no archive;
+- Spark: after such tasks, later tasks on the same worker see the heap
+  frozen once (the same non-zero ``gc.get_freeze_count()``); the hook
+  called in the driver freezes nothing.
 """
 
 from __future__ import annotations
 
+import gc
 import importlib
 import importlib.util
 import json
@@ -53,7 +59,7 @@ def hook(monkeypatch):
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
                         util._zip_reread)
     monkeypatch.setattr(util, "_zip_reads", {})
-    return util.keep_unchanged_zip_directories
+    return util.set_up_python_worker
 
 
 @pytest.fixture
@@ -210,3 +216,54 @@ def test_run_pipeline_task_rereads_no_unchanged_zip(spark, tmp_path):
         tasks = [json.loads(line) for line in f]
     assert tasks
     assert all(t["zips"] > 0 and t["second"] == 0 for t in tasks), tasks
+
+
+def test_product_tasks_freeze_the_worker_heap_once(hook, spark, tmp_path):
+    hook()
+    assert gc.get_freeze_count() == 0  # the driver is no Spark task
+
+    def state():
+        import gc
+        import os
+
+        return os.getpid(), gc.get_freeze_count()
+
+    product = util.row_kernel(
+        spark.range(4).repartition(4), "pid int, frozen long",
+        lambda _: [state()]).collect()
+    log = str(tmp_path / "tasks.jsonl")
+    stub = SCORER_REGISTRY["stub"]
+
+    def factory(cfg, labels):  # built at the start of each task
+        with open(log, "a") as f:
+            f.write(json.dumps(state()) + "\n")
+        return stub(cfg, labels)
+
+    register_scorer("freeze-probing", factory)
+    try:
+        docs = spark.createDataFrame(
+            [(i, "join spark") for i in range(8)], "doc_id long, text string")
+        run_pipeline(docs, PipelineConfig(scorer="freeze-probing")
+                     ).triples.collect()
+    finally:
+        SCORER_REGISTRY.pop("freeze-probing")
+    with open(log) as f:
+        product += [tuple(json.loads(line)) for line in f]
+
+    def plain(batches):  # a later task that does not call the hook
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame([state()], columns=["pid", "frozen"])
+
+    later = spark.range(16).repartition(8).mapInPandas(
+        plain, "pid int, frozen long").collect()
+    assert all(frozen > 0 for _, frozen in product), product
+    frozen_at = {}
+    for pid, frozen in product:
+        assert frozen_at.setdefault(pid, frozen) == frozen, product
+    same = [(pid, frozen) for pid, frozen in later if pid in frozen_at]
+    assert same, (product, later)  # workers are reused
+    assert all(frozen == frozen_at[pid] for pid, frozen in same), same
+    assert gc.get_freeze_count() == 0

@@ -308,6 +308,59 @@ def test_ledger_fail_after_zero_commits_no_bucket(spark, tmp_path):
         Counter(map(tuple, one.triples(spark).collect()))
 
 
+def test_ledger_crash_after_last_commit_resumes_to_one_snapshot(spark,
+                                                                tmp_path):
+    """A crash after the last row commit and before the snapshot append
+    leaves every row done and no snapshot. The resume records that run's
+    snapshot, with no Spark job: its manifest is the ledger's, it time
+    travels to the one-shot run's rows, and a second resume adds none.
+    Nor does a resume after every snapshot expired, and no later snapshot
+    takes an expired id."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
+    run = LedgerRun(out_dir=str(tmp_path / "last"), n_buckets=2)
+    with pytest.raises(RuntimeError, match="simulated failure after 2"):
+        run.run(docs, fail_after=2)
+    assert not run.snapshots()
+    sc = spark.sparkContext
+    sc.setJobGroup("ledger-late-snapshot", "ledger-late-snapshot")
+    try:
+        ledger = run.resume(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("ledger-late-snapshot")
+    _assert_ledger_counts(spark, docs, ledger, 2)
+    snaps = run.snapshots()
+    assert len(snaps) == 1
+    assert snaps[0]["manifest"] == {
+        k: {f: row[f] for f in ("path", "n_triples", "version")}
+        for k, row in ledger.items()}
+    one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
+    one.run(docs)
+    [want] = one.snapshots()
+    lineage = ("ts", "manifest")
+    assert {k: v for k, v in snaps[0].items() if k not in lineage} == \
+        {k: v for k, v in want.items() if k not in lineage}
+    assert Counter(map(tuple, run.triples(spark, snapshot_id=1).collect())) \
+        == Counter(map(tuple, one.triples(spark).collect()))
+    run.resume(docs)
+    assert run.snapshots() == snaps
+    run.expire_snapshots(spark, keep_last=0)
+    run.resume(docs)
+    assert not run.snapshots()
+    with pytest.raises(ValueError, match="expired"):
+        run.triples(spark, snapshot_id=1)
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs)
+    [snap] = run.snapshots()
+    assert (snap["snapshot_id"], snap["parent_id"],
+            snap["buckets_written"]) == (2, 1, 1)
+    with pytest.raises(ValueError, match="expired"):
+        run.triples(spark, snapshot_id=1)
+    assert Counter(map(tuple, run.triples(spark, snapshot_id=2).collect())) \
+        == Counter(map(tuple, one.triples(spark).collect()))
+
+
 def test_ledger_rejects_another_bucket_count(spark, tmp_path):
     """Re-bucketing under another n_buckets would skip or redo rows by key
     alone and duplicate triples: a 4-bucket crash resumed with the CLI's

@@ -1,9 +1,17 @@
-"""S6 ordered prediction sink + brat parse∘render round-trip property."""
+"""S6 ordered prediction sink, brat parse∘render round-trip property, and
+the Parquet codec of the product sinks (zstd; the ledger reads a table
+whose snapshots were written under two codecs)."""
 
 from __future__ import annotations
 
+import glob
+from collections import Counter
+
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from clinicaltransformerrelationextraction_spark.cli import main
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
     candidates,
@@ -14,6 +22,7 @@ from clinicaltransformerrelationextraction_spark.operators.scoring import (
 from clinicaltransformerrelationextraction_spark.operators.segmentation import (
     mentions,
 )
+from clinicaltransformerrelationextraction_spark.plans.ledger import LedgerRun
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
     run_brat,
@@ -44,8 +53,6 @@ def test_ordered_prediction_text_sink(spark, tmp_path):
         .orderBy("doc_id", "i1", "i2")
         .collect()
     ]
-    import glob
-
     files = glob.glob(out + "/part-*")
     assert len(files) == 1, "S6 contract: one ordered text file"
     with open(files[0]) as f:
@@ -85,3 +92,67 @@ def test_brat_roundtrip_property(spark):
     assert got_r.count() == want_r.count()
     assert got_r.exceptAll(want_r).count() == 0
     assert want_r.exceptAll(got_r).count() == 0
+
+
+CODEC = "spark.sql.parquet.compression.codec"
+
+
+def _codecs(root: str) -> set[str]:
+    """The codec of every column chunk of every Parquet file under
+    ``root``, as the files' own metadata records it."""
+    files = glob.glob(f"{root}/**/*.parquet", recursive=True)
+    assert files, root
+    codecs = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        codecs |= {md.row_group(g).column(c).compression
+                   for g in range(md.num_row_groups)
+                   for c in range(md.num_columns)}
+    return codecs
+
+
+def test_product_sinks_write_zstd(spark, tmp_path):
+    """``cli predict`` writes the ledger's triples and ``<out>/brat`` as
+    zstd Parquet, and so does the resume of a crashed run."""
+    inp = str(tmp_path / "docs_in")
+    load_documents(spark, SF_SMOKE).limit(120).write.parquet(inp)
+    argv = ["--input", inp, "--n-buckets", "4"]
+    out = str(tmp_path / "predict")
+    main(["predict", "--output", out, *argv], spark=spark)
+    assert _codecs(f"{out}/triples/data") == {"ZSTD"}
+    assert _codecs(f"{out}/brat") == {"ZSTD"}
+    out = str(tmp_path / "crashed")
+    run = LedgerRun(out_dir=out, n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run.run(spark.read.parquet(inp), CFG, fail_after=2)
+    main(["resume", "--output", out, *argv], spark=spark)
+    assert len({v["version"] for v in run._read_ledger().values()}) == 2
+    assert _codecs(f"{out}/triples/data") == {"ZSTD"}
+
+
+def test_ledger_reads_snapshots_of_two_codecs(spark, tmp_path):
+    """A snappy run, then a zstd re-run of one bucket on the same out_dir:
+    both snapshots time-travel, and every read equals the one-shot rows."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
+    run = LedgerRun(out_dir=str(tmp_path / "mixed"), n_buckets=2)
+    default = spark.conf.get(CODEC)
+    spark.conf.set(CODEC, "snappy")
+    try:
+        run.run(docs, CFG)
+    finally:
+        spark.conf.set(CODEC, default)
+    ledger = run._read_ledger()
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs, CFG)
+    s1, s2 = (s["manifest"] for s in run.snapshots())
+    assert _codecs(s1["0"]["path"]) == _codecs(s1["1"]["path"]) == {"SNAPPY"}
+    assert _codecs(s2["0"]["path"]) == {"ZSTD"}
+    assert s2["1"] == s1["1"]  # the current table mixes both codecs
+    one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
+    one.run(docs, CFG)
+    want = Counter(map(tuple, one.triples(spark).collect()))
+    assert want
+    for snapshot_id in (1, 2, None):
+        got = run.triples(spark, snapshot_id=snapshot_id).collect()
+        assert Counter(map(tuple, got)) == want, snapshot_id

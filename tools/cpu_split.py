@@ -21,14 +21,23 @@ system) of:
 
 Every figure is read from ``/proc/<pid>/stat`` and
 ``/proc/<jvm>/task/<tid>/{comm,stat}`` before and after the step, for
-this process tree only; ``total`` is their sum. Usage, from the root of
-a checkout:
+this process tree only; ``total`` is their sum.
+
+After the first predict it also prints the bytes of
+that predict's output dir per sink (``triples``: the ledger's data
+files and its JSON metadata; ``brat``) and per class: Parquet data,
+Parquet footers (the file metadata, its length and the closing magic),
+``.crc`` and ``_SUCCESS`` files, ledger JSON, and anything else. The
+classes sum to the bytes perfbench's ``write_amp`` counts. Usage, from
+the root of a checkout:
 
     python3 tools/cpu_split.py --predicts 30
     python3 tools/cpu_split.py --predicts 8 --resume --seed 1
+    python3 tools/cpu_split.py --predicts 1
 
-The output is one JSON line per step, then one line with each class's
-median over the predicts (and the resume's split).
+The output is one JSON line per step (and the first predict's byte
+split), then one line with each class's median over the predicts (and
+the resume's split).
 """
 
 from __future__ import annotations
@@ -128,6 +137,44 @@ def split(before: dict, after: dict) -> dict[str, float]:
     return {k: round(v / tick, 3) for k, v in out.items()}
 
 
+BYTE_CLASSES = ("parquet_data", "parquet_footers", "crc_success",
+                "ledger_json", "other")
+
+
+def _footer_bytes(path: str) -> int:
+    """The footer of a Parquet file: its metadata, the 4-byte metadata
+    length and the closing ``PAR1`` magic."""
+    with open(path, "rb") as f:
+        f.seek(-8, os.SEEK_END)
+        return int.from_bytes(f.read(4), "little") + 8
+
+
+def byte_split(out_dir: str) -> dict:
+    """Bytes under a predict's ``out_dir``, per sink and class, with each
+    sink's Parquet file count; ``total`` is every file's bytes."""
+    sinks = {s: dict.fromkeys((*BYTE_CLASSES, "parquet_files"), 0)
+             for s in ("triples", "brat")}
+    for base, _, files in os.walk(out_dir):
+        top = os.path.relpath(base, out_dir).split(os.sep)[0]
+        row = sinks["brat" if top == "brat" else "triples"]
+        for name in files:
+            path = os.path.join(base, name)
+            size = os.path.getsize(path)
+            if name.endswith(".parquet"):
+                footer = _footer_bytes(path)
+                row["parquet_footers"] += footer
+                row["parquet_data"] += size - footer
+                row["parquet_files"] += 1
+            elif name.endswith(".crc") or name == "_SUCCESS":
+                row["crc_success"] += size
+            elif name.endswith(".json"):
+                row["ledger_json"] += size
+            else:
+                row["other"] += size
+    total = sum(row[k] for row in sinks.values() for k in BYTE_CLASSES)
+    return {**sinks, "total": total}
+
+
 def _session():
     from clinicaltransformerrelationextraction_spark.session import get_spark
 
@@ -211,6 +258,10 @@ def main(argv: list[str] | None = None) -> int:
                    "compiles": compiles.getCount() - n}
             rows.append(row)
             print(json.dumps(row), flush=True)
+            if name == "predict0":
+                split_bytes = byte_split(os.path.join(runs, "p0"))
+                print(json.dumps({"step": name, "bytes": split_bytes}),
+                      flush=True)
         predicts = [r for r in rows if r["step"].startswith("predict")]
         summary = {"seed": a.seed, "scorer": a.scorer,
                    "predicts": len(predicts)}
