@@ -47,6 +47,7 @@ from .segmentation import doc_mention_rows
 
 __all__ = [
     "score_candidates", "score_filter_number", "enum_score_filter_number",
+    "enum_score_number", "numbered_schema", "public_triples",
     "enum_score_brat",
     "truncate_pair", "register_scorer", "SCORER_REGISTRY",
 ]
@@ -470,18 +471,22 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
     return cand.mapInPandas(run, schema=out_schema)
 
 
-def _triples_schema(id_type: str) -> str:
-    return (
-        f"doc_id {id_type}, rel_n int, pred string, subj_id string, "
-        "obj_id string, score double, sent_diff int, i1 int, i2 int"
-    )
+def numbered_schema(id_type: str, ids: bool = False) -> str:
+    """The numeric form of a triple, ``(doc_id, rel_n, pred, score,
+    sent_diff, i1, i2)``, plus ``subj_id``/``obj_id`` when ``ids``."""
+    return (f"doc_id {id_type}, rel_n int, pred string, score double, "
+            "sent_diff int, i1 int, i2 int"
+            + (", subj_id string, obj_id string" if ids else ""))
 
 
-def _filter_number(scored: pd.DataFrame, non_rel: str) -> pd.DataFrame | None:
+def _filter_number(scored: pd.DataFrame, non_rel: str,
+                   ids: bool = False) -> pd.DataFrame | None:
     """NonRel filter + per-doc R-numbering of a scored frame (candidate
     columns + pred_label + score) of COMPLETE docs: sort by (doc_id,
     sent_diff, i1, i2), number via groupby cumcount — one Arrow batch out
-    per scorer call, never per doc. None when every row is NonRel."""
+    per scorer call, never per doc. None when every row is NonRel. The
+    rows are the numeric form (``numbered_schema``); ``ids`` keeps the
+    frame's ``ent_id_1``/``ent_id_2`` as ``subj_id``/``obj_id``."""
     kept = scored[scored["pred_label"] != non_rel]
     if len(kept) == 0:
         return None
@@ -489,28 +494,41 @@ def _filter_number(scored: pd.DataFrame, non_rel: str) -> pd.DataFrame | None:
         ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
     ).reset_index(drop=True)
     rn = kept.groupby("doc_id", sort=False).cumcount() + 1
-    return pd.DataFrame(
-        {
-            "doc_id": kept["doc_id"],
-            "rel_n": rn.astype("int32"),
-            "pred": kept["pred_label"],
-            "subj_id": kept["ent_id_1"],
-            "obj_id": kept["ent_id_2"],
-            "score": kept["score"],
-            "sent_diff": kept["sent_diff"].astype("int32"),
-            "i1": kept["i1"].astype("int32"),
-            "i2": kept["i2"].astype("int32"),
-        }
-    )
+    out = {
+        "doc_id": kept["doc_id"],
+        "rel_n": rn.astype("int32"),
+        "pred": kept["pred_label"],
+        "score": kept["score"],
+        "sent_diff": kept["sent_diff"].astype("int32"),
+        "i1": kept["i1"].astype("int32"),
+        "i2": kept["i2"].astype("int32"),
+    }
+    if ids:
+        out["subj_id"], out["obj_id"] = kept["ent_id_1"], kept["ent_id_2"]
+    return pd.DataFrame(out)
 
 
-def _with_rel_id(numbered: DataFrame) -> DataFrame:
-    # build the R-id string JVM-side: millions of Python string objects
-    # otherwise dominate the UDF at low core counts
+def public_triples(numbered: DataFrame) -> DataFrame:
+    """The public triples ``(doc_id, rel_id, pred, subj_id, obj_id, score,
+    sent_diff, i1, i2)`` of a numeric-form frame, derived JVM-side (millions
+    of Python string objects otherwise dominate the UDF at low core
+    counts): ``rel_id`` is ``"R" || rel_n``; ``subj_id``/``obj_id`` are
+    ``"T" || i1``/``"T" || i2``, the doc-row kernels' mention ids. A frame
+    that carries one of these columns keeps its non-NULL values; columns
+    outside the numeric form and the ids follow, unchanged."""
+    def derived(name: str, prefix: str, num: str):
+        made = F.concat(F.lit(prefix), F.col(num))
+        if name in numbered.columns:
+            made = F.coalesce(F.col(name), made)
+        return made.alias(name)
+
+    own = {"doc_id", "rel_n", "rel_id", "pred", "subj_id", "obj_id",
+           "score", "sent_diff", "i1", "i2"}
     return numbered.select(
-        "doc_id",
-        F.concat(F.lit("R"), F.col("rel_n")).alias("rel_id"),
-        "pred", "subj_id", "obj_id", "score", "sent_diff", "i1", "i2",
+        "doc_id", derived("rel_id", "R", "rel_n"), "pred",
+        derived("subj_id", "T", "i1"), derived("obj_id", "T", "i2"),
+        "score", "sent_diff", "i1", "i2",
+        *[c for c in numbered.columns if c not in own],
     )
 
 
@@ -593,7 +611,19 @@ def enum_score_filter_number(
     Output equals ``score_filter_number`` over the same candidates, scores
     included, for any Arrow batch size, partitioning or ``batch_size``
     (pinned against the pure-Python candidate reference in
-    tests/test_kernel_path.py; the stub by the q_triples oracle)."""
+    tests/test_kernel_path.py; the stub by the q_triples oracle). The pass
+    is ``enum_score_number``, which emits numbers only; the id strings are
+    derived JVM-side (``public_triples``)."""
+    return public_triples(enum_score_number(docs, cfg, doc_col, text_col))
+
+
+def enum_score_number(
+    docs: DataFrame, cfg: PipelineConfig | None = None,
+    doc_col: str = "doc_id", text_col: str = "text",
+) -> DataFrame:
+    """``enum_score_filter_number``'s doc-row pass, emitting the numeric
+    form ``(doc_id, rel_n, pred, score, sent_diff, i1, i2)``: no id string
+    crosses the Arrow boundary. The ledger stores this form."""
     cfg = cfg or PipelineConfig()
     src, flushes = _doc_pass(docs, cfg, doc_col, text_col)
     id_type = src.schema["doc_id"].dataType.simpleString()
@@ -603,20 +633,20 @@ def enum_score_filter_number(
             if numbered is not None:
                 yield numbered
 
-    return _with_rel_id(src.mapInPandas(run, schema=_triples_schema(id_type)))
+    return src.mapInPandas(run, schema=numbered_schema(id_type))
 
 
 def _r_lines(numbered: pd.DataFrame | None) -> dict:
     """doc_id -> the doc's brat R lines in ``rel_n`` order, joined by
-    newlines: ``R<n>\t<pred> Arg1:<subj> Arg2:<obj>``."""
+    newlines: ``R<n>\t<pred> Arg1:T<i1> Arg2:T<i2>``."""
     if numbered is None:
         return {}
     lines: dict = {}
-    for did, n, pred, subj, obj in zip(
+    for did, n, pred, i1, i2 in zip(
             numbered["doc_id"], numbered["rel_n"], numbered["pred"],
-            numbered["subj_id"], numbered["obj_id"]):
+            numbered["i1"], numbered["i2"]):
         lines.setdefault(did, []).append(
-            f"R{n}\t{pred} Arg1:{subj} Arg2:{obj}")
+            f"R{n}\t{pred} Arg1:T{i1} Arg2:T{i2}")
     return {did: "\n".join(ls) for did, ls in lines.items()}
 
 
@@ -693,12 +723,13 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
             # hold back the last doc: it may continue in the next batch
             boundary = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
             carry = pdf[boundary]
-            out = _filter_number(pdf[~boundary], non_rel)
+            out = _filter_number(pdf[~boundary], non_rel, ids=True)
             if out is not None:
                 yield out
         if carry is not None:
-            out = _filter_number(carry, non_rel)
+            out = _filter_number(carry, non_rel, ids=True)
             if out is not None:
                 yield out
 
-    return _with_rel_id(cand.mapInPandas(run, schema=_triples_schema(id_type)))
+    return public_triples(
+        cand.mapInPandas(run, schema=numbered_schema(id_type, ids=True)))

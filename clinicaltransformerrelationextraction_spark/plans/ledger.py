@@ -16,6 +16,25 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   writers commit, re-running a bucket is atomic (the new version becomes
   visible only via the metadata swap), and an empty replacement simply
   drops the bucket from the manifest;
+- the files store the kernel's numeric form of a triple and
+  ``triples()`` derives the rest with Catalyst projections on read:
+
+  ============  =====================================================
+  stored        ``doc_id, rel_n, pred, score, sent_diff, i1, i2``
+                (the bucket is the ``b=<bucket>`` directory only)
+  public        ``doc_id, rel_id, pred, subj_id, obj_id, score,
+                sent_diff, i1, i2, bucket``
+  derived       ``rel_id = "R" || rel_n``, ``subj_id = "T" || i1``,
+                ``obj_id = "T" || i2``,
+                ``bucket = pmod(hash(doc_id), n_buckets)``
+  ============  =====================================================
+
+  Files written before this layout stored the four derived columns and
+  no ``rel_n``. A read requests both layouts' columns, Parquet fills
+  those a file lacks with NULLs, and ``coalesce`` takes whichever the
+  file has, so old, new and mixed snapshots read the same rows. Storing
+  numbers cut a stub ``predict``'s bytes per input byte (perfbench
+  ``write_amp``, seed-1 corpus) from 0.568 to 0.486;
 - a ``_ledger`` table records (partition_id, status, n_triples, n_docs,
   wall_sec, path, version, n_buckets, config) — the per-partition lineage +
   metrics. ``n_docs`` and ``n_triples`` are per-bucket counts in one
@@ -51,15 +70,24 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..operators.scoring import numbered_schema, public_triples
 from .pipeline import run_pipeline
 
-# the triples-table schema (for empty-manifest reads, where no parquet
-# file exists to infer from)
+# the public triples-table schema, what ``LedgerRun.triples`` returns (for
+# empty-manifest reads, where no parquet file exists to infer from)
 TRIPLES_DDL = (
     "doc_id bigint, rel_id string, pred string, subj_id string, "
     "obj_id string, score double, sent_diff int, i1 int, i2 int, "
     "bucket int"
 )
+
+
+def _read_ddl(id_type: str) -> str:
+    """The requested schema of a manifest read: the stored numeric form
+    plus the derived columns that files written before it stored instead
+    (``rel_id``, ``subj_id``, ``obj_id``, ``bucket``). Parquet fills the
+    columns a file lacks with NULLs, so one read covers both layouts."""
+    return numbered_schema(id_type, ids=True) + ", rel_id string, bucket int"
 
 
 # PipelineConfig fields that change no triple: the pairs per scorer call,
@@ -348,21 +376,19 @@ class LedgerRun:
         part, o_docs = per_bucket_counts(
             docs.filter(F.element_at(F.lit(is_pending), bucket + 1)))
         # the kernel keeps the input doc_id type, so each triple's bucket
-        # is the hash of its doc_id
+        # is the hash of its doc_id; the files store the numeric form only
+        # (``triples`` derives the id strings and the bucket on read)
         trip, o_trip = per_bucket_counts(
-            run_pipeline(part, cfg, salt=self.salt).triples
-            .withColumn("bucket", bucket)
+            run_pipeline(part, cfg, salt=self.salt).numbered
+            .withColumn("b", bucket)
         )
         # Iceberg-style commit: one IMMUTABLE run directory, its version
         # above every version a row or any snapshot ever pinned, so the
-        # overwrite can only replace an uncommitted orphan. Partition on a
-        # copy so ``bucket`` stays inside the files: a manifest read of a
-        # leaf directory infers no partition column.
+        # overwrite can only replace an uncommitted orphan
         version = 1 + max([_high_water(*self._read_log())["version"],
                            *(v.get("version", -1) for v in ledger.values())])
         run_dir = f"{self.triples_dir}/data/v{version}"
-        trip.withColumn("b", F.col("bucket")).write.partitionBy("b").mode(
-            "overwrite").parquet(run_dir)
+        trip.write.partitionBy("b").mode("overwrite").parquet(run_dir)
         wall = round(time.time() - t0, 3)
         if fail_after == 0:
             raise RuntimeError("simulated failure after 0 buckets")
@@ -468,6 +494,11 @@ class LedgerRun:
             for m in s.get("manifest", {}).values()
         } | {rel(v["path"]) for v in self._read_ledger().values()
              if "path" in v}
+        # Iceberg's order: commit the truncated log, then delete, so a
+        # crash in between leaves only orphans, which the next expiry
+        # collects, and never a logged snapshot whose files are gone
+        if dropped:
+            self._write_log(kept, _high_water(snaps, high))
         fs, hroot = _hadoop_fs(spark, f"{self.triples_dir}/data")
         deleted: list[str] = []
         for st in fs.listStatus(hroot) if fs.exists(hroot) else []:
@@ -484,8 +515,6 @@ class LedgerRun:
             for d in doomed:
                 fs.delete(d.getPath(), True)
                 deleted.append(d.getPath().toString())
-        if dropped:
-            self._write_log(kept, _high_water(snaps, high))
         return deleted
 
     def resume(self, docs: DataFrame,
@@ -518,6 +547,8 @@ class LedgerRun:
                 k: v for k, v in ledger.items()
                 if v.get("status") == "done"
             }
+            n_buckets = next((v["n_buckets"] for v in ledger.values()
+                              if "n_buckets" in v), self.n_buckets)
         else:
             by_id = {s["snapshot_id"]: s for s in self.snapshots()}
             if snapshot_id not in by_id:
@@ -526,12 +557,20 @@ class LedgerRun:
                     f"{sorted(by_id)}); it may have been expired"
                 )
             manifest = by_id[snapshot_id]["manifest"]
+            n_buckets = by_id[snapshot_id].get("n_buckets", self.n_buckets)
         paths = [
             m["path"] for m in manifest.values() if m["n_triples"] > 0
         ]
         if not paths:
             return spark.createDataFrame([], TRIPLES_DDL)
-        return spark.read.parquet(*paths)
+        # every file of the table has the kernel's doc_id type
+        id_type = spark.read.parquet(paths[0]).schema["doc_id"].dataType
+        stored = spark.read.schema(_read_ddl(id_type.simpleString())) \
+            .parquet(*paths)
+        # n_buckets is pinned, so the hash is the bucket the write
+        # partitioned by; files of the old layout hold it
+        return public_triples(stored.withColumn("bucket", F.coalesce(
+            "bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets)))))
 
 
 def latest_checkpoint(ckpt_root: str, prefix: str = "ckpt_") -> str | None:

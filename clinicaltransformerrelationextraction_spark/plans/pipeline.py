@@ -25,13 +25,25 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.postprocess import link_triples
-from ..operators.scoring import enum_score_brat, enum_score_filter_number
+from ..operators.scoring import (
+    enum_score_brat,
+    enum_score_number,
+    public_triples,
+)
 from ..operators.segmentation import mentions
 
 
 @dataclass
 class PipelineResult:
-    triples: DataFrame
+    """``numbered``: the doc-row kernel's numeric form ``(doc_id, rel_n,
+    pred, score, sent_diff, i1, i2)``, what the ledger stores;
+    ``triples``: the public triples derived from it JVM-side."""
+
+    numbered: DataFrame
+
+    @property
+    def triples(self) -> DataFrame:
+        return public_triples(self.numbered)
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,10 +93,11 @@ def run_pipeline(
     salt: bool = False,
 ) -> PipelineResult:
     """documents -> triples (doc_id, rel_id, pred, subj_id, obj_id, score,
-    sent_diff, i1, i2) through the doc-row kernel, batch or stream, after
-    the optional salted repartition of the documents (``_salted``)."""
+    sent_diff, i1, i2) through the doc-row kernel
+    (``scoring.enum_score_filter_number``), batch or stream, after the
+    optional salted repartition of the documents (``_salted``)."""
     cfg = cfg or PipelineConfig()
-    return PipelineResult(triples=enum_score_filter_number(
+    return PipelineResult(numbered=enum_score_number(
         _salted(docs, cfg, doc_col, salt), cfg, doc_col=doc_col))
 
 

@@ -462,6 +462,47 @@ def test_ledger_expire_rejects_negative_keep_last(spark, tmp_path):
     assert run.snapshots() == before
 
 
+def test_ledger_expire_crash_before_log_write_keeps_snapshots_readable(
+        spark, tmp_path, monkeypatch):
+    """``expire_snapshots`` commits the truncated log before it deletes
+    anything: a crash at the log write leaves every logged snapshot
+    readable (deleting first left snapshot 1 in the log with its files
+    gone, so reading it raised PATH_NOT_FOUND). The next expiry collects
+    what the crash left."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
+    run = LedgerRun(out_dir=str(tmp_path / "exp_crash"), n_buckets=2)
+    run.run(docs)
+    ledger = run._read_ledger()
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs)
+    rows = {s["snapshot_id"]: Counter(map(tuple, run.triples(
+        spark, snapshot_id=s["snapshot_id"]).collect()))
+        for s in run.snapshots()}
+    assert sorted(rows) == [1, 2] and all(rows.values())
+    current = Counter(map(tuple, run.triples(spark).collect()))
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash at the log write")
+
+    monkeypatch.setattr(run, "_write_log", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run.expire_snapshots(spark, keep_last=1)
+    monkeypatch.undo()
+    assert [s["snapshot_id"] for s in run.snapshots()] == [1, 2]
+    for snapshot_id, want in rows.items():
+        got = run.triples(spark, snapshot_id=snapshot_id).collect()
+        assert Counter(map(tuple, got)) == want, snapshot_id
+
+    assert _under_data(run.expire_snapshots(spark, keep_last=1)) == \
+        ["v0/b=0"]
+    with pytest.raises(ValueError, match="expired"):
+        run.triples(spark, snapshot_id=1)
+    assert Counter(map(tuple, run.triples(
+        spark, snapshot_id=2).collect())) == rows[2]
+    assert Counter(map(tuple, run.triples(spark).collect())) == current
+
+
 def test_streaming_availablenow_incremental(spark, tmp_path):
     from clinicaltransformerrelationextraction_spark.streaming import (
         stream_pipeline,

@@ -156,3 +156,107 @@ def test_ledger_reads_snapshots_of_two_codecs(spark, tmp_path):
     for snapshot_id in (1, 2, None):
         got = run.triples(spark, snapshot_id=snapshot_id).collect()
         assert Counter(map(tuple, got)) == want, snapshot_id
+
+
+# what the ledger's files store, and the public table its reads return
+STORED = ("doc_id", "rel_n", "pred", "score", "sent_diff", "i1", "i2")
+PUBLIC = [("rel_id", "string"), ("pred", "string"), ("subj_id", "string"),
+          ("obj_id", "string"), ("score", "double"), ("sent_diff", "int"),
+          ("i1", "int"), ("i2", "int"), ("bucket", "int")]
+
+
+def _stored_columns(paths) -> set[tuple]:
+    """The column names of every Parquet file under ``paths``, as pyarrow
+    reads them."""
+    return {tuple(pq.ParquetFile(f).schema_arrow.names)
+            for p in paths
+            for f in glob.glob(f"{p}/**/*.parquet", recursive=True)}
+
+
+def _one_shot(docs, n):
+    """The public rows a ledger read returns: ``run_pipeline``'s triples
+    with each doc's bucket."""
+    return run_pipeline(docs, CFG).triples.withColumn(
+        "bucket", F.pmod(F.hash("doc_id"), F.lit(n)))
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_ledger_stores_numbers_and_reads_public_triples(spark, tmp_path,
+                                                        id_type):
+    """The files under ``triples/data/`` hold the numeric form only;
+    ``triples()`` returns the public columns, in order and with their
+    dtypes, after a fresh run, a crash + resume and under time travel."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
+    if id_type == "string":
+        docs = docs.withColumn("doc_id",
+                               F.concat(F.lit("doc-"), F.col("doc_id")))
+    dtypes = [("doc_id", id_type), *PUBLIC]
+    want_df = _one_shot(docs, 2)
+    assert want_df.dtypes == dtypes
+    want = Counter(map(tuple, want_df.collect()))
+    assert want
+
+    fresh = LedgerRun(out_dir=str(tmp_path / "fresh"), n_buckets=2)
+    fresh.run(docs, CFG)
+    ledger = fresh._read_ledger()
+    ledger["0"]["status"] = "redo"
+    fresh._write_ledger(ledger)
+    fresh.resume(docs, CFG)
+    crashed = LedgerRun(out_dir=str(tmp_path / "crashed"), n_buckets=2)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        crashed.run(docs, CFG, fail_after=1)
+    crashed.resume(docs, CFG)
+    for run, n_snaps in ((fresh, 2), (crashed, 1)):
+        assert _stored_columns([f"{run.triples_dir}/data"]) == {STORED}
+        ids = [s["snapshot_id"] for s in run.snapshots()]
+        assert len(ids) == n_snaps
+        for snapshot_id in (None, *ids):
+            got = run.triples(spark, snapshot_id=snapshot_id)
+            assert got.dtypes == dtypes, snapshot_id
+            assert Counter(map(tuple, got.collect())) == want, snapshot_id
+
+
+def test_ledger_reads_snapshots_of_two_layouts(spark, tmp_path):
+    """A run written in the layout that stored the id strings and the
+    bucket, then a re-run of bucket 0 in the numeric layout: both
+    snapshots and the current mixed table read the one-shot rows, and an
+    empty manifest reads the same public schema."""
+    from clinicaltransformerrelationextraction_spark.plans.ledger import (
+        config_digest,
+    )
+
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
+    run = LedgerRun(out_dir=str(tmp_path / "layouts"), n_buckets=2)
+    trip = _one_shot(docs, 2)
+    run_dir = f"{run.triples_dir}/data/v0"
+    trip.withColumn("b", F.col("bucket")).write.partitionBy("b").parquet(
+        run_dir)
+    config = config_digest(CFG)
+    ledger = {
+        str(b): {"status": "done",
+                 "n_docs": docs.filter(
+                     F.pmod(F.hash("doc_id"), F.lit(2)) == b).count(),
+                 "n_triples": trip.filter(F.col("bucket") == b).count(),
+                 "wall_sec": 0.0, "path": f"{run_dir}/b={b}", "version": 0,
+                 "n_buckets": 2, "config": config}
+        for b in range(2)}
+    run._write_ledger(ledger)
+    run._append_snapshot(ledger, 2, config)
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs, CFG)
+    s1, s2 = (s["manifest"] for s in run.snapshots())
+    old = {tuple(c for c, _ in trip.dtypes)}
+    assert _stored_columns([s1["0"]["path"], s1["1"]["path"]]) == old
+    assert _stored_columns([s2["0"]["path"]]) == {STORED}
+    assert s2["1"] == s1["1"]  # the current table mixes both layouts
+    one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
+    one.run(docs, CFG)
+    want = Counter(map(tuple, one.triples(spark).collect()))
+    assert want
+    for snapshot_id in (1, 2, None):
+        got = run.triples(spark, snapshot_id=snapshot_id)
+        assert got.dtypes == [("doc_id", "bigint"), *PUBLIC], snapshot_id
+        assert Counter(map(tuple, got.collect())) == want, snapshot_id
+    empty = LedgerRun(out_dir=str(tmp_path / "empty"), n_buckets=2)
+    assert empty.triples(spark).dtypes == run.triples(spark).dtypes

@@ -28,7 +28,9 @@ that predict's output dir per sink (``triples``: the ledger's data
 files and its JSON metadata; ``brat``) and per class: Parquet data,
 Parquet footers (the file metadata, its length and the closing magic),
 ``.crc`` and ``_SUCCESS`` files, ledger JSON, and anything else. The
-classes sum to the bytes perfbench's ``write_amp`` counts. Usage, from
+classes sum to the bytes perfbench's ``write_amp`` counts. Each sink also
+carries its compressed bytes per column (``columns``), read from the
+Parquet footers. Usage, from
 the root of a checkout:
 
     python3 tools/cpu_split.py --predicts 30
@@ -50,6 +52,9 @@ import shutil
 import statistics
 import sys
 import time
+from collections import Counter
+
+import pyarrow.parquet as pq
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
@@ -149,10 +154,26 @@ def _footer_bytes(path: str) -> int:
         return int.from_bytes(f.read(4), "little") + 8
 
 
+def column_bytes(path: str) -> Counter:
+    """Compressed bytes per column of a Parquet file, page headers
+    included, read from its footer. The file's other data bytes are the
+    leading magic and what the writer adds besides the column chunks
+    (page indexes; pyarrow also copies each chunk's metadata)."""
+    md = pq.ParquetFile(path).metadata
+    out: Counter = Counter()
+    for g in range(md.num_row_groups):
+        for c in range(md.num_columns):
+            col = md.row_group(g).column(c)
+            out[col.path_in_schema] += col.total_compressed_size
+    return out
+
+
 def byte_split(out_dir: str) -> dict:
     """Bytes under a predict's ``out_dir``, per sink and class, with each
-    sink's Parquet file count; ``total`` is every file's bytes."""
-    sinks = {s: dict.fromkeys((*BYTE_CLASSES, "parquet_files"), 0)
+    sink's Parquet file count and compressed bytes per column
+    (``columns``); ``total`` is every file's bytes."""
+    sinks = {s: {**dict.fromkeys((*BYTE_CLASSES, "parquet_files"), 0),
+                 "columns": Counter()}
              for s in ("triples", "brat")}
     for base, _, files in os.walk(out_dir):
         top = os.path.relpath(base, out_dir).split(os.sep)[0]
@@ -165,6 +186,7 @@ def byte_split(out_dir: str) -> dict:
                 row["parquet_footers"] += footer
                 row["parquet_data"] += size - footer
                 row["parquet_files"] += 1
+                row["columns"].update(column_bytes(path))
             elif name.endswith(".crc") or name == "_SUCCESS":
                 row["crc_success"] += size
             elif name.endswith(".json"):
