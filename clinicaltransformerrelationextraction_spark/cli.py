@@ -106,22 +106,20 @@ def _cfg_from(args: argparse.Namespace) -> PipelineConfig:
 
 def cmd_predict(args: argparse.Namespace, spark=None) -> dict:
     """One ledger run (pending buckets only, so it also finishes a crashed
-    out_dir), then brat in one doc-row pass over the docs
-    (``run_brat``), scored under this run's config: it equals brat over
-    the ledger's triples whenever every committed bucket was scored under
-    the same config."""
+    out_dir) that also writes ``<output>/brat``: one doc-row pass scores
+    every input doc once, and the ledger write takes the pending buckets'
+    triples and the brat write every doc's ``.ann`` row from it
+    (``LedgerRun.run(..., brat=...)``). After it brat equals brat over the
+    ledger's triples whenever every committed bucket was scored under the
+    same config, which the ledger's config pin ensures."""
     from .plans.ledger import LedgerRun
-    from .plans.pipeline import run_brat
     from .session import get_spark
 
     spark = spark or get_spark(app_name="ctre-predict")
     docs = spark.read.parquet(args.input)
-    cfg = _cfg_from(args)
     run = LedgerRun(out_dir=args.output, n_buckets=args.n_buckets,
                     salt=args.salt)
-    ledger = run.run(docs, cfg)
-    run_brat(docs, cfg, salt=args.salt).write.mode("overwrite").parquet(
-        f"{args.output}/brat")
+    ledger = run.run(docs, _cfg_from(args), brat=f"{args.output}/brat")
     return {"n_triples": sum(v["n_triples"] for v in ledger.values())}
 
 

@@ -11,9 +11,11 @@ Reference semantics:
 - entities ⋈ relations per file merge  post_processing.py:66-85 (J5)
 
 ``brat_render`` is the Catalyst form of brat rendering (groupBy +
-collect_list + array_sort per side, then a join). The product path,
-``plans/pipeline.run_brat``, renders each doc's ``.ann`` text inside the
-doc-row scoring pass (``scoring.enum_score_brat``) with no shuffle;
+collect_list + array_sort per side, then a join). The product path
+renders each doc's ``.ann`` text inside the doc-row scoring pass
+(``scoring.enum_score_number(..., brat=True)``) with no shuffle: ``cli
+predict`` writes it from its ledger run's pass, ``plans/pipeline.run_brat``
+from a pass of its own;
 ``brat_render`` stays as its twin, the form that pass is pinned against
 (tests/test_kernel_path.py, tests/test_cli.py) and that
 perfbench/layers.py times.

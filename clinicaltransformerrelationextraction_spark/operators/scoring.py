@@ -48,7 +48,7 @@ from .segmentation import doc_mention_rows
 __all__ = [
     "score_candidates", "score_filter_number", "enum_score_filter_number",
     "enum_score_number", "numbered_schema", "public_triples",
-    "enum_score_brat",
+    "triple_rows", "brat_rows", "enum_score_brat",
     "truncate_pair", "register_scorer", "SCORER_REGISTRY",
 ]
 
@@ -533,19 +533,24 @@ def public_triples(numbered: DataFrame) -> DataFrame:
 
 
 def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
-              text_col: str) -> tuple[DataFrame, Callable]:
-    """The doc-row input of a per-doc scoring pass, and ``flushes``, the
-    per-task generator both doc-row kernels consume. ``flushes(batches)``
-    enumerates and marks each doc's candidate rows, buffers them and
-    scores them once ``cfg.batch_size`` pairs are pending, flushing only at
-    a doc boundary, so a scorer call holds at most ``batch_size +
-    max_pairs_per_doc - 1`` rows. It yields ``(docs, numbered)``: the
-    ``(doc_id, text)`` of every doc since the last flush, those without
-    candidates included, and ``_filter_number`` of their scored rows (None
-    when nothing survives). Docs not yet scored are yielded with None at
-    the end of an input batch when no rows are pending, so a run of docs
-    without candidates is not held across Arrow batches. A NULL doc_id
-    raises a ``ValueError`` naming it: numbering and rendering key on it."""
+              text_col: str, brat: bool) -> DataFrame:
+    """The one per-doc scoring kernel: one Arrow-batched ``mapInPandas``
+    pass over the document rows that enumerates and marks each doc's
+    candidate rows, buffers them and scores them once ``cfg.batch_size``
+    pairs are pending, flushing only at a doc boundary, so a scorer call
+    holds at most ``batch_size + max_pairs_per_doc - 1`` rows. Each flush
+    emits ``_filter_number`` of its scored rows, the numeric form of a
+    triple (``numbered_schema``).
+
+    With ``brat`` the schema gains ``ann_text``: triple rows carry it NULL,
+    and every doc with a gazetteer mention adds one row, triple columns
+    NULL, holding its brat ``.ann`` text: its T lines
+    (``segmentation.doc_mention_rows``, in ``tok_idx`` order:
+    ``T<i>\t<type> <start> <end>\t<surface>``) then its R lines (in
+    ``rel_n`` order). A doc's rows follow the flush that scored it, and a
+    run of docs without candidates is flushed at the end of its input
+    batch instead of being held across Arrow batches. A NULL doc_id raises
+    a ``ValueError`` naming it: numbering and rendering key on it."""
     factory = _resolve_factory(cfg)
     emit = "lengths" if _needs_lengths(factory) else "text"
     labels = list(cfg.labels)
@@ -554,19 +559,43 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
     batch_size = max(cfg.batch_size, 1)
     rows_of = doc_candidate_rows(cfg, emit)
     cols = candidate_columns(emit)
+    src = doc_rows_input(docs, doc_col, text_col)
+    schema = numbered_schema(src.schema["doc_id"].dataType.simpleString())
+    if brat:
+        schema += ", ann_text string"
+        mention_rows = doc_mention_rows(cfg)
+        out_cols = [f.split(" ")[0] for f in schema.split(", ")]
+        no_triple = (None,) * (len(out_cols) - 2)
 
-    def flushes(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         set_up_python_worker()
         scorer = factory(cfg, labels)
 
-        def score(rows: list) -> pd.DataFrame | None:
-            if not rows:
-                return None
-            pdf = pd.DataFrame(rows, columns=cols)
-            idx, sc = scorer(pdf)
-            pdf["pred_label"] = label_arr[idx]
-            pdf["score"] = sc
-            return _filter_number(pdf, non_rel)
+        def flush(seen: list, rows: list) -> Iterator[pd.DataFrame]:
+            numbered = None
+            if rows:
+                pdf = pd.DataFrame(rows, columns=cols)
+                idx, sc = scorer(pdf)
+                pdf["pred_label"] = label_arr[idx]
+                pdf["score"] = sc
+                numbered = _filter_number(pdf, non_rel)
+            if numbered is not None:
+                yield numbered.assign(ann_text=None) if brat else numbered
+            if not brat:
+                return
+            r_lines = _r_lines(numbered)
+            anns = []
+            for did, tx in seen:
+                men = mention_rows(did, tx)
+                if not men:
+                    continue
+                ann = "\n".join(f"{mid}\t{et} {st} {en}\t{surf}"
+                                for _, mid, et, _, _, surf, st, en in men)
+                r = r_lines.get(did)
+                anns.append((did, *no_triple,
+                             ann if r is None else f"{ann}\n{r}"))
+            if anns:
+                yield pd.DataFrame(anns, columns=out_cols)
 
         pending: list = []
         seen: list = []
@@ -580,15 +609,15 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
                 seen.append((did, tx))
                 pending += rows_of(did, tx)
                 if len(pending) >= batch_size:
-                    yield seen, score(pending)
+                    yield from flush(seen, pending)
                     pending, seen = [], []
             if seen and not pending:
-                yield seen, None
+                yield from flush(seen, pending)
                 seen = []
         if seen:
-            yield seen, score(pending)
+            yield from flush(seen, pending)
 
-    return doc_rows_input(docs, doc_col, text_col), flushes
+    return src.mapInPandas(run, schema=schema)
 
 
 def enum_score_filter_number(
@@ -619,21 +648,30 @@ def enum_score_filter_number(
 
 def enum_score_number(
     docs: DataFrame, cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id", text_col: str = "text",
+    doc_col: str = "doc_id", text_col: str = "text", brat: bool = False,
 ) -> DataFrame:
-    """``enum_score_filter_number``'s doc-row pass, emitting the numeric
-    form ``(doc_id, rel_n, pred, score, sent_diff, i1, i2)``: no id string
-    crosses the Arrow boundary. The ledger stores this form."""
-    cfg = cfg or PipelineConfig()
-    src, flushes = _doc_pass(docs, cfg, doc_col, text_col)
-    id_type = src.schema["doc_id"].dataType.simpleString()
+    """``enum_score_filter_number``'s doc-row pass (``_doc_pass``),
+    emitting the numeric form ``(doc_id, rel_n, pred, score, sent_diff, i1,
+    i2)``: no id string crosses the Arrow boundary. The ledger stores this
+    form. ``brat=True`` adds the ``ann_text`` column and each doc's brat
+    row to the same pass; ``triple_rows`` and ``brat_rows`` split them."""
+    return _doc_pass(docs, cfg or PipelineConfig(), doc_col, text_col, brat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _, numbered in flushes(batches):
-            if numbered is not None:
-                yield numbered
 
-    return src.mapInPandas(run, schema=numbered_schema(id_type))
+def triple_rows(rows: DataFrame) -> DataFrame:
+    """The numeric triples of a doc-row pass, either form of
+    ``enum_score_number``: the brat form's triple rows, without
+    ``ann_text``."""
+    if "ann_text" not in rows.columns:
+        return rows
+    return rows.filter(F.col("rel_n").isNotNull()).drop("ann_text")
+
+
+def brat_rows(rows: DataFrame) -> DataFrame:
+    """The ``(doc_id, ann_text)`` rows of a brat-form doc-row pass
+    (``enum_score_number(..., brat=True)``)."""
+    return rows.filter(F.col("ann_text").isNotNull()).select(
+        "doc_id", "ann_text")
 
 
 def _r_lines(numbered: pd.DataFrame | None) -> dict:
@@ -654,37 +692,16 @@ def enum_score_brat(
     docs: DataFrame, cfg: PipelineConfig | None = None,
     doc_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
-    """documents -> (doc_id, ann_text) brat ``.ann`` text in ONE
-    Arrow-batched mapInPandas pass over the document rows, no shuffle: the
-    triples pass of ``enum_score_filter_number`` (``_doc_pass``), rendering
-    each doc as its T lines (``segmentation.doc_mention_rows``, in
-    ``tok_idx`` order: ``T<i>\t<type> <start> <end>\t<surface>``) then
-    its R lines (in ``rel_n`` order). One row per doc with at least one
-    gazetteer mention. Rows, schema and text equal
+    """documents -> (doc_id, ann_text) brat ``.ann`` text: the brat rows
+    of the doc-row pass ``enum_score_number(..., brat=True)``, one per doc
+    with at least one gazetteer mention, no shuffle. It scores the docs
+    itself; ``LedgerRun.run(..., brat=path)`` writes these rows from the
+    pass its triples come from instead. Rows, schema and text equal
     ``postprocess.brat_render(mentions(docs), enum_score_filter_number(
     docs))``, the Catalyst form this pass replaces (pinned in
     tests/test_kernel_path.py; the stub by the q_brat_render oracle)."""
-    cfg = cfg or PipelineConfig()
-    src, flushes = _doc_pass(docs, cfg, doc_col, text_col)
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    mention_rows = doc_mention_rows(cfg)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for seen, numbered in flushes(batches):
-            r_lines = _r_lines(numbered)
-            out = []
-            for did, tx in seen:
-                men = mention_rows(did, tx)
-                if not men:
-                    continue
-                ann = "\n".join(f"{mid}\t{et} {st} {en}\t{surf}"
-                                for _, mid, et, _, _, surf, st, en in men)
-                r = r_lines.get(did)
-                out.append((did, ann if r is None else f"{ann}\n{r}"))
-            if out:
-                yield pd.DataFrame(out, columns=["doc_id", "ann_text"])
-
-    return src.mapInPandas(run, schema=f"doc_id {id_type}, ann_text string")
+    return brat_rows(enum_score_number(docs, cfg, doc_col, text_col,
+                                       brat=True))
 
 
 def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:

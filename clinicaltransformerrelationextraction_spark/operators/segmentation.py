@@ -57,7 +57,7 @@ def doc_mention_rows(cfg: PipelineConfig) -> Callable:
     surface, start, end)``. Character offsets are a running sum of token
     lengths plus the single-space separators, so ``text[start:end]`` is
     the surface. NULL text gives no rows. The one mention scan behind
-    ``mentions`` and the brat T lines of ``scoring.enum_score_brat``."""
+    ``mentions`` and the brat T lines of ``scoring._doc_pass``."""
     vocab = dict(cfg.ent_vocab)
     sl = cfg.sent_len
 

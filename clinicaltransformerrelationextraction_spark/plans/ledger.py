@@ -16,6 +16,13 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   writers commit, re-running a bucket is atomic (the new version becomes
   visible only via the metadata swap), and an empty replacement simply
   drops the bucket from the manifest;
+- ``run(..., brat=path)`` (what ``cli predict`` runs) is one pass and two
+  writes: the pass scores every input doc once and also renders its brat
+  row; it is persisted (``MEMORY_AND_DISK_DESER``), the triples write
+  keeps the pending buckets' triples through the same array-literal mask,
+  and brat is overwritten from the same pass after the row commits and
+  the snapshot, so a crashed out_dir gets whole brat too. ``resume`` scores
+  only the pending buckets' docs and writes no brat;
 - the files store the kernel's numeric form of a triple and
   ``triples()`` derives the rest with Catalyst projections on read:
 
@@ -36,14 +43,17 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   numbers cut a stub ``predict``'s bytes per input byte (perfbench
   ``write_amp``, seed-1 corpus) from 0.568 to 0.486;
 - a ``_ledger`` table records (partition_id, status, n_triples, n_docs,
-  wall_sec, path, version, n_buckets, config) — the per-partition lineage +
-  metrics. ``n_docs`` and ``n_triples`` are per-bucket counts in one
+  wall_sec, path, version, n_buckets, config, id_type) — the per-partition
+  lineage + metrics. ``n_docs`` and ``n_triples`` are per-bucket counts in one
   Observation per side of the write, so a run costs only the Spark jobs
   of that write; every row of one write records that write's
   ``wall_sec``. ``n_buckets`` pins the bucketing: a run with another count
   raises instead of re-bucketing over done rows. ``config`` pins the
   scoring config the same way (``config_digest``), so a resume under
-  another scorer raises instead of mixing two scorers' buckets;
+  another scorer raises instead of mixing two scorers' buckets.
+  ``id_type``, the kernel's doc_id type, is recorded by rows and snapshots
+  so ``triples()`` needs no Parquet schema inference (a Spark job) before
+  its action; ledgers written before the field infer it from one file;
 - ``_snapshots.json`` appends one snapshot per completed run with the full
   bucket->file manifest and parent chaining, and keeps the highest
   snapshot id and data version it ever held, so expiry never lets an id
@@ -66,12 +76,13 @@ import os
 import time
 from dataclasses import asdict, dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.scoring import numbered_schema, public_triples
-from .pipeline import run_pipeline
+from ..operators.scoring import brat_rows, numbered_schema, public_triples
+from .pipeline import run_brat, run_pipeline
 
 # the public triples-table schema, what ``LedgerRun.triples`` returns (for
 # empty-manifest reads, where no parquet file exists to infer from)
@@ -257,6 +268,12 @@ def _high_water(snaps: list[dict], high: dict) -> dict:
     }
 
 
+def _id_type(rows) -> str | None:
+    """The kernel's doc_id type (``simpleString``) that ledger rows record;
+    None when every row predates the ``id_type`` field."""
+    return next((v["id_type"] for v in rows if "id_type" in v), None)
+
+
 @dataclass
 class LedgerRun:
     """Checkpointed, resumable pipeline run over hash buckets.
@@ -334,13 +351,21 @@ class LedgerRun:
         docs: DataFrame,
         cfg: PipelineConfig | None = None,
         fail_after: int | None = None,
+        brat: str | None = None,
     ) -> dict[str, dict]:
         """Score every not-yet-done bucket in one write; idempotent per
         bucket. ``fail_after`` aborts after N row commits (for resume
         tests) — simulating a driver crash mid-commit; 0 aborts after the
         write, before any commit. With nothing pending it starts no Spark
         job; it only appends the snapshot of a run that crashed after its
-        last row commit, if the log lacks it."""
+        last row commit, if the log lacks it.
+
+        ``brat``: also overwrite that path with the brat rows of every
+        input doc (``run_brat``'s rows), after the row commits and the
+        snapshot. Then the pass scores every doc once: it is persisted
+        (``MEMORY_AND_DISK_DESER``), the triples write keeps the pending
+        buckets' triples, and brat is written from the same pass, so a
+        crashed out_dir also gets whole brat."""
         if fail_after is not None and fail_after < 0:
             raise ValueError(f"fail_after must be >= 0, got {fail_after}")
         cfg = cfg or PipelineConfig()
@@ -359,60 +384,87 @@ class LedgerRun:
                           for m in _manifest(ledger).values())
             if written:
                 self._append_snapshot(ledger, written, config)
+            if brat is not None:
+                run_brat(docs, cfg, salt=self.salt).write.mode(
+                    "overwrite").parquet(brat)
             return ledger
         t0 = time.time()
         bucket = F.pmod(F.hash("doc_id"), F.lit(self.n_buckets))
+        # The generated code depends on n_buckets alone: which docs the
+        # pass scores and which buckets' triples the write keeps are array
+        # literals (reference objects, not inlined constants), and every
+        # bucket gets a count column (buckets not scored count 0 docs). So
+        # a resume reuses the classes a full run compiled, and a run with
+        # brat, which scores every doc (an all-True mask), runs the classes
+        # of one without: a predict leaves a resume's code compiled and
+        # warm.
+        scored = [True] * self.n_buckets if brat is not None else is_pending
+        in_scored = F.element_at(F.lit(scored), bucket + 1)
+        in_pending = F.element_at(F.lit(is_pending), bucket + 1)
 
-        # The generated code depends on n_buckets alone, so a resume
-        # reuses the classes a full run compiled: the pending set is an
-        # array literal (a reference object, not inlined constants), and
-        # every bucket gets a count column (non-pending ones count 0 docs).
         def per_bucket_counts(df: DataFrame):
             obs = Observation()
             return df.observe(obs, *[F.count(F.when(bucket == b, 1))
                                      .alias(str(b))
                                      for b in range(self.n_buckets)]), obs
 
-        part, o_docs = per_bucket_counts(
-            docs.filter(F.element_at(F.lit(is_pending), bucket + 1)))
-        # the kernel keeps the input doc_id type, so each triple's bucket
-        # is the hash of its doc_id; the files store the numeric form only
-        # (``triples`` derives the id strings and the bucket on read)
-        trip, o_trip = per_bucket_counts(
-            run_pipeline(part, cfg, salt=self.salt).numbered
-            .withColumn("b", bucket)
-        )
-        # Iceberg-style commit: one IMMUTABLE run directory, its version
-        # above every version a row or any snapshot ever pinned, so the
-        # overwrite can only replace an uncommitted orphan
-        version = 1 + max([_high_water(*self._read_log())["version"],
-                           *(v.get("version", -1) for v in ledger.values())])
-        run_dir = f"{self.triples_dir}/data/v{version}"
-        trip.write.partitionBy("b").mode("overwrite").parquet(run_dir)
-        wall = round(time.time() - t0, 3)
-        if fail_after == 0:
-            raise RuntimeError("simulated failure after 0 buckets")
-        for done, b in enumerate(pending, 1):
-            path, n_triples = f"{run_dir}/b={b}", o_trip.get[str(b)]
-            if not n_triples:  # partitionBy writes no directory for it
-                fs, hpath = _hadoop_fs(docs.sparkSession, path)
-                fs.mkdirs(hpath)
-            ledger[str(b)] = {
-                "status": "done",
-                "n_docs": o_docs.get[str(b)],
-                "n_triples": n_triples,
-                "wall_sec": wall,
-                "path": path,
-                "version": version,
-                "n_buckets": self.n_buckets,
-                "config": config,
-            }
-            self._write_ledger(ledger)
-            if fail_after is not None and done >= fail_after:
-                raise RuntimeError(
-                    f"simulated failure after {done} buckets"
-                )
-        self._append_snapshot(ledger, len(pending), config)
+        part, o_docs = per_bucket_counts(docs.filter(in_scored))
+        passed = run_pipeline(part, cfg, salt=self.salt,
+                              brat=brat is not None).rows
+        if brat is not None:
+            # memory and disk, so at scale the pass spills instead of being
+            # scored again; deserialized, because the cached column batches
+            # are byte buffers already and serializing them again costs CPU
+            passed.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        try:
+            # the pending buckets' triples, without the brat rows; the
+            # same filter keeps every row of a pass without brat. The
+            # kernel keeps the input doc_id type, so each triple's bucket
+            # is the hash of its doc_id; the files store the numeric form
+            # only (``triples`` derives the id strings and the bucket on
+            # read)
+            trip, o_trip = per_bucket_counts(
+                passed.filter(F.col("rel_n").isNotNull() & in_pending)
+                .drop("ann_text").withColumn("b", bucket))
+            id_type = trip.schema["doc_id"].dataType.simpleString()
+            # Iceberg-style commit: one IMMUTABLE run directory, its version
+            # above every version a row or any snapshot ever pinned, so the
+            # overwrite can only replace an uncommitted orphan
+            version = 1 + max([
+                _high_water(*self._read_log())["version"],
+                *(v.get("version", -1) for v in ledger.values())])
+            run_dir = f"{self.triples_dir}/data/v{version}"
+            trip.write.partitionBy("b").mode("overwrite").parquet(run_dir)
+            wall = round(time.time() - t0, 3)
+            if fail_after == 0:
+                raise RuntimeError("simulated failure after 0 buckets")
+            for done, b in enumerate(pending, 1):
+                path, n_triples = f"{run_dir}/b={b}", o_trip.get[str(b)]
+                if not n_triples:  # partitionBy writes no directory for it
+                    fs, hpath = _hadoop_fs(docs.sparkSession, path)
+                    fs.mkdirs(hpath)
+                ledger[str(b)] = {
+                    "status": "done",
+                    "n_docs": o_docs.get[str(b)],
+                    "n_triples": n_triples,
+                    "wall_sec": wall,
+                    "path": path,
+                    "version": version,
+                    "n_buckets": self.n_buckets,
+                    "config": config,
+                    "id_type": id_type,
+                }
+                self._write_ledger(ledger)
+                if fail_after is not None and done >= fail_after:
+                    raise RuntimeError(
+                        f"simulated failure after {done} buckets"
+                    )
+            self._append_snapshot(ledger, len(pending), config)
+            if brat is not None:
+                brat_rows(passed).write.mode("overwrite").parquet(brat)
+        finally:
+            if brat is not None:
+                passed.unpersist()
         return ledger
 
     # --- snapshot log (Iceberg-metadata analog) ----------------------------
@@ -459,6 +511,7 @@ class LedgerRun:
             ),
             "n_buckets": self.n_buckets,
             "config": config,
+            "id_type": _id_type(ledger.values()),
             "total_triples": sum(
                 v.get("n_triples", 0) for v in ledger.values()
             ),
@@ -549,6 +602,7 @@ class LedgerRun:
             }
             n_buckets = next((v["n_buckets"] for v in ledger.values()
                               if "n_buckets" in v), self.n_buckets)
+            id_type = _id_type(manifest.values())
         else:
             by_id = {s["snapshot_id"]: s for s in self.snapshots()}
             if snapshot_id not in by_id:
@@ -558,15 +612,19 @@ class LedgerRun:
                 )
             manifest = by_id[snapshot_id]["manifest"]
             n_buckets = by_id[snapshot_id].get("n_buckets", self.n_buckets)
+            id_type = by_id[snapshot_id].get("id_type")
         paths = [
             m["path"] for m in manifest.values() if m["n_triples"] > 0
         ]
         if not paths:
             return spark.createDataFrame([], TRIPLES_DDL)
-        # every file of the table has the kernel's doc_id type
-        id_type = spark.read.parquet(paths[0]).schema["doc_id"].dataType
-        stored = spark.read.schema(_read_ddl(id_type.simpleString())) \
-            .parquet(*paths)
+        if id_type is None:
+            # a ledger written before rows recorded the type: every file
+            # has the kernel's doc_id type, so one file's schema tells it
+            # (Parquet schema inference, one Spark job)
+            id_type = spark.read.parquet(paths[0]).schema["doc_id"] \
+                .dataType.simpleString()
+        stored = spark.read.schema(_read_ddl(id_type)).parquet(*paths)
         # n_buckets is pinned, so the hash is the bucket the write
         # partitioned by; files of the old layout hold it
         return public_triples(stored.withColumn("bucket", F.coalesce(

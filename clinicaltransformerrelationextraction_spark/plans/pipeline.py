@@ -6,14 +6,16 @@ pages →(U1 segment)→ mentions →(J1+F3+F4 candidate gen)→ marked pairs
 triples.
 
 Physical shape at scale (pinned in tests/test_plan_shapes.py): one narrow
-Arrow-batched doc-row kernel (``scoring.enum_score_filter_number``) does
+Arrow-batched doc-row kernel (``scoring.enum_score_number``) does
 enumerate → mark → score → NonRel filter → number per document, for every
-scorer backend and for streams — zero shuffle, no Window. ``run_brat`` is
-the same pass rendering each doc's brat ``.ann`` text
-(``scoring.enum_score_brat``) instead of emitting triples: no second
-mention scan, no triples read-back, no groupBy or join. The optional
-salted repartition of the DOCS equalizes per-task load when host domains
-skew document sizes (north rule); docs stay whole, so numbering holds.
+scorer backend and for streams — zero shuffle, no Window. With ``brat``
+the same pass also renders each doc's brat ``.ann`` text: ``run_brat`` is
+that pass's brat rows, and ``cli predict`` writes the triples and brat
+from one persisted pass (``LedgerRun.run(..., brat=...)``), so each doc is
+scored once: no second mention scan, no triples read-back, no groupBy or
+join. The optional salted repartition of the DOCS equalizes per-task load
+when host domains skew document sizes (north rule); docs stay whole, so
+numbering holds.
 """
 
 from __future__ import annotations
@@ -29,17 +31,24 @@ from ..operators.scoring import (
     enum_score_brat,
     enum_score_number,
     public_triples,
+    triple_rows,
 )
 from ..operators.segmentation import mentions
 
 
 @dataclass
 class PipelineResult:
-    """``numbered``: the doc-row kernel's numeric form ``(doc_id, rel_n,
-    pred, score, sent_diff, i1, i2)``, what the ledger stores;
-    ``triples``: the public triples derived from it JVM-side."""
+    """``rows``: the doc-row kernel's output (``enum_score_number``);
+    ``numbered``: its numeric triples ``(doc_id, rel_n, pred, score,
+    sent_diff, i1, i2)``, what the ledger stores; ``triples``: the public
+    triples derived from them JVM-side. With ``brat=True`` the rows also
+    hold each doc's brat row (``scoring.brat_rows``)."""
 
-    numbered: DataFrame
+    rows: DataFrame
+
+    @property
+    def numbered(self) -> DataFrame:
+        return triple_rows(self.rows)
 
     @property
     def triples(self) -> DataFrame:
@@ -91,14 +100,16 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     doc_col: str = "doc_id",
     salt: bool = False,
+    brat: bool = False,
 ) -> PipelineResult:
     """documents -> triples (doc_id, rel_id, pred, subj_id, obj_id, score,
     sent_diff, i1, i2) through the doc-row kernel
     (``scoring.enum_score_filter_number``), batch or stream, after the
-    optional salted repartition of the documents (``_salted``)."""
+    optional salted repartition of the documents (``_salted``). ``brat``
+    renders each doc's brat row in the same pass (``PipelineResult``)."""
     cfg = cfg or PipelineConfig()
-    return PipelineResult(numbered=enum_score_number(
-        _salted(docs, cfg, doc_col, salt), cfg, doc_col=doc_col))
+    return PipelineResult(rows=enum_score_number(
+        _salted(docs, cfg, doc_col, salt), cfg, doc_col=doc_col, brat=brat))
 
 
 def run_linked(docs: DataFrame, cfg: PipelineConfig | None = None,
@@ -112,12 +123,14 @@ def run_linked(docs: DataFrame, cfg: PipelineConfig | None = None,
 def run_brat(docs: DataFrame, cfg: PipelineConfig | None = None,
              doc_col: str = "doc_id", salt: bool = False) -> DataFrame:
     """documents -> (doc_id, ann_text), one brat ``.ann`` row per doc with
-    a gazetteer mention, in one shuffle-free doc-row pass
+    a gazetteer mention: the brat rows of one shuffle-free doc-row pass
     (``scoring.enum_score_brat``) after the same optional salted
-    repartition as ``run_pipeline``. Equal to ``postprocess.brat_render(
-    mentions(docs, cfg), run_pipeline(docs, cfg).triples)``, its Catalyst
-    twin: the docs are scored here under ``cfg``, so it equals brat over a
-    ledger's triples whenever those were scored under the same config."""
+    repartition as ``run_pipeline``. Equal to
+    ``postprocess.brat_render(mentions(docs, cfg), run_pipeline(docs,
+    cfg).triples)``, its Catalyst twin. It scores the docs on its own: the
+    ``q_brat_render`` query, and a ``cli predict`` with no pending bucket;
+    a ``predict`` with pending buckets writes brat from the pass its
+    ledger write persisted instead."""
     cfg = cfg or PipelineConfig()
     return enum_score_brat(_salted(docs, cfg, doc_col, salt), cfg,
                            doc_col=doc_col)

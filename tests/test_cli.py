@@ -14,8 +14,15 @@ from clinicaltransformerrelationextraction_spark.config import (
     ENTP2REL,
     PipelineConfig,
 )
+from clinicaltransformerrelationextraction_spark.operators.candidates import (
+    candidates,
+)
 from clinicaltransformerrelationextraction_spark.operators.postprocess import (
     brat_render,
+)
+from clinicaltransformerrelationextraction_spark.operators.scoring import (
+    SCORER_REGISTRY,
+    register_scorer,
 )
 from clinicaltransformerrelationextraction_spark.operators.segmentation import (
     mentions,
@@ -88,6 +95,7 @@ def test_cli_predict_binary_and_config_json(spark, tmp_path):
     assert labels <= set(ENTP2REL.values())
     assert spark.read.parquet(out + "/brat").count() == _n_docs_with_mentions(
         spark, inp, PipelineConfig(scorer="binary"))
+    _assert_brat_of_ledger(spark, inp, out)
 
 
 def test_cli_predict_finishes_crashed_run_with_whole_brat(spark, tmp_path):
@@ -109,9 +117,11 @@ def test_cli_predict_jobs_are_one_ledger_write_plus_one_brat_write(
     """``predict`` launches exactly the Spark jobs of one ledger write
     plus one ``run_brat`` write, and the brat write, one doc-row pass with
     no shuffle, launches the jobs of a plain triples write (no triples
-    read-back, no groupBy, no join). Job counts per job group, as in
-    ``test_ledger_adds_no_spark_job``; the input is read outside the
-    groups, so the schema read is not counted."""
+    read-back, no groupBy, no join). ``predict`` scores once and writes
+    both sinks from that persisted pass: building and reading the cache
+    adds no job, so its count is still the two writes'. Job counts per job
+    group, as in ``test_ledger_adds_no_spark_job``; the input is read
+    outside the groups, so the schema read is not counted."""
     inp, _ = _input(spark, tmp_path)
     sc = spark.sparkContext
 
@@ -136,6 +146,83 @@ def test_cli_predict_jobs_are_one_ledger_write_plus_one_brat_write(
         ["predict", "--input", inp, "--output", str(tmp_path / "out"),
          "--n-buckets", "4"], spark=spark))
     assert predict == read + ledger + brat
+
+
+def _counting_stub(acc):
+    """A ``register_scorer`` factory: the stub, adding each call's row
+    count to the accumulator ``acc``."""
+    stub = SCORER_REGISTRY["stub"]
+
+    def factory(cfg, labels):
+        score = stub(cfg, labels)
+
+        def scorer(pdf):
+            acc.add(len(pdf))
+            return score(pdf)
+
+        return scorer
+
+    return factory
+
+
+def test_cli_predict_scores_each_pair_once(spark, tmp_path):
+    """``predict`` hands the scorer each candidate pair once, into a fresh
+    out_dir and into a crashed one (``fail_after=2``): the triples and brat
+    come from one pass, which scores every doc once, the committed
+    buckets' docs included. The crashed out_dir also gets whole brat and
+    correct per-bucket doc counts."""
+    acc = spark.sparkContext.accumulator(0)
+    register_scorer("counting", _counting_stub(acc))
+    try:
+        inp, _ = _input(spark, tmp_path)
+        docs = spark.read.parquet(inp)
+        cfg = PipelineConfig(scorer="counting")
+        pairs = candidates(docs, cfg).count()
+        assert pairs > 0
+
+        def scored(out):
+            before = acc.value
+            main(["predict", "--input", inp, "--output", out,
+                  "--n-buckets", "4", "--scorer", "counting"], spark=spark)
+            return acc.value - before
+
+        assert scored(str(tmp_path / "fresh")) == pairs
+        out = str(tmp_path / "crashed")
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            LedgerRun(out_dir=out, n_buckets=4).run(docs, cfg, fail_after=2)
+        assert scored(out) == pairs
+        _assert_brat_of_ledger(spark, inp, out)
+        ledger = LedgerRun(out_dir=out, n_buckets=4)._read_ledger()
+        assert sum(v["n_docs"] for v in ledger.values()) == docs.count()
+    finally:
+        SCORER_REGISTRY.pop("counting", None)
+
+
+def test_cli_predict_leaves_no_cached_pass(spark, tmp_path):
+    """The pass ``predict`` persists is unpersisted when it returns and
+    when its scorer raises: the session's cache manager is empty after
+    both."""
+    def boom(cfg, labels):
+        def scorer(pdf):
+            raise ValueError("the scorer failed on purpose")
+
+        return scorer
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    register_scorer("boom", boom)
+    try:
+        inp, _ = _input(spark, tmp_path, n=40)
+        main(["predict", "--input", inp, "--output", str(tmp_path / "ok"),
+              "--n-buckets", "2"], spark=spark)
+        assert cache.isEmpty()
+        with pytest.raises(Exception, match="the scorer failed on purpose"):
+            main(["predict", "--input", inp, "--output",
+                  str(tmp_path / "boom"), "--n-buckets", "2", "--scorer",
+                  "boom"], spark=spark)
+        assert cache.isEmpty()
+    finally:
+        SCORER_REGISTRY.pop("boom", None)
 
 
 def test_cli_eval(spark, tmp_path):
@@ -230,6 +317,7 @@ def test_cli_custom_scorer_name_accepted(spark, tmp_path):
         assert res["n_triples"] == run_pipeline(
             docs, PipelineConfig()
         ).triples.count()
+        _assert_brat_of_ledger(spark, inp, out)
         with pytest.raises(ValueError, match="unknown scorer 'nope'"):
             main(
                 ["predict", "--input", inp, "--output",

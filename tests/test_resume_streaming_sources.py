@@ -242,11 +242,65 @@ def test_ledger_adds_no_spark_job(spark, tmp_path):
     assert jobs("ledger-resume", lambda: crashed.resume(docs)) == one
 
 
+def test_ledger_triples_reads_the_recorded_id_type(spark, tmp_path):
+    """Ledger rows and snapshots record the kernel's doc_id type, so
+    ``triples()`` starts no Spark job before its action, for bigint and
+    string ids, current and time-travelled. A ledger written before rows
+    recorded the type still reads the same rows, through one file's
+    schema."""
+    sc = spark.sparkContext
+    base = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 80)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for id_type, docs in [
+            ("bigint", base),
+            ("string", base.withColumn(
+                "doc_id", F.concat(F.lit("d"), F.col("doc_id"))))]:
+        run = LedgerRun(out_dir=str(tmp_path / id_type), n_buckets=2)
+        run.run(docs)
+        ledger = run._read_ledger()
+        assert {v["id_type"] for v in ledger.values()} == {id_type}
+        assert [s["id_type"] for s in run.snapshots()] == [id_type]
+        reads = {}
+        for name, read in [("current", lambda: run.triples(spark)),
+                           ("snapshot", lambda: run.triples(spark, 1))]:
+            assert jobs(f"triples-{id_type}-{name}",
+                        lambda: reads.setdefault(name, read())) == 0
+        want = {k: (df.dtypes, Counter(map(tuple, df.collect())))
+                for k, df in reads.items()}
+        assert want["current"][0][0] == ("doc_id", id_type)
+        assert want["current"][1] and want["current"] == want["snapshot"]
+
+        for v in ledger.values():
+            del v["id_type"]
+        run._write_ledger(ledger)
+        snaps, high = run._read_log()
+        for snap in snaps:
+            del snap["id_type"]
+        run._write_log(snaps, high)
+        for name, read in [("current", lambda: run.triples(spark)),
+                           ("snapshot", lambda: run.triples(spark, 1))]:
+            old = {}
+            assert jobs(f"triples-old-{id_type}-{name}",
+                        lambda: old.setdefault(name, read())) >= 1
+            df = old[name]
+            assert (df.dtypes, Counter(map(tuple, df.collect()))) == \
+                want[name]
+
+
 def test_ledger_code_is_independent_of_pending_set(
         spark, tmp_path, monkeypatch, capsys):
     """A resume runs the code a full run compiled: the generated Java of
     the ledger's write for pending buckets {0, 1, 2, 3} and {2, 3} is the
-    same, and the resume of a crashed run compiles no class."""
+    same, and the resume of a crashed run compiles no class. The same
+    holds for a run that also writes brat from its persisted pass."""
     from pyspark.sql import DataFrameWriter
 
     written = []
@@ -285,6 +339,30 @@ def test_ledger_code_is_independent_of_pending_set(
     assert sum("/* 001 */" in line for line in full) >= 1, \
         "no generated code: the comparison is vacuous"
     assert full == resumed
+
+    # brat mode (what ``predict`` runs): the triples come from the
+    # persisted pass through the same mask, so a predict into a fresh
+    # out_dir and one into a crashed out_dir run the same ledger-write
+    # code, taken while the pass is cached, and the second compiles none
+    ledger_code = []
+
+    def capture_code(self, path, *args, **kwargs):
+        if "/triples/data/" in path:
+            ledger_code.append(code(self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture_code)
+    fresh = str(tmp_path / "brat-fresh")
+    LedgerRun(out_dir=fresh, n_buckets=4).run(docs, brat=fresh + "/brat")
+    crashed = LedgerRun(out_dir=str(tmp_path / "brat-crash"), n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        crashed.run(docs, fail_after=2)
+    before = compiles.getCount()
+    crashed.run(docs, brat=crashed.out_dir + "/brat")
+    assert compiles.getCount() == before
+    fresh_code, _, crashed_code = ledger_code
+    assert sum("/* 001 */" in line for line in fresh_code) >= 1
+    assert fresh_code == crashed_code
 
 
 def test_ledger_fail_after_zero_commits_no_bucket(spark, tmp_path):
