@@ -147,24 +147,18 @@ def doc_candidate_rows(cfg: PipelineConfig, emit: str = "text") -> Callable:
     return rows
 
 
-def doc_rows_input(df: DataFrame, doc_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def doc_rows_input(df: DataFrame) -> DataFrame:
     """(doc_id, text) input of a doc-row kernel. factor=1: one wave of
     core-count tasks, since each Python task pays a fixed cost before any
     row: ~35 ms of worker CPU on a worker that has run a product runner
     (``functions.util.set_up_python_worker``), ~240 ms on one
     that has not, when Spark's per-task ``importlib.invalidate_caches()``
     re-reads ``pyspark.zip`` (measured in ``dedup._docs``)."""
-    return ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"),
-                  F.col(text_col).alias("text")),
-        factor=1,
-    )
+    return ensure_parallelism(df.select("doc_id", "text"), factor=1)
 
 
 def candidates(
-    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
-    text_col: str = "text", emit: str = "text",
+    df: DataFrame, cfg: PipelineConfig | None = None, emit: str = "text",
 ) -> DataFrame:
     """documents(doc_id, text, ...) -> candidate frame with
     ``candidate_columns(emit)``: one row per kept (arg1, arg2) mention pair,
@@ -176,7 +170,7 @@ def candidates(
     build a candidate frame at all: it enumerates, marks and scores per doc
     in ``scoring.enum_score_filter_number``."""
     cfg = cfg or PipelineConfig()
-    src = doc_rows_input(df, doc_col, text_col)
+    src = doc_rows_input(df)
     id_type = src.schema["doc_id"].dataType.simpleString()
     s1, s2 = candidate_columns(emit)[5:7]
     s_type = "int" if emit == "lengths" else "string"
@@ -190,8 +184,7 @@ def candidates(
 
 
 def candidate_cap_stats(
-    df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
-    text_col: str = "text",
+    df: DataFrame, cfg: PipelineConfig | None = None,
 ) -> DataFrame:
     """No silent truncation (SURVEY.md §7.4.4): one row of corpus-level cap
     accounting (n_docs, n_pairs_total, n_docs_capped, n_pairs_dropped) —
@@ -208,7 +201,7 @@ def candidate_cap_stats(
         n = 0 if text is None else len(enumerate_all(text.split(" ")))
         return [(n, max(n - cap, 0) if cap else 0)]
 
-    per_doc = row_kernel(doc_rows_input(df, doc_col, text_col),
+    per_doc = row_kernel(doc_rows_input(df),
                          "n_pairs long, n_dropped long", counts)
     return per_doc.agg(
         F.count("*").alias("n_docs"),

@@ -48,37 +48,35 @@ def gold_label_expr(label_idx_col, i1_col, i2_col):
     ).otherwise(F.lit(NON_REL))
 
 
-def prf_counts(scored: DataFrame, labels: list[str],
-               pred_col: str = "pred_label",
-               gold_col: str = "gold_label") -> DataFrame:
+def prf_counts(scored: DataFrame, labels: list[str]) -> DataFrame:
     """(label, tp, fp, fn) per non-NonRel label — one grouped aggregation
-    over the (pred, gold) confusion pairs, pivoted by arithmetic instead of
-    the reference's per-label python loops."""
+    over the (pred_label, gold_label) confusion pairs, pivoted by
+    arithmetic instead of the reference's per-label python loops."""
     pos = [l for l in labels if l != NON_REL]
     lab = scored.sparkSession.createDataFrame(
         [(l,) for l in pos], ["label"]
     )
-    conf = scored.groupBy(pred_col, gold_col).count()
+    conf = scored.groupBy("pred_label", "gold_label").count()
     joined = F.broadcast(lab).crossJoin(conf)
     return joined.groupBy("label").agg(
         F.sum(
             F.when(
-                (F.col(pred_col) == F.col("label"))
-                & (F.col(gold_col) == F.col("label")),
+                (F.col("pred_label") == F.col("label"))
+                & (F.col("gold_label") == F.col("label")),
                 F.col("count"),
             ).otherwise(0)
         ).alias("tp"),
         F.sum(
             F.when(
-                (F.col(pred_col) == F.col("label"))
-                & (F.col(gold_col) != F.col("label")),
+                (F.col("pred_label") == F.col("label"))
+                & (F.col("gold_label") != F.col("label")),
                 F.col("count"),
             ).otherwise(0)
         ).alias("fp"),
         F.sum(
             F.when(
-                (F.col(pred_col) != F.col("label"))
-                & (F.col(gold_col) == F.col("label")),
+                (F.col("pred_label") != F.col("label"))
+                & (F.col("gold_label") == F.col("label")),
                 F.col("count"),
             ).otherwise(0)
         ).alias("fn"),

@@ -194,7 +194,7 @@ def _layer_norm(x: np.ndarray, gamma: np.ndarray, beta: np.ndarray
 class NptModel:
     """Seeded mini-BERT: deterministic weights, masked MHA, post-LN."""
 
-    def __init__(self, n_labels: int, scheme: int, seed: int = 29):
+    def __init__(self, n_labels: int, scheme: int):
         if scheme not in _SCHEME_PARTS:
             raise ValueError(
                 f"classification_scheme must be one of "
@@ -202,7 +202,7 @@ class NptModel:
             )
         self.scheme = scheme
         self.n_labels = n_labels
-        rng = np.random.default_rng(seed)
+        rng = np.random.default_rng(29)
         h = HIDDEN
 
         def w(*shape):

@@ -1,11 +1,11 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with metadata structs;
-decode / feature-extract run as Arrow-batched pandas UDFs over
-``mapInPandas``. The decode libraries (PIL/ffmpeg/librosa) are NOT in this
-container, so the decode step is stubbed behind a deterministic fake (and a
-clearly-marked NotImplementedError for the real path); the Spark plumbing —
-schema, batch shape, partitioning — is real and tested.
+feature extraction runs as an Arrow-batched ``mapInPandas`` over the
+payload bytes. The decode libraries (PIL/ffmpeg/librosa) are NOT in this
+container, so ``q_multimodal_features`` digests the raw bytes (byte
+histogram moments, exact integers) where a decoder would sit; its Spark
+plumbing — schema, batch shape, partitioning — is real and oracle-checked.
 """
 
 from __future__ import annotations
@@ -18,8 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-FEAT_DIM = 8
 
 
 def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
@@ -37,74 +35,6 @@ def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
             "bytes_per_char"
         ),
     )
-
-
-_FEAT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("modality", T.StringType()),
-        T.StructField("feature", T.ArrayType(T.DoubleType())),
-        T.StructField("n_frames", T.IntegerType()),
-    ]
-)
-
-
-def _decode_real(payload: bytes, modality: str):  # pragma: no cover
-    raise NotImplementedError(
-        "real decode requires PIL/ffmpeg/librosa — not in this container; "
-        "plug the decoder in here, the Spark plumbing is unchanged"
-    )
-
-
-def _decode_fake(payload: bytes, modality: str) -> tuple[np.ndarray, int]:
-    """Deterministic fake decode: FEAT_DIM moments of the byte histogram.
-    Stands in for resize/frame-sample/spectrogram."""
-    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    if arr.size == 0:
-        return np.zeros(FEAT_DIM), 0
-    feats = np.array(
-        [
-            arr.mean(),
-            arr.std(),
-            arr.min(),
-            arr.max(),
-            float(np.median(arr)),
-            arr.sum() % 997.0,
-            float(arr.size),
-            float((arr > 100).sum()),
-        ]
-    )
-    n_frames = max(1, arr.size // 64)
-    return feats, n_frames
-
-
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    modality: str = "image",
-    real_decode: bool = False,
-) -> DataFrame:
-    """Arrow-batched multimodal feature extraction: binary -> fixed-dim
-    feature vector + frame count. Narrow map, scales linearly."""
-    decode = _decode_real if real_decode else _decode_fake
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, frames = [], []
-            for payload in pdf[payload_col]:
-                f, n = decode(bytes(payload), modality)
-                feats.append([float(x) for x in f])
-                frames.append(n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": modality,
-                    "feature": feats,
-                    "n_frames": pd.array(frames, dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(run, schema=_FEAT_SCHEMA)
 
 
 def documents_as_media(spark: SparkSession, sf: str) -> DataFrame:
@@ -142,8 +72,7 @@ def q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
     mean_micro is round-half-up fixed point in pure integer arithmetic
     ((s*2e6 + n) // (2n)); med2 is 2x the median (always an integer: the sum
     of the two middle bytes for even n, twice the middle byte for odd n).
-    The float feature vector of ``extract_features`` is derivable from
-    these moments; this digest is the table you'd persist at 100 TB.
+    This digest is the table you'd persist at 100 TB.
     """
     media = documents_as_media(spark, sf)
 

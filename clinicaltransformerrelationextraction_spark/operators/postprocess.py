@@ -6,7 +6,7 @@ Reference semantics:
 - per-file R renumbering               post_processing.py:49-63 (W1), made
   deterministic here with the canonical sort key (sent_diff, i1, i2)
   (SURVEY.md §7.4.3)
-  — both run inside the doc-row kernel, scoring.enum_score_filter_number
+  — both run inside the doc-row kernel, scoring.enum_score_number
 - brat line formats                    data_format_conf.py:2; brat_eval.py:101-125
 - entities ⋈ relations per file merge  post_processing.py:66-85 (J5)
 

@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import SPEC_TAGS, STUB_W2, STUB_W3, PipelineConfig
+from ..config import (S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN, SPEC_TAGS,
+                      STUB_W2, STUB_W3, PipelineConfig)
 from ..functions.util import set_up_python_worker
 from .binarymode import _make_binary_scorer
 from .candidates import candidate_columns, doc_candidate_rows, doc_rows_input
@@ -48,14 +49,13 @@ from .segmentation import doc_mention_rows
 __all__ = [
     "score_candidates", "score_filter_number", "enum_score_filter_number",
     "enum_score_number", "numbered_schema", "public_triples",
-    "triple_rows", "brat_rows", "enum_score_brat",
+    "triple_rows", "brat_rows",
     "truncate_pair", "register_scorer", "SCORER_REGISTRY",
 ]
 
 
-def truncate_pair(toks_a: list[str], toks_b: list[str], budget: int,
-                  tags_a: tuple[str, str] = ("[s1]", "[e1]"),
-                  tags_b: tuple[str, str] = ("[s2]", "[e2]")) -> tuple[list[str], list[str]]:
+def truncate_pair(toks_a: list[str], toks_b: list[str],
+                  budget: int) -> tuple[list[str], list[str]]:
     """Entity-centered truncation (reference ``_process_seq_len`` /
     ``_truncate_helper``, src/data_utils.py:330-370): while over budget,
     alternate sides a/b; on each side pop from whichever end (head or tail)
@@ -95,6 +95,7 @@ def truncate_pair(toks_a: list[str], toks_b: list[str], budget: int,
             toks.pop()
         return True
 
+    tags_a, tags_b = (S1_OPEN, S1_CLOSE), (S2_OPEN, S2_CLOSE)
     a, b = list(toks_a), list(toks_b)
     flip = True
     while len(a) + len(b) > budget:
@@ -384,18 +385,6 @@ def scoring_emit(cfg: PipelineConfig) -> str:
     return "lengths" if _needs_lengths(_resolve_factory(cfg)) else "text"
 
 
-def _require_text(cand: DataFrame, why: str) -> None:
-    """Fail at plan time, naming the cause, when a frame built with
-    ``candidates(emit="lengths")`` meets a consumer of the marked strings
-    (otherwise: a KeyError inside an executor)."""
-    if not {"s1_marked", "s2_marked"} <= set(cand.columns):
-        raise ValueError(
-            f"{why} needs the marked strings s1_marked/s2_marked, but the "
-            'candidate frame has none (built with candidates(emit="lengths")'
-            '?); build it with candidates(emit="text")'
-        )
-
-
 def _scorer_input(cand: DataFrame, cfg: PipelineConfig,
                   factory: Callable) -> DataFrame:
     """Project the candidate frame down to the backend's declared input
@@ -404,9 +393,16 @@ def _scorer_input(cand: DataFrame, cfg: PipelineConfig,
     backends get (s1_len, s2_len) ints — reused as-is when the frame was
     built with candidates(emit="lengths"), else derived via F.length so
     only two ints per row cross the Arrow boundary instead of two marked
-    strings."""
+    strings. A text backend given a frame built with
+    ``candidates(emit="lengths")`` fails here, at plan time, naming the
+    cause (otherwise: a KeyError inside an executor)."""
     if not _needs_lengths(factory):
-        _require_text(cand, f"scorer {cfg.scorer!r}")
+        if not {"s1_marked", "s2_marked"} <= set(cand.columns):
+            raise ValueError(
+                f"scorer {cfg.scorer!r} needs the marked strings "
+                "s1_marked/s2_marked, but the candidate frame has none "
+                '(built with candidates(emit="lengths")?); build it with '
+                'candidates(emit="text")')
         return cand
     if "s1_len" in cand.columns:
         return cand
@@ -418,34 +414,25 @@ def _scorer_input(cand: DataFrame, cfg: PipelineConfig,
     )
 
 
-def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
-                     keep_text: bool = False) -> DataFrame:
+def score_candidates(cand: DataFrame,
+                     cfg: PipelineConfig | None = None) -> DataFrame:
     """candidates -> candidates + (pred_label, label_idx, score).
 
     One ``mapInPandas`` pass; scorer constructed once per partition-task.
     Alignment with the input rows is by content key (doc_id, i1, i2) carried
     through the UDF — never positional (SURVEY.md §2.3 J3 trap).
 
-    The marked sentence strings are the scorer's INPUT only; by default they
-    are dropped from the output (they dominate the Arrow return traffic and
-    nothing downstream reads them — pass ``keep_text=True`` to retain,
-    which needs a frame built with ``candidates(emit="text")``).
-    Backends declaring ``needs = "lengths"`` receive precomputed window
-    lengths instead of the strings (see _scorer_input) unless
-    ``keep_text`` forces the text through."""
+    The marked sentence strings are the scorer's INPUT only; they are
+    dropped from the output (they dominate the Arrow return traffic and
+    nothing downstream reads them). Backends declaring ``needs =
+    "lengths"`` receive precomputed window lengths instead of the strings
+    (see _scorer_input)."""
     cfg = cfg or PipelineConfig()
     labels = list(cfg.labels)
     label_arr = np.asarray(labels, dtype=object)
     factory = _resolve_factory(cfg)
-    if keep_text:
-        _require_text(cand, "score_candidates(keep_text=True)")
-    else:
-        cand = _scorer_input(cand, cfg, factory)
-    drop_cols = (
-        []
-        if keep_text
-        else [c for c in SCORER_INPUT_COLS if c in cand.columns]
-    )
+    cand = _scorer_input(cand, cfg, factory)
+    drop_cols = [c for c in SCORER_INPUT_COLS if c in cand.columns]
     out_fields = [
         f for f in cand.schema.fields if f.name not in drop_cols
     ] + [
@@ -462,7 +449,7 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
             if len(pdf) == 0:
                 continue
             idx, score = scorer(pdf)
-            out = pdf.drop(columns=drop_cols) if drop_cols else pdf.copy()
+            out = pdf.drop(columns=drop_cols)
             out["label_idx"] = idx.astype("int32")
             out["pred_label"] = label_arr[idx]
             out["score"] = score
@@ -532,25 +519,65 @@ def public_triples(numbered: DataFrame) -> DataFrame:
     )
 
 
-def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
-              text_col: str, brat: bool) -> DataFrame:
+def _require_doc_ids(pdf: pd.DataFrame, what: str) -> None:
+    """Raise a ``ValueError`` naming the NULL doc_ids of an input batch:
+    numbering and rendering key on the doc_id (in pandas a NULL key
+    otherwise surfaces as a cast error of its NaN row numbers)."""
+    n_null = int(pdf["doc_id"].isna().sum())
+    if n_null:
+        raise ValueError(
+            f"{n_null} {what} row(s) with a NULL doc_id: the triples and "
+            "brat passes need an id for every document")
+
+
+def enum_score_filter_number(
+    docs: DataFrame, cfg: PipelineConfig | None = None,
+) -> DataFrame:
+    """documents -> triples in ONE Arrow-batched mapInPandas pass over the
+    document rows: candidate enumeration + marking + scoring + NonRel
+    filter + per-doc R-numbering. No candidate frame crosses the Python
+    boundary. This is ``run_pipeline``'s only path, for every backend and
+    for streams.
+
+    Per doc, ``candidates.doc_candidate_rows`` builds the rows a candidate
+    frame would carry: the marked strings for text backends, the window
+    lengths for backends declaring ``needs = "lengths"``. The scorer thus
+    sees the columns of ``candidates(emit=scoring_emit(cfg))`` and the
+    ``register_scorer`` contract holds. Rows are buffered and scored every
+    ``cfg.batch_size`` pairs at a doc boundary (``enum_score_number``).
+    Each doc is whole within its input row, so numbering needs no
+    cross-batch carry. Output equals ``score_filter_number`` over the same
+    candidates, scores included, for any Arrow batch size, partitioning or
+    ``batch_size`` (pinned against the pure-Python candidate reference in
+    tests/test_kernel_path.py; the stub by the q_triples oracle). The pass
+    emits numbers only; the id strings are derived JVM-side
+    (``public_triples``)."""
+    return public_triples(enum_score_number(docs, cfg))
+
+
+def enum_score_number(docs: DataFrame, cfg: PipelineConfig | None = None,
+                      brat: bool = False) -> DataFrame:
     """The one per-doc scoring kernel: one Arrow-batched ``mapInPandas``
     pass over the document rows that enumerates and marks each doc's
     candidate rows, buffers them and scores them once ``cfg.batch_size``
     pairs are pending, flushing only at a doc boundary, so a scorer call
     holds at most ``batch_size + max_pairs_per_doc - 1`` rows. Each flush
     emits ``_filter_number`` of its scored rows, the numeric form of a
-    triple (``numbered_schema``).
+    triple ``(doc_id, rel_n, pred, score, sent_diff, i1, i2)``
+    (``numbered_schema``): no id string crosses the Arrow boundary. The
+    ledger stores this form.
 
     With ``brat`` the schema gains ``ann_text``: triple rows carry it NULL,
     and every doc with a gazetteer mention adds one row, triple columns
     NULL, holding its brat ``.ann`` text: its T lines
     (``segmentation.doc_mention_rows``, in ``tok_idx`` order:
     ``T<i>\t<type> <start> <end>\t<surface>``) then its R lines (in
-    ``rel_n`` order). A doc's rows follow the flush that scored it, and a
-    run of docs without candidates is flushed at the end of its input
-    batch instead of being held across Arrow batches. A NULL doc_id raises
-    a ``ValueError`` naming it: numbering and rendering key on it."""
+    ``rel_n`` order); ``triple_rows`` and ``brat_rows`` split the two. A
+    doc's rows follow the flush that scored it, and a run of docs without
+    candidates is flushed at the end of its input batch instead of being
+    held across Arrow batches. A NULL doc_id raises a ``ValueError``
+    naming it (``_require_doc_ids``)."""
+    cfg = cfg or PipelineConfig()
     factory = _resolve_factory(cfg)
     emit = "lengths" if _needs_lengths(factory) else "text"
     labels = list(cfg.labels)
@@ -559,7 +586,7 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
     batch_size = max(cfg.batch_size, 1)
     rows_of = doc_candidate_rows(cfg, emit)
     cols = candidate_columns(emit)
-    src = doc_rows_input(docs, doc_col, text_col)
+    src = doc_rows_input(docs)
     schema = numbered_schema(src.schema["doc_id"].dataType.simpleString())
     if brat:
         schema += ", ann_text string"
@@ -600,11 +627,7 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
         pending: list = []
         seen: list = []
         for pdf_in in batches:
-            n_null = int(pdf_in["doc_id"].isna().sum())
-            if n_null:
-                raise ValueError(
-                    f"{n_null} document row(s) with a NULL doc_id: the "
-                    "triples and brat passes need an id for every document")
+            _require_doc_ids(pdf_in, "document")
             for did, tx in zip(pdf_in["doc_id"], pdf_in["text"]):
                 seen.append((did, tx))
                 pending += rows_of(did, tx)
@@ -618,44 +641,6 @@ def _doc_pass(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
             yield from flush(seen, pending)
 
     return src.mapInPandas(run, schema=schema)
-
-
-def enum_score_filter_number(
-    docs: DataFrame, cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """documents -> triples in ONE Arrow-batched mapInPandas pass over the
-    document rows: candidate enumeration + marking + scoring + NonRel
-    filter + per-doc R-numbering. No candidate frame crosses the Python
-    boundary. This is ``run_pipeline``'s only path, for every backend and
-    for streams.
-
-    Per doc, ``candidates.doc_candidate_rows`` builds the rows a candidate
-    frame would carry: the marked strings for text backends, the window
-    lengths for backends declaring ``needs = "lengths"``. The scorer thus
-    sees the columns of ``candidates(emit=scoring_emit(cfg))`` and the
-    ``register_scorer`` contract holds. Rows are buffered and scored every
-    ``cfg.batch_size`` pairs at a doc boundary (``_doc_pass``). Each doc is
-    whole within its input row, so numbering needs no cross-batch carry.
-    Output equals ``score_filter_number`` over the same candidates, scores
-    included, for any Arrow batch size, partitioning or ``batch_size``
-    (pinned against the pure-Python candidate reference in
-    tests/test_kernel_path.py; the stub by the q_triples oracle). The pass
-    is ``enum_score_number``, which emits numbers only; the id strings are
-    derived JVM-side (``public_triples``)."""
-    return public_triples(enum_score_number(docs, cfg, doc_col, text_col))
-
-
-def enum_score_number(
-    docs: DataFrame, cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id", text_col: str = "text", brat: bool = False,
-) -> DataFrame:
-    """``enum_score_filter_number``'s doc-row pass (``_doc_pass``),
-    emitting the numeric form ``(doc_id, rel_n, pred, score, sent_diff, i1,
-    i2)``: no id string crosses the Arrow boundary. The ledger stores this
-    form. ``brat=True`` adds the ``ann_text`` column and each doc's brat
-    row to the same pass; ``triple_rows`` and ``brat_rows`` split them."""
-    return _doc_pass(docs, cfg or PipelineConfig(), doc_col, text_col, brat)
 
 
 def triple_rows(rows: DataFrame) -> DataFrame:
@@ -688,22 +673,6 @@ def _r_lines(numbered: pd.DataFrame | None) -> dict:
     return {did: "\n".join(ls) for did, ls in lines.items()}
 
 
-def enum_score_brat(
-    docs: DataFrame, cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """documents -> (doc_id, ann_text) brat ``.ann`` text: the brat rows
-    of the doc-row pass ``enum_score_number(..., brat=True)``, one per doc
-    with at least one gazetteer mention, no shuffle. It scores the docs
-    itself; ``LedgerRun.run(..., brat=path)`` writes these rows from the
-    pass its triples come from instead. Rows, schema and text equal
-    ``postprocess.brat_render(mentions(docs), enum_score_filter_number(
-    docs))``, the Catalyst form this pass replaces (pinned in
-    tests/test_kernel_path.py; the stub by the q_brat_render oracle)."""
-    return brat_rows(enum_score_number(docs, cfg, doc_col, text_col,
-                                       brat=True))
-
-
 def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Scoring + NonRel filter + per-doc R-numbering of an already-built
     candidate frame in ONE ``mapInPandas`` pass with ZERO shuffle.
@@ -714,7 +683,7 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
     within-partition order). Docs may span Arrow batch boundaries, so the
     rows of the batch's last doc are carried into the next batch. Numbering
     is ``enum_score_filter_number``'s (canonical sort (sent_diff, i1, i2)
-    per doc)."""
+    per doc). A NULL doc_id raises a ``ValueError`` naming it."""
     cfg = cfg or PipelineConfig()
     labels = list(cfg.labels)
     label_arr = np.asarray(labels, dtype=object)
@@ -731,6 +700,7 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            _require_doc_ids(pdf, "candidate")
             idx, score = scorer(pdf)
             pdf = pdf.drop(columns=drop_cols)
             pdf["pred_label"] = label_arr[idx]

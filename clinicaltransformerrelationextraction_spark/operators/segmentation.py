@@ -25,14 +25,12 @@ from .candidates import doc_rows_input, tokens_col
 __all__ = ["sentences", "mentions", "doc_mention_rows", "segment_pages_udf"]
 
 
-def sentences(df: DataFrame, cfg: PipelineConfig | None = None,
-              doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def sentences(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """documents -> (doc_id, sent_id, sent_text, n_tokens); zero-shuffle
     (sentence windows are built in-row and exploded)."""
     cfg = cfg or PipelineConfig()
     L = cfg.sent_len
-    toks = tokens_col(F.col(text_col))
-    base = df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
+    base = df.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     n_sent = F.ceil(F.size("toks") / F.lit(L)).cast("int")
     sents = F.transform(
         F.sequence(F.lit(0), n_sent - 1),
@@ -57,7 +55,7 @@ def doc_mention_rows(cfg: PipelineConfig) -> Callable:
     surface, start, end)``. Character offsets are a running sum of token
     lengths plus the single-space separators, so ``text[start:end]`` is
     the surface. NULL text gives no rows. The one mention scan behind
-    ``mentions`` and the brat T lines of ``scoring._doc_pass``."""
+    ``mentions`` and the brat T lines of ``scoring.enum_score_number``."""
     vocab = dict(cfg.ent_vocab)
     sl = cfg.sent_len
 
@@ -77,8 +75,7 @@ def doc_mention_rows(cfg: PipelineConfig) -> Callable:
     return rows
 
 
-def mentions(df: DataFrame, cfg: PipelineConfig | None = None,
-             doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def mentions(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """documents -> (doc_id, mention_id, ent_type, tok_idx, sent_id, surface,
     start, end) with character offsets into the original text.
 
@@ -90,7 +87,7 @@ def mentions(df: DataFrame, cfg: PipelineConfig | None = None,
     tests/catalyst_twins.py; pinned in tests/test_round7_perf.py) and
     oracle-checked via q_mentions."""
     cfg = cfg or PipelineConfig()
-    src = doc_rows_input(df, doc_col, text_col)
+    src = doc_rows_input(df)
     id_type = src.schema["doc_id"].dataType.simpleString()
     return row_kernel(
         src,

@@ -118,12 +118,12 @@ def q_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def lsh_bucket(qe: Column, n_planes: int = N_PLANES) -> Column:
+def lsh_bucket(qe: Column) -> Column:
     """Random-hyperplane LSH with deterministic ±1 planes:
     s(i,j) = +1 if (i*7 + j*13) even else -1 (i = 1-based dim index).
     bucket = sum_j [dot(v, s_j) >= 0] << j. Integer-exact."""
     terms = []
-    for j in range(n_planes):
+    for j in range(N_PLANES):
         proj = F.aggregate(
             F.transform(
                 qe,

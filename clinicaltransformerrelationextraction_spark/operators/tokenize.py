@@ -162,7 +162,6 @@ def _force_fit_sides(
 
 def fit_pair_budget(
     toks_a: list[str], toks_b: list[str], max_seq_len: int,
-    total_special: int = 3,
 ) -> tuple[list[str], list[str]]:
     """THE sep-mode budget contract (U2): entity-centered truncation to
     max_seq_len - 3, never emitting an over-budget row. Single definition
@@ -175,7 +174,7 @@ def fit_pair_budget(
     error, raised descriptively. A DIRTY row (prose containing literal
     marker tokens widened the protected span) must not kill a corpus job,
     so it gets the marker-preserving force fit instead."""
-    budget = max_seq_len - total_special
+    budget = max_seq_len - 3
     if len(toks_a) + len(toks_b) > budget:
         toks_a, toks_b = truncate_pair(toks_a, toks_b, budget)
         total = len(toks_a) + len(toks_b)
@@ -216,11 +215,9 @@ def fit_uni_budget(toks: list[str], max_seq_len: int) -> list[str]:
 
 def encode_pair(
     toks_a: list[str], toks_b: list[str], max_seq_len: int,
-    total_special: int = 3,
 ) -> list[int]:
     """[CLS] a [SEP] b [SEP] ids under the reference budget contract."""
-    toks_a, toks_b = fit_pair_budget(toks_a, toks_b, max_seq_len,
-                                     total_special)
+    toks_a, toks_b = fit_pair_budget(toks_a, toks_b, max_seq_len)
     return (
         [CLS_ID]
         + [tok_id(t) for t in toks_a]

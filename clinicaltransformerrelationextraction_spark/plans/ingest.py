@@ -276,12 +276,7 @@ class IngestState:
 
     # -- maintenance --------------------------------------------------------
 
-    def compact(
-        self,
-        spark: SparkSession,
-        tables: tuple[str, ...] = APPEND_TABLES,
-        min_dirs: int = 2,
-    ) -> dict:
+    def compact(self, spark: SparkSession, min_dirs: int = 2) -> dict:
         """Rewrite each append log's committed dirs into ONE dir and
         commit a manifest pointing at it — the small-files maintenance
         op: an hourly ingest cadence accrues ~8,760 dirs per table per
@@ -293,10 +288,9 @@ class IngestState:
         consistent and an invisible orphan; the superseded per-ingest
         dirs become orphans GC'd by :meth:`expire`.
 
-        ``tables`` defaults to every append log; at real scale pass the
-        slim ones (bands/shingles/pairs/edges) more often than ``docs``,
-        whose rewrite is a full corpus copy. Logs with fewer than
-        ``min_dirs`` committed dirs are left alone. Returns
+        Every append log is compacted (``docs``' rewrite is a full corpus
+        copy); logs with fewer than ``min_dirs`` committed dirs are left
+        alone. Returns
         {table: n_dirs_compacted} for the tables rewritten."""
         m = self.manifest()
         if m is None:
@@ -305,7 +299,7 @@ class IngestState:
         tag = f"{v:05d}"
         appends = dict(m["appends"])
         done: dict[str, int] = {}
-        for t in tables:
+        for t in APPEND_TABLES:
             paths = appends.get(t, [])
             if len(paths) < min_dirs:
                 continue

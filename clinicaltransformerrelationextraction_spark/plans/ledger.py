@@ -629,43 +629,3 @@ class LedgerRun:
         # partitioned by; files of the old layout hold it
         return public_triples(stored.withColumn("bucket", F.coalesce(
             "bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets)))))
-
-
-def latest_checkpoint(ckpt_root: str, prefix: str = "ckpt_") -> str | None:
-    """W3/S9 — resolve the newest checkpoint directory by numeric suffix
-    (reference src/task.py:270-271: max over ckpt_{n})."""
-    cands = [
-        d for d in os.listdir(ckpt_root)
-        if d.startswith(prefix) and d[len(prefix):].isdigit()
-    ] if os.path.isdir(ckpt_root) else []
-    if not cands:
-        return None
-    best = max(cands, key=lambda d: int(d[len(prefix):]))
-    return os.path.join(ckpt_root, best)
-
-
-def prune_checkpoints(
-    ckpt_root: str, max_num: int, prefix: str = "ckpt_"
-) -> list[str]:
-    """W4/S9 — retention: delete the oldest checkpoints beyond ``max_num``
-    (reference src/task.py:306-318, eviction :315-318). Returns the deleted
-    paths. Driver-side artifact GC, deliberately NOT a Spark job — at any
-    scale this walks a handful of directory entries."""
-    import shutil as _sh
-
-    if not os.path.isdir(ckpt_root):
-        return []
-    cands = sorted(
-        (
-            d for d in os.listdir(ckpt_root)
-            if d.startswith(prefix) and d[len(prefix):].isdigit()
-        ),
-        key=lambda d: int(d[len(prefix):]),
-    )
-    doomed = cands[: max(0, len(cands) - max_num)]
-    deleted = []
-    for d in doomed:
-        p = os.path.join(ckpt_root, d)
-        _sh.rmtree(p)
-        deleted.append(p)
-    return deleted

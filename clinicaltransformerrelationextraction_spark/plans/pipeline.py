@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.postprocess import link_triples
 from ..operators.scoring import (
-    enum_score_brat,
+    brat_rows,
     enum_score_number,
     public_triples,
     triple_rows,
@@ -38,21 +38,16 @@ from ..operators.segmentation import mentions
 
 @dataclass
 class PipelineResult:
-    """``rows``: the doc-row kernel's output (``enum_score_number``);
-    ``numbered``: its numeric triples ``(doc_id, rel_n, pred, score,
-    sent_diff, i1, i2)``, what the ledger stores; ``triples``: the public
-    triples derived from them JVM-side. With ``brat=True`` the rows also
-    hold each doc's brat row (``scoring.brat_rows``)."""
+    """``rows``: the doc-row kernel's output (``enum_score_number``), the
+    numeric triples the ledger stores; ``triples``: the public triples
+    derived from them JVM-side. With ``brat=True`` the rows also hold each
+    doc's brat row (``scoring.brat_rows``)."""
 
     rows: DataFrame
 
     @property
-    def numbered(self) -> DataFrame:
-        return triple_rows(self.rows)
-
-    @property
     def triples(self) -> DataFrame:
-        return public_triples(self.numbered)
+        return public_triples(triple_rows(self.rows))
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,8 +77,7 @@ def extract_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn("text", F.decode("html", "UTF-8"))
 
 
-def _salted(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
-            salt: bool) -> DataFrame:
+def _salted(docs: DataFrame, cfg: PipelineConfig, salt: bool) -> DataFrame:
     """``salt=True`` repartitions the documents by a salted doc hash into
     ``cfg.salt_buckets`` buckets, spreading a hot host domain's docs over
     tasks. Each doc stays one row, so a doc-row kernel's output is
@@ -91,46 +85,41 @@ def _salted(docs: DataFrame, cfg: PipelineConfig, doc_col: str,
     if not salt:
         return docs
     return docs.repartition(
-        F.pmod(F.hash(F.col(doc_col), F.lit("salt")), F.lit(cfg.salt_buckets))
+        F.pmod(F.hash(F.col("doc_id"), F.lit("salt")), F.lit(cfg.salt_buckets))
     )
 
 
 def run_pipeline(
     docs: DataFrame,
     cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id",
     salt: bool = False,
     brat: bool = False,
 ) -> PipelineResult:
     """documents -> triples (doc_id, rel_id, pred, subj_id, obj_id, score,
     sent_diff, i1, i2) through the doc-row kernel
-    (``scoring.enum_score_filter_number``), batch or stream, after the
-    optional salted repartition of the documents (``_salted``). ``brat``
-    renders each doc's brat row in the same pass (``PipelineResult``)."""
+    (``scoring.enum_score_number``), batch or stream, after the optional
+    salted repartition of the documents (``_salted``). ``brat`` renders
+    each doc's brat row in the same pass (``PipelineResult``)."""
     cfg = cfg or PipelineConfig()
     return PipelineResult(rows=enum_score_number(
-        _salted(docs, cfg, doc_col, salt), cfg, doc_col=doc_col, brat=brat))
+        _salted(docs, cfg, salt), cfg, brat=brat))
 
 
-def run_linked(docs: DataFrame, cfg: PipelineConfig | None = None,
-               doc_col: str = "doc_id") -> DataFrame:
+def run_linked(docs: DataFrame,
+               cfg: PipelineConfig | None = None) -> DataFrame:
     cfg = cfg or PipelineConfig()
-    res = run_pipeline(docs, cfg, doc_col=doc_col)
-    men = mentions(docs, cfg, doc_col=doc_col)
-    return link_triples(res.triples, men)
+    return link_triples(run_pipeline(docs, cfg).triples, mentions(docs, cfg))
 
 
 def run_brat(docs: DataFrame, cfg: PipelineConfig | None = None,
-             doc_col: str = "doc_id", salt: bool = False) -> DataFrame:
+             salt: bool = False) -> DataFrame:
     """documents -> (doc_id, ann_text), one brat ``.ann`` row per doc with
     a gazetteer mention: the brat rows of one shuffle-free doc-row pass
-    (``scoring.enum_score_brat``) after the same optional salted
-    repartition as ``run_pipeline``. Equal to
-    ``postprocess.brat_render(mentions(docs, cfg), run_pipeline(docs,
-    cfg).triples)``, its Catalyst twin. It scores the docs on its own: the
-    ``q_brat_render`` query, and a ``cli predict`` with no pending bucket;
-    a ``predict`` with pending buckets writes brat from the pass its
-    ledger write persisted instead."""
-    cfg = cfg or PipelineConfig()
-    return enum_score_brat(_salted(docs, cfg, doc_col, salt), cfg,
-                           doc_col=doc_col)
+    (``run_pipeline(..., brat=True)``), after the same optional salted
+    repartition. Equal to ``postprocess.brat_render(mentions(docs, cfg),
+    run_pipeline(docs, cfg).triples)``, its Catalyst twin (pinned in
+    tests/test_kernel_path.py; the stub by the q_brat_render oracle). It
+    scores the docs on its own: the ``q_brat_render`` query, and a ``cli
+    predict`` with no pending bucket; a ``predict`` with pending buckets
+    writes brat from the pass its ledger write persisted instead."""
+    return brat_rows(run_pipeline(docs, cfg, salt=salt, brat=True).rows)

@@ -14,14 +14,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_ann_lines(lines: DataFrame, doc_col: str = "doc_id",
-                    line_col: str = "value") -> tuple[DataFrame, DataFrame]:
+def parse_ann_lines(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(doc_id, value) text lines -> (mentions, relations) DataFrames."""
-    t = lines.filter(F.col(line_col).startswith("T"))
-    parts = F.split(F.col(line_col), "\t")
+    t = lines.filter(F.col("value").startswith("T"))
+    parts = F.split(F.col("value"), "\t")
     mid = F.split(parts[1], " ")
     mentions = t.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         parts[0].alias("mention_id"),
         mid[0].alias("ent_type"),
         mid[1].cast("long").alias("start"),
@@ -31,11 +30,11 @@ def parse_ann_lines(lines: DataFrame, doc_col: str = "doc_id",
         .cast("long").alias("end"),
         parts[2].alias("surface"),
     )
-    r = lines.filter(F.col(line_col).startswith("R"))
-    rp = F.split(F.col(line_col), "\t")
+    r = lines.filter(F.col("value").startswith("R"))
+    rp = F.split(F.col("value"), "\t")
     body = F.split(rp[1], " ")
     relations = r.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         rp[0].alias("rel_id"),
         body[0].alias("rel_type"),
         F.regexp_extract(body[1], "Arg1:(\\S+)", 1).alias("arg1"),

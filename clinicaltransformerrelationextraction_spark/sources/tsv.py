@@ -2,8 +2,9 @@
 
 Column order is the contract (readme.md:35-43): label, sentence_1,
 sentence_2, entity_type_1, entity_type_2, entity_id_1, entity_id_2, file_id
-— tab-separated, optional header, NO quoting/escaping (the reference splits
-on tab, deliberately not the csv module: src/data_utils.py:260-278).
+— tab-separated, NO quoting/escaping (the reference splits on tab,
+deliberately not the csv module: src/data_utils.py:260-278). The
+reference's header row is optional; this scan and sink always carry one.
 """
 
 from __future__ import annotations
@@ -22,13 +23,12 @@ CAND_TSV_SCHEMA = T.StructType(
 )
 
 
-def read_candidates_tsv(spark: SparkSession, path: str,
-                        header: bool = True) -> DataFrame:
+def read_candidates_tsv(spark: SparkSession, path: str) -> DataFrame:
     """S1 — TSV scan. Reference: _read_tsv splits on tab with no quoting;
     csv reader quoting is DISABLED to honor that (quote='')."""
     return (
         spark.read.option("sep", "\t")
-        .option("header", header)
+        .option("header", True)
         .option("quote", "")
         .schema(CAND_TSV_SCHEMA)
         .csv(path)
@@ -36,26 +36,20 @@ def read_candidates_tsv(spark: SparkSession, path: str,
     )
 
 
-def write_candidates_tsv(df: DataFrame, path: str,
-                         header: bool = True) -> None:
+def write_candidates_tsv(df: DataFrame, path: str) -> None:
     """S6-adjacent sink for candidate tables."""
     (
         df.select(*TSV_COLUMNS)
         .write.mode("overwrite")
         .option("sep", "\t")
-        .option("header", header)
+        .option("header", True)
         .option("quote", "")
         .option("emptyValue", "")
         .csv(path)
     )
 
 
-def write_predictions_text(
-    preds: DataFrame,
-    path: str,
-    order_cols: tuple[str, ...] = ("doc_id", "i1", "i2"),
-    label_col: str = "pred_label",
-) -> None:
+def write_predictions_text(preds: DataFrame, path: str) -> None:
     """S6 — the reference's prediction sink: one label string per line, in
     input order (src/relation_extraction.py:73-77; per-batch files
     src/batch_prediction.py:76-81). Order alignment is the explicit content
@@ -65,11 +59,11 @@ def write_predictions_text(
     parquet/Iceberg predictions table."""
     (
         preds.select(
-            *[F.col(c) for c in order_cols],
-            F.col(label_col).cast("string").alias("value"),
+            "doc_id", "i1", "i2",
+            F.col("pred_label").cast("string").alias("value"),
         )
         .repartition(1)
-        .sortWithinPartitions(*order_cols)
+        .sortWithinPartitions("doc_id", "i1", "i2")
         .select("value")
         .write.mode("overwrite")
         .text(path)

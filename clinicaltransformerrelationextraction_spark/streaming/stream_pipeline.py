@@ -28,14 +28,12 @@ def stream_triples(
     output_dir: str,
     checkpoint_dir: str,
     cfg: PipelineConfig | None = None,
-    schema=None,
 ) -> None:
     """Process all currently-available parquet files in ``input_dir`` into
     triple parquet in ``output_dir``, exactly once per input file across
     re-runs (checkpointed). Returns after the AvailableNow batch drains."""
     cfg = cfg or PipelineConfig()
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
+    schema = spark.read.parquet(input_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 8)
@@ -91,17 +89,16 @@ def stream_dedup_pages(
     pages_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    watermark: str = "1 hour",
 ) -> None:
     """Streaming exact dedup of a pages feed — the ingest-time twin of the
     batch keeper selection (operators/dedup.q_dedup_exact /
     textstats.q_corpus_clean): content-hash the text, keep the FIRST
-    arrival per hash, drop later duplicates. State is BOUNDED by the
-    event-time watermark (``dropDuplicatesWithinWatermark``): a hash whose
-    watermark has passed is evicted from the state store, which is what
-    makes this runnable forever on a 10^12-page crawl feed — an unbounded
-    ``dropDuplicates`` would accumulate one state row per distinct page
-    in history. Late re-crawls inside the watermark dedup exactly;
+    arrival per hash, drop later duplicates. State is BOUNDED by a
+    one-hour event-time watermark (``dropDuplicatesWithinWatermark``): a
+    hash whose watermark has passed is evicted from the state store, which
+    is what makes this runnable forever on a 10^12-page crawl feed — an
+    unbounded ``dropDuplicates`` would accumulate one state row per
+    distinct page in history. Late re-crawls inside the watermark dedup exactly;
     re-crawls arriving later than the watermark re-emit (the standard
     streaming-dedup contract — downstream batch compaction
     (q_dedup_exact) remains the global guarantee)."""
@@ -111,7 +108,7 @@ def stream_dedup_pages(
     stream = stream.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
     deduped = (
         stream.withColumn("text_hash", F.md5("text"))
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
     q = (

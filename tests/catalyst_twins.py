@@ -155,14 +155,12 @@ def simhash_frame_hof(docs: DataFrame) -> DataFrame:
     )
 
 
-def mentions_hof(df: DataFrame, cfg: PipelineConfig | None = None,
-                 doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def mentions_hof(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Twin of ``segmentation.mentions``: posexplode the tokens and take
     char offsets from a per-doc cumulative-sum window (which shuffles
     every token row; the kernel's prefix sum is in-row)."""
     cfg = cfg or PipelineConfig()
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
+    base = df.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     tok_rows = base.select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
     ).select(

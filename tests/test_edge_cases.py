@@ -11,6 +11,9 @@ from clinicaltransformerrelationextraction_spark.config import PipelineConfig
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
     candidates,
 )
+from clinicaltransformerrelationextraction_spark.operators.scoring import (
+    score_filter_number,
+)
 from clinicaltransformerrelationextraction_spark.operators.segmentation import (
     mentions,
     sentences,
@@ -83,8 +86,9 @@ def test_doc_exceeding_pair_cap(spark):
 
 def test_null_doc_id_fails_with_named_cause(spark):
     """A NULL doc_id (a NaN once a ``long`` column reaches pandas) stops
-    the triples and brat passes with an error that names it, not a
-    pandas ``IntCastingNaNError`` from the worker; ``mentions`` keeps the
+    the triples and brat passes, and ``score_filter_number`` over a
+    candidate frame, with an error that names it, not a pandas
+    ``IntCastingNaNError`` from the worker; ``mentions`` keeps the
     NULL-id rows as before."""
     frames = [
         spark.createDataFrame([(None, "join spark"), (1, "join spark")],
@@ -98,4 +102,10 @@ def test_null_doc_id_fails_with_named_cause(spark):
             with pytest.raises(Exception,
                                match=r"1 document row\(s\) with a NULL doc_id"):
                 run(docs).collect()
+        cand = candidates(docs, CFG)
+        n_null = cand.filter(F.col("doc_id").isNull()).count()
+        assert n_null > 0
+        with pytest.raises(Exception, match=rf"{n_null} candidate row\(s\) "
+                                            "with a NULL doc_id"):
+            score_filter_number(cand, CFG).collect()
         assert mentions(docs, CFG).filter(F.col("doc_id").isNull()).count() == 2

@@ -213,8 +213,6 @@ def test_lengths_frame_fails_with_named_cause(spark):
     lens = candidates(docs, PipelineConfig(), emit="lengths")
     mlp = PipelineConfig(scorer="mlp")
     with pytest.raises(ValueError, match='emit="lengths"'):
-        score_candidates(lens, PipelineConfig(), keep_text=True)
-    with pytest.raises(ValueError, match='emit="lengths"'):
         score_candidates(lens, mlp)
     with pytest.raises(ValueError, match='emit="lengths"'):
         score_filter_number(lens, mlp)

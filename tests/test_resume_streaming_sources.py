@@ -766,31 +766,6 @@ def test_ledger_empty_bucket_and_stale_partition(spark, tmp_path):
     assert all(v["n_triples"] == 0 for v in ledger3.values())
 
 
-def test_checkpoint_retention(tmp_path):
-    """S9/W4 — latest-checkpoint resolution and oldest-first eviction
-    beyond the retention limit (src/task.py:270-271, 306-318)."""
-    import os
-
-    from clinicaltransformerrelationextraction_spark.plans.ledger import (
-        latest_checkpoint,
-        prune_checkpoints,
-    )
-
-    root = str(tmp_path / "ckpts")
-    os.makedirs(root)
-    for n in (1, 2, 3, 10):
-        os.makedirs(os.path.join(root, f"ckpt_{n}"))
-        with open(os.path.join(root, f"ckpt_{n}", "model.bin"), "w") as f:
-            f.write(str(n))
-    assert latest_checkpoint(root).endswith("ckpt_10")
-    deleted = prune_checkpoints(root, max_num=2)
-    assert [os.path.basename(p) for p in deleted] == ["ckpt_1", "ckpt_2"]
-    assert sorted(os.listdir(root)) == ["ckpt_10", "ckpt_3"]
-    assert latest_checkpoint(root).endswith("ckpt_10")
-    assert prune_checkpoints(root, max_num=5) == []
-    assert latest_checkpoint(str(tmp_path / "nope")) is None
-
-
 def test_streaming_dedup_matches_batch_exact_dedup(spark, tmp_path):
     """Streaming content-hash dedup (watermark-bounded state) keeps
     exactly one page per distinct text, and the kept hash set equals the
