@@ -562,34 +562,28 @@ def _pq_codebook(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pq_encode(
-    subs: DataFrame, cb: DataFrame, extra: tuple = ()
-) -> DataFrame:
-    """(vec_id[, *extra], sub, code): nearest codebook centroid per
-    subspace by exact bigint squared-L2, tie -> smallest code — the
-    single encoding implementation shared by q_pq_codes and the corpus
-    side of q_pq_ann_topk (the oracle's shared `codes` CTE is its SQL
-    twin). The argmin is the map-side-combinable min(struct) aggregate.
-    ``extra`` names per-vector columns to carry through the encode
-    (constant per vec_id, e.g. the IVF cell) — the production shape
-    stores them WITH the codes, so downstream never joins two
-    corpus-sized frames to reunite them."""
+def _pq_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, sub, code): nearest codebook centroid per subspace by
+    exact bigint squared-L2, tie -> smallest code — the single encoding
+    implementation shared by q_pq_codes and the corpus side of
+    q_pq_ann_topk (the oracle's shared `codes` CTE is its SQL twin). The
+    argmin is the map-side-combinable min(struct) aggregate."""
     d = subs.join(F.broadcast(cb), "sub").select(
-        "vec_id", *extra, "sub", "code",
+        "vec_id", "sub", "code",
         _sq_l2(F.col("sv"), F.col("centroid")).alias("dist"),
     )
     return (
-        d.groupBy("vec_id", *extra, "sub")
+        d.groupBy("vec_id", "sub")
         .agg(F.min(F.struct("dist", "code")).alias("m"))
-        .select("vec_id", *extra, "sub", F.col("m.code").alias("code"))
+        .select("vec_id", "sub", F.col("m.code").alias("code"))
     )
 
 
 def _pq_dtab(query_subs: DataFrame, cb: DataFrame) -> DataFrame:
     """Per-query ADC distance TABLE ``(query_id, sub, code, d)`` — exact
     bigint squared-L2 from the query's raw subvectors to every codebook
-    centroid. The single definition shared by q_pq_ann_topk and
-    ann_ivf_pq_topk (its SQL twin is the oracle's dtab CTE)."""
+    centroid, for q_pq_ann_topk (its SQL twin is the oracle's dtab
+    CTE)."""
     return (
         query_subs.join(F.broadcast(cb), "sub")
         .select(
@@ -650,12 +644,11 @@ def q_pq_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _adc_shortlist_rerank(approx: DataFrame, q: DataFrame) -> DataFrame:
-    """The PQ refinement tail shared by :func:`q_pq_ann_topk` and
-    :func:`ann_ivf_pq_topk`: keep the PQ_RERANK-deep ADC shortlist per
-    query ((adist, neighbor_id) tiebreak), compute exact squared-L2 on
-    the raw quantized vectors for shortlist rows only (two broadcast
-    point-lookup joins, O(queries × k') vector touches), and rank the
-    final top-TOPK by (dist, neighbor_id)."""
+    """The PQ refinement tail of :func:`q_pq_ann_topk`: keep the
+    PQ_RERANK-deep ADC shortlist per query ((adist, neighbor_id)
+    tiebreak), compute exact squared-L2 on the raw quantized vectors for
+    shortlist rows only (two broadcast point-lookup joins, O(queries × k')
+    vector touches), and rank the final top-TOPK by (dist, neighbor_id)."""
     from pyspark.sql import Window
 
     ws = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
@@ -683,82 +676,3 @@ def _adc_shortlist_rerank(approx: DataFrame, q: DataFrame) -> DataFrame:
         .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "dist", "adist")
     )
-
-
-def ann_ivf_pq_topk(
-    spark: SparkSession, sf: str, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """IVF-PQ: the full production ANN composition — coarse cells
-    restrict WHICH corpus vectors are scanned (IVF), PQ codes restrict
-    WHAT is read per vector (ADC), and the exact re-rank restores
-    quality on the shortlist. This is the shape that serves 10^12
-    vectors: the scan side is (cell, PQ_M bytes) per vector, cell
-    pruning cuts it by ~n_cells/nprobe, and raw vectors are touched
-    only via queries × PQ_RERANK point lookups.
-
-    Everything is the already-verified pieces composed: cell assignment
-    is exact bigint squared-L2 to the broadcast coarse codebook (the
-    SAME metric PQ approximates — the cosine-based q_ann_ivf_topk keeps
-    its own metric; mixing them would make the nprobe dial lie),
-    corpus codes come from the shared ``_pq_encode``, the distance
-    tables broadcast into the cell-pruned code scan, and the tail is
-    the shared ``_adc_shortlist_rerank``. ``cfg.ann_nprobe`` is the
-    recall/scan-scope dial; at nprobe = n_cells the cell restriction is
-    vacuous and the output equals :func:`q_pq_ann_topk` EXACTLY
-    (pytest-pinned, tests/test_round6_features.py). Recall is
-    NEAR-monotone in nprobe: the fixed PQ_RERANK-deep shortlist can in
-    principle evict a true neighbor as the candidate pool grows, so the
-    dial test asserts monotonicity with a small tolerance. Registered
-    as a driver query when window slots open (round 7); until then
-    evidence is the equality pin + the recall-dial tests."""
-    from pyspark.sql import Window
-
-    nprobe = (cfg or PipelineConfig()).ann_nprobe
-    q = _q(spark, sf)
-    cents = _centroids(spark, sf)
-    cdist = _sq_l2(F.col("qe"), F.col("centroid"))
-    # QUERY cells: queries × n_cells rows — tiny by construction, the
-    # nprobe top-n window stays here
-    qcells = (
-        q.filter(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "label", cdist.alias("cdist"))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy("cdist", "label")
-            ),
-        )
-        .filter(F.col("crank") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"), F.col("label").alias("cell"))
-    )
-    cb = _pq_codebook(spark, sf).localCheckpoint(eager=False)
-    # CORPUS cells (r7, same fix as q_ann_ivf_topk): min(struct(cdist,
-    # label)) is the (cdist ASC, label ASC) argmin as a scalar-only
-    # MAP-SIDE aggregate, and the raw vector rides through it as
-    # first(qe) — the corpus qe arrays no longer ride an
-    # n_cells-amplified window exchange. cell then rides THROUGH the
-    # encode (extra key) — the persisted-index shape stores (cell,
-    # codes) together, so the cell-pruned scan never joins two
-    # corpus-sized frames to reunite them (no sort-merge join anywhere,
-    # plan-asserted)
-    corpus_src = (
-        q.filter(F.col("vec_id") >= N_QUERIES)
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "qe", "label", cdist.alias("cdist"))
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct("cdist", "label")).alias("m"),
-            F.first("qe").alias("qe"),
-        )
-        .select("vec_id", F.col("m.label").alias("cell"), "qe")
-    )
-    corpus_codes = _pq_encode(_pq_subvecs(corpus_src), cb, extra=("cell",))
-    dtab = _pq_dtab(_pq_subvecs(q.filter(F.col("vec_id") < N_QUERIES)), cb)
-    approx = (
-        corpus_codes.join(F.broadcast(qcells), "cell")
-        .join(F.broadcast(dtab), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("adist"))
-    )
-    return _adc_shortlist_rerank(approx, q)

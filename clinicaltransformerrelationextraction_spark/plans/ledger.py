@@ -36,30 +36,36 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
                 ``bucket = pmod(hash(doc_id), n_buckets)``
   ============  =====================================================
 
-  Files written before this layout stored the four derived columns and
-  no ``rel_n``. A read requests both layouts' columns, Parquet fills
-  those a file lacks with NULLs, and ``coalesce`` takes whichever the
-  file has, so old, new and mixed snapshots read the same rows. Storing
-  numbers cut a stub ``predict``'s bytes per input byte (perfbench
+  Storing numbers cut a stub ``predict``'s bytes per input byte (perfbench
   ``write_amp``, seed-1 corpus) from 0.568 to 0.486;
-- a ``_ledger`` table records (partition_id, status, n_triples, n_docs,
-  wall_sec, path, version, n_buckets, config, id_type) — the per-partition
-  lineage + metrics. ``n_docs`` and ``n_triples`` are per-bucket counts in one
-  Observation per side of the write, so a run costs only the Spark jobs
-  of that write; every row of one write records that write's
-  ``wall_sec``. ``n_buckets`` pins the bucketing: a run with another count
-  raises instead of re-bucketing over done rows. ``config`` pins the
-  scoring config the same way (``config_digest``), so a resume under
-  another scorer raises instead of mixing two scorers' buckets.
-  ``id_type``, the kernel's doc_id type, is recorded by rows and snapshots
-  so ``triples()`` needs no Parquet schema inference (a Spark job) before
-  its action; ledgers written before the field infer it from one file;
-- ``_snapshots.json`` appends one snapshot per completed run with the full
-  bucket->file manifest and parent chaining, and keeps the highest
-  snapshot id and data version it ever held, so expiry never lets an id
-  be reused; ``triples(snapshot_id=...)`` TIME-TRAVELS to any retained
-  snapshot; ``expire_snapshots`` GCs bucket directories no retained
-  snapshot references;
+- ``_ledger.json`` holds one row per bucket with exactly the fields
+  ``ROW_FIELDS`` — (status, n_docs, n_triples, wall_sec, version,
+  n_buckets, config, id_type) — the per-partition lineage + metrics.
+  ``n_docs`` and ``n_triples`` are per-bucket counts in one Observation per
+  side of the write, so a run costs only the Spark jobs of that write;
+  every row of one write records that write's ``wall_sec``. ``version``
+  names the run directory, so a bucket's files are always
+  ``data/v<version>/b=<bucket>`` (``_bucket_dir``) and no row stores a
+  path: an out_dir reads the same wherever it is copied. ``n_buckets``
+  pins the bucketing: a run with another count raises instead of
+  re-bucketing over done rows. ``config`` pins the scoring config the same
+  way (``config_digest``), so a resume under another scorer raises instead
+  of mixing two scorers' buckets. ``id_type``, the kernel's doc_id type,
+  is recorded by rows and snapshots so ``triples()`` needs no Parquet
+  schema inference (a Spark job) before its action;
+- ``_snapshots.json`` is ``{"high_water", "snapshots"}``: it appends one
+  snapshot (``SNAPSHOT_FIELDS``) per completed run with the full
+  bucket -> ``{version, n_triples}`` manifest and parent chaining, and keeps
+  the highest snapshot id and data version it ever held, so expiry never
+  lets an id be reused; ``triples(snapshot_id=...)`` TIME-TRAVELS to any
+  retained snapshot; ``expire_snapshots`` GCs bucket directories no
+  retained snapshot references;
+- there is one on-disk format. Every entry point reads both files through
+  ``_read_ledger``/``_read_log``, which refuse any other shape (a missing or
+  extra field, a bare-list log) with a ``ValueError`` that names the file
+  and the fields, before any Spark job, write or delete. An out_dir of an
+  earlier format is not read or repaired: write to a new one (Iceberg's
+  ``format-version`` rule: a reader refuses a format it does not know);
 - ``resume()`` skips partitions whose ledger row says done, exactly the
   reference's skip-if-exists, but transactional per partition.
 
@@ -84,21 +90,31 @@ from ..config import PipelineConfig
 from ..operators.scoring import brat_rows, numbered_schema, public_triples
 from .pipeline import run_brat, run_pipeline
 
-# the public triples-table schema, what ``LedgerRun.triples`` returns (for
-# empty-manifest reads, where no parquet file exists to infer from)
-TRIPLES_DDL = (
-    "doc_id bigint, rel_id string, pred string, subj_id string, "
-    "obj_id string, score double, sent_diff int, i1 int, i2 int, "
-    "bucket int"
-)
+# the one on-disk format: the exact fields of a ledger row, of the
+# snapshot log, of a snapshot and of a manifest entry
+ROW_FIELDS = ("status", "n_docs", "n_triples", "wall_sec", "version",
+              "n_buckets", "config", "id_type")
+LOG_FIELDS = ("high_water", "snapshots")
+SNAPSHOT_FIELDS = ("snapshot_id", "parent_id", "ts", "operation",
+                   "buckets_written", "buckets_done", "n_buckets", "config",
+                   "id_type", "total_triples", "total_docs", "manifest")
+MANIFEST_FIELDS = ("version", "n_triples")
 
 
-def _read_ddl(id_type: str) -> str:
-    """The requested schema of a manifest read: the stored numeric form
-    plus the derived columns that files written before it stored instead
-    (``rel_id``, ``subj_id``, ``obj_id``, ``bucket``). Parquet fills the
-    columns a file lacks with NULLs, so one read covers both layouts."""
-    return numbered_schema(id_type, ids=True) + ", rel_id string, bucket int"
+def _check_fields(path: str, what: str, got, fields: tuple) -> None:
+    """Refuse ``got`` unless it is an object with exactly ``fields``: an
+    out_dir of an earlier ledger format is refused, never misread."""
+    keys = set(got) if isinstance(got, dict) else set()
+    if isinstance(got, dict) and keys == set(fields):
+        return
+    kind = "" if isinstance(got, dict) else \
+        f"a JSON {type(got).__name__}, not an object, "
+    raise ValueError(
+        f"{path}: {what} is {kind}missing fields "
+        f"{sorted(set(fields) - keys)}, extra fields "
+        f"{sorted(keys - set(fields))}; it was written in an earlier "
+        "ledger format, which is not read: write to a new out_dir"
+    )
 
 
 # PipelineConfig fields that change no triple: the pairs per scorer call,
@@ -245,13 +261,12 @@ def _write_text(path: str, text: str) -> None:
 
 
 def _manifest(ledger: dict[str, dict]) -> dict[str, dict]:
-    """bucket -> the immutable data files of its done row: what a snapshot
-    pins."""
+    """bucket -> the version and row count of its done row: the immutable
+    data directory a snapshot pins."""
     return {
-        k: {"path": v["path"], "n_triples": v["n_triples"],
-            "version": v["version"]}
+        k: {"version": v["version"], "n_triples": v["n_triples"]}
         for k, v in ledger.items()
-        if v.get("status") == "done" and "path" in v
+        if v["status"] == "done"
     }
 
 
@@ -260,18 +275,12 @@ def _high_water(snaps: list[dict], high: dict) -> dict:
     ever recorded: the retained ``snaps`` and the mark ``high`` that the
     expired ones left behind."""
     return {
-        "snapshot_id": max([high.get("snapshot_id", 0),
+        "snapshot_id": max([high["snapshot_id"],
                             *(s["snapshot_id"] for s in snaps)]),
-        "version": max([high.get("version", -1),
-                        *(m.get("version", -1) for s in snaps
-                          for m in s.get("manifest", {}).values())]),
+        "version": max([high["version"],
+                        *(m["version"] for s in snaps
+                          for m in s["manifest"].values())]),
     }
-
-
-def _id_type(rows) -> str | None:
-    """The kernel's doc_id type (``simpleString``) that ledger rows record;
-    None when every row predates the ``id_type`` field."""
-    return next((v["id_type"] for v in rows if "id_type" in v), None)
 
 
 @dataclass
@@ -305,6 +314,10 @@ class LedgerRun:
         return os.path.join(self.out_dir, "triples")
 
     @property
+    def data_dir(self) -> str:
+        return f"{self.triples_dir}/data"
+
+    @property
     def ledger_path(self) -> str:
         return os.path.join(self.out_dir, "_ledger.json")
 
@@ -312,9 +325,20 @@ class LedgerRun:
     def snapshots_path(self) -> str:
         return os.path.join(self.out_dir, "_snapshots.json")
 
+    @staticmethod
+    def _bucket_dir(bucket: int | str, version: int) -> str:
+        """Bucket ``bucket``'s data directory under ``triples/data``, as
+        the run of ``version`` wrote it (``partitionBy`` names it
+        ``b=<bucket>`` inside the run directory ``v<version>``)."""
+        return f"v{version}/b={bucket}"
+
     def _read_ledger(self) -> dict[str, dict]:
+        """The ledger, each row checked to have exactly ``ROW_FIELDS``."""
         text = _read_text(self.ledger_path)
-        return json.loads(text) if text is not None else {}
+        ledger = json.loads(text) if text is not None else {}
+        for key, row in ledger.items():
+            _check_fields(self.ledger_path, f"bucket {key}", row, ROW_FIELDS)
+        return ledger
 
     def _write_ledger(self, ledger: dict[str, dict]) -> None:
         _write_text(
@@ -324,21 +348,17 @@ class LedgerRun:
     def _check_pins(self, ledger: dict[str, dict], config: str) -> None:
         """A row bucketed under another count covers other docs, so
         skipping or re-running it by key would lose or duplicate triples.
-        Rows that predate the ``n_buckets`` field are checked by key. A
-        row scored under another config would leave the table mixing two
-        configs' triples; rows that predate the ``config`` field pass."""
+        A row scored under another config would leave the table mixing two
+        configs' triples."""
         for key, row in ledger.items():
-            theirs = row.get("n_buckets")
-            if theirs is None and int(key) >= self.n_buckets:
-                theirs = f"at least {int(key) + 1}"
-            if theirs not in (None, self.n_buckets):
+            if row["n_buckets"] != self.n_buckets:
                 raise ValueError(
                     f"{self.ledger_path} was written with n_buckets="
-                    f"{theirs} (bucket {key}), but this run has n_buckets="
-                    f"{self.n_buckets}; resume with the ledger's bucket "
-                    "count or use a new out_dir"
+                    f"{row['n_buckets']} (bucket {key}), but this run has "
+                    f"n_buckets={self.n_buckets}; resume with the ledger's "
+                    "bucket count or use a new out_dir"
                 )
-            if row.get("config", config) != config:
+            if row["config"] != config:
                 raise ValueError(
                     f"{self.ledger_path} bucket {key} was scored under "
                     f"config digest {row['config']}, but this run's config "
@@ -371,17 +391,17 @@ class LedgerRun:
         cfg = cfg or PipelineConfig()
         config = config_digest(cfg)
         ledger = self._read_ledger()
+        seen = _high_water(*self._read_log())["version"]
         self._check_pins(ledger, config)
-        is_pending = [ledger.get(str(b), {}).get("status") != "done"
+        committed = _manifest(ledger)
+        is_pending = [str(b) not in committed
                       for b in range(self.n_buckets)]
         pending = [b for b, p in enumerate(is_pending) if p]
         if not pending:
             # a run that crashed after its last row commit left done rows
             # newer than any snapshot ever recorded: snapshot them now,
             # with no Spark job
-            seen = _high_water(*self._read_log())["version"]
-            written = sum(m["version"] > seen
-                          for m in _manifest(ledger).values())
+            written = sum(m["version"] > seen for m in committed.values())
             if written:
                 self._append_snapshot(ledger, written, config)
             if brat is not None:
@@ -430,25 +450,24 @@ class LedgerRun:
             # Iceberg-style commit: one IMMUTABLE run directory, its version
             # above every version a row or any snapshot ever pinned, so the
             # overwrite can only replace an uncommitted orphan
-            version = 1 + max([
-                _high_water(*self._read_log())["version"],
-                *(v.get("version", -1) for v in ledger.values())])
-            run_dir = f"{self.triples_dir}/data/v{version}"
-            trip.write.partitionBy("b").mode("overwrite").parquet(run_dir)
+            version = 1 + max([seen, *(v["version"] for v in ledger.values())])
+            trip.write.partitionBy("b").mode("overwrite").parquet(
+                f"{self.data_dir}/v{version}")
             wall = round(time.time() - t0, 3)
             if fail_after == 0:
                 raise RuntimeError("simulated failure after 0 buckets")
             for done, b in enumerate(pending, 1):
-                path, n_triples = f"{run_dir}/b={b}", o_trip.get[str(b)]
+                n_triples = o_trip.get[str(b)]
                 if not n_triples:  # partitionBy writes no directory for it
-                    fs, hpath = _hadoop_fs(docs.sparkSession, path)
+                    fs, hpath = _hadoop_fs(
+                        docs.sparkSession,
+                        f"{self.data_dir}/{self._bucket_dir(b, version)}")
                     fs.mkdirs(hpath)
                 ledger[str(b)] = {
                     "status": "done",
                     "n_docs": o_docs.get[str(b)],
                     "n_triples": n_triples,
                     "wall_sec": wall,
-                    "path": path,
                     "version": version,
                     "n_buckets": self.n_buckets,
                     "config": config,
@@ -477,12 +496,19 @@ class LedgerRun:
 
     def _read_log(self) -> tuple[list[dict], dict]:
         """The retained snapshots and the log's high-water mark (see
-        ``_high_water``). A bare list is a log written before the mark
-        was kept."""
+        ``_high_water``), each checked against the one format; an absent
+        log has no snapshot and marks nothing written."""
         text = _read_text(self.snapshots_path)
-        log = json.loads(text) if text is not None else []
-        if isinstance(log, list):
-            return log, {}
+        if text is None:
+            return [], {"snapshot_id": 0, "version": -1}
+        path = self.snapshots_path
+        log = json.loads(text)
+        _check_fields(path, "the snapshot log", log, LOG_FIELDS)
+        for i, snap in enumerate(log["snapshots"]):
+            _check_fields(path, f"log entry {i}", snap, SNAPSHOT_FIELDS)
+            for key, entry in snap["manifest"].items():
+                _check_fields(path, f"snapshot {snap['snapshot_id']} "
+                              f"bucket {key}", entry, MANIFEST_FIELDS)
         return log["snapshots"], log["high_water"]
 
     def _write_log(self, snaps: list[dict], high: dict) -> None:
@@ -500,22 +526,19 @@ class LedgerRun:
         # retained ones: expire_snapshots truncates the log, and a reused
         # id would shadow a retained snapshot or answer for an expired one
         last = _high_water(prior, high)["snapshot_id"]
+        rows = ledger.values()
         snap = {
             "snapshot_id": last + 1,
             "parent_id": last or None,
             "ts": time.time(),
             "operation": "replace-partitions",
             "buckets_written": buckets_written,
-            "buckets_done": sum(
-                1 for v in ledger.values() if v.get("status") == "done"
-            ),
+            "buckets_done": sum(v["status"] == "done" for v in rows),
             "n_buckets": self.n_buckets,
             "config": config,
-            "id_type": _id_type(ledger.values()),
-            "total_triples": sum(
-                v.get("n_triples", 0) for v in ledger.values()
-            ),
-            "total_docs": sum(v.get("n_docs", 0) for v in ledger.values()),
+            "id_type": next(iter(rows))["id_type"],
+            "total_triples": sum(v["n_triples"] for v in rows),
+            "total_docs": sum(v["n_docs"] for v in rows),
             # the manifest: which immutable data file set IS this snapshot
             "manifest": _manifest(ledger),
         }
@@ -533,31 +556,25 @@ class LedgerRun:
         if keep_last < 0:
             raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         snaps, high = self._read_log()
+        ledger = self._read_ledger()
         kept, dropped = snaps[-keep_last:] if keep_last else [], \
             snaps[:-keep_last] if keep_last else snaps
-        # keyed by path under triples/data/, which sidesteps scheme
-        # differences (file:/x vs /x); pre-run-directory ledgers left
-        # bucket directories b<bucket>_v<version> directly under data/
-        def rel(path: str) -> str:
-            return path.rpartition("/triples/data/")[2]
-
+        # bucket directories relative to triples/data/, which sidesteps
+        # scheme differences (file:/x vs /x) in the listed paths
         live = {
-            rel(m["path"])
+            self._bucket_dir(k, m["version"])
             for s in kept
-            for m in s.get("manifest", {}).values()
-        } | {rel(v["path"]) for v in self._read_ledger().values()
-             if "path" in v}
+            for k, m in s["manifest"].items()
+        } | {self._bucket_dir(k, v["version"]) for k, v in ledger.items()}
         # Iceberg's order: commit the truncated log, then delete, so a
         # crash in between leaves only orphans, which the next expiry
         # collects, and never a logged snapshot whose files are gone
         if dropped:
             self._write_log(kept, _high_water(snaps, high))
-        fs, hroot = _hadoop_fs(spark, f"{self.triples_dir}/data")
+        fs, hroot = _hadoop_fs(spark, self.data_dir)
         deleted: list[str] = []
         for st in fs.listStatus(hroot) if fs.exists(hroot) else []:
             name = st.getPath().getName()
-            if name in live:
-                continue
             kids = {r.partition("/")[2] for r in live
                     if r.startswith(name + "/")}
             # a run directory goes whole only when none of its buckets is
@@ -581,51 +598,34 @@ class LedgerRun:
         """Manifest-resolved read. Default: the CURRENT table state (the
         live ledger). ``snapshot_id``: time-travel to that retained
         snapshot's file set — the old data dirs are immutable, so the view
-        is exactly what that commit produced."""
+        is exactly what that commit produced. A table with no triples has
+        the same columns and dtypes; only an out_dir with no row yet reads
+        ``bigint`` doc ids."""
+        # both files, whichever one the read resolves through: an out_dir
+        # of an earlier format is refused whole
+        ledger, snaps = self._read_ledger(), self.snapshots()
         if snapshot_id is None:
-            ledger = self._read_ledger()
-            stale = [
-                k for k, v in ledger.items()
-                if v.get("status") == "done" and "path" not in v
-            ]
-            if stale:
-                # never silently truncate: a done row without a data path
-                # is a pre-manifest-format ledger — re-run those buckets
-                raise ValueError(
-                    f"ledger rows for buckets {sorted(stale)} predate the "
-                    "manifest format (no 'path'); clear their status to "
-                    "re-run them under versioned commits"
-                )
-            manifest = {
-                k: v for k, v in ledger.items()
-                if v.get("status") == "done"
-            }
-            n_buckets = next((v["n_buckets"] for v in ledger.values()
-                              if "n_buckets" in v), self.n_buckets)
-            id_type = _id_type(manifest.values())
+            manifest = _manifest(ledger)
+            # every row has the pinned n_buckets
+            n_buckets, id_type = next(
+                ((v["n_buckets"], v["id_type"]) for v in ledger.values()),
+                (self.n_buckets, "bigint"))
         else:
-            by_id = {s["snapshot_id"]: s for s in self.snapshots()}
+            by_id = {s["snapshot_id"]: s for s in snaps}
             if snapshot_id not in by_id:
                 raise ValueError(
                     f"snapshot {snapshot_id} not found (retained: "
                     f"{sorted(by_id)}); it may have been expired"
                 )
-            manifest = by_id[snapshot_id]["manifest"]
-            n_buckets = by_id[snapshot_id].get("n_buckets", self.n_buckets)
-            id_type = by_id[snapshot_id].get("id_type")
-        paths = [
-            m["path"] for m in manifest.values() if m["n_triples"] > 0
-        ]
-        if not paths:
-            return spark.createDataFrame([], TRIPLES_DDL)
-        if id_type is None:
-            # a ledger written before rows recorded the type: every file
-            # has the kernel's doc_id type, so one file's schema tells it
-            # (Parquet schema inference, one Spark job)
-            id_type = spark.read.parquet(paths[0]).schema["doc_id"] \
-                .dataType.simpleString()
-        stored = spark.read.schema(_read_ddl(id_type)).parquet(*paths)
+            snap = by_id[snapshot_id]
+            manifest, n_buckets, id_type = \
+                snap["manifest"], snap["n_buckets"], snap["id_type"]
+        paths = [f"{self.data_dir}/{self._bucket_dir(k, m['version'])}"
+                 for k, m in manifest.items() if m["n_triples"] > 0]
+        schema = numbered_schema(id_type)
+        stored = spark.read.schema(schema).parquet(*paths) if paths \
+            else spark.createDataFrame([], schema)
         # n_buckets is pinned, so the hash is the bucket the write
-        # partitioned by; files of the old layout hold it
-        return public_triples(stored.withColumn("bucket", F.coalesce(
-            "bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets)))))
+        # partitioned by
+        return public_triples(stored.withColumn(
+            "bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets))))

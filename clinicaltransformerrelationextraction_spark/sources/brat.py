@@ -1,4 +1,5 @@
-"""Brat ``.ann`` format: parse and render (S3/S7/C7).
+"""Brat ``.ann`` format: parse (S3/S7/C7). The product renders ``.ann``
+rows in the doc-row kernel (``scoring.enum_score_number(brat=True)``).
 
 Line shapes (src/brat_eval.py:95-126; data_format_conf.py:2):
   T lines: ``T<i>\\t<type> <start> <end>\\t<surface>``
@@ -42,18 +43,3 @@ def parse_ann_lines(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     return mentions, relations
 
-
-def render_t_line(mention_id, ent_type, start, end, surface):
-    return F.concat_ws(
-        "\t",
-        mention_id,
-        F.concat_ws(" ", ent_type, start.cast("string"),
-                    end.cast("string")),
-        surface,
-    )
-
-
-def render_r_line(rel_id, rel_type, arg1, arg2):
-    return F.format_string(
-        "%s\t%s Arg1:%s Arg2:%s", rel_id, rel_type, arg1, arg2
-    )

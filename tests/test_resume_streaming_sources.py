@@ -13,10 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
-from clinicaltransformerrelationextraction_spark.plans.ledger import (
-    TRIPLES_DDL,
-    LedgerRun,
+from clinicaltransformerrelationextraction_spark.operators.scoring import (
+    numbered_schema,
 )
+from clinicaltransformerrelationextraction_spark.plans.ledger import LedgerRun
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     load_documents,
     run_pipeline,
@@ -24,7 +24,12 @@ from clinicaltransformerrelationextraction_spark.plans.pipeline import (
 from tests.conftest import SF_SMOKE
 
 
-def _assert_ledger_counts(spark, docs, ledger, n):
+def _data_dir(run, key, version):
+    """Bucket ``key``'s data directory as the run of ``version`` wrote it."""
+    return f"{run.triples_dir}/data/v{version}/b={key}"
+
+
+def _assert_ledger_counts(spark, docs, run, ledger, n):
     """Every row's n_docs and n_triples equal counts taken independently
     of the ledger: the bucket's docs, and the rows of its data dir."""
     assert sorted(map(int, ledger)) == list(range(n))
@@ -32,9 +37,8 @@ def _assert_ledger_counts(spark, docs, ledger, n):
         want_docs = docs.filter(
             F.pmod(F.hash("doc_id"), F.lit(n)) == int(key)
         ).count()
-        want_trip = (
-            spark.read.schema(TRIPLES_DDL).parquet(row["path"]).count()
-        )
+        want_trip = spark.read.schema(numbered_schema(row["id_type"])) \
+            .parquet(_data_dir(run, key, row["version"])).count()
         assert (row["n_docs"], row["n_triples"]) == (want_docs, want_trip), key
         assert row["n_buckets"] == n
 
@@ -63,7 +67,7 @@ def test_ledger_resume_after_crash(spark, tmp_path):
         resumed.select(*key).exceptAll(expected.select(*key)).count() == 0
     )
     # per-partition lineage metrics, exact across the crash and the resume
-    _assert_ledger_counts(spark, docs, ledger, 4)
+    _assert_ledger_counts(spark, docs, run, ledger, 4)
     assert all(v["wall_sec"] >= 0 for v in ledger.values())
 
     # idempotence: re-running a completed ledger is a no-op
@@ -91,7 +95,7 @@ def test_ledger_counts_equal_independent_counts(
     run = LedgerRun(out_dir=scheme + str(tmp_path / "c"), n_buckets=n,
                     salt=salt)
     ledger = run.run(docs)
-    _assert_ledger_counts(spark, docs, ledger, n)
+    _assert_ledger_counts(spark, docs, run, ledger, n)
     if n_docs is not None:
         assert sum(v["n_docs"] for v in ledger.values()) == n_docs
         assert any(
@@ -119,7 +123,7 @@ def test_ledger_triples_invariant_to_bucket_count(
         docs = docs.filter(F.col("doc_id").isin([r.doc_id for r in first]))
     run = LedgerRun(out_dir=str(tmp_path / "inv"), n_buckets=n, salt=salt)
     ledger = run.run(docs)
-    _assert_ledger_counts(spark, docs, ledger, n)
+    _assert_ledger_counts(spark, docs, run, ledger, n)
     got = run.triples(spark)
     assert got.filter(
         F.col("bucket") != F.pmod(F.hash("doc_id"), F.lit(n))
@@ -131,6 +135,35 @@ def test_ledger_triples_invariant_to_bucket_count(
 
 def _under_data(paths):
     return sorted(p.rpartition("/triples/data/")[2] for p in paths)
+
+
+def _files(out_dir):
+    """Every file under ``out_dir``, by relative path, with its bytes."""
+    got = {}
+    for base, _, names in os.walk(out_dir):
+        for name in names:
+            path = os.path.join(base, name)
+            with open(path, "rb") as f:
+                got[os.path.relpath(path, out_dir)] = f.read()
+    return got
+
+
+def _assert_refused(spark, out_dir, calls, match):
+    """Each of ``calls`` raises a ValueError matching ``match`` before any
+    Spark job, and every file under ``out_dir`` stays, byte-identical."""
+    before = _files(out_dir)
+    assert before
+    sc = spark.sparkContext
+    for i, call in enumerate(calls):
+        group = f"refused-{out_dir}-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match=match):
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup(group), i
+    assert _files(out_dir) == before
 
 
 def test_ledger_expire_collects_by_bucket_directory(spark, tmp_path):
@@ -174,41 +207,6 @@ def test_ledger_run_version_above_snapshot_pins(spark, tmp_path):
     assert run.triples(spark, snapshot_id=2).count() == pinned
 
 
-def test_ledger_expire_collects_old_layout_dirs(spark, tmp_path):
-    """Out_dirs written before run directories hold one b<bucket>_v<version>
-    directory per bucket commit directly under triples/data/: expire must
-    still collect the replaced ones and keep the live ones."""
-    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 40)
-    run = LedgerRun(out_dir=str(tmp_path / "old"), n_buckets=2)
-    ledger = {}
-    for b in range(2):  # what a per-bucket commit left behind
-        path = f"{run.triples_dir}/data/b{b}_v0"
-        part = docs.filter(F.pmod(F.hash("doc_id"), F.lit(2)) == b)
-        trip = run_pipeline(part, PipelineConfig()).triples.withColumn(
-            "bucket", F.lit(b))
-        trip.write.parquet(path)
-        ledger[str(b)] = {
-            "status": "done", "n_docs": part.count(),
-            "n_triples": trip.count(), "wall_sec": 0.0, "path": path,
-            "version": 0, "n_buckets": 2,
-        }
-    run._write_ledger(ledger)
-    manifest = {k: {"path": v["path"], "n_triples": v["n_triples"]}
-                for k, v in ledger.items()}
-    with open(run.snapshots_path, "w") as f:
-        json.dump([{"snapshot_id": 1, "parent_id": None,
-                    "manifest": manifest}], f)
-    before = Counter(map(tuple, run.triples(spark).collect()))
-    assert before
-
-    ledger["0"]["status"] = "redo"
-    run._write_ledger(ledger)
-    ledger = run.resume(docs)
-    assert _under_data([ledger["0"]["path"]]) == ["v1/b=0"]
-    assert _under_data(run.expire_snapshots(spark, keep_last=1)) == ["b0_v0"]
-    assert Counter(map(tuple, run.triples(spark).collect())) == before
-
-
 def test_ledger_adds_no_spark_job(spark, tmp_path):
     """A ledger run is exactly the Spark jobs of ONE write of the triples:
     every pending bucket goes into that write and the per-bucket counts
@@ -245,9 +243,9 @@ def test_ledger_adds_no_spark_job(spark, tmp_path):
 def test_ledger_triples_reads_the_recorded_id_type(spark, tmp_path):
     """Ledger rows and snapshots record the kernel's doc_id type, so
     ``triples()`` starts no Spark job before its action, for bigint and
-    string ids, current and time-travelled. A ledger written before rows
-    recorded the type still reads the same rows, through one file's
-    schema."""
+    string ids, current and time-travelled. A ledger whose rows and
+    snapshots lack the type, an earlier format, is refused before any
+    Spark job."""
     sc = spark.sparkContext
     base = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 80)
 
@@ -285,14 +283,10 @@ def test_ledger_triples_reads_the_recorded_id_type(spark, tmp_path):
         for snap in snaps:
             del snap["id_type"]
         run._write_log(snaps, high)
-        for name, read in [("current", lambda: run.triples(spark)),
-                           ("snapshot", lambda: run.triples(spark, 1))]:
-            old = {}
-            assert jobs(f"triples-old-{id_type}-{name}",
-                        lambda: old.setdefault(name, read())) >= 1
-            df = old[name]
-            assert (df.dtypes, Counter(map(tuple, df.collect()))) == \
-                want[name]
+        _assert_refused(
+            spark, run.out_dir,
+            [lambda: run.triples(spark), lambda: run.triples(spark, 1)],
+            r"missing fields \['id_type'\].*new out_dir")
 
 
 def test_ledger_code_is_independent_of_pending_set(
@@ -379,7 +373,7 @@ def test_ledger_fail_after_zero_commits_no_bucket(spark, tmp_path):
     assert not os.path.exists(run.ledger_path)
     assert not run.snapshots()
     ledger = run.resume(docs)
-    _assert_ledger_counts(spark, docs, ledger, 4)
+    _assert_ledger_counts(spark, docs, run, ledger, 4)
     one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=4)
     one.run(docs)
     assert Counter(map(tuple, run.triples(spark).collect())) == \
@@ -406,11 +400,11 @@ def test_ledger_crash_after_last_commit_resumes_to_one_snapshot(spark,
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sc.statusTracker().getJobIdsForGroup("ledger-late-snapshot")
-    _assert_ledger_counts(spark, docs, ledger, 2)
+    _assert_ledger_counts(spark, docs, run, ledger, 2)
     snaps = run.snapshots()
     assert len(snaps) == 1
     assert snaps[0]["manifest"] == {
-        k: {f: row[f] for f in ("path", "n_triples", "version")}
+        k: {f: row[f] for f in ("version", "n_triples")}
         for k, row in ledger.items()}
     one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
     one.run(docs)
@@ -458,12 +452,14 @@ def test_ledger_rejects_another_bucket_count(spark, tmp_path):
     with open(run.ledger_path) as f:
         assert f.read() == before
 
-    # rows that predate the field: any key >= n_buckets is rejected
+    # rows without the field are an earlier format: refused, not checked
+    # by key
     legacy = {k: {f: v for f, v in row.items() if f != "n_buckets"}
               for k, row in json.loads(before).items()}
     run._write_ledger(legacy)
-    with pytest.raises(ValueError, match="n_buckets=at least 2"):
-        LedgerRun(out_dir=out, n_buckets=1).run(docs)
+    _assert_refused(
+        spark, out, [lambda: LedgerRun(out_dir=out, n_buckets=1).run(docs)],
+        r"bucket \d is missing fields \['n_buckets'\]")
 
 
 def test_ledger_pins_the_scoring_config(spark, tmp_path):
@@ -471,7 +467,7 @@ def test_ledger_pins_the_scoring_config(spark, tmp_path):
     buckets next to stub ones: it must raise naming both config digests,
     before any Spark job, and leave the ledger byte-identical. Options
     that change no triple (the scorer batch size, ``--salt``) resume
-    fine, and rows that predate the config field pass."""
+    fine, and rows without the config field are refused."""
     from clinicaltransformerrelationextraction_spark.cli import main
     from clinicaltransformerrelationextraction_spark.plans.ledger import (
         config_digest,
@@ -511,7 +507,168 @@ def test_ledger_pins_the_scoring_config(spark, tmp_path):
     legacy = {k: {f: v for f, v in row.items() if f != "config"}
               for k, row in run._read_ledger().items()}
     run._write_ledger(legacy)
-    assert run.run(docs, PipelineConfig(scorer="mlp")) == legacy
+    _assert_refused(
+        spark, out, [lambda: run.run(docs, PipelineConfig(scorer="mlp"))],
+        r"bucket \d is missing fields \['config'\]")
+
+
+def _two_snapshots(spark, out_dir):
+    """A 2-bucket ledger run, then a re-run of bucket 0: snapshots 1 and
+    2, both with the one-shot run's rows. Returns the run and its docs."""
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 80)
+    run = LedgerRun(out_dir=out_dir, n_buckets=2)
+    run.run(docs)
+    ledger = run._read_ledger()
+    ledger["0"]["status"] = "redo"
+    run._write_ledger(ledger)
+    run.resume(docs)
+    assert [s["snapshot_id"] for s in run.snapshots()] == [1, 2]
+    return run, docs
+
+
+@pytest.fixture(scope="module")
+def two_snapshots_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("ledger") / "two")
+    _two_snapshots(spark, out)
+    return out
+
+
+def _rows_with_path(ledger, log, data):
+    """What every row and manifest entry stored before data directories
+    were derived, also in the layout whose files stored the id strings
+    and the bucket: the absolute data path."""
+    for key, row in ledger.items():
+        row["path"] = f"{data}/v{row['version']}/b={key}"
+    for snap in log["snapshots"]:
+        for key, m in snap["manifest"].items():
+            m["path"] = f"{data}/v{m['version']}/b={key}"
+    return ledger, log
+
+
+def _drop(rows=(), snaps=(), entries=()):
+    """An edit that deletes fields from every row, snapshot and manifest
+    entry: what rows held before each field was added."""
+    def edit(ledger, log, data):
+        for row in ledger.values():
+            for f in rows:
+                del row[f]
+        for snap in log["snapshots"]:
+            for f in snaps:
+                del snap[f]
+            for m in snap["manifest"].values():
+                for f in entries:
+                    del m[f]
+        return ledger, log
+    return edit
+
+
+def _pre_manifest(ledger, log, data):
+    """Rows that held only the status and the per-bucket counts."""
+    keep = ("status", "n_docs", "n_triples", "wall_sec")
+    return {k: {f: row[f] for f in keep} for k, row in ledger.items()}, log
+
+
+def _bucket_version_dirs(ledger, log, data):
+    """One ``b<bucket>_v<version>`` directory per bucket commit, directly
+    under ``triples/data/``, that rows and manifest entries name."""
+    for v in os.listdir(data):
+        for b in os.listdir(f"{data}/{v}"):
+            if b.startswith("b="):
+                os.rename(f"{data}/{v}/{b}",
+                          f"{data}/b{b[2:]}_{v}")
+    for key, row in ledger.items():
+        row["path"] = f"{data}/b{key}_v{row['version']}"
+    for snap in log["snapshots"]:
+        for key, m in snap["manifest"].items():
+            m["path"] = f"{data}/b{key}_v{m['version']}"
+    return ledger, log
+
+
+EARLIER_FORMATS = {
+    "stored_paths": (_rows_with_path, r"extra fields \['path'\]"),
+    "no_n_buckets": (_drop(rows=["n_buckets"]),
+                     r"bucket \d is missing fields \['n_buckets'\]"),
+    "no_config": (_drop(rows=["config"]),
+                  r"bucket \d is missing fields \['config'\]"),
+    "no_id_type": (_drop(rows=["id_type"], snaps=["id_type"]),
+                   r"missing fields \['id_type'\]"),
+    "pre_manifest": (_pre_manifest, r"bucket \d is missing fields "
+                     r"\['config', 'id_type', 'n_buckets', 'version'\]"),
+    "bare_list_log": (lambda ledger, log, data: (ledger, log["snapshots"]),
+                      r"the snapshot log is a JSON list, not an object"),
+    "no_version": (_drop(rows=["version"], entries=["version"]),
+                   r"missing fields \['version'\]"),
+    "bucket_version_dirs": (_bucket_version_dirs,
+                            r"extra fields \['path'\]"),
+}
+
+
+@pytest.mark.parametrize("shape", list(EARLIER_FORMATS))
+def test_ledger_rejects_earlier_formats(spark, tmp_path, two_snapshots_dir,
+                                        shape):
+    """An out_dir whose ledger or snapshot log has another shape than the
+    one format is refused by every entry point (run, resume, both reads,
+    expiry, ``cli eval --system``) with a ValueError naming the file and
+    the fields, before any Spark job, write or delete."""
+    import shutil
+
+    from clinicaltransformerrelationextraction_spark.cli import main
+
+    edit, fields = EARLIER_FORMATS[shape]
+    out = str(tmp_path / shape)
+    shutil.copytree(two_snapshots_dir, out)
+    run = LedgerRun(out_dir=out, n_buckets=2)
+    with open(run.ledger_path) as f:
+        ledger = json.load(f)
+    with open(run.snapshots_path) as f:
+        log = json.load(f)
+    ledger, log = edit(ledger, log, f"{out}/triples/data")
+    for path, obj in ((run.ledger_path, ledger), (run.snapshots_path, log)):
+        with open(path, "w") as f:
+            json.dump(obj, f)
+    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 80)
+    _assert_refused(spark, out, [
+        lambda: run.run(docs),
+        lambda: run.resume(docs),
+        lambda: run.triples(spark),
+        lambda: run.triples(spark, snapshot_id=1),
+        lambda: run.expire_snapshots(spark, keep_last=0),
+        lambda: main(["eval", "--system", out, "--gold", out], spark=spark),
+    ], rf"_(ledger|snapshots)\.json: .*{fields}.*earlier ledger format"
+       r".*write to a new out_dir")
+
+
+def test_ledger_out_dir_is_relocatable(spark, tmp_path):
+    """Rows and snapshots store no path: an out_dir copied elsewhere, with
+    its original removed, reads the one-shot rows current and
+    time-travelled, resumes with no Spark job, and expires only under the
+    copy."""
+    import shutil
+
+    orig, copy = str(tmp_path / "orig"), str(tmp_path / "copy")
+    _, docs = _two_snapshots(spark, orig)
+    one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
+    one.run(docs)
+    want = Counter(map(tuple, one.triples(spark).collect()))
+    assert want
+    shutil.copytree(orig, copy)
+    shutil.rmtree(orig)
+    run = LedgerRun(out_dir=copy, n_buckets=2)
+    for snapshot_id in (None, 1, 2):
+        got = run.triples(spark, snapshot_id=snapshot_id).collect()
+        assert Counter(map(tuple, got)) == want, snapshot_id
+    sc = spark.sparkContext
+    sc.setJobGroup("ledger-relocated-resume", "ledger-relocated-resume")
+    try:
+        run.resume(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("ledger-relocated-resume")
+    deleted = run.expire_snapshots(spark, keep_last=1)
+    assert _under_data(deleted) == ["v0/b=0"]
+    assert all(p.startswith(("file:" + copy, copy)) for p in deleted), deleted
+    assert not os.path.exists(orig)
+    assert Counter(map(tuple, run.triples(spark).collect())) == want
 
 
 def test_ledger_rejects_nonpositive_bucket_count(spark, tmp_path):
@@ -671,48 +828,6 @@ def test_tsv_roundtrip(spark, tmp_path):
     # markers survive the round trip verbatim
     row = back.filter(F.col("sentence_1").contains("[s1]")).first()
     assert "[e1]" in row.sentence_1
-
-
-def test_brat_roundtrip(spark):
-    from clinicaltransformerrelationextraction_spark.operators.segmentation import (
-        mentions,
-    )
-    from clinicaltransformerrelationextraction_spark.sources.brat import (
-        parse_ann_lines,
-        render_r_line,
-        render_t_line,
-    )
-
-    docs = load_documents(spark, SF_SMOKE).limit(20)
-    men = mentions(docs, PipelineConfig())
-    t_lines = men.select(
-        "doc_id",
-        render_t_line(
-            F.col("mention_id"), F.col("ent_type"), F.col("start"),
-            F.col("end"), F.col("surface"),
-        ).alias("value"),
-    )
-    parsed_m, _ = parse_ann_lines(t_lines)
-    key = ["doc_id", "mention_id", "ent_type", "start", "end", "surface"]
-    assert parsed_m.select(*key).exceptAll(men.select(*key)).count() == 0
-    assert parsed_m.count() == men.count()
-
-    trip = run_pipeline(docs, PipelineConfig()).triples
-    r_lines = trip.select(
-        "doc_id",
-        render_r_line(
-            F.col("rel_id"), F.col("pred"), F.col("subj_id"),
-            F.col("obj_id"),
-        ).alias("value"),
-    )
-    _, parsed_r = parse_ann_lines(r_lines)
-    assert parsed_r.count() == trip.count()
-    got = parsed_r.select("doc_id", "rel_id", "rel_type", "arg1", "arg2")
-    want = trip.select(
-        "doc_id", "rel_id", F.col("pred").alias("rel_type"),
-        F.col("subj_id").alias("arg1"), F.col("obj_id").alias("arg2"),
-    )
-    assert got.exceptAll(want).count() == 0
 
 
 def test_truncation_property():

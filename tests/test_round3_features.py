@@ -310,14 +310,18 @@ def test_ledger_time_travel_and_expire(spark, tmp_path):
     assert v2 != v1  # current state changed...
     assert run.triples(spark, snapshot_id=1).count() == v1  # ...history didn't
     # the two snapshots share bucket 1's file but diverge on bucket 0
-    assert snaps[0]["manifest"]["1"]["path"] == snaps[1]["manifest"]["1"]["path"]
-    assert snaps[0]["manifest"]["0"]["path"] != snaps[1]["manifest"]["0"]["path"]
+    # (a bucket's data dir is v<version>/b=<bucket>)
+    m1, m2 = (s["manifest"] for s in snaps)
+    assert m1["1"]["version"] == m2["1"]["version"]
+    assert m1["0"]["version"] != m2["0"]["version"]
 
     # expire: keep only the latest snapshot; snapshot 1's exclusive data
     # dir is GC'd, time travel to it now errors, current state unaffected
     deleted = run.expire_snapshots(spark, keep_last=1)
-    assert any(snaps[0]["manifest"]["0"]["path"] in p for p in deleted)
-    assert all(snaps[0]["manifest"]["1"]["path"] not in p for p in deleted)  # shared file survives
+    old_0 = f"/triples/data/v{m1['0']['version']}/b=0"
+    shared = f"/triples/data/v{m1['1']['version']}/b=1"
+    assert any(p.endswith(old_0) for p in deleted)
+    assert all(shared not in p for p in deleted)  # shared file survives
     assert run.triples(spark).count() == v2
     with _pytest.raises(ValueError, match="expired"):
         run.triples(spark, snapshot_id=1)

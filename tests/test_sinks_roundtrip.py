@@ -146,8 +146,13 @@ def test_ledger_reads_snapshots_of_two_codecs(spark, tmp_path):
     run._write_ledger(ledger)
     run.resume(docs, CFG)
     s1, s2 = (s["manifest"] for s in run.snapshots())
-    assert _codecs(s1["0"]["path"]) == _codecs(s1["1"]["path"]) == {"SNAPPY"}
-    assert _codecs(s2["0"]["path"]) == {"ZSTD"}
+
+    def data(key, entry):
+        return f"{run.triples_dir}/data/v{entry['version']}/b={key}"
+
+    assert _codecs(data("0", s1["0"])) == _codecs(data("1", s1["1"])) == \
+        {"SNAPPY"}
+    assert _codecs(data("0", s2["0"])) == {"ZSTD"}
     assert s2["1"] == s1["1"]  # the current table mixes both codecs
     one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
     one.run(docs, CFG)
@@ -185,7 +190,9 @@ def test_ledger_stores_numbers_and_reads_public_triples(spark, tmp_path,
                                                         id_type):
     """The files under ``triples/data/`` hold the numeric form only;
     ``triples()`` returns the public columns, in order and with their
-    dtypes, after a fresh run, a crash + resume and under time travel."""
+    dtypes, after a fresh run, a crash + resume and under time travel, and
+    also for a run whose docs yield no triple. Only an out_dir with no
+    ledger row yet reads ``bigint`` doc ids."""
     docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
     if id_type == "string":
         docs = docs.withColumn("doc_id",
@@ -215,48 +222,13 @@ def test_ledger_stores_numbers_and_reads_public_triples(spark, tmp_path,
             assert got.dtypes == dtypes, snapshot_id
             assert Counter(map(tuple, got.collect())) == want, snapshot_id
 
-
-def test_ledger_reads_snapshots_of_two_layouts(spark, tmp_path):
-    """A run written in the layout that stored the id strings and the
-    bucket, then a re-run of bucket 0 in the numeric layout: both
-    snapshots and the current mixed table read the one-shot rows, and an
-    empty manifest reads the same public schema."""
-    from clinicaltransformerrelationextraction_spark.plans.ledger import (
-        config_digest,
-    )
-
-    docs = load_documents(spark, SF_SMOKE).filter(F.col("doc_id") < 120)
-    run = LedgerRun(out_dir=str(tmp_path / "layouts"), n_buckets=2)
-    trip = _one_shot(docs, 2)
-    run_dir = f"{run.triples_dir}/data/v0"
-    trip.withColumn("b", F.col("bucket")).write.partitionBy("b").parquet(
-        run_dir)
-    config = config_digest(CFG)
-    ledger = {
-        str(b): {"status": "done",
-                 "n_docs": docs.filter(
-                     F.pmod(F.hash("doc_id"), F.lit(2)) == b).count(),
-                 "n_triples": trip.filter(F.col("bucket") == b).count(),
-                 "wall_sec": 0.0, "path": f"{run_dir}/b={b}", "version": 0,
-                 "n_buckets": 2, "config": config}
-        for b in range(2)}
-    run._write_ledger(ledger)
-    run._append_snapshot(ledger, 2, config)
-    ledger["0"]["status"] = "redo"
-    run._write_ledger(ledger)
-    run.resume(docs, CFG)
-    s1, s2 = (s["manifest"] for s in run.snapshots())
-    old = {tuple(c for c, _ in trip.dtypes)}
-    assert _stored_columns([s1["0"]["path"], s1["1"]["path"]]) == old
-    assert _stored_columns([s2["0"]["path"]]) == {STORED}
-    assert s2["1"] == s1["1"]  # the current table mixes both layouts
-    one = LedgerRun(out_dir=str(tmp_path / "one"), n_buckets=2)
-    one.run(docs, CFG)
-    want = Counter(map(tuple, one.triples(spark).collect()))
-    assert want
-    for snapshot_id in (1, 2, None):
-        got = run.triples(spark, snapshot_id=snapshot_id)
-        assert got.dtypes == [("doc_id", "bigint"), *PUBLIC], snapshot_id
-        assert Counter(map(tuple, got.collect())) == want, snapshot_id
+    # no gazetteer mention, so every bucket commits zero triples
     empty = LedgerRun(out_dir=str(tmp_path / "empty"), n_buckets=2)
-    assert empty.triples(spark).dtypes == run.triples(spark).dtypes
+    ledger = empty.run(docs.withColumn("text", F.lit("no entity here")), CFG)
+    assert [v["n_triples"] for v in ledger.values()] == [0, 0]
+    for snapshot_id in (None, 1):
+        got = empty.triples(spark, snapshot_id=snapshot_id)
+        assert got.dtypes == dtypes, snapshot_id
+        assert not got.collect(), snapshot_id
+    fresh = LedgerRun(out_dir=str(tmp_path / "no_rows"), n_buckets=2)
+    assert fresh.triples(spark).dtypes == [("doc_id", "bigint"), *PUBLIC]
