@@ -293,9 +293,9 @@ _TRAIN_QUERIES, _TRAIN_SQL = _module_queries(
 _EVAL_QUERIES, _EVAL_SQL = _module_queries(evalqueries, oracle_eval)
 
 
-# --- pandas-UDF segmenter: since round 3 this is oracle-checked too (the
+# --- Python segmenter: since round 3 this is oracle-checked too (the
 # default splitter is deterministic, so even its char offsets are
-# SQL-expressible; the Spark side stays a mapInPandas UDTF) ------------------
+# SQL-expressible; the Spark side is a per-page row kernel) ------------------
 
 def _q_segment_pages_pandas(spark: SparkSession, sf: str) -> DataFrame:
     from clinicaltransformerrelationextraction_spark.operators.segmentation import (

@@ -40,7 +40,7 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
 
     # factor=1 (not the default 2): the dedup stack's per-doc work runs in
     # Arrow-batched Python kernels, and every Python task has a fixed cost
-    # before any row is touched. An identity mapInPandas over 4 rows, on
+    # before any row is touched. An identity pandas map over 4 rows, on
     # 4 cores, costs 0.16 / 0.56 / 2.1 s of Python-worker CPU (/proc) at
     # 4 / 16 / 64 partitions, ~35 ms a task, once the worker has run a
     # product runner (functions/util.set_up_python_worker);

@@ -9,11 +9,12 @@ deployment), the cluster labels ``(doc_id, cluster_id)``
 (``dedup.shingle_frame`` output) — and each new crawl delta is deduped
 in three delta-bounded steps:
 
-1. ``incremental_candidate_pairs``: band the DELTA only and equi-join its
-   bands against (index ∪ delta bands). Every emitted pair has at least
-   one new side — old-old pairs were already found when the old docs were
-   themselves the delta. One shuffle on (band, bkey); with the index
-   bucketed on that key only the delta moves.
+1. ``incremental_candidate_pairs``: equi-join the DELTA's checkpointed
+   bands (only the delta is banded) against (index ∪ delta bands). Every
+   emitted pair has at least one new side — old-old pairs were already
+   found when the old docs were themselves the delta. One shuffle on
+   (band, bkey); with the index bucketed on that key only the delta
+   moves.
 2. ``incremental_verified_pairs``: exact-Jaccard verify, recomputing
    shingles ONLY for the delta plus the old docs that actually appear in
    a candidate pair (a delta-sized set — unlike the corpus-wide query,
@@ -92,25 +93,19 @@ def incremental_exact(old_hash_index: DataFrame, new_docs: DataFrame) -> DataFra
 
 
 def incremental_candidate_pairs(
-    old_index: DataFrame, new_docs: DataFrame
+    old_index: DataFrame, new_b: DataFrame
 ) -> DataFrame:
     """LSH candidate pairs with at least one side in the delta:
-    ``(doc_a, doc_b, n_shared_bands)``, doc_a < doc_b.
+    ``(doc_a, doc_b, n_shared_bands)``, doc_a < doc_b, from the history's
+    band index and the delta's bands ``new_b`` (``dedup.bands_frame`` or
+    ``bands_from_shingles`` of the delta). ``new_b`` must be checkpointed
+    or otherwise stable: it appears on both sides of the join below.
 
     The delta's bands drive the join; the (index ∪ delta-bands) side is
     tagged so each pair is emitted exactly once per shared band:
     delta-old pairs only from the delta row, delta-delta pairs only from
     the lower doc_id. No bucket-group pass over the historical index —
     the corpus never re-bands."""
-    return _pairs_from_new_bands(
-        old_index, bands_frame(new_docs).localCheckpoint(eager=False)
-    )
-
-
-def _pairs_from_new_bands(old_index: DataFrame, new_b: DataFrame) -> DataFrame:
-    """``incremental_candidate_pairs`` core over already-materialized
-    delta bands (``new_b`` must be checkpointed/stable: it appears on
-    both sides of the join below)."""
     all_b = old_index.select("doc_id", "band", "bkey").withColumn(
         "is_new", F.lit(False)
     ).unionByName(new_b.withColumn("is_new", F.lit(True)))
@@ -337,7 +332,7 @@ def incremental_dedup(
         new_docs.select("doc_id", "text")
     ).localCheckpoint(eager=False)
     new_b = bands_from_shingles(new_sh).localCheckpoint(eager=False)
-    cand = _pairs_from_new_bands(old_index, new_b)
+    cand = incremental_candidate_pairs(old_index, new_b)
     verified = incremental_verified_pairs(
         cand, old_docs, new_docs, old_shingles, new_shingles=new_sh
     ).localCheckpoint(eager=False)
@@ -358,9 +353,9 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     the candidates are exact-Jaccard verified — the delta's shingle
     frame computed ONCE and threaded to both banding and verify
     (``incremental_dedup``'s shape), history's shingles recomputed only
-    for pair-involved old docs — i.e. the real ``_pairs_from_new_bands``
-    → ``incremental_verified_pairs`` machinery, not a special
-    query-shaped twin.
+    for pair-involved old docs — i.e. the real
+    ``incremental_candidate_pairs`` → ``incremental_verified_pairs``
+    machinery, not a special query-shaped twin.
 
     Output: ``(doc_a, doc_b, inter, uni, jaccard, a_is_new, b_is_new)``,
     doc_a < doc_b, jaccard ≥ JACCARD_MIN, every row having ≥1 delta
@@ -378,7 +373,7 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     old_docs = docs.filter(~is_delta)
     old_index = bands_frame(old_docs)
     new_sh = shingle_frame(new_docs).localCheckpoint(eager=False)
-    cand = _pairs_from_new_bands(
+    cand = incremental_candidate_pairs(
         old_index, bands_from_shingles(new_sh).localCheckpoint(eager=False)
     )
     verified = incremental_verified_pairs(

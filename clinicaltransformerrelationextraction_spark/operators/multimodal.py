@@ -1,23 +1,22 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with metadata structs;
-feature extraction runs as an Arrow-batched ``mapInPandas`` over the
-payload bytes. The decode libraries (PIL/ffmpeg/librosa) are NOT in this
-container, so ``q_multimodal_features`` digests the raw bytes (byte
-histogram moments, exact integers) where a decoder would sit; its Spark
-plumbing — schema, batch shape, partitioning — is real and oracle-checked.
+feature extraction runs per payload in one Arrow-batched
+``functions.util.row_kernel`` pass. The decode libraries
+(PIL/ffmpeg/librosa) are NOT in this container, so
+``q_multimodal_features`` digests the raw bytes (byte histogram moments,
+exact integers) where a decoder would sit; its Spark plumbing — schema,
+batch shape, partitioning — is real and oracle-checked.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..functions.util import row_kernel
 
 
 def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
@@ -44,22 +43,23 @@ def documents_as_media(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("modality", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("byte_sum", T.LongType()),
-        T.StructField("byte_sq_sum", T.LongType()),
-        T.StructField("byte_min", T.LongType()),
-        T.StructField("byte_max", T.LongType()),
-        T.StructField("med2", T.LongType()),
-        T.StructField("sum_mod_997", T.LongType()),
-        T.StructField("n_gt100", T.LongType()),
-        T.StructField("mean_micro", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-    ]
-)
+def _digest_rows(doc_id, payload) -> list[tuple]:
+    """One payload's digest row (``q_multimodal_features``); a NULL
+    payload gives no row."""
+    if payload is None:
+        return []
+    arr = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
+    n = int(arr.size)
+    if n == 0:
+        return [(doc_id, "image") + (0,) * 9 + (1,)]
+    s = int(arr.sum())
+    srt = np.sort(arr)
+    med2 = int(srt[n // 2] * 2 if n % 2 else srt[n // 2 - 1] + srt[n // 2])
+    return [(
+        doc_id, "image", n, s, int((arr * arr).sum()), int(arr.min()),
+        int(arr.max()), med2, s % 997, int((arr > 100).sum()),
+        (s * 2_000_000 + n) // (2 * n), max(1, n // 64),
+    )]
 
 
 def q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
@@ -75,41 +75,11 @@ def q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
     This digest is the table you'd persist at 100 TB.
     """
     media = documents_as_media(spark, sf)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8).astype(
-                    np.int64
-                )
-                n = int(arr.size)
-                if n == 0:
-                    rows.append((int(doc_id), "image") + (0,) * 9 + (1,))
-                    continue
-                s = int(arr.sum())
-                srt = np.sort(arr)
-                med2 = int(
-                    srt[n // 2] * 2 if n % 2 else srt[n // 2 - 1] + srt[n // 2]
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        "image",
-                        n,
-                        s,
-                        int((arr * arr).sum()),
-                        int(arr.min()),
-                        int(arr.max()),
-                        med2,
-                        s % 997,
-                        int((arr > 100).sum()),
-                        (s * 2_000_000 + n) // (2 * n),
-                        max(1, n // 64),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _DIGEST_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(run, schema=_DIGEST_SCHEMA)
+    id_type = media.schema["doc_id"].dataType.simpleString()
+    return row_kernel(
+        media,
+        f"doc_id {id_type}, modality string, n_bytes long, byte_sum long, "
+        "byte_sq_sum long, byte_min long, byte_max long, med2 long, "
+        "sum_mod_997 long, n_gt100 long, mean_micro long, n_frames long",
+        _digest_rows,
+    )

@@ -2,27 +2,30 @@
 
 Reference semantics: external sentence splitter + BIO alignment with char
 offsets (preprocessing.ipynb cells 4, 6 — SURVEY.md §2.8 U1). Here the
-segmenter is the deterministic fixed-token-window rule from config.py; a
-pluggable pandas-UDF segmenter (``segment_pages_udf``) carries the same
-contract for production segmenters (spaCy/syntok/etc. — not in container).
+segmenter is the deterministic fixed-token-window rule from config.py.
+``segment_pages_udf`` runs it per page through ``functions.util.row_kernel``
+like ``mentions``; its per-page function ``page_sentence_rows`` is where a
+production segmenter (spaCy/syntok/etc. — not in container) plugs in,
+keeping the row shape. Both row kernels (``mentions``,
+``segment_pages_udf``) keep the key column's type and give no rows for
+NULL text.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Callable
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..functions.util import row_kernel
 from .candidates import doc_rows_input, tokens_col
 
-__all__ = ["sentences", "mentions", "doc_mention_rows", "segment_pages_udf"]
+__all__ = [
+    "sentences", "mentions", "doc_mention_rows", "page_sentence_rows",
+    "segment_pages_udf",
+]
 
 
 def sentences(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -97,47 +100,45 @@ def mentions(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     )
 
 
-_SEG_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("sent_id", T.IntegerType()),
-        T.StructField("sent_start", T.LongType()),
-        T.StructField("sent_end", T.LongType()),
-        T.StructField("sent_text", T.StringType()),
-    ]
-)
+def page_sentence_rows(cfg: PipelineConfig) -> Callable:
+    """``rows(url, text) -> [tuple]``: one page's sentences in order,
+    ``(url, sent_id, sent_start, sent_end, sent_text)``, where
+    ``text[sent_start:sent_end]`` is ``sent_text``. The fixed-window rule
+    of ``sentences``, byte-identical to it; empty text is one empty
+    sentence and NULL text gives no rows. The segmenter of
+    ``segment_pages_udf``: a production segmenter (spaCy, syntok, ...)
+    replaces this function and keeps its row shape."""
+    L = cfg.sent_len
+
+    def rows(url, text) -> list[tuple]:
+        if text is None:
+            return []
+        toks = text.split(" ")
+        starts = []
+        pos = 0
+        for t in toks:
+            starts.append(pos)
+            pos += len(t) + 1
+        out = []
+        for s in range((len(toks) + L - 1) // L):
+            chunk = " ".join(toks[s * L:(s + 1) * L])
+            st = starts[s * L]
+            out.append((url, s, st, st + len(chunk), chunk))
+        return out
+
+    return rows
 
 
 def segment_pages_udf(pages: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Pluggable pandas-UDF segmenter over the pages table (url, text):
-    1 page -> N sentences with char offsets (UDTF-shaped, SURVEY.md §2.8 U1).
-
-    The default splitter is the same fixed-window rule (byte-identical to
-    ``sentences``); swap the inner function for a real segmenter in
-    production — the Spark contract (schema, batching) is unchanged.
-    """
-    cfg = cfg or PipelineConfig()
-    L = cfg.sent_len
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "sent_id": [], "sent_start": [],
-                   "sent_end": [], "sent_text": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                toks = text.split(" ")
-                pos = 0
-                starts = []
-                for t in toks:
-                    starts.append(pos)
-                    pos += len(t) + 1
-                for s in range((len(toks) + L - 1) // L):
-                    chunk = toks[s * L:(s + 1) * L]
-                    st = starts[s * L]
-                    out["url"].append(url)
-                    out["sent_id"].append(s)
-                    out["sent_start"].append(st)
-                    out["sent_end"].append(st + len(" ".join(chunk)))
-                    out["sent_text"].append(" ".join(chunk))
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "text").mapInPandas(run, schema=_SEG_SCHEMA)
+    """Pluggable Python segmenter over the pages table (url, text):
+    1 page -> N sentences with char offsets (UDTF-shaped, SURVEY.md §2.8
+    U1), one ``row_kernel`` pass over ``page_sentence_rows``. ``url``
+    keeps the input's type."""
+    src = pages.select("url", "text")
+    url_type = src.schema["url"].dataType.simpleString()
+    return row_kernel(
+        src,
+        f"url {url_type}, sent_id int, sent_start long, sent_end long, "
+        "sent_text string",
+        page_sentence_rows(cfg or PipelineConfig()),
+    )

@@ -61,7 +61,12 @@ def ngram_rows(docs: DataFrame, n: int, carry: list[str]) -> DataFrame:
     ``ngrams_expr`` HOF costs ~10 µs per n-gram element (the dedup-stack
     measurement); the Python loop builds the same space-joined windows
     ~100× cheaper per element, which is what the n-gram census/sketches
-    pay for at corpus scale."""
+    pay for at corpus scale. It keeps its own loop rather than
+    ``functions.util.row_kernel`` because it builds its output by column
+    (``np.repeat`` of the carry columns): bigrams of 500 sf0.01 docs
+    took 4.4 ms in this form against 11.3 ms for the same loop in
+    ``row_kernel``'s tuple form (pure pandas, best of 20, one 4-core
+    host)."""
     import numpy as np
     import pandas as pd
 

@@ -17,22 +17,22 @@ Reference semantics:
 The tokenizer itself is a deterministic md5-vocab stand-in (this container
 has no HF tokenizer): id = 10 + int(md5(tok)[:4], 16) % VOCAB_MOD, CLS=1,
 SEP=2 — chosen because BOTH engines can compute it exactly, so the encoded
-feature rows are DuckDB-oracle-checked end to end. A production tokenizer
-plugs into ``tokenize_features`` unchanged (same Arrow batching, same
-truncation loop, same schema).
+feature rows are DuckDB-oracle-checked end to end. Both encoders run
+through one ``functions.util.row_kernel`` pass (``_features``), which
+keeps the input's ``doc_id`` type; a production tokenizer is another
+``encode`` function for ``_features``, with the same batching and
+output schema.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..config import SPEC_TAGS, PipelineConfig
+from ..functions.util import row_kernel
 from .scoring import truncate_pair
 
 __all__ = [
@@ -233,49 +233,37 @@ def encode_uni(toks: list[str], max_seq_len: int) -> list[int]:
                        ] + [SEP_ID]
 
 
-_FEAT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("i1", T.IntegerType()),
-        T.StructField("i2", T.IntegerType()),
-        T.StructField("n_ids", T.IntegerType()),
-        T.StructField("ids_md5", T.StringType()),
-    ]
-)
+def _features(src: DataFrame, encode: Callable) -> DataFrame:
+    """``(doc_id, i1, i2, n_ids, ids_md5)`` over ``src``'s ``(doc_id, i1,
+    i2, *text_cols)`` rows, one ``row_kernel`` pass, zero shuffle:
+    ``encode(*texts)`` gives a row's id sequence, hashed to a scalar (md5
+    of space-joined decimal ids) so the row is canonicalizer-sortable;
+    n_ids carries the budget invariant n_ids <= max_seq_len. ``doc_id``
+    keeps ``src``'s type; a row with a NULL text gives no row."""
+    id_type = src.schema["doc_id"].dataType.simpleString()
+
+    def rows_of(did, i1, i2, *texts) -> list[tuple]:
+        if any(t is None for t in texts):
+            return []
+        ids = encode(*texts)
+        digest = hashlib.md5(" ".join(map(str, ids)).encode()).hexdigest()
+        return [(did, i1, i2, len(ids), digest)]
+
+    return row_kernel(
+        src,
+        f"doc_id {id_type}, i1 int, i2 int, n_ids int, ids_md5 string",
+        rows_of,
+    )
 
 
 def tokenize_features(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """candidates -> tokenized InputFeatures digest (Arrow-batched map,
-    zero shuffle). The full id sequence is hashed to a scalar
-    (md5 of space-joined decimal ids) so the row is canonicalizer-sortable;
-    n_ids carries the budget invariant n_ids <= max_seq_len."""
-    cfg = cfg or PipelineConfig()
-    max_len = cfg.max_seq_len
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n_ids, digests = [], []
-            for s1, s2 in zip(pdf["s1_marked"], pdf["s2_marked"]):
-                ids = encode_pair(s1.split(" "), s2.split(" "), max_len)
-                n_ids.append(len(ids))
-                digests.append(
-                    hashlib.md5(
-                        " ".join(str(x) for x in ids).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "i1": pdf["i1"].astype("int32"),
-                    "i2": pdf["i2"].astype("int32"),
-                    "n_ids": pd.array(n_ids, dtype="int32"),
-                    "ids_md5": digests,
-                }
-            )
-
-    return cand.mapInPandas(run, schema=_FEAT_SCHEMA)
+    """candidates -> tokenized InputFeatures digest: sep-mode
+    ``[CLS] s1 [SEP] s2 [SEP]`` over ``s1_marked``/``s2_marked``."""
+    max_len = (cfg or PipelineConfig()).max_seq_len
+    return _features(
+        cand.select("doc_id", "i1", "i2", "s1_marked", "s2_marked"),
+        lambda s1, s2: encode_pair(s1.split(" "), s2.split(" "), max_len),
+    )
 
 
 def q_tokenized_features(spark: SparkSession, sf: str) -> DataFrame:
@@ -286,49 +274,16 @@ def q_tokenized_features(spark: SparkSession, sf: str) -> DataFrame:
     return tokenize_features(candidates(load_documents(spark, sf), cfg), cfg)
 
 
-_UNI_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("i1", T.IntegerType()),
-        T.StructField("i2", T.IntegerType()),
-        T.StructField("n_ids", T.IntegerType()),
-        T.StructField("ids_md5", T.StringType()),
-    ]
-)
-
-
 def tokenize_features_uni(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Uni-mode ([CLS] S1 S2 [SEP], data_format_mode=1, src/task.py:41-49):
     expects a ``uni_marked`` column carrying BOTH marker pairs in one
     window string (candidates_uni); encodes under the max_seq_len - 2
     budget with the 4-way truncation."""
-    cfg = cfg or PipelineConfig()
-    max_len = cfg.max_seq_len
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n_ids, digests = [], []
-            for s in pdf["uni_marked"]:
-                ids = encode_uni(s.split(" "), max_len)
-                n_ids.append(len(ids))
-                digests.append(
-                    hashlib.md5(
-                        " ".join(str(x) for x in ids).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "i1": pdf["i1"].astype("int32"),
-                    "i2": pdf["i2"].astype("int32"),
-                    "n_ids": pd.array(n_ids, dtype="int32"),
-                    "ids_md5": digests,
-                }
-            )
-
-    return df.mapInPandas(run, schema=_UNI_SCHEMA)
+    max_len = (cfg or PipelineConfig()).max_seq_len
+    return _features(
+        df.select("doc_id", "i1", "i2", "uni_marked"),
+        lambda s: encode_uni(s.split(" "), max_len),
+    )
 
 
 def q_tokenized_uni(spark: SparkSession, sf: str) -> DataFrame:

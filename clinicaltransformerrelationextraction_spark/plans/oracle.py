@@ -623,8 +623,9 @@ def q_segment_pages_pandas() -> str:
     """Oracle for the pandas-UDF segmenter (segment_pages_udf): the default
     splitter is the deterministic fixed-window rule, so its exact output —
     including char offsets — is SQL-expressible; url = 'doc://' || doc_id
-    (documents_as_pages adapter). The Spark side stays a mapInPandas UDTF;
-    this checks it end to end instead of the former rows-only record."""
+    (documents_as_pages adapter). The Spark side is a per-page Python
+    kernel (``functions.util.row_kernel``); this checks it end to end
+    instead of the former rows-only record."""
     return f"""
 WITH {TOKS_CTE.strip()},
 offs AS (

@@ -2,7 +2,7 @@
 
 Spark restatement of the reference's flagship flow (SURVEY.md §3.1):
 pages →(U1 segment)→ mentions →(J1+F3+F4 candidate gen)→ marked pairs
-→(U2+U3 mapInPandas scoring)→ predictions →(F6 NonRel filter, W1 numbering)→
+→(U2+U3 Arrow-batched scoring)→ predictions →(F6 NonRel filter, W1 numbering)→
 triples.
 
 Physical shape at scale (pinned in tests/test_plan_shapes.py): one narrow

@@ -49,27 +49,6 @@ def write_candidates_tsv(df: DataFrame, path: str) -> None:
     )
 
 
-def write_predictions_text(preds: DataFrame, path: str) -> None:
-    """S6 — the reference's prediction sink: one label string per line, in
-    input order (src/relation_extraction.py:73-77; per-batch files
-    src/batch_prediction.py:76-81). Order alignment is the explicit content
-    key, never position (SURVEY.md §2.3 J3). Written as a single sorted
-    file for byte parity with the reference's one .txt per batch — this is
-    a fixture-parity artifact; the production-scale sink is the partitioned
-    parquet/Iceberg predictions table."""
-    (
-        preds.select(
-            "doc_id", "i1", "i2",
-            F.col("pred_label").cast("string").alias("value"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("doc_id", "i1", "i2")
-        .select("value")
-        .write.mode("overwrite")
-        .text(path)
-    )
-
-
 def candidates_to_tsv_shape(cand: DataFrame, label_col: str | None = None) -> DataFrame:
     """Project the engine's candidates DataFrame onto the reference TSV
     contract (file_id <- doc_id; label blank at inference time, exactly like

@@ -3,9 +3,10 @@
 built-in windowed aggregations can't express (session = activity separated
 by gaps > SESSION_GAP).
 
-Also provides the batch twin (`sessionize_batch`, a lag-window program) so
-the streaming operator's output is testable against a deterministic batch
-oracle — same discipline as the DuckDB-checked queries.
+``sessions_canonical`` is the sink's read contract. Its output is tested
+against a deterministic batch twin (a lag-window program,
+``sessionize_batch`` in tests/catalyst_twins.py) — same discipline as the
+DuckDB-checked queries.
 """
 
 from __future__ import annotations
@@ -15,10 +16,12 @@ from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stream_pipeline import _drain
 
 SESSION_GAP_MIN = 30
 
@@ -40,35 +43,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
-
-
-def sessionize_batch(events: DataFrame) -> DataFrame:
-    """Batch sessionization: session boundary where the gap to the previous
-    event of the same user exceeds SESSION_GAP_MIN minutes. Pure window
-    program (lag + cumulative sum)."""
-    ts = F.col("ts").cast("timestamp")
-    w = Window.partitionBy("user_id").orderBy(ts)
-    gap = F.unix_timestamp(ts) - F.unix_timestamp(F.lag(ts).over(w))
-    marked = events.withColumn(
-        "new_session",
-        F.when(
-            gap.isNull() | (gap > SESSION_GAP_MIN * 60), F.lit(1)
-        ).otherwise(F.lit(0)),
-    )
-    with_sid = marked.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).cast("int"),
-    )
-    return (
-        with_sid.groupBy("user_id", "session_id")
-        .agg(
-            F.min(ts).alias("session_start"),
-            F.max(ts).alias("session_end"),
-            F.count("*").alias("n_events"),
-        )
-    )
 
 
 def _us_ts(sec: float) -> "pd.Timestamp":
@@ -157,12 +131,4 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        sessions.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sessions, out_dir, checkpoint_dir)

@@ -7,7 +7,7 @@ to plans/ledger.py: Spark's own checkpoint tracks which input files are
 done, so re-running the job processes only new files.
 
 Triples come from the batch path itself, ``run_pipeline``: its doc-row
-kernel is one ``mapInPandas`` over the document rows, which runs on
+kernel is one Arrow-batched pass over the document rows, which runs on
 streaming frames unchanged. The output drops ``rel_id`` and keeps the
 ordering key (sent_diff, i1, i2), the schema sinks and checkpoints have
 always seen.
@@ -15,11 +15,25 @@ always seen.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..plans.pipeline import run_pipeline
+
+
+def _drain(frame: DataFrame, out_dir: str, checkpoint_dir: str) -> None:
+    """Append ``frame``'s stream to parquet under ``out_dir``, checkpointed
+    in ``checkpoint_dir``, with an AvailableNow trigger: returns once every
+    input file available at start has been processed."""
+    (
+        frame.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def stream_triples(
@@ -40,14 +54,7 @@ def stream_triples(
         .parquet(input_dir)
     )
     trip = run_pipeline(stream, cfg).triples.drop("rel_id")
-    q = (
-        trip.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(trip, output_dir, checkpoint_dir)
 
 
 def stream_event_counts(
@@ -73,15 +80,7 @@ def stream_event_counts(
             "n",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, out_dir, checkpoint_dir)
 
 
 def stream_dedup_pages(
@@ -111,14 +110,7 @@ def stream_dedup_pages(
         .withWatermark("warc_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(deduped, out_dir, checkpoint_dir)
 
 
 def stream_pages_latest(
@@ -180,11 +172,4 @@ def stream_pages_latest(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        latest.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(latest, out_dir, checkpoint_dir)

@@ -14,9 +14,13 @@ replaced with identical output:
 - ``integer_pagerank``        == ``graph.integer_pagerank_adj``
 - ``ivf_assign``              == the corpus cell pick of
   ``similarity.q_ann_ivf_topk`` (its ``crank == 1`` rows)
+- ``sessionize_batch``        == ``sessionize.sessions_canonical`` over
+  the ``sessionize.sessionize_stream`` sink
 
-The equality tests are tests/test_round7_perf.py and
-tests/test_nonvacuous.py.
+The equality tests are tests/test_round7_perf.py,
+tests/test_nonvacuous.py and, for ``sessionize_batch``,
+tests/test_stateful_cogroup.py, tests/test_cli.py and
+tests/test_round3_features.py.
 """
 
 from __future__ import annotations
@@ -35,6 +39,9 @@ from clinicaltransformerrelationextraction_spark.operators.graph import (
     PR_UNIT,
     _edge_nodes,
     _rank_step,
+)
+from clinicaltransformerrelationextraction_spark.streaming.sessionize import (
+    SESSION_GAP_MIN,
 )
 
 
@@ -236,5 +243,35 @@ def ivf_assign(
             F.row_number().over(
                 Window.partitionBy("vec_id").orderBy(order, F.asc("label"))
             ),
+        )
+    )
+
+
+def sessionize_batch(events: DataFrame) -> DataFrame:
+    """Batch twin of ``sessionize.sessionize_stream`` read through
+    ``sessions_canonical``: a session boundary where the gap to the
+    previous event of the same user exceeds SESSION_GAP_MIN minutes. Pure
+    window program (lag + cumulative sum)."""
+    ts = F.col("ts").cast("timestamp")
+    w = Window.partitionBy("user_id").orderBy(ts)
+    gap = F.unix_timestamp(ts) - F.unix_timestamp(F.lag(ts).over(w))
+    marked = events.withColumn(
+        "new_session",
+        F.when(
+            gap.isNull() | (gap > SESSION_GAP_MIN * 60), F.lit(1)
+        ).otherwise(F.lit(0)),
+    )
+    with_sid = marked.withColumn(
+        "session_id",
+        F.sum("new_session").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ).cast("int"),
+    )
+    return (
+        with_sid.groupBy("user_id", "session_id")
+        .agg(
+            F.min(ts).alias("session_start"),
+            F.max(ts).alias("session_end"),
+            F.count("*").alias("n_events"),
         )
     )

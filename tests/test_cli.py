@@ -436,9 +436,9 @@ def test_cli_stream_sessionize(spark, tmp_path):
     from datetime import datetime
 
     from clinicaltransformerrelationextraction_spark.streaming.sessionize import (
-        sessionize_batch,
         sessions_canonical,
     )
+    from tests.catalyst_twins import sessionize_batch
 
     in_dir = str(tmp_path / "ev_in")
     out = str(tmp_path / "sess_out")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
 from clinicaltransformerrelationextraction_spark.operators.candidates import (
@@ -16,7 +17,12 @@ from clinicaltransformerrelationextraction_spark.operators.scoring import (
 )
 from clinicaltransformerrelationextraction_spark.operators.segmentation import (
     mentions,
+    segment_pages_udf,
     sentences,
+)
+from clinicaltransformerrelationextraction_spark.operators.tokenize import (
+    tokenize_features,
+    tokenize_features_uni,
 )
 from clinicaltransformerrelationextraction_spark.plans.pipeline import (
     run_brat,
@@ -43,7 +49,11 @@ def test_empty_corpus(spark):
 
 
 def test_degenerate_docs(spark):
-    docs = _docs(
+    """Each degenerate doc, in a ``long`` doc_id frame and a copy keyed by
+    ``string`` ids that do not parse as numbers: the row kernels keep the
+    key's type, give no rows for NULL text, and give the same rows for
+    both frames."""
+    long_docs = _docs(
         spark,
         [
             (1, "", "en"),                       # empty string
@@ -51,20 +61,52 @@ def test_degenerate_docs(spark):
             (3, "spark", "en"),                  # single token, one mention
             (4, "join", "en"),                   # single arg1 mention only
             (5, "join spark", "en"),             # exactly one valid pair
+            (6, None, "en"),                     # NULL text
         ],
     )
-    assert sentences(docs, CFG).count() >= 4
-    men = mentions(docs, CFG)
-    assert men.filter(F.col("doc_id") == 2).count() == 0
-    cand = candidates(docs, CFG)
-    got = {(r.doc_id, r.i1, r.i2) for r in cand.collect()}
-    # only doc 5 has an (arg1, arg2) pair within the window
-    assert got == {(5, 1, 2)}
-    trip = run_pipeline(docs, CFG).triples
-    assert trip.count() <= 1  # the single pair, if not NonRel
-    # brat render still produces a row per doc with mentions
-    ann = run_brat(docs, CFG)
-    assert ann.filter(F.col("doc_id") == 5).count() == 1
+    str_docs = long_docs.withColumn("doc_id", F.concat(F.lit("d"), "doc_id"))
+    kernel_rows = []
+    for docs, p in ((long_docs, ""), (str_docs, "d")):
+        id_type = docs.schema["doc_id"].dataType
+        assert sentences(docs, CFG).count() >= 4
+        men = mentions(docs, CFG)
+        assert men.filter(F.col("doc_id") == f"{p}2").count() == 0
+        cand = candidates(docs, CFG)
+        got = {(r.doc_id, r.i1, r.i2) for r in cand.collect()}
+        # only doc 5 has an (arg1, arg2) pair within the window
+        assert got == {(f"{p}5" if p else 5, 1, 2)}
+        trip = run_pipeline(docs, CFG).triples
+        assert trip.count() <= 1  # the single pair, if not NonRel
+        # brat render still produces a row per doc with mentions
+        ann = run_brat(docs, CFG)
+        assert ann.filter(F.col("doc_id") == f"{p}5").count() == 1
+
+        uni = cand.select(
+            "doc_id", "i1", "i2",
+            F.concat_ws(" ", "s1_marked", "s2_marked").alias("uni_marked"),
+        )
+        pages = docs.select(F.col("doc_id").cast("string").alias("url"), "text")
+        outs = [
+            (tokenize_features(cand, CFG), "doc_id", id_type),
+            (tokenize_features_uni(uni, CFG), "doc_id", id_type),
+            (segment_pages_udf(pages, CFG), "url", StringType()),
+        ]
+        rows = []
+        for out, key, key_type in outs:
+            got = sorted((str(r[0]).removeprefix(p), *map(str, r[1:]))
+                         for r in out.collect())
+            assert out.schema[key].dataType == key_type
+            assert "6" not in {r[0] for r in got}  # NULL text: no rows
+            rows.append(got)
+        feat, feat_uni, seg = rows
+        assert [r[:3] for r in feat] == [r[:3] for r in feat_uni] == [
+            ("5", "1", "2")
+        ]
+        # empty text is one empty sentence
+        assert [r for r in seg if r[0] == "1"] == [("1", "0", "0", "0", "")]
+        assert {r[0] for r in seg} == {"1", "2", "3", "4", "5"}
+        kernel_rows.append(rows)
+    assert kernel_rows[0] == kernel_rows[1]
 
 
 def test_doc_exceeding_pair_cap(spark):

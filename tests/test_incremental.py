@@ -50,7 +50,7 @@ def test_incremental_pairs_equal_full_recompute(spark):
     docs, old, new = _split(spark)
     full = candidate_pairs_frame(docs)
     old_only = candidate_pairs_frame(old)
-    inc = incremental_candidate_pairs(bands_frame(old), new)
+    inc = incremental_candidate_pairs(bands_frame(old), bands_frame(new))
     assert inc.count() > 0  # the split must actually exercise the path
     # every incremental pair touches the delta; no old-old pair leaks in
     new_ids = {r.doc_id for r in new.select("doc_id").collect()}
@@ -64,7 +64,7 @@ def test_incremental_clusters_equal_full_recompute(spark):
     docs, old, new = _split(spark)
     full = clusters_frame(docs)
     old_labels = clusters_frame(old).select("doc_id", "cluster_id")
-    cand = incremental_candidate_pairs(bands_frame(old), new)
+    cand = incremental_candidate_pairs(bands_frame(old), bands_frame(new))
     verified = incremental_verified_pairs(cand, old, new)
     merged = merge_clusters(old_labels, verified, new)
     _same(full, merged)
@@ -79,7 +79,7 @@ def test_incremental_stored_shingles_mode_identical(spark):
     )
 
     _docs, old, new = _split(spark)
-    cand = incremental_candidate_pairs(bands_frame(old), new)
+    cand = incremental_candidate_pairs(bands_frame(old), bands_frame(new))
     from_text = incremental_verified_pairs(cand, old, new)
     stored = shingle_frame(old.select("doc_id", "text"))
     from_store = incremental_verified_pairs(cand, old, new, stored)
@@ -291,7 +291,9 @@ def test_incremental_degenerate_deltas(spark):
     merged = merge_clusters(
         old_labels.select("doc_id", "cluster_id"),
         incremental_verified_pairs(
-            incremental_candidate_pairs(bands_frame(old), empty), old, empty
+            incremental_candidate_pairs(bands_frame(old), bands_frame(empty)),
+            old,
+            empty,
         ),
         empty,
     )
@@ -302,7 +304,7 @@ def test_incremental_degenerate_deltas(spark):
     merged_all = merge_clusters(
         clusters_frame(empty).select("doc_id", "cluster_id"),
         incremental_verified_pairs(
-            incremental_candidate_pairs(bands_frame(empty), docs),
+            incremental_candidate_pairs(bands_frame(empty), bands_frame(docs)),
             empty,
             docs,
         ),

@@ -383,9 +383,7 @@ def test_session_twins_agree(spark):
     from clinicaltransformerrelationextraction_spark.operators.relational import (
         q_events_sessions,
     )
-    from clinicaltransformerrelationextraction_spark.streaming.sessionize import (
-        sessionize_batch,
-    )
+    from tests.catalyst_twins import sessionize_batch
 
     ev = spark.read.parquet(SF_SMOKE + "/events.parquet")
     a = sessionize_batch(ev).select(

@@ -1,6 +1,6 @@
-"""S6 ordered prediction sink, brat parse∘render round-trip property, and
-the Parquet codec of the product sinks (zstd; the ledger reads a table
-whose snapshots were written under two codecs)."""
+"""Brat parse∘render round-trip property, and the Parquet codec of the
+product sinks (zstd; the ledger reads a table whose snapshots were
+written under two codecs)."""
 
 from __future__ import annotations
 
@@ -13,12 +13,6 @@ from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.cli import main
 from clinicaltransformerrelationextraction_spark.config import PipelineConfig
-from clinicaltransformerrelationextraction_spark.operators.candidates import (
-    candidates,
-)
-from clinicaltransformerrelationextraction_spark.operators.scoring import (
-    score_candidates,
-)
 from clinicaltransformerrelationextraction_spark.operators.segmentation import (
     mentions,
 )
@@ -31,33 +25,9 @@ from clinicaltransformerrelationextraction_spark.plans.pipeline import (
 from clinicaltransformerrelationextraction_spark.sources.brat import (
     parse_ann_lines,
 )
-from clinicaltransformerrelationextraction_spark.sources.tsv import (
-    write_predictions_text,
-)
 from tests.conftest import SF_SMOKE
 
 CFG = PipelineConfig()
-
-
-def test_ordered_prediction_text_sink(spark, tmp_path):
-    """S6: one label per line in canonical (doc_id, i1, i2) order —
-    re-read file content must equal the collected expected order exactly."""
-    scored = score_candidates(
-        candidates(load_documents(spark, SF_SMOKE), CFG), CFG
-    )
-    out = str(tmp_path / "preds")
-    write_predictions_text(scored, out)
-    want = [
-        r.pred_label
-        for r in scored.select("doc_id", "i1", "i2", "pred_label")
-        .orderBy("doc_id", "i1", "i2")
-        .collect()
-    ]
-    files = glob.glob(out + "/part-*")
-    assert len(files) == 1, "S6 contract: one ordered text file"
-    with open(files[0]) as f:
-        got = f.read().splitlines()
-    assert got == want
 
 
 def test_brat_roundtrip_property(spark):

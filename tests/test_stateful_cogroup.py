@@ -7,9 +7,9 @@ import shutil
 from pyspark.sql import functions as F
 
 from clinicaltransformerrelationextraction_spark.streaming.sessionize import (
-    sessionize_batch,
     sessionize_stream,
 )
+from tests.catalyst_twins import sessionize_batch
 from tests.conftest import SF_SMOKE
 
 
