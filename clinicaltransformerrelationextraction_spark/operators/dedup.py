@@ -38,9 +38,10 @@ SIMHASH_BITS = 16
 def _docs(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions.util import ensure_parallelism
 
-    # factor=1 (not the default 2): the dedup stack's per-doc work runs in
-    # Arrow-batched Python kernels, and every Python task has a fixed cost
-    # before any row is touched. An identity pandas map over 4 rows, on
+    # The corpus of the dedup and textstats queries. factor=1 (not the
+    # default 2): their per-doc work runs in Arrow-batched Python
+    # kernels, and every Python task has a fixed cost before any row is
+    # touched. An identity pandas map over 4 rows, on
     # 4 cores, costs 0.16 / 0.56 / 2.1 s of Python-worker CPU (/proc) at
     # 4 / 16 / 64 partitions, ~35 ms a task, once the worker has run a
     # product runner (functions/util.set_up_python_worker);

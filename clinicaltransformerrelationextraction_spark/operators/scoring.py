@@ -458,22 +458,19 @@ def score_candidates(cand: DataFrame,
     return cand.mapInPandas(run, schema=out_schema)
 
 
-def numbered_schema(id_type: str, ids: bool = False) -> str:
+def numbered_schema(id_type: str) -> str:
     """The numeric form of a triple, ``(doc_id, rel_n, pred, score,
-    sent_diff, i1, i2)``, plus ``subj_id``/``obj_id`` when ``ids``."""
+    sent_diff, i1, i2)``."""
     return (f"doc_id {id_type}, rel_n int, pred string, score double, "
-            "sent_diff int, i1 int, i2 int"
-            + (", subj_id string, obj_id string" if ids else ""))
+            "sent_diff int, i1 int, i2 int")
 
 
-def _filter_number(scored: pd.DataFrame, non_rel: str,
-                   ids: bool = False) -> pd.DataFrame | None:
+def _filter_number(scored: pd.DataFrame, non_rel: str) -> pd.DataFrame | None:
     """NonRel filter + per-doc R-numbering of a scored frame (candidate
     columns + pred_label + score) of COMPLETE docs: sort by (doc_id,
     sent_diff, i1, i2), number via groupby cumcount — one Arrow batch out
     per scorer call, never per doc. None when every row is NonRel. The
-    rows are the numeric form (``numbered_schema``); ``ids`` keeps the
-    frame's ``ent_id_1``/``ent_id_2`` as ``subj_id``/``obj_id``."""
+    rows are the numeric form (``numbered_schema``)."""
     kept = scored[scored["pred_label"] != non_rel]
     if len(kept) == 0:
         return None
@@ -481,7 +478,7 @@ def _filter_number(scored: pd.DataFrame, non_rel: str,
         ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
     ).reset_index(drop=True)
     rn = kept.groupby("doc_id", sort=False).cumcount() + 1
-    out = {
+    return pd.DataFrame({
         "doc_id": kept["doc_id"],
         "rel_n": rn.astype("int32"),
         "pred": kept["pred_label"],
@@ -489,10 +486,7 @@ def _filter_number(scored: pd.DataFrame, non_rel: str,
         "sent_diff": kept["sent_diff"].astype("int32"),
         "i1": kept["i1"].astype("int32"),
         "i2": kept["i2"].astype("int32"),
-    }
-    if ids:
-        out["subj_id"], out["obj_id"] = kept["ent_id_1"], kept["ent_id_2"]
-    return pd.DataFrame(out)
+    })
 
 
 def public_triples(numbered: DataFrame) -> DataFrame:
@@ -500,17 +494,12 @@ def public_triples(numbered: DataFrame) -> DataFrame:
     sent_diff, i1, i2)`` of a numeric-form frame, derived JVM-side (millions
     of Python string objects otherwise dominate the UDF at low core
     counts): ``rel_id`` is ``"R" || rel_n``; ``subj_id``/``obj_id`` are
-    ``"T" || i1``/``"T" || i2``, the doc-row kernels' mention ids. A frame
-    that carries one of these columns keeps its non-NULL values; columns
-    outside the numeric form and the ids follow, unchanged."""
+    ``"T" || i1``/``"T" || i2``, the mention ids of every candidate
+    frame. Columns outside the numeric form follow, unchanged."""
     def derived(name: str, prefix: str, num: str):
-        made = F.concat(F.lit(prefix), F.col(num))
-        if name in numbered.columns:
-            made = F.coalesce(F.col(name), made)
-        return made.alias(name)
+        return F.concat(F.lit(prefix), F.col(num)).alias(name)
 
-    own = {"doc_id", "rel_n", "rel_id", "pred", "subj_id", "obj_id",
-           "score", "sent_diff", "i1", "i2"}
+    own = {"doc_id", "rel_n", "pred", "score", "sent_diff", "i1", "i2"}
     return numbered.select(
         "doc_id", derived("rel_id", "R", "rel_n"), "pred",
         derived("subj_id", "T", "i1"), derived("obj_id", "T", "i2"),
@@ -710,13 +699,13 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
             # hold back the last doc: it may continue in the next batch
             boundary = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
             carry = pdf[boundary]
-            out = _filter_number(pdf[~boundary], non_rel, ids=True)
+            out = _filter_number(pdf[~boundary], non_rel)
             if out is not None:
                 yield out
         if carry is not None:
-            out = _filter_number(carry, non_rel, ids=True)
+            out = _filter_number(carry, non_rel)
             if out is not None:
                 yield out
 
     return public_triples(
-        cand.mapInPandas(run, schema=numbered_schema(id_type, ids=True)))
+        cand.mapInPandas(run, schema=numbered_schema(id_type)))

@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup import _docs
+
 EN_STOPWORDS = ["the", "a"]
 EN_RATIO_MIN = 0.05
 BPE_ISH = "[a-z]+|[0-9]+|[^a-z0-9 ]"
@@ -37,17 +39,6 @@ def bigrams_expr(toks):
     (The contamination census uses its OWN window length, CONTAM_NGRAM,
     via :func:`ngrams_expr`.)"""
     return ngrams_expr(toks, 2)
-
-
-def _docs(spark: SparkSession, sf: str) -> DataFrame:
-    from ..functions.util import ensure_parallelism
-
-    # factor=1: the n-gram consumers below run Arrow-batched kernels, and
-    # each Python task has a fixed cost (~35 ms of worker CPU on a worker
-    # set up by set_up_python_worker; measured in dedup._docs)
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf}/documents.parquet"), factor=1
-    )
 
 
 def ngram_rows(docs: DataFrame, n: int, carry: list[str]) -> DataFrame:

@@ -20,9 +20,11 @@ idempotence (src/batch_prediction.py:60-88; post_processing.py:82-85). Here:
   writes: the pass scores every input doc once and also renders its brat
   row; it is persisted (``MEMORY_AND_DISK_DESER``), the triples write
   keeps the pending buckets' triples through the same array-literal mask,
-  and brat is overwritten from the same pass after the row commits and
-  the snapshot, so a crashed out_dir gets whole brat too. ``resume`` scores
-  only the pending buckets' docs and writes no brat;
+  and brat is overwritten from the same pass right after that write,
+  before the row commits, so a crashed out_dir gets whole brat too, and so
+  does one that crashed during the commits and was finished by
+  ``resume``, which scores only the pending buckets' docs and writes no
+  brat (a crash before the brat write still leaves none);
 - the files store the kernel's numeric form of a triple and
   ``triples()`` derives the rest with Catalyst projections on read:
 
@@ -148,33 +150,39 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _has_scheme(path: str) -> bool:
-    """True for URI paths (hdfs://, s3a://, file://...): metadata IO must
-    go through the Hadoop FileSystem, not driver-local os/open."""
-    return "://" in path or path.startswith("file:")
-
-
 def _active_spark() -> SparkSession:
     s = SparkSession.getActiveSession()
     if s is None:
         raise RuntimeError(
-            "a scheme-qualified out_dir needs an active SparkSession for "
-            "Hadoop-FileSystem metadata IO"
+            "ledger and ingest metadata IO needs an active SparkSession: "
+            "the path resolves through the Hadoop FileSystem"
         )
     return s
 
 
-def _read_text(path: str) -> str | None:
-    """Read a small metadata file; None if absent. Hadoop-FS-routed for
-    scheme-qualified paths so the commit protocol works on hdfs://s3a://
-    (driver-local open() would silently see nothing there)."""
-    if not _has_scheme(path):
-        if os.path.exists(path):
-            with open(path) as f:
-                return f.read()
-        return None
+def _metadata_fs(path: str):
+    """(spark, FileSystem, Path, local) for a metadata file: the path
+    resolves through Hadoop (an unqualified path against
+    ``fs.defaultFS``), like the data written beside it. ``local`` is its
+    OS path when that filesystem is the local one, else None."""
     spark = _active_spark()
     fs, hp = _hadoop_fs(spark, path)
+    local = None
+    if fs.getScheme() == "file":
+        local = fs.makeQualified(hp).toUri().getPath()
+    return spark, fs, hp, local
+
+
+def _read_text(path: str) -> str | None:
+    """Read a small metadata file; None if absent. On the local
+    filesystem ``open``, on any other the Hadoop FileSystem (driver-local
+    ``open`` would see nothing on hdfs:// or s3a://)."""
+    spark, fs, hp, local = _metadata_fs(path)
+    if local is not None:
+        if os.path.exists(local):
+            with open(local) as f:
+                return f.read()
+        return None
     if not fs.exists(hp):
         return None
     stream = fs.open(hp)
@@ -188,20 +196,20 @@ def _read_text(path: str) -> str | None:
 
 
 def _write_text(path: str, text: str) -> None:
-    """Atomically replace a small metadata file (write tmp + rename-over),
-    Hadoop-FS-routed for scheme-qualified paths. Rename OVERWRITES the
-    destination in one FS call (FileContext Rename.OVERWRITE — the HDFS
-    analog of ``os.replace``): a reader never observes the gap that
-    delete-then-rename would open (empty ledger => empty table)."""
-    if not _has_scheme(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
+    """Atomically replace a small metadata file (write tmp + rename-over).
+    On the local filesystem ``os.replace``; on any other the Hadoop
+    FileSystem, whose rename OVERWRITES the destination in one FS call
+    (FileContext Rename.OVERWRITE, the HDFS analog of ``os.replace``): a
+    reader never observes the gap that delete-then-rename would open
+    (empty ledger => empty table)."""
+    spark, fs, hp, local = _metadata_fs(path)
+    if local is not None:
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        tmp = local + ".tmp"
         with open(tmp, "w") as f:
             f.write(text)
-        os.replace(tmp, path)
+        os.replace(tmp, local)
         return
-    spark = _active_spark()
-    fs, hp = _hadoop_fs(spark, path)
     _, htmp = _hadoop_fs(spark, path + ".tmp")
     out = fs.create(htmp, True)
     try:
@@ -382,11 +390,12 @@ class LedgerRun:
         last row commit, if the log lacks it.
 
         ``brat``: also overwrite that path with the brat rows of every
-        input doc (``run_brat``'s rows), after the row commits and the
-        snapshot. Then the pass scores every doc once: it is persisted
-        (``MEMORY_AND_DISK_DESER``), the triples write keeps the pending
-        buckets' triples, and brat is written from the same pass, so a
-        crashed out_dir also gets whole brat."""
+        input doc (``run_brat``'s rows), right after the triples write and
+        before the row commits. Then the pass scores every doc once: it is
+        persisted (``MEMORY_AND_DISK_DESER``), the triples write keeps the
+        pending buckets' triples, and brat is written from the same pass,
+        so a crashed out_dir also gets whole brat, and a crash during the
+        commits leaves whole brat for ``resume`` to complete."""
         if fail_after is not None and fail_after < 0:
             raise ValueError(f"fail_after must be >= 0, got {fail_after}")
         cfg = cfg or PipelineConfig()
@@ -455,6 +464,8 @@ class LedgerRun:
             trip.write.partitionBy("b").mode("overwrite").parquet(
                 f"{self.data_dir}/v{version}")
             wall = round(time.time() - t0, 3)
+            if brat is not None:
+                brat_rows(passed).write.mode("overwrite").parquet(brat)
             if fail_after == 0:
                 raise RuntimeError("simulated failure after 0 buckets")
             for done, b in enumerate(pending, 1):
@@ -480,8 +491,6 @@ class LedgerRun:
                         f"simulated failure after {done} buckets"
                     )
             self._append_snapshot(ledger, len(pending), config)
-            if brat is not None:
-                brat_rows(passed).write.mode("overwrite").parquet(brat)
         finally:
             if brat is not None:
                 passed.unpersist()

@@ -577,6 +577,10 @@ FROM reach GROUP BY src
 """
 
 
+# the star-contraction variant computes the identical fixpoint
+q_graph_components_star = q_graph_components
+
+
 def q_graph_user_components() -> str:
     """Components of the events co-action user graph (same (k, day)
     group => edge). Node count grows with sf (users: 15/150/1500 at

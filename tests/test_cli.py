@@ -112,6 +112,23 @@ def test_cli_predict_finishes_crashed_run_with_whole_brat(spark, tmp_path):
     _assert_brat_of_ledger(spark, inp, out)
 
 
+def test_cli_resume_finishes_crashed_predict_with_whole_brat(spark,
+                                                           tmp_path):
+    """A ``predict`` that crashed during its row commits (``fail_after=2``)
+    wrote brat already, right after its triples write, so ``resume``,
+    which writes no brat, finishes the triples and leaves whole brat:
+    one row per doc with mentions, equal to the twin over the ledger."""
+    inp, _ = _input(spark, tmp_path)
+    out = str(tmp_path / "crashed")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        LedgerRun(out_dir=out, n_buckets=4).run(
+            spark.read.parquet(inp), PipelineConfig(), fail_after=2,
+            brat=f"{out}/brat")
+    main(["resume", "--input", inp, "--output", out, "--n-buckets", "4"],
+         spark=spark)
+    _assert_brat_of_ledger(spark, inp, out)
+
+
 def test_cli_predict_jobs_are_one_ledger_write_plus_one_brat_write(
         spark, tmp_path):
     """``predict`` launches exactly the Spark jobs of one ledger write

@@ -328,9 +328,12 @@ def test_ledger_time_travel_and_expire(spark, tmp_path):
 
 
 def test_ledger_on_scheme_qualified_uri(spark, tmp_path):
-    """file:// out_dir drives the Hadoop-FileSystem metadata branch end to
-    end (the same code path hdfs://s3a:// take): ledger + snapshots are
-    written/read through the FS API, not driver-local open()."""
+    """A file:// out_dir resolves to the local filesystem, so its ledger
+    and snapshots are read with open() and replaced with os.replace (tmp
+    + rename-over, atomic), like an unqualified local path: the run, a
+    no-op resume and time travel all work on the scheme-qualified path.
+    The Hadoop-FileSystem metadata branch (hdfs://, s3a://, viewfs://) is
+    driven by test_metadata_sits_beside_its_data_under_a_mount."""
     from clinicaltransformerrelationextraction_spark.plans.ledger import (
         LedgerRun,
     )
@@ -347,6 +350,62 @@ def test_ledger_on_scheme_qualified_uri(spark, tmp_path):
     assert len(run.snapshots()) == 1
     # time travel works through FS-routed snapshots too
     assert run.triples(spark, snapshot_id=1).count() == total
+
+
+def test_metadata_sits_beside_its_data_under_a_mount(spark, tmp_path):
+    """Ledger and ingest metadata resolve through Hadoop, like the data
+    beside them. With ``fs.defaultFS`` a viewfs whose mount maps ``<A>``
+    onto ``file://<B>``, an unqualified ``<A>/run`` out_dir and ``<A>/state``
+    state dir keep ``_ledger.json``, ``_snapshots.json`` and
+    ``MANIFEST.json`` under ``<B>``, beside the triples and the ingest
+    tables, and nothing lands under ``<A>``. The viewfs is not the local
+    filesystem, so this also drives the Hadoop-FileSystem metadata branch
+    end to end: reads, and tmp + rename-over writes."""
+    import uuid
+
+    from clinicaltransformerrelationextraction_spark.plans.ingest import (
+        IngestState,
+    )
+    from clinicaltransformerrelationextraction_spark.plans.ledger import (
+        LedgerRun,
+    )
+
+    a, b = tmp_path / "A", tmp_path / "B"
+    a.mkdir()
+    b.mkdir()
+    docs = load_documents(spark, SF_SMOKE).limit(40)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    # a fresh mount table name: Hadoop caches one FileSystem per name
+    name = "kg" + uuid.uuid4().hex[:8]
+    mount = {
+        "fs.defaultFS": f"viewfs://{name}/",
+        f"fs.viewfs.mounttable.{name}.link.{a}": f"file://{b}",
+        f"fs.viewfs.mounttable.{name}.linkFallback": "file:///",
+    }
+    saved = {k: conf.get(k) for k in mount}
+    for k, v in mount.items():
+        conf.set(k, v)
+    try:
+        run = LedgerRun(out_dir=f"{a}/run", n_buckets=2)
+        ledger = run.run(docs, PipelineConfig())
+        total = sum(v["n_triples"] for v in ledger.values())
+        assert total > 0 and run.triples(spark).count() == total
+        run.resume(docs, PipelineConfig())  # reads the metadata back
+        assert len(run.snapshots()) == 1
+        state = IngestState(f"{a}/state")
+        state.ingest(spark, docs.select("doc_id", "text", "lang"))
+        assert state.manifest()["version"] == 1
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+    assert sorted(p.name for p in a.iterdir()) == []
+    for meta in ("run/_ledger.json", "run/_snapshots.json",
+                 "state/MANIFEST.json"):
+        assert (b / meta).is_file(), meta
+    assert (b / "run/triples/data").is_dir() and (b / "state/docs").is_dir()
 
 
 def test_snapshot_ids_unique_after_expire(spark, tmp_path):
